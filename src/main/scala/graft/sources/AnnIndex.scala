@@ -89,9 +89,20 @@ import graft.operators.Pq
   * caller), so appended codes are always encoded against the same
   * centroids/codebooks as the original build — per-row encode is
   * deterministic, hence build(all) ≡ build(part) + append(rest), which
-  * is exactly what q144 hash-gates. Model arrays are parameter-sized
-  * (nlist, m×ncode rows), so load-time collects are a few KB
-  * regardless of corpus size.
+  * is exactly what q144 hash-gates.
+  *
+  * MODEL MEMO: the model tables (`meta`, `centroids`, `codebooks` or
+  * `model`) under a model root are never rewritten once a build,
+  * [[retrain]] or [[splitCell]] lands them, and segments are immutable
+  * too. So every open reads the validated model literals and the first
+  * segment's schema through one bounded, driver-side memo. The model
+  * key is the qualified model root plus the name and length of every
+  * data file in each model table (a filesystem listing, no Spark job);
+  * the schema key is the first segment's qualified path plus that model
+  * key. Spark names part files after the write job's UUID, so any
+  * rewrite of a model table (a rebuild in place, even within the same
+  * second) changes the key and misses. The manifest is still listed and
+  * parsed on every open.
   *
   * MIGRATION (pre-high-water manifests): a manifest written before the
   * `shw` line existed came from the era whose streamed micro-batch `id`
@@ -163,32 +174,23 @@ object AnnIndex {
   private def freshName(prefix: String): String =
     prefix + java.util.UUID.randomUUID.toString.replace("-", "").take(16)
 
-  /** Highest committed manifest id, or None on a fresh/absent index. */
-  private def currentManifestId(f: org.apache.hadoop.fs.FileSystem,
-                                dir: String): Option[Long] = {
+  /** Committed manifest ids, oldest first (empty on a fresh/absent
+    * index). */
+  private def generations(f: org.apache.hadoop.fs.FileSystem,
+                          dir: String): Seq[Long] = {
     val mdir = path(s"$dir/manifest")
-    if (!f.exists(mdir)) None
+    if (!f.exists(mdir)) Seq.empty
     else f.listStatus(mdir).toSeq
       .filter(st => st.isFile && st.getPath.getName.startsWith("m-"))
       .flatMap(st => scala.util.Try(st.getPath.getName.drop(2).toLong).toOption)
-      .maxOption
+      .sorted
   }
 
-  /** Parse manifest `id`. A `v2` manifest (create-exclusive-published)
-    * must end with its `commit` sentinel — a reader racing the
-    * few-hundred-byte body write sees a truncated file and RETRIES
-    * briefly before failing loudly (never silently parses a partial
-    * snapshot). A non-`v2` file is accepted as a LEGACY manifest
-    * (rename-published, hence content-atomic) only when it contains at
-    * least one recognized manifest line — a torn read whose visible
-    * prefix is shorter than the `v2` header must retry like any other
-    * truncation, never parse as an empty index. Legacy manifests
-    * default hw = max listed id, and their stream high-water is
-    * NORMALIZED to `max segment id − 1` — the committed high-water
-    * their era's sequential `segment id = batch id + 1` scheme implies
-    * (see the MIGRATION doc on the object) — so every downstream dedup
-    * check, carry-forward and publish handles old-format indexes with
-    * no special casing. */
+  /** Highest committed manifest id, or None on a fresh/absent index. */
+  private def currentManifestId(f: org.apache.hadoop.fs.FileSystem,
+                                dir: String): Option[Long] =
+    generations(f, dir).lastOption
+
   /** Reader retry budget for a sentinel-less manifest (25 ms apart —
     * 3 s at the default): long enough that a LIVE publisher's
     * few-hundred-byte body write always lands within it, short enough
@@ -209,6 +211,21 @@ object AnnIndex {
   private val legacyShwWarned =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** Parse manifest `id`. A `v2` manifest (create-exclusive-published)
+    * must end with its `commit` sentinel — a reader racing the
+    * few-hundred-byte body write sees a truncated file and RETRIES
+    * briefly before failing loudly (never silently parses a partial
+    * snapshot). A non-`v2` file is accepted as a LEGACY manifest
+    * (rename-published, hence content-atomic) only when it contains at
+    * least one recognized manifest line — a torn read whose visible
+    * prefix is shorter than the `v2` header must retry like any other
+    * truncation, never parse as an empty index. Legacy manifests
+    * default hw = max listed id, and their stream high-water is
+    * NORMALIZED to `max segment id − 1` — the committed high-water
+    * their era's sequential `segment id = batch id + 1` scheme implies
+    * (see the MIGRATION doc on the object) — so every downstream dedup
+    * check, carry-forward and publish handles old-format indexes with
+    * no special casing. */
   private def readManifest(f: org.apache.hadoop.fs.FileSystem, dir: String,
                            id: Long): ManifestData = {
     val retryBudget = Option(manifestRetryOverride.get(dir))
@@ -685,11 +702,6 @@ object AnnIndex {
     }
   }
 
-  /** Row count of a just-written segment WITHOUT reading it when it is
-    * empty: a zero-row partitioned write leaves a `_SUCCESS`-only tree,
-    * and `spark.read.parquet` on it fails schema inference — on the
-    * streaming path that failure replays forever (the wedged-checkpoint
-    * trap). A data-file listing decides emptiness first. */
   /** Write `df` as a parquet segment (optionally cell-partitioned) and
     * return its row count, observed DURING the write job
     * (`Dataset.observe` — a CollectMetrics node rides the written
@@ -738,7 +750,8 @@ object AnnIndex {
     * a tombstone set that has grown large is the signal to [[compact]],
     * which physically drops the rows and clears the sets. */
   private def visibleUnion(spark: SparkSession, dir: String,
-                           md: ManifestData): DataFrame = {
+                           md: ManifestData,
+                           mkey: Seq[String]): DataFrame = {
     // tombstone sets share the fixed writer schema — explicit schema
     // keeps the read inference-free (one footer job per tombstone per
     // snapshot open otherwise; same class as the model-table reads)
@@ -747,9 +760,12 @@ object AnnIndex {
     // all segments of one index share a schema by protocol (append
     // re-encodes with the index's own model) — infer it ONCE from the
     // first segment and reuse, so opening an N-segment snapshot costs
-    // one footer-inference job instead of N
-    val segSchema = spark.read
-      .parquet(s"$dir/data/${md.segs.head.dirName}").schema
+    // one footer-inference job instead of N, and a re-open of the same
+    // first segment under the same model costs none
+    val first = s"$dir/data/${md.segs.head.dirName}"
+    val segSchema = memoized(Seq("schema",
+        fs(spark, dir).makeQualified(path(first)).toString) ++ mkey)(
+      spark.read.parquet(first).schema)
     md.segs.map { b =>
       val base = spark.read.schema(segSchema)
         .parquet(s"$dir/data/${b.dirName}")
@@ -761,15 +777,6 @@ object AnnIndex {
     }.reduce(_ unionByName _)
   }
 
-  /** Build and atomically publish a FRESH index at `dir` (replacing any
-    * index already there). The corpus pass is [[Pq.ivfPqEncode]] —
-    * assignment + residual + PQ encode fused into one map-only
-    * projection — plus the partitioned segment write. The replace is a
-    * whole-directory swap: unlike every in-chain verb (append, delete,
-    * compact, [[retrain]] — all safe under concurrent writers), a
-    * rebuild-over-live-index requires writers and readers of the OLD
-    * directory to be stopped first; for an in-place model migration
-    * that keeps them running, use [[retrain]]. */
   /** Land the parameter-sized IVF-PQ model tables (centroids,
     * codebooks, meta) under `root` — the build writes them at the
     * index root (model version 0), [[retrain]] under a fresh
@@ -814,13 +821,72 @@ object AnnIndex {
   private def modelRoot(dir: String, md: ManifestData): String =
     if (md.modelDir.isEmpty) dir else s"$dir/${md.modelDir}"
 
+  // ---- model memo (see MODEL MEMO on the object) -------------------
+  /** Entry cap of [[memo]]. An open index uses two entries (its model
+    * literals and its first segment's schema); entries a compaction or
+    * retrain left behind age out least-recently-used first. A model
+    * entry is parameter-sized, so the cap bounds driver memory at a few
+    * dozen models. */
+  private val memoCap = 32
+
+  /** Validated model literals and first-segment schemas, least recently
+    * used evicted first. Keys start with a kind tag, so the codecs'
+    * value types never share a key. */
+  private val memo =
+    new java.util.LinkedHashMap[Seq[String], AnyRef](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Seq[String], AnyRef]): Boolean =
+        size() > memoCap
+    }
+
+  /** The memo entry under `key`, running `read` on a miss. Only a value
+    * `read` returned is stored, so a read that throws (a failed
+    * validation) stores nothing and throws again on the next open. */
+  private def memoized[T <: AnyRef](key: Seq[String])(read: => T): T =
+    memo.synchronized(memo.get(key)) match {
+      case null =>
+        val v = read
+        memo.synchronized(memo.put(key, v))
+        v
+      case hit => hit.asInstanceOf[T]
+    }
+
+  /** Memo key of the model tables `md` pins: the qualified model root
+    * plus the name and length of every data file in each table.
+    * Driver-side listings only. `meta` exists under every model root,
+    * so a reaped `model-*` dir fails here with a FileNotFoundException
+    * naming it; the optional tables are simply absent from the key. */
+  private def modelKey(f: org.apache.hadoop.fs.FileSystem, dir: String,
+                       md: ManifestData): Seq[String] = {
+    val mroot = modelRoot(dir, md)
+    f.makeQualified(path(mroot)).toString +:
+      Seq("meta", "centroids", "codebooks", "model").flatMap { t =>
+        val files =
+          try f.listStatus(path(s"$mroot/$t")).toSeq
+          catch {
+            case _: java.io.FileNotFoundException if t != "meta" => Seq.empty
+          }
+        files.map(st => st.getPath.getName -> st.getLen)
+          .filterNot { case (n, _) => n.startsWith("_") || n.startsWith(".") }
+          .map { case (n, len) => s"$t/$n:$len" }.sorted
+      }
+  }
+
   /** Read ONLY the IVF-PQ model tables of a pinned manifest — the
     * writer verbs (append/upsert/merge-dst) need the encode model and
     * nothing else; a full [[load]] would also open every live segment
     * (one schema read each) to assemble a visible union the writer
-    * never evaluates. */
+    * never evaluates. Memoized under `"ivf" +: mkey`; every call gets
+    * its own copy of the arrays. */
   private def readIvfModel(spark: SparkSession, dir: String,
-                           md: ManifestData)
+                           md: ManifestData, mkey: Seq[String])
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val (cents, cbs) = memoized("ivf" +: mkey)(readIvfTables(spark, dir, md))
+    (cents.map(_.clone), cbs.map(_.map(_.clone)))
+  }
+
+  private def readIvfTables(spark: SparkSession, dir: String,
+                            md: ManifestData)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
     val mroot = modelRoot(dir, md)
     val meta = spark.read.schema(ivfMetaSchema)
@@ -847,9 +913,17 @@ object AnnIndex {
   }
 
   /** [[readIvfModel]]'s SQ8 twin: affine model + optional coarse
-    * quantizer, nothing else. */
+    * quantizer, nothing else, memoized under `"sq" +: mkey`. */
   private def readSqModel(spark: SparkSession, dir: String,
-                          md: ManifestData)
+                          md: ManifestData, mkey: Seq[String])
+      : (graft.operators.Sq.Model, Option[Array[Array[Double]]]) = {
+    val (m, cents) = memoized("sq" +: mkey)(readSqTables(spark, dir, md))
+    (graft.operators.Sq.Model(m.mins.clone, m.steps.clone, m.invSteps.clone),
+      cents.map(_.map(_.clone)))
+  }
+
+  private def readSqTables(spark: SparkSession, dir: String,
+                           md: ManifestData)
       : (graft.operators.Sq.Model, Option[Array[Array[Double]]]) = {
     val f = fs(spark, dir)
     val mroot = modelRoot(dir, md)
@@ -875,6 +949,15 @@ object AnnIndex {
     (m, cents)
   }
 
+  /** Build and atomically publish a FRESH index at `dir` (replacing any
+    * index already there). The corpus pass is [[Pq.ivfPqEncode]] —
+    * assignment + residual + PQ encode fused into one map-only
+    * projection — plus the partitioned segment write. The replace is a
+    * whole-directory swap: unlike every in-chain verb (append, delete,
+    * compact, [[retrain]] — all safe under concurrent writers), a
+    * rebuild-over-live-index requires writers and readers of the OLD
+    * directory to be stopped first; for an in-place model migration
+    * that keeps them running, use [[retrain]]. */
   def buildIvfPq(corpus: DataFrame, idCol: String, vecCol: String,
                  dir: String, centroids: Array[Array[Double]],
                  cbs: Array[Array[Array[Double]]]): Unit = {
@@ -940,7 +1023,7 @@ object AnnIndex {
     val (mid, md) = refresh(f, dir)
     if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
     maybeKill(dir, "stage")
-    val (cents, cbs) = readIvfModel(spark, dir, md)
+    val (cents, cbs) = readIvfModel(spark, dir, md, modelKey(f, dir, md))
     val segName = freshName("batch-")
     val n = writeSegment(delta, idCol, vecCol, dir, segName, cents, cbs)
     if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); return }
@@ -994,7 +1077,7 @@ object AnnIndex {
     val (mid, md) = refresh(f, dir)
     if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
     maybeKill(dir, "stage")
-    val (cents, cbs) = readIvfModel(spark, dir, md)
+    val (cents, cbs) = readIvfModel(spark, dir, md, modelKey(f, dir, md))
     val segName = freshName("batch-")
     val tombName = freshName("t-")
     val n = writeSegment(batch, idCol, vecCol, dir, segName, cents, cbs)
@@ -1082,7 +1165,7 @@ object AnnIndex {
       maybeKill(dir, "stage")
       if (md.segs.length <= 1 && md.tombs.isEmpty) return
       val segName = freshName("batch-")
-      val union = visibleUnion(spark, dir, md)
+      val union = visibleUnion(spark, dir, md, modelKey(f, dir, md))
       val n =
         if (union.columns.contains("cell"))
           writeCounted(union.repartition(col("cell")),
@@ -1139,7 +1222,8 @@ object AnnIndex {
     val f = fs(spark, dstDir)
     val (mid, md) = refresh(f, dstDir)
     maybeKill(dstDir, "stage")
-    val (dstCents, dstCbs) = readIvfModel(spark, dstDir, md)
+    val (dstCents, dstCbs) = readIvfModel(spark, dstDir, md,
+      modelKey(f, dstDir, md))
     val src = load(spark, srcDir)
     require(dstCents.map(_.toSeq).toSeq == src.centroids.map(_.toSeq).toSeq &&
         dstCbs.map(_.map(_.toSeq).toSeq).toSeq == src.cbs.map(_.map(_.toSeq).toSeq).toSeq,
@@ -1638,14 +1722,6 @@ object AnnIndex {
     }
   }
 
-  /** Build and atomically publish a fresh SQ8 index at `dir` — same
-    * staging/manifest protocol as [[buildIvfPq]], with the
-    * parameter-sized model persisted as (i, mn, step, inv) rows.
-    * Passing `centroids` (typically the IVF tier's coarse quantizer)
-    * produces the CELL-PARTITIONED layout: segments carry a `cell`
-    * partition column, the centroids persist beside the model, and
-    * [[topKSq]] gains the probe-pruned read path — while the default
-    * full scan stays hash-identical to the flat layout (q155's gate). */
   /** Land the parameter-sized SQ model tables (affine model, meta,
     * optional coarse centroids) under `root` — the build writes them
     * at the index root (model version 0), [[retrainSq]] under a fresh
@@ -1666,6 +1742,14 @@ object AnnIndex {
     }
   }
 
+  /** Build and atomically publish a fresh SQ8 index at `dir` — same
+    * staging/manifest protocol as [[buildIvfPq]], with the
+    * parameter-sized model persisted as (i, mn, step, inv) rows.
+    * Passing `centroids` (typically the IVF tier's coarse quantizer)
+    * produces the CELL-PARTITIONED layout: segments carry a `cell`
+    * partition column, the centroids persist beside the model, and
+    * [[topKSq]] gains the probe-pruned read path — while the default
+    * full scan stays hash-identical to the flat layout (q155's gate). */
   def buildSq(corpus: DataFrame, idCol: String, vecCol: String,
               dir: String, m: graft.operators.Sq.Model,
               centroids: Option[Array[Array[Double]]] = None): Unit = {
@@ -1700,7 +1784,7 @@ object AnnIndex {
     val (mid, md) = refresh(f, dir)
     if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
     maybeKill(dir, "stage")
-    val (model, cents) = readSqModel(spark, dir, md)
+    val (model, cents) = readSqModel(spark, dir, md, modelKey(f, dir, md))
     val segName = freshName("batch-")
     val n = writeSqSegment(delta, idCol, vecCol, dir, segName, model, cents)
     if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); return }
@@ -1711,12 +1795,6 @@ object AnnIndex {
       abortOnModelChange = true, verb = "append")
   }
 
-  /** Open an SQ8 snapshot (model validated against meta; coarse
-    * centroids loaded when the index has the cell layout). `asOf`
-    * time-travels to an older manifest generation exactly as
-    * [[load]]'s does — the manifest machinery is shared across both
-    * index families, so retention ([[expire]]`(keepLast)`) and pinned
-    * reads behave identically on the cheap tier. */
   /** [[streamAppend]]'s cheap-tier twin: continuous SQ8 index
     * ingestion, one idempotent [[appendSq]] segment per micro-batch
     * with the foreachBatch id as the dedup key — the same at-least-once
@@ -1747,7 +1825,7 @@ object AnnIndex {
     val (mid, md) = refresh(f, dir)
     if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
     maybeKill(dir, "stage")
-    val (model, cents) = readSqModel(spark, dir, md)
+    val (model, cents) = readSqModel(spark, dir, md, modelKey(f, dir, md))
     val segName = freshName("batch-")
     val tombName = freshName("t-")
     val n = writeSqSegment(batch, idCol, vecCol, dir, segName, model, cents)
@@ -1792,7 +1870,8 @@ object AnnIndex {
     val f = fs(spark, dstDir)
     val (mid, md) = refresh(f, dstDir)
     maybeKill(dstDir, "stage")
-    val (dstModel, dstCents) = readSqModel(spark, dstDir, md)
+    val (dstModel, dstCents) = readSqModel(spark, dstDir, md,
+      modelKey(f, dstDir, md))
     val src = loadSq(spark, srcDir)
     require(dstModel.mins.toSeq == src.model.mins.toSeq &&
         dstModel.steps.toSeq == src.model.steps.toSeq &&
@@ -1862,25 +1941,23 @@ object AnnIndex {
     maybeKill(dir, "published")
   }
 
+  /** Open an SQ8 snapshot (model validated against meta; coarse
+    * centroids loaded when the index has the cell layout). `asOf`
+    * time-travels to an older manifest generation exactly as
+    * [[load]]'s does — the manifest machinery is shared across both
+    * index families, so retention ([[expire]]`(keepLast)`) and pinned
+    * reads behave identically on the cheap tier. */
   def loadSq(spark: SparkSession, dir: String,
              asOf: Option[Long] = None): LoadedSq = {
     val f = fs(spark, dir)
-    val (mid, md) = resolveReadManifest(f, dir, asOf)
+    val (_, md) = resolveReadManifest(f, dir, asOf)
     // model artifacts resolve THROUGH the pinned manifest (see [[load]])
-    val (m, cents) = readSqModel(spark, dir, md)
-    LoadedSq(m, cents, visibleUnion(spark, dir, md), md.segs.map(_.n).sum,
-      md.segs.map(_.id))
+    val mkey = modelKey(f, dir, md)
+    val (m, cents) = readSqModel(spark, dir, md, mkey)
+    LoadedSq(m, cents, visibleUnion(spark, dir, md, mkey),
+      md.segs.map(_.n).sum, md.segs.map(_.id))
   }
 
-  /** Query an opened SQ8 snapshot — [[Sq.topK]]'s factored-dot scan
-    * over the pinned segment union. The DEFAULT is the full codes scan
-    * (the cheap tier's exact-over-compressed contract — hash-identical
-    * whether the layout is flat or cell-partitioned). `prune = true` on
-    * a cell-built index restricts candidates to the queries' nprobe
-    * nearest coarse cells, pushed into every segment scan as a parquet
-    * PartitionFilter (the IVF trade: nprobe/nlist of the scan I/O for
-    * approximate recall — [[topK]]'s plan with SQ scoring). Pruning a
-    * flat index fails loudly rather than silently full-scanning. */
   /** Serving-batch snapshot cap: a pruned search runs the queries plan
     * twice (probe-cell collect, then the scoring join), so the batch
     * is SNAPSHOTTED first. Up to this many rows it becomes a driver
@@ -1951,7 +2028,7 @@ object AnnIndex {
               new java.io.File(old))
         }
       }
-      spark.read.parquet(dir)
+      spark.read.schema(proj.schema).parquet(dir)
     }
   }
 
@@ -2076,6 +2153,15 @@ object AnnIndex {
     maybeKill(dir, "published")
   }
 
+  /** Query an opened SQ8 snapshot — [[Sq.topK]]'s factored-dot scan
+    * over the pinned segment union. The DEFAULT is the full codes scan
+    * (the cheap tier's exact-over-compressed contract — hash-identical
+    * whether the layout is flat or cell-partitioned). `prune = true` on
+    * a cell-built index restricts candidates to the queries' nprobe
+    * nearest coarse cells, pushed into every segment scan as a parquet
+    * PartitionFilter (the IVF trade: nprobe/nlist of the scan I/O for
+    * approximate recall — [[topK]]'s plan with SQ scoring). Pruning a
+    * flat index fails loudly rather than silently full-scanning. */
   def topKSq(idx: LoadedSq, queries: DataFrame, idCol: String,
              vecCol: String, k: Int = 10, nprobe: Int = 4,
              prune: Boolean = false): DataFrame = {
@@ -2227,12 +2313,13 @@ object AnnIndex {
     * Fails loudly on an expired or unknown id. */
   def load(spark: SparkSession, dir: String, asOf: Option[Long] = None): Loaded = {
     val f = fs(spark, dir)
-    val (mid, md) = resolveReadManifest(f, dir, asOf)
+    val (_, md) = resolveReadManifest(f, dir, asOf)
     // model artifacts resolve THROUGH the pinned manifest: a reader
     // pinned before a [[retrain]] keeps scoring with the model its
     // segments were encoded with (version 0 = the build's root dirs)
-    val (cents, cbs) = readIvfModel(spark, dir, md)
-    val codes = visibleUnion(spark, dir, md)
+    val mkey = modelKey(f, dir, md)
+    val (cents, cbs) = readIvfModel(spark, dir, md, mkey)
+    val codes = visibleUnion(spark, dir, md, mkey)
       .select(col("neighbor_id"), col("cell").as("_cell"), col("codes"))
     Loaded(cents, cbs, codes, md.segs.map(_.n).sum, md.segs.map(_.id))
   }
@@ -2425,14 +2512,21 @@ object AnnIndex {
   /** Published manifest generations — the snapshot ids [[load]]'s
     * `asOf` accepts (oldest first; [[expire]] collapses this to the
     * current one). */
-  def versionsOf(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    val mdir = path(s"$dir/manifest")
-    if (!f.exists(mdir)) Seq.empty
-    else f.listStatus(mdir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("m-"))
-      .flatMap(st => scala.util.Try(st.getPath.getName.drop(2).toLong).toOption)
-      .sorted
+  def versionsOf(spark: SparkSession, dir: String): Seq[Long] =
+    generations(fs(spark, dir), dir)
+
+  /** The distinct allowed-id mask, re-planted as a broadcast LITERAL
+    * when it fits under `smallMask` rows (the tiny-allowlist hatch
+    * shared by [[topKWhere]] and [[topKWhereSq]]). */
+  private def allowedMask(spark: SparkSession, allowed: DataFrame,
+                          allowedIdCol: String, smallMask: Int): DataFrame = {
+    val mask = allowed.select(col(allowedIdCol).cast("long")
+      .as("neighbor_id")).distinct()
+    val small = mask.limit(smallMask + 1).collect()
+    if (small.length <= smallMask)
+      broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(small: _*), mask.schema))
+    else mask
   }
 
   /** FILTERED search — the metadata-predicate vector query every
@@ -2459,20 +2553,6 @@ object AnnIndex {
     * which is what keeps one oracle valid for both; q161 gates the
     * literal-mask plan, AnnIndexSpec asserts the probe PartitionFilter
     * survives it. */
-  /** The distinct allowed-id mask, re-planted as a broadcast LITERAL
-    * when it fits under `smallMask` rows (the tiny-allowlist hatch
-    * shared by [[topKWhere]] and [[topKWhereSq]]). */
-  private def allowedMask(spark: SparkSession, allowed: DataFrame,
-                          allowedIdCol: String, smallMask: Int): DataFrame = {
-    val mask = allowed.select(col(allowedIdCol).cast("long")
-      .as("neighbor_id")).distinct()
-    val small = mask.limit(smallMask + 1).collect()
-    if (small.length <= smallMask)
-      broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(small: _*), mask.schema))
-    else mask
-  }
-
   def topKWhere(idx: Loaded, queries: DataFrame, idCol: String,
                 vecCol: String, allowed: DataFrame, allowedIdCol: String,
                 k: Int = 10, nprobe: Int = 4,

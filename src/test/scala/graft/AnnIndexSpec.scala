@@ -42,6 +42,42 @@ class AnnIndexSpec extends AnyFunSuite {
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("ann_index_spec").toString
 
+  /** Runs `body` under a job group of its own and returns, per Spark job
+    * it launched, the long call sites of the job's stages. A marker job
+    * in the same group is awaited before the count is read, so every
+    * earlier job start has reached the listener. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"ann-jobs-${java.util.UUID.randomUUID}"
+    val marker = "jobsOf marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (props.exists(_.getProperty("spark.job.description") == marker))
+            markerSeen.countDown()
+          else seen.add(e.stageInfos.map(_.details).mkString("\n"))
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsOf")
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "marker job never reached the listener")
+      (out, seen.toArray(Array.empty[String]).toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("round trip: persisted search equals the in-memory ivfPqTopK path") {
     val e = corpus(80).cache()
     val (cents, cbs) = model(e)
@@ -942,6 +978,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val (cents, cbs) = model(e)
     val dir = s"${tmpDir()}/idx"
     AnnIndex.buildIvfPq(e, "vec_id", "embedding", dir, cents, cbs)
+    AnnIndex.load(spark, dir) // warm: the rewrite below must still miss
     // corrupt: drop a codebook row
     val cbPath = s"$dir/codebooks"
     val rows = spark.read.parquet(cbPath).filter(col("code") =!= 1 || col("s") =!= 0)
@@ -955,6 +992,104 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(new java.io.File(tmp).renameTo(f))
     val ex = intercept[IllegalArgumentException](AnnIndex.load(spark, dir))
     assert(ex.getMessage.contains("codebooks"))
+  }
+
+  test("re-opening an unchanged index launches no Spark job; a warm append reads no model") {
+    import graft.operators.Sq
+    val e = corpus(40).cache()
+    val (cents, cbs) = model(e)
+    val root = tmpDir()
+    val pq = s"$root/pq"
+    val sq = s"$root/sq"
+    AnnIndex.buildIvfPq(e.filter(col("vec_id") < 30), "vec_id", "embedding",
+      pq, cents, cbs)
+    AnnIndex.buildSq(e, "vec_id", "embedding", sq, Sq.fit(e, "embedding"),
+      Some(cents))
+    val pq1 = AnnIndex.load(spark, pq)
+    val sq1 = AnnIndex.loadSq(spark, sq)
+    val (pq2, pqJobs) = jobsOf(AnnIndex.load(spark, pq))
+    assert(pqJobs.size == 0, "jobs launched by the second load")
+    val (sq2, sqJobs) = jobsOf(AnnIndex.loadSq(spark, sq))
+    assert(sqJobs.size == 0, "jobs launched by the second loadSq")
+    // a memo hit is what the uncached read returned
+    assert(pq2.centroids.map(_.toSeq).toSeq == cents.map(_.toSeq).toSeq)
+    assert(pq2.cbs.map(_.map(_.toSeq).toSeq).toSeq ==
+      pq1.cbs.map(_.map(_.toSeq).toSeq).toSeq)
+    assert(pq2.codes.collect().map(_.toSeq).toSet ==
+      pq1.codes.collect().map(_.toSeq).toSet)
+    assert(sq2.model.mins.toSeq == sq1.model.mins.toSeq &&
+      sq2.model.steps.toSeq == sq1.model.steps.toSeq &&
+      sq2.model.invSteps.toSeq == sq1.model.invSteps.toSeq)
+    assert(sq2.centroids.map(_.map(_.toSeq).toSeq) ==
+      sq1.centroids.map(_.map(_.toSeq).toSeq))
+    // every handle owns its arrays: mutating one never reaches the next
+    pq2.centroids(0)(0) = 99.0
+    sq2.model.mins(0) = 99.0
+    assert(AnnIndex.load(spark, pq).centroids(0)(0) == cents(0)(0))
+    assert(AnnIndex.loadSq(spark, sq).model.mins(0) == sq1.model.mins(0))
+    // the append's encode model comes from the memo; only its write
+    // runs. A model read starts with the `meta` collect on the calling
+    // thread, whose call site names readIvfModel
+    val (_, appendJobs) = jobsOf(AnnIndex.appendIvfPq(
+      e.filter(col("vec_id") >= 30), "vec_id", "embedding", pq))
+    assert(appendJobs.nonEmpty, "the append wrote nothing")
+    assert(!appendJobs.exists(_.contains("readIvfModel")),
+      "appendIvfPq launched a job to read the model")
+    assert(AnnIndex.load(spark, pq).nrows == 40)
+  }
+
+  test("a rebuild in place within the same second opens the new model") {
+    import graft.operators.Sq
+    val e = corpus(40).cache()
+    val (cents, cbs) = model(e)
+    val cents2 = e.filter(col("vec_id").between(4, 7)).orderBy("vec_id")
+      .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
+      .collect().map(_.getSeq[Double](0).toArray)
+    val sq1 = Sq.fit(e, "embedding")
+    val sq2 = Sq.fit(e.filter(col("vec_id") < 20), "embedding")
+    assert(cents2.map(_.toSeq).toSeq != cents.map(_.toSeq).toSeq)
+    assert(sq2.mins.toSeq != sq1.mins.toSeq)
+    val root = tmpDir()
+    val pq = s"$root/pq"
+    val sq = s"$root/sq"
+    // every model file of both builds carries the same mtime, so only
+    // the file names and lengths can tell the two builds apart
+    val mtime = 1700000000000L
+    def pinMtimes(dir: String): Unit =
+      Seq("meta", "centroids", "codebooks", "model").foreach { t =>
+        Option(new java.io.File(s"$dir/$t").listFiles())
+          .foreach(_.foreach(_.setLastModified(mtime)))
+      }
+    AnnIndex.buildIvfPq(e, "vec_id", "embedding", pq, cents, cbs)
+    AnnIndex.buildSq(e, "vec_id", "embedding", sq, sq1, Some(cents))
+    pinMtimes(pq); pinMtimes(sq)
+    AnnIndex.load(spark, pq)
+    AnnIndex.loadSq(spark, sq)
+    AnnIndex.buildIvfPq(e, "vec_id", "embedding", pq, cents2, cbs)
+    AnnIndex.buildSq(e, "vec_id", "embedding", sq, sq2, Some(cents2))
+    pinMtimes(pq); pinMtimes(sq)
+
+    val q = e.filter(col("vec_id") % 10 === 0)
+    val idx = AnnIndex.load(spark, pq)
+    assert(idx.centroids.map(_.toSeq).toSeq == cents2.map(_.toSeq).toSeq)
+    AnnIndex.buildIvfPq(e, "vec_id", "embedding", s"$root/fresh_pq", cents2,
+      cbs)
+    assert(AnnIndex.topK(idx, q, "vec_id", "embedding", k = 3, nprobe = 2)
+      .collect().map(_.toSeq).toSet ==
+      AnnIndex.topK(AnnIndex.load(spark, s"$root/fresh_pq"), q, "vec_id",
+        "embedding", k = 3, nprobe = 2).collect().map(_.toSeq).toSet)
+
+    val sidx = AnnIndex.loadSq(spark, sq)
+    assert(sidx.model.mins.toSeq == sq2.mins.toSeq &&
+      sidx.model.steps.toSeq == sq2.steps.toSeq)
+    assert(sidx.centroids.map(_.map(_.toSeq).toSeq) ==
+      Some(cents2.map(_.toSeq).toSeq))
+    AnnIndex.buildSq(e, "vec_id", "embedding", s"$root/fresh_sq", sq2,
+      Some(cents2))
+    assert(AnnIndex.topKSq(sidx, q, "vec_id", "embedding", k = 3)
+      .collect().map(_.toSeq).toSet ==
+      AnnIndex.topKSq(AnnIndex.loadSq(spark, s"$root/fresh_sq"), q, "vec_id",
+        "embedding", k = 3).collect().map(_.toSeq).toSet)
   }
 
   test("splitCell: the hot cell re-keys under its sub-centroids; everything else is untouched") {
