@@ -32,7 +32,10 @@ import org.apache.spark.sql.DataFrame
   *    frame, `Pack.prefixSum` / `FfillRepair` range-partitioned inputs,
   *    `NgramLM` per-doc scored frame, `BpeTrain` word-frequency dict
   *    (unique-word-count-sized) + the per-round incremental token state
-  *    (lazy — see `eager` on [[data]]), `Warehouse` layer frames (q51),
+  *    (lazy — see `eager` on [[data]]), `CleaningPipelines.split`'s
+  *    flagged frame (lazy — its two consumers, clean and quarantine,
+  *    read one evaluation instead of running the pipeline twice),
+  *    `Warehouse` layer frames (q51),
   *    `QueriesText.nearDupPairs` (the shared q30 pair frame), q128's
   *    brute-force recall ground truth (query-count × k rows).
   *  - PARAMETER-SIZED (≤ f(config) rows, never data-proportional →

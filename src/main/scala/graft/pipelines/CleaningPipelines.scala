@@ -5,12 +5,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{CleanFunctions => CF}
-import graft.operators.{Dedup, FfillRepair, FuzzyJoin}
+import graft.operators.{Dedup, FfillRepair, FuzzyJoin, Pin}
 
 /** The reference's six file-type cleaning pipelines (SURVEY.md §2.10
   * M2-M7; `/root/reference/backend/etl_scripts/cleaning.py:314-767`),
-  * re-expressed as lazy DataFrame transforms that produce a
-  * (clean, quarantine) partition in one pass over the input (P3).
+  * re-expressed as DataFrame transforms that produce a (clean,
+  * quarantine) partition of ONE evaluation of the input (P3): each
+  * pipeline flags every row valid or not and pins the flagged frame
+  * lazily (`split`), so the first consumer computes it once and the
+  * other reads its blocks — both partitions come from the same
+  * `_ingest_id` assignment, and writing both costs one pipeline run,
+  * not two.
   *
   * Inputs are all-string DataFrames (the reference ingests CSV with
   * dtype=str, cleaning.py:538) carrying an `_ingest_id` ordering column —
@@ -44,7 +49,10 @@ object CleaningPipelines {
     // in quarantine, not vanish from both partitions — pandas str.match
     // with na=False quarantines missing values (cleaning.py:598-609), and
     // three-valued filter(valid)/filter(!valid) would drop the row twice.
-    val flagged = df.withColumn("_valid", coalesce(valid, lit(false)))
+    // pinned lazily: the two partitions are two consumers of one flagged
+    // frame, so the first action computes it and the second reads blocks
+    val flagged = Pin.data(df.withColumn("_valid", coalesce(valid, lit(false))),
+      eager = false)
     val drops = "_valid" +: dropCols.filter(df.columns.contains)
     CleanResult(
       flagged.filter(col("_valid")).drop(drops: _*),

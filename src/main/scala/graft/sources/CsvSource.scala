@@ -1,6 +1,12 @@
 package graft.sources
 
+import java.io.{BufferedReader, FileNotFoundException, InputStream, InputStreamReader}
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -14,6 +20,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *    StructType construction.
   *  - S8: quarantine export — nulls blanked, header kept
   *    (cleaning.py:772-779).
+  *
+  * Header read: [[headerOf]] reads the header on the DRIVER — the first
+  * non-blank line of the first file Spark would scan, parsed by Spark's
+  * own CSV tokenizer settings — so the readers launch no Spark job
+  * before the data is scanned.
   *
   * Ingest order: `_ingest_id` is attached at read time from
   * monotonically_increasing_id(), which is stable within a read (partition
@@ -36,13 +47,53 @@ object CsvSource {
   def allStringSchema(header: Seq[String]): StructType =
     StructType(header.map(h => StructField(sanitizeName(h), StringType, nullable = true)))
 
+  /** The raw header cells of the CSV at `path` (a file, a directory of
+    * part files, or a glob), read on the driver without a Spark job.
+    * It is the row `spark.read.option("header", "false").csv(path)`
+    * returns first: hidden (`_`/`.`) files are skipped, files are taken
+    * largest first (Spark's split order), compressed files are decoded
+    * by Hadoop's codec for their extension, a UTF-8 BOM is dropped and
+    * blank lines are skipped (as Hadoop's line reader and Spark's CSV
+    * filter do), and the line is tokenized with Spark's own parser
+    * settings; empty cells read as "". Empty when no file has a
+    * non-blank line; throws when `path` matches nothing. */
+  def headerOf(spark: SparkSession, path: String): Seq[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val matched = Option(fs.globStatus(root)).map(_.toSeq).getOrElse(Seq.empty)
+    if (matched.isEmpty) throw new FileNotFoundException(s"Path does not exist: $path")
+    def hidden(s: FileStatus) = {
+      val n = s.getPath.getName
+      n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+    }
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.filterNot(hidden).flatMap(leaves)
+      else Seq(s)
+    val files = matched.filterNot(s => s.isFile && hidden(s)).flatMap(leaves)
+      .sortBy(-_.getLen)
+    val options = new CSVOptions(Map("header" -> "false"), false,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    val codecs = new CompressionCodecFactory(conf)
+    def firstLine(f: FileStatus): Option[String] = {
+      val raw = fs.open(f.getPath)
+      val in = Option(codecs.getCodec(f.getPath)).fold[InputStream](raw)(
+        _.createInputStream(raw))
+      val r = new BufferedReader(new InputStreamReader(in, options.charset))
+      try {
+        val first = Option(r.readLine()).map(_.stripPrefix("\uFEFF"))
+        (first.iterator ++ Iterator.continually(r.readLine()).takeWhile(_ != null))
+          .find(_.trim.nonEmpty)
+      } finally r.close()
+    }
+    files.iterator.flatMap(firstLine).nextOption().fold(Seq.empty[String])(line =>
+      new CsvParser(options.asParserSettings).parseLine(line).toSeq
+        .map(v => Option(v).getOrElse("")))
+  }
+
   /** S1 — all-string CSV read with normalized column names + ingest id. */
   def readAllString(spark: SparkSession, path: String): DataFrame = {
-    // one cheap pass for the header only (limit pushed into the scan)
-    val header = spark.read.option("header", "false").csv(path).limit(1)
-      .collect().headOption.map(_.toSeq.map(v => Option(v).fold("")(_.toString)))
-      .getOrElse(Seq.empty)
-    val schema = allStringSchema(header)
+    val schema = allStringSchema(headerOf(spark, path))
     spark.read
       .option("header", "true")
       .schema(schema)
@@ -74,10 +125,7 @@ object CsvSource {
     */
   def createTableFromHeader(spark: SparkSession, csvPath: String,
                             table: String, location: Option[String] = None): String = {
-    val header = spark.read.option("header", "false").csv(csvPath).limit(1)
-      .collect().headOption.map(_.toSeq.map(v => Option(v).fold("")(_.toString)))
-      .getOrElse(Seq.empty)
-    val schema = allStringSchema(header)
+    val schema = allStringSchema(headerOf(spark, csvPath))
 
     val target =
       if (spark.catalog.tableExists(table)) {

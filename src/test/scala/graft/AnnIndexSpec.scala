@@ -12,6 +12,7 @@ import graft.sources.AnnIndex
   * contract), and publish must be atomic under builder death and
   * rebuild. */
 class AnnIndexSpec extends AnyFunSuite {
+  import TestSpark.jobsOf
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -41,42 +42,6 @@ class AnnIndexSpec extends AnyFunSuite {
 
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("ann_index_spec").toString
-
-  /** Runs `body` under a job group of its own and returns, per Spark job
-    * it launched, the long call sites of the job's stages. A marker job
-    * in the same group is awaited before the count is read, so every
-    * earlier job start has reached the listener. */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"ann-jobs-${java.util.UUID.randomUUID}"
-    val marker = "jobsOf marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
-          if (props.exists(_.getProperty("spark.job.description") == marker))
-            markerSeen.countDown()
-          else seen.add(e.stageInfos.map(_.details).mkString("\n"))
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "jobsOf")
-    try {
-      val out = body
-      sc.setJobDescription(marker)
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "marker job never reached the listener")
-      (out, seen.toArray(Array.empty[String]).toSeq)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("round trip: persisted search equals the in-memory ivfPqTopK path") {
     val e = corpus(80).cache()

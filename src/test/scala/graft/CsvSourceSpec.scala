@@ -6,8 +6,88 @@ import graft.sources.CsvSource
 import graft.pipelines.CleaningPipelines
 
 class CsvSourceSpec extends AnyFunSuite {
+  import TestSpark.jobsOf
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** The Spark-job header probe `headerOf` replaced, kept as the
+    * reference: the first row of a header-less read. */
+  private def probeHeader(path: String): Seq[String] =
+    spark.read.option("header", "false").csv(path).limit(1)
+      .collect().headOption.map(_.toSeq.map(v => Option(v).fold("")(_.toString)))
+      .getOrElse(Seq.empty)
+
+  test("headerOf equals the header-less read's first row on every input shape") {
+    val dir = Files.createTempDirectory("graftheader")
+    def file(name: String, body: String): String = {
+      val f = dir.resolve(name)
+      Files.writeString(f, body)
+      f.toString
+    }
+    val quoted = file("quoted.csv", "\"Total, Amount\",Key,\"\"\n\"$1,5\",A,x\n")
+    val bom = file("bom.csv", "\uFEFFAirlineKey,AirlineName\nAA,American\n")
+    val blank = file("blank.csv", "\n   \nFlightKey,Origin\nAA1,JFK\n")
+    val empty = file("empty.csv", "")
+    // Spark-written part files, with _SUCCESS and .crc siblings
+    val written = dir.resolve("written").toString
+    CsvSource.writeClean((1 to 40).map(i => (s"k$i", i.toString)).toDF("Key Col", "Val")
+      .repartition(3), written)
+    val names = Files.list(Paths.get(written)).toArray.map(_.toString).toSeq
+    assert(names.exists(_.endsWith("_SUCCESS")) && names.exists(_.endsWith(".crc")),
+      s"fixture lacks the hidden siblings: $names")
+    val gz = dir.resolve("packed.csv.gz")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+    try out.write("Zipped,Header\n1,2\n".getBytes("UTF-8")) finally out.close()
+    // a glob over two files: the larger one's header comes first
+    file("g_small.csv", "s1,s2\n1,2\n")
+    file("g_large.csv", "b1,b2,b3\n" + "1,2,3\n" * 20)
+    val glob = dir.resolve("g_*.csv").toString
+
+    for (p <- Seq(quoted, bom, blank, written, gz.toString, glob, empty))
+      assert(CsvSource.headerOf(spark, p) == probeHeader(p), p)
+    assert(CsvSource.headerOf(spark, quoted) == Seq("Total, Amount", "Key", ""))
+    assert(CsvSource.headerOf(spark, glob) == Seq("b1", "b2", "b3"))
+    assert(CsvSource.headerOf(spark, empty).isEmpty)
+    intercept[java.io.FileNotFoundException](
+      CsvSource.headerOf(spark, dir.resolve("missing.csv").toString))
+  }
+
+  test("the CSV readers launch no Spark job") {
+    val dir = Files.createTempDirectory("graftreadjobs")
+    val f = dir.resolve("in.csv")
+    Files.writeString(f, "Some Key,Total$Amount\nA,1\n")
+    val (df, readJobs) = jobsOf(CsvSource.readAllString(spark, f.toString))
+    assert(readJobs.isEmpty, s"jobs launched by readAllString: $readJobs")
+    assert(df.columns.toSeq == Seq("some_key", "total_amount", CsvSource.IngestId))
+    val (_, ddlJobs) = jobsOf(CsvSource.createTableFromHeader(spark, f.toString,
+      "graft_ddl_jobs", Some(dir.resolve("t").toString)))
+    assert(ddlJobs.isEmpty, s"jobs launched by createTableFromHeader: $ddlJobs")
+    spark.sql("DROP TABLE IF EXISTS graft_ddl_jobs")
+  }
+
+  test("a clean-file's quarantine write reads the split the clean write computed") {
+    val dir = Files.createTempDirectory("graftsplitjobs")
+    val f = dir.resolve("flights.csv")
+    Files.writeString(f,
+      """FlightKey,OriginAirportKey,DestinationAirportKey,AircraftType
+        |AA100,JK,LAX,boeing 737
+        |dl200,LAX,ORD,airbus a320
+        |AA300,LAb,JFK,e190
+        |AA400,ORD,ORD,x
+        |AA100,JFK,LAX,dup key
+        |""".stripMargin)
+    val res = CleaningPipelines.cleanFile("flights",
+      CsvSource.readAllString(spark, f.toString),
+      airlineKeys = Some(Seq("AA", "DL").toDF("airlinekey")),
+      airportKeys = Some(Seq("JFK", "LAX", "ORD").toDF("airportkey")))
+    CsvSource.writeClean(res.clean, dir.resolve("clean").toString)
+    val (_, jobs) = jobsOf(
+      CsvSource.writeQuarantine(res.quarantine, dir.resolve("quarantine").toString))
+    assert(jobs.size == 1, s"jobs launched by the quarantine write: $jobs")
+    def rows(kind: String) = spark.read.option("header", "true")
+      .csv(dir.resolve(kind).toString).count()
+    assert(rows("clean") == 3 && rows("quarantine") == 2)
+  }
 
   test("S1/S16: all-string ingest with sanitized header and ingest id") {
     val dir = Files.createTempDirectory("graftcsv")

@@ -85,6 +85,8 @@ class PinSpec extends AnyFunSuite {
        "(ContextCleaner releases blocks once results are unreachable)") {
     import org.apache.spark.sql.functions._
     val sc = spark.sparkContext
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft_pin_clean")
     // warm-up invocation so lazily-initialized session state doesn't
     // count against the baseline
     def invoke(): Unit = {
@@ -98,6 +100,14 @@ class PinSpec extends AnyFunSuite {
           .select(col("id"), concat(lit("tok"), col("id") % 40, lit(" x "),
             col("id") % 7).as("text")),
         "text", "id", isTarget = col("id") % 2 === 0).collect()
+      val flights = graft.pipelines.CleaningPipelines.cleanFile("flights",
+        Seq(("AA100", "JK", "LAX", "boeing 737"), ("AA100", "ORD", "ORD", "x"))
+          .toDF("flightkey", "originairportkey", "destinationairportkey", "aircrafttype"),
+        airlineKeys = Some(Seq("AA").toDF("airlinekey")),
+        airportKeys = Some(Seq("JFK", "LAX", "ORD").toDF("airportkey")))
+      graft.sources.CsvSource.writeClean(flights.clean, out.resolve("clean").toString)
+      graft.sources.CsvSource.writeQuarantine(flights.quarantine,
+        out.resolve("quarantine").toString)
     }
     invoke()
     System.gc(); Thread.sleep(500)
@@ -105,6 +115,7 @@ class PinSpec extends AnyFunSuite {
     (1 to 4).foreach(_ => invoke())
     // every result frame above is now unreachable — the pins inside
     // prCurve/calibration/resampleKeep (and their prefix-scan internals)
+    // and the clean/quarantine split of cleanFile
     // must be ContextCleaner-released on GC, not accumulate per call
     val deadline = System.currentTimeMillis() + 30000
     var live = sc.getPersistentRDDs.size

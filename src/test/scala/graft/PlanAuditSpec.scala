@@ -231,6 +231,55 @@ class PlanAuditSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
+  test("the frames the cleaning pipelines pin satisfy the standing plan rules") {
+    // q36-q41 pin their flagged frame (CleaningPipelines.split), so their
+    // executed plans start at an RDD scan; audit the plans the pins
+    // executed instead, captured from the localCheckpoint actions
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val cleaning = Seq("q36_airlines_clean", "q37_transactions_clean",
+      "q38_transactions_quarantine", "q39_passengers_clean",
+      "q40_flights_clean", "q41_airlinesales_clean")
+    val marker = "graft_plan_audit_marker"
+    val pinned = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val markerSeen = new java.util.concurrent.atomic.AtomicReference(
+      new java.util.concurrent.CountDownLatch(1))
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        if (funcName == "localCheckpoint") pinned.add(qe)
+        else if (qe.analyzed.output.exists(_.name == marker)) markerSeen.get.countDown()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.listenerManager.register(listener)
+    try {
+      val plans = cleaning.map { name =>
+        pinned.clear()
+        markerSeen.set(new java.util.concurrent.CountDownLatch(1))
+        SparkEntry.queries(name)(spark, sfDir)
+        // the listener bus delivers in order: once the marker arrived,
+        // every pin of this query has been seen
+        spark.range(1).toDF(marker).collect()
+        assert(markerSeen.get.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          "marker query never reached the listener")
+        val qes = pinned.toArray(Array.empty[QueryExecution]).toSeq
+        assert(qes.nonEmpty, s"$name pinned no frame")
+        name -> qes.map(_.executedPlan)
+      }.toMap
+      val failures = plans.toSeq.flatMap { case (name, ps) => ps.flatMap(audit(name, _)) }
+      assert(failures.isEmpty, s"plan-rule violations:\n  ${failures.mkString("\n  ")}")
+      // the audited flights pin still holds the fuzzy repair's cross joins
+      assert(plans("q40_flights_clean").exists(_.exists {
+        case _: BroadcastNestedLoopJoinExec => true
+        case _ => false
+      }), "the flights pin's plan lost its fuzzy-repair nested-loop joins")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
+  }
+
   test("rule 4 catches an expensive projection on a raw scan, passes a spread one") {
     // reconstruct the exact pre-fix q135 anti-pattern: the fused DSIR
     // scorer fed straight from the parquet scan (one split at this SF →
