@@ -1,10 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Pq
+import graft.operators.{Pq, Sq}
 
 /** Persisted IVF-PQ index — the build-once / query-many shape every
   * production ANN deployment actually runs (Faiss `write_index` /
@@ -103,6 +104,21 @@ import graft.operators.Pq
   * rewrite of a model table (a rebuild in place, even within the same
   * second) changes the key and misses. The manifest is still listed and
   * parsed on every open.
+  *
+  * CODECS: an index holds IVF-PQ codes (coarse centroids + residual PQ
+  * codebooks) or SQ8 codes (a per-dimension affine model, with optional
+  * coarse centroids for the cell layout). A private codec owns only
+  * what differs between the two: the model type and its `meta` kind
+  * tag, writing the model tables and reading and validating them
+  * through the memo, encoding a delta into segment rows, replacing the
+  * centroids for a split, the model equality a merge requires, and the
+  * cell column name of the opened codes (`_cell` or `cell`). The
+  * lifecycle owns everything else and is written once over the codec:
+  * build, append, upsert, the streaming wrapper, merge, retrain, split,
+  * rebalance, cell stats, the pruned probe, filtered search and the
+  * snapshot open. The manifest, segment, tombstone and commit/repair
+  * protocol never sees a codec; each `…Sq` verb is a one-expression
+  * delegate.
   *
   * MIGRATION (pre-high-water manifests): a manifest written before the
   * `shw` line existed came from the era whose streamed micro-batch `id`
@@ -702,46 +718,29 @@ object AnnIndex {
     }
   }
 
-  /** Write `df` as a parquet segment (optionally cell-partitioned) and
-    * return its row count, observed DURING the write job
-    * (`Dataset.observe` — a CollectMetrics node rides the written
-    * plan): the read-back count job and its directory re-listing per
-    * verb (the previous `countSegment`) are gone. Equal to counting
-    * the landed files for any successful write — segment/tombstone names are
-    * fresh per verb, so nothing else ever writes the path; on a failed
-    * write the caller never reaches the count. */
-  private def writeCounted(df: DataFrame, dest: String,
-                           cellPartitioned: Boolean): Long = {
+  /** Write `df` as a parquet segment and return its row count, observed
+    * DURING the write job (`Dataset.observe` — a CollectMetrics node
+    * rides the written plan): the read-back count job and its directory
+    * re-listing per verb (the previous `countSegment`) are gone. Equal
+    * to counting the landed files for any successful write —
+    * segment/tombstone names are fresh per verb, so nothing else ever
+    * writes the path; on a failed write the caller never reaches the
+    * count. A frame with a `cell` column is shuffled by cell and written
+    * PARTITIONED BY it, so each segment holds ≤ nlist files (one per
+    * populated cell) instead of tasks × cells small files — the
+    * file-count term that otherwise dominates manifest-union listings as
+    * segments accumulate. The shuffle moves (id, cell, codes) —
+    * post-compression bytes, not vectors — and at production nlist
+    * (thousands, [[graft.operators.Similarity.autoNlist]]) it is as
+    * parallel as the cluster. */
+  private def writeCounted(df: DataFrame, dest: String): Long = {
+    val cells = df.columns.contains("cell")
     val obs = new org.apache.spark.sql.Observation()
-    val w = df.observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
-    (if (cellPartitioned) w.partitionBy("cell") else w).parquet(dest)
+    val w = (if (cells) df.repartition(col("cell")) else df)
+      .observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
+    (if (cells) w.partitionBy("cell") else w).parquet(dest)
     obs.get("n").asInstanceOf[Long]
   }
-
-  /** Encode `delta` with the index model and land it as segment
-    * `batch-<id>` (complete before the caller publishes a manifest).
-    * The encode input is spread across cores first (a compact delta
-    * arrives as ONE file → one scan split → the whole encode serializes
-    * on one task — the landing-dir trap), and the ENCODED rows are
-    * shuffled by cell before the partitioned write so each segment
-    * holds ≤ nlist files (one per populated cell) instead of
-    * tasks × cells small files — the file-count term that otherwise
-    * dominates manifest-union listings as segments accumulate. The
-    * shuffle moves (id, cell, codes) — post-compression bytes, not
-    * vectors — and at production nlist (thousands, [[graft.operators
-    * .Similarity.autoNlist]]) it is as parallel as the cluster. */
-  private def writeSegment(delta: DataFrame, idCol: String, vecCol: String,
-                           dir: String, segName: String,
-                           centroids: Array[Array[Double]],
-                           cbs: Array[Array[Array[Double]]]): Long = {
-    val spark = delta.sparkSession
-    val seg = s"$dir/data/$segName"
-    val enc = Pq.ivfPqEncode(graft.operators.Spread.toCores(delta), idCol,
-        vecCol, centroids, cbs)
-      .withColumnRenamed("_cell", "cell")
-    writeCounted(enc.repartition(col("cell")), seg, cellPartitioned = true)
-  }
-
   /** The snapshot's visible code union: each live segment masked by the
     * tombstone sets with a HIGHER id (sequence-number rule — a
     * tombstone never masks a segment appended after it, so
@@ -775,29 +774,6 @@ object AnnIndex {
         masks.reduce(_ unionByName _).select(col("neighbor_id")).distinct(),
         Seq("neighbor_id"), "left_anti")
     }.reduce(_ unionByName _)
-  }
-
-  /** Land the parameter-sized IVF-PQ model tables (centroids,
-    * codebooks, meta) under `root` — the build writes them at the
-    * index root (model version 0), [[retrain]] under a fresh
-    * `model-<uniq>/` directory. */
-  private def writeModelArtifacts(spark: SparkSession, root: String,
-                                  centroids: Array[Array[Double]],
-                                  cbs: Array[Array[Array[Double]]]): Unit = {
-    import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (v, i) => (i + 1, v.toSeq) }.toSeq
-      .toDF("cell", "vec")
-      .repartition(1).write.mode("overwrite").parquet(s"$root/centroids")
-    cbs.zipWithIndex
-      .flatMap { case (cb, s) =>
-        cb.zipWithIndex.map { case (v, j) => (s, j + 1, v.toSeq) } }.toSeq
-      .toDF("s", "code", "vec")
-      .repartition(1).write.mode("overwrite").parquet(s"$root/codebooks")
-    Seq((centroids.head.length, centroids.length, cbs.length,
-        cbs.head.length))
-      .toDF("dim", "nlist", "m", "ncode")
-      .repartition(1).write.mode("overwrite").parquet(s"$root/meta")
   }
 
   // ---- model-table schemas (fixed: written by this object) ---------
@@ -872,82 +848,201 @@ object AnnIndex {
       }
   }
 
-  /** Read ONLY the IVF-PQ model tables of a pinned manifest — the
-    * writer verbs (append/upsert/merge-dst) need the encode model and
-    * nothing else; a full [[load]] would also open every live segment
-    * (one schema read each) to assemble a visible union the writer
-    * never evaluates. Memoized under `"ivf" +: mkey`; every call gets
-    * its own copy of the arrays. */
-  private def readIvfModel(spark: SparkSession, dir: String,
-                           md: ManifestData, mkey: Seq[String])
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val (cents, cbs) = memoized("ivf" +: mkey)(readIvfTables(spark, dir, md))
-    (cents.map(_.clone), cbs.map(_.map(_.clone)))
+  // ---- codecs (see CODECS on the object) ---------------------------
+  private type PqModel = (Array[Array[Double]], Array[Array[Array[Double]]])
+  private type SqModel = (Sq.Model, Option[Array[Array[Double]]])
+
+  /** What the two vector codecs do differently; every lifecycle verb
+    * below is written once over it. `kind` keys the model memo,
+    * `metaKind` is the `kind` value the codec's `meta` table carries
+    * (`label` names it in errors), `cellCol` names the cell column of
+    * its opened codes, `tier` suffixes its public verb names in errors,
+    * and `modelNames` names what a merge compares. */
+  private sealed abstract class Codec[M <: AnyRef](val kind: String,
+      val metaKind: String, val label: String, val metaSchema: StructType,
+      val cellCol: String, val tier: String, val modelNames: String) {
+    /** Land the parameter-sized model tables under `root`: the build at
+      * the index root (model version 0), [[retrain]] and [[splitCell]]
+      * under a fresh `model-<uniq>/` directory. */
+    def writeModel(spark: SparkSession, root: String, m: M): Unit
+    /** The model tables under `mroot`, validated against `meta`. */
+    def readTables(spark: SparkSession, mroot: String, meta: Row): M
+    def copy(m: M): M
+    /** `(neighbor_id, codes, …)` rows, plus `cell` (the nearest centroid
+      * of the RAW vector) when the model has a coarse quantizer. */
+    def encode(delta: DataFrame, idCol: String, vecCol: String, m: M): DataFrame
+    def centroids(m: M): Option[Array[Array[Double]]]
+    def withCentroids(m: M, cents: Array[Array[Double]]): M
+    def same(a: M, b: M): Boolean
+    /** The opened codes of a snapshot's visible union. */
+    def opened(union: DataFrame): DataFrame = union
   }
 
-  private def readIvfTables(spark: SparkSession, dir: String,
-                            md: ManifestData)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val mroot = modelRoot(dir, md)
-    val meta = spark.read.schema(ivfMetaSchema)
-      .parquet(s"$mroot/meta").collect().head
-    require(meta.getAs[String]("kind") == null,
-      s"$dir is not an IVF-PQ index (meta kind=${meta.getAs[String]("kind")})")
-    val (dim, nlist, m, ncode) =
-      (meta.getAs[Int]("dim"), meta.getAs[Int]("nlist"),
-        meta.getAs[Int]("m"), meta.getAs[Int]("ncode"))
-    val cents = spark.read.schema(centroidsSchema)
-      .parquet(s"$mroot/centroids")
-      .orderBy("cell").collect()
-      .map(_.getSeq[Double](1).toArray)
-    require(cents.length == nlist && cents.forall(_.length == dim),
-      s"centroids table does not match meta ($nlist x $dim)")
-    val cbRows = spark.read.schema(codebooksSchema)
-      .parquet(s"$mroot/codebooks")
-      .orderBy("s", "code").collect()
-    require(cbRows.length == m * ncode,
-      s"codebooks table does not match meta ($m x $ncode)")
-    val cbs = cbRows.grouped(ncode)
-      .map(_.map(_.getSeq[Double](2).toArray).toArray).toArray
-    (cents, cbs)
+  private def writeTable(df: DataFrame, dest: String): Unit =
+    df.repartition(1).write.mode("overwrite").parquet(dest)
+
+  private def writeCentroids(spark: SparkSession, root: String,
+                             cents: Array[Array[Double]]): Unit = {
+    import spark.implicits._
+    writeTable(cents.zipWithIndex.map { case (v, i) => (i + 1, v.toSeq) }
+      .toSeq.toDF("cell", "vec"), s"$root/centroids")
   }
 
-  /** [[readIvfModel]]'s SQ8 twin: affine model + optional coarse
-    * quantizer, nothing else, memoized under `"sq" +: mkey`. */
-  private def readSqModel(spark: SparkSession, dir: String,
-                          md: ManifestData, mkey: Seq[String])
-      : (graft.operators.Sq.Model, Option[Array[Array[Double]]]) = {
-    val (m, cents) = memoized("sq" +: mkey)(readSqTables(spark, dir, md))
-    (graft.operators.Sq.Model(m.mins.clone, m.steps.clone, m.invSteps.clone),
-      cents.map(_.map(_.clone)))
+  /** The coarse quantizer, validated: cell ids exactly `1..n` (a lost
+    * row would silently shift every later cell's probe routing) and
+    * every vector `dim` wide. */
+  private def readCentroids(spark: SparkSession, mroot: String,
+                            dim: Int): Array[Array[Double]] = {
+    val rows = spark.read.schema(centroidsSchema)
+      .parquet(s"$mroot/centroids").orderBy("cell").collect()
+    require(rows.map(_.getInt(0)).sameElements(1 to rows.length) &&
+        rows.forall(_.getSeq[Double](1).length == dim),
+      s"centroids table does not match meta (cells 1..${rows.length}, dim $dim)")
+    rows.map(_.getSeq[Double](1).toArray)
   }
 
-  private def readSqTables(spark: SparkSession, dir: String,
-                           md: ManifestData)
-      : (graft.operators.Sq.Model, Option[Array[Array[Double]]]) = {
+  private def deep(a: Array[Array[Double]]): Seq[Seq[Double]] =
+    a.map(_.toSeq).toSeq
+
+  private object PqCodec extends Codec[PqModel]("ivf", null, "IVF-PQ",
+      ivfMetaSchema, "_cell", "", "centroids/codebooks") {
+    def writeModel(spark: SparkSession, root: String, m: PqModel): Unit = {
+      import spark.implicits._
+      val (cents, cbs) = m
+      writeCentroids(spark, root, cents)
+      writeTable(cbs.zipWithIndex.flatMap { case (cb, s) =>
+          cb.zipWithIndex.map { case (v, j) => (s, j + 1, v.toSeq) } }.toSeq
+        .toDF("s", "code", "vec"), s"$root/codebooks")
+      writeTable(Seq((cents.head.length, cents.length, cbs.length,
+          cbs.head.length)).toDF("dim", "nlist", "m", "ncode"), s"$root/meta")
+    }
+    def readTables(spark: SparkSession, mroot: String,
+                   meta: Row): PqModel = {
+      val (dim, nlist, m, ncode) =
+        (meta.getAs[Int]("dim"), meta.getAs[Int]("nlist"),
+          meta.getAs[Int]("m"), meta.getAs[Int]("ncode"))
+      val cents = readCentroids(spark, mroot, dim)
+      require(cents.length == nlist,
+        s"centroids table does not match meta ($nlist x $dim)")
+      val cbRows = spark.read.schema(codebooksSchema)
+        .parquet(s"$mroot/codebooks").orderBy("s", "code").collect()
+      require(cbRows.length == m * ncode,
+        s"codebooks table does not match meta ($m x $ncode)")
+      (cents, cbRows.grouped(ncode)
+        .map(_.map(_.getSeq[Double](2).toArray).toArray).toArray)
+    }
+    def copy(m: PqModel): PqModel =
+      (m._1.map(_.clone), m._2.map(_.map(_.clone)))
+    def encode(delta: DataFrame, idCol: String, vecCol: String,
+               m: PqModel): DataFrame =
+      Pq.ivfPqEncode(delta, idCol, vecCol, m._1, m._2)
+        .withColumnRenamed("_cell", "cell")
+    def centroids(m: PqModel): Option[Array[Array[Double]]] = Some(m._1)
+    def withCentroids(m: PqModel, cents: Array[Array[Double]]): PqModel =
+      (cents, m._2)
+    def same(a: PqModel, b: PqModel): Boolean =
+      deep(a._1) == deep(b._1) && a._2.map(deep).toSeq == b._2.map(deep).toSeq
+    override def opened(union: DataFrame): DataFrame =
+      union.select(col("neighbor_id"), col("cell").as("_cell"), col("codes"))
+  }
+
+  private object SqCodec extends Codec[SqModel]("sq", "sq8", "sq8",
+      sqMetaSchema, "cell", "Sq", "affine model/quantizer") {
+    def writeModel(spark: SparkSession, root: String, m: SqModel): Unit = {
+      import spark.implicits._
+      val (sq, cents) = m
+      writeTable((0 until sq.dim)
+        .map(i => (i, sq.mins(i), sq.steps(i), sq.invSteps(i)))
+        .toDF("i", "mn", "step", "inv"), s"$root/model")
+      writeTable(Seq((sq.dim, "sq8")).toDF("dim", "kind"), s"$root/meta")
+      cents.foreach(writeCentroids(spark, root, _))
+    }
+    def readTables(spark: SparkSession, mroot: String,
+                   meta: Row): SqModel = {
+      val dim = meta.getAs[Int]("dim")
+      val rows = spark.read.schema(sqModelSchema)
+        .parquet(s"$mroot/model").orderBy("i").collect()
+      require(rows.length == dim, s"model table does not match meta ($dim dims)")
+      (Sq.Model(rows.map(_.getAs[Double]("mn")),
+          rows.map(_.getAs[Double]("step")), rows.map(_.getAs[Double]("inv"))),
+        if (!fs(spark, mroot).exists(path(s"$mroot/centroids"))) None
+        else Some(readCentroids(spark, mroot, dim)))
+    }
+    def copy(m: SqModel): SqModel =
+      (Sq.Model(m._1.mins.clone, m._1.steps.clone, m._1.invSteps.clone),
+        m._2.map(_.map(_.clone)))
+    def encode(delta: DataFrame, idCol: String, vecCol: String,
+               m: SqModel): DataFrame = {
+      import graft.plans.SketchExpressions.nearestCentroids
+      delta.select(Seq(col(idCol).as("neighbor_id"),
+          Sq.encodeExpr(col(vecCol), m._1).as("codes")) ++
+          m._2.map(c => element_at(nearestCentroids(col(vecCol), c, 1), 1)
+            .as("cell")): _*)
+        .withColumn("recon_norm", Sq.reconNormExpr(col("codes"), m._1))
+    }
+    def centroids(m: SqModel): Option[Array[Array[Double]]] = m._2
+    def withCentroids(m: SqModel, cents: Array[Array[Double]]): SqModel =
+      (m._1, Some(cents))
+    def same(a: SqModel, b: SqModel): Boolean =
+      a._1.mins.toSeq == b._1.mins.toSeq &&
+        a._1.steps.toSeq == b._1.steps.toSeq && a._2.map(deep) == b._2.map(deep)
+  }
+
+  /** Read ONLY the model tables of a pinned manifest — the writer verbs
+    * (append/upsert/merge-dst) need the encode model and nothing else;
+    * a full [[open]] would also read the first segment's schema for a
+    * visible union the writer never evaluates. Validated once per model
+    * key (MODEL MEMO on the object); every call gets its own copy of
+    * the arrays. */
+  private def readModel[M <: AnyRef](codec: Codec[M], spark: SparkSession,
+                                     dir: String, md: ManifestData,
+                                     mkey: Seq[String]): M =
+    codec.copy(memoized(codec.kind +: mkey) {
+      val mroot = modelRoot(dir, md)
+      val meta = spark.read.schema(codec.metaSchema)
+        .parquet(s"$mroot/meta").collect().head
+      val kind = meta.getAs[String]("kind")
+      require(kind == codec.metaKind,
+        s"$dir is not an ${codec.label} index (meta kind=$kind)")
+      codec.readTables(spark, mroot, meta)
+    })
+
+  /** An opened snapshot of either codec, before [[load]] / [[loadSq]]
+    * type it. */
+  private final case class Snapshot[M](model: M, codes: DataFrame,
+                                       nrows: Long, batches: Seq[Long])
+
+  private def open[M <: AnyRef](codec: Codec[M], spark: SparkSession,
+                                dir: String, asOf: Option[Long]): Snapshot[M] = {
     val f = fs(spark, dir)
-    val mroot = modelRoot(dir, md)
-    val meta = spark.read.schema(sqMetaSchema)
-      .parquet(s"$mroot/meta").collect().head
-    require(meta.getAs[String]("kind") == "sq8", s"$dir is not an sq8 index")
-    val dim = meta.getAs[Int]("dim")
-    val rows = spark.read.schema(sqModelSchema)
-      .parquet(s"$mroot/model").orderBy("i").collect()
-    require(rows.length == dim, s"model table does not match meta ($dim dims)")
-    val m = graft.operators.Sq.Model(
-      rows.map(_.getAs[Double]("mn")),
-      rows.map(_.getAs[Double]("step")),
-      rows.map(_.getAs[Double]("inv")))
-    val cents =
-      if (!f.exists(path(s"$mroot/centroids"))) None
-      else Some(spark.read.schema(centroidsSchema)
-        .parquet(s"$mroot/centroids")
-        .orderBy("cell").collect()
-        .map(_.getSeq[Double](1).toArray))
-    cents.foreach(c => require(c.forall(_.length == dim),
-      s"centroids table does not match meta (dim $dim)"))
-    (m, cents)
+    val (_, md) = resolveReadManifest(f, dir, asOf)
+    // model artifacts resolve THROUGH the pinned manifest: a reader
+    // pinned before a [[retrain]] keeps scoring with the model its
+    // segments were encoded with (version 0 = the build's root dirs)
+    val mkey = modelKey(f, dir, md)
+    val model = readModel(codec, spark, dir, md, mkey)
+    Snapshot(model, codec.opened(visibleUnion(spark, dir, md, mkey)),
+      md.segs.map(_.n).sum, md.segs.map(_.id))
   }
+
+  /** Encode `delta` with model `m` and land it as segment `segName`
+    * (complete before the caller publishes a manifest). The encode
+    * input is spread across cores first: a compact delta arrives as ONE
+    * file → one scan split → the whole encode serializes on one task —
+    * the landing-dir trap. */
+  private def writeSegment[M <: AnyRef](codec: Codec[M], delta: DataFrame,
+                                        idCol: String, vecCol: String,
+                                        dir: String, segName: String,
+                                        m: M): Long =
+    writeCounted(codec.encode(graft.operators.Spread.toCores(delta), idCol,
+      vecCol, m), s"$dir/data/$segName")
+
+  /** The coarse quantizer a cell verb needs — only an SQ8 index built
+    * without centroids lacks one. */
+  private def cellsOf(cents: Option[Array[Array[Double]]],
+                      verb: String): Array[Array[Double]] =
+    cents.getOrElse(throw new IllegalArgumentException(
+      s"$verb needs a cell-partitioned SQ index (buildSq with centroids)"))
 
   /** Build and atomically publish a FRESH index at `dir` (replacing any
     * index already there). The corpus pass is [[Pq.ivfPqEncode]] —
@@ -960,7 +1055,12 @@ object AnnIndex {
     * that keeps them running, use [[retrain]]. */
   def buildIvfPq(corpus: DataFrame, idCol: String, vecCol: String,
                  dir: String, centroids: Array[Array[Double]],
-                 cbs: Array[Array[Array[Double]]]): Unit = {
+                 cbs: Array[Array[Array[Double]]]): Unit =
+    build(PqCodec, corpus, idCol, vecCol, dir, (centroids, cbs))
+
+  private def build[M <: AnyRef](codec: Codec[M], corpus: DataFrame,
+                                 idCol: String, vecCol: String, dir: String,
+                                 m: M): Unit = {
     val spark = corpus.sparkSession
     val f = fs(spark, dir)
     val target = path(dir)
@@ -969,10 +1069,9 @@ object AnnIndex {
     val tmp = path(parent.toString + s"/_tmp.${target.getName}")
     f.delete(tmp, true)
 
-    writeModelArtifacts(spark, tmp.toString, centroids, cbs)
+    codec.writeModel(spark, tmp.toString, m)
     val segName = freshName("batch-")
-    val n = writeSegment(corpus, idCol, vecCol, tmp.toString, segName,
-      centroids, cbs)
+    val n = writeSegment(codec, corpus, idCol, vecCol, tmp.toString, segName, m)
     writeManifest(f, tmp.toString, 0L,
       ManifestData(Seq(Art(0L, n, segName)), Seq.empty, hw = 0L, shw = -1L))
 
@@ -1017,22 +1116,8 @@ object AnnIndex {
     * the winner's high-water mark in the manifest line — no data
     * moves, and both commits survive in adjacent generations. */
   def appendIvfPq(delta: DataFrame, idCol: String, vecCol: String,
-                  dir: String, dedupKey: Option[Long] = None): Unit = {
-    val spark = delta.sparkSession
-    val f = fs(spark, dir)
-    val (mid, md) = refresh(f, dir)
-    if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
-    maybeKill(dir, "stage")
-    val (cents, cbs) = readIvfModel(spark, dir, md, modelKey(f, dir, md))
-    val segName = freshName("batch-")
-    val n = writeSegment(delta, idCol, vecCol, dir, segName, cents, cbs)
-    if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); return }
-    commitWithRetry(f, dir, (mid, md),
-      m => m.copy(segs = m.segs :+ Art(m.nextId, n, segName),
-        hw = m.nextId, shw = math.max(m.shw, dedupKey.getOrElse(m.shw))),
-      dedupKey, Seq(s"$dir/data/$segName"),
-      abortOnModelChange = true, verb = "append")
-  }
+                  dir: String, dedupKey: Option[Long] = None): Unit =
+    ingest(PqCodec, delta, idCol, vecCol, dir, dedupKey, upsert = false)
 
   /** Continuous index ingestion: every micro-batch lands as one
     * idempotent [[appendIvfPq]] segment, with the foreachBatch id as
@@ -1045,15 +1130,9 @@ object AnnIndex {
     * half-applied micro-batch. */
   def streamAppend(updates: DataFrame, idCol: String, vecCol: String,
                    dir: String, checkpoint: String,
-                   trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        appendIvfPq(batch.toDF(), idCol, vecCol, dir, dedupKey = Some(id))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+                   trigger: Trigger): StreamingQuery =
+    streamBatches(updates, checkpoint, trigger)((batch, id) =>
+      appendIvfPq(batch, idCol, vecCol, dir, dedupKey = Some(id)))
 
   /** One streamed-CORRECTION batch — upsert semantics for the index:
     * the batch's ids are tombstoned at id `t` (masking every OLDER
@@ -1071,27 +1150,39 @@ object AnnIndex {
     * keep the versioned raw table and the index in lockstep (the
     * `stream_index_upsert_parity` harness runs exactly that). */
   def upsertBatchIvfPq(batch: DataFrame, idCol: String, vecCol: String,
-                       dir: String, dedupKey: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
+                       dir: String, dedupKey: Option[Long] = None): Unit =
+    ingest(PqCodec, batch, idCol, vecCol, dir, dedupKey, upsert = true)
+
+  /** [[appendIvfPq]] (`upsert = false`) and [[upsertBatchIvfPq]]
+    * (`upsert = true`) over either codec. */
+  private def ingest[M <: AnyRef](codec: Codec[M], delta: DataFrame,
+                                  idCol: String, vecCol: String, dir: String,
+                                  dedupKey: Option[Long],
+                                  upsert: Boolean): Unit = {
+    val spark = delta.sparkSession
     val f = fs(spark, dir)
     val (mid, md) = refresh(f, dir)
     if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
     maybeKill(dir, "stage")
-    val (cents, cbs) = readIvfModel(spark, dir, md, modelKey(f, dir, md))
+    val model = readModel(codec, spark, dir, md, modelKey(f, dir, md))
     val segName = freshName("batch-")
-    val tombName = freshName("t-")
-    val n = writeSegment(batch, idCol, vecCol, dir, segName, cents, cbs)
+    val n = writeSegment(codec, delta, idCol, vecCol, dir, segName, model)
     if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); return }
-    val tn = writeCounted(
-      batch.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
-      s"$dir/tomb/$tombName", cellPartitioned = false)
+    // an upsert's tombstone takes id t and its segment t+1
+    val tomb = if (!upsert) None else {
+      val tombName = freshName("t-")
+      Some(tombName -> writeCounted(
+        delta.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
+        s"$dir/tomb/$tombName"))
+    }
+    val segOffset = tomb.size
     commitWithRetry(f, dir, (mid, md),
-      m => m.copy(segs = m.segs :+ Art(m.nextId + 1, n, segName),
-        tombs = m.tombs :+ Art(m.nextId, tn, tombName),
-        hw = m.nextId + 1,
+      m => m.copy(segs = m.segs :+ Art(m.nextId + segOffset, n, segName),
+        tombs = m.tombs ++ tomb.map { case (t, tn) => Art(m.nextId, tn, t) },
+        hw = m.nextId + segOffset,
         shw = math.max(m.shw, dedupKey.getOrElse(m.shw))),
-      dedupKey, Seq(s"$dir/data/$segName", s"$dir/tomb/$tombName"),
-      abortOnModelChange = true, verb = "upsert")
+      dedupKey, s"$dir/data/$segName" +: tomb.map(t => s"$dir/tomb/${t._1}").toSeq,
+      abortOnModelChange = true, verb = if (upsert) "upsert" else "append")
   }
 
   /** Continuous CORRECTION ingest: [[upsertBatchIvfPq]] per micro-batch
@@ -1101,11 +1192,17 @@ object AnnIndex {
     * [[compact]]. */
   def streamUpsert(updates: DataFrame, idCol: String, vecCol: String,
                    dir: String, checkpoint: String,
-                   trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+                   trigger: Trigger): StreamingQuery =
+    streamBatches(updates, checkpoint, trigger)((batch, id) =>
+      upsertBatchIvfPq(batch, idCol, vecCol, dir, dedupKey = Some(id)))
+
+  /** Start `updates` with `each(batch, batchId)` per micro-batch. */
+  private def streamBatches(updates: DataFrame, checkpoint: String,
+                            trigger: Trigger)(
+      each: (DataFrame, Long) => Unit): StreamingQuery =
     updates.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        upsertBatchIvfPq(batch.toDF(), idCol, vecCol, dir, dedupKey = Some(id))
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
+        each(batch.toDF(), id)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -1130,7 +1227,7 @@ object AnnIndex {
     val tombName = freshName("t-")
     val n = writeCounted(
       ids.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
-      s"$dir/tomb/$tombName", cellPartitioned = false)
+      s"$dir/tomb/$tombName")
     if (n == 0) { f.delete(path(s"$dir/tomb/$tombName"), true); return }
     // a re-based delete applies AS OF ITS COMMIT: a fresh tombstone id
     // (> every committed segment) also masks matching rows a concurrent
@@ -1165,13 +1262,8 @@ object AnnIndex {
       maybeKill(dir, "stage")
       if (md.segs.length <= 1 && md.tombs.isEmpty) return
       val segName = freshName("batch-")
-      val union = visibleUnion(spark, dir, md, modelKey(f, dir, md))
-      val n =
-        if (union.columns.contains("cell"))
-          writeCounted(union.repartition(col("cell")),
-            s"$dir/data/$segName", cellPartitioned = true)
-        else writeCounted(union, s"$dir/data/$segName",
-          cellPartitioned = false)
+      val n = writeCounted(visibleUnion(spark, dir, md, modelKey(f, dir, md)),
+        s"$dir/data/$segName")
       if (n == 0) {
         f.delete(path(s"$dir/data/$segName"), true)
         throw new IllegalStateException(
@@ -1217,23 +1309,25 @@ object AnnIndex {
     * duplicated across shards stay duplicated, exactly like append;
     * route overlapping corrections through [[upsertBatchIvfPq]]. `src`
     * is untouched (drop or [[expire]] it after the merge commits). */
-  def merge(spark: SparkSession, dstDir: String, srcDir: String): Unit = {
+  def merge(spark: SparkSession, dstDir: String, srcDir: String): Unit =
+    mergeInto(PqCodec, spark, dstDir, srcDir)
+
+  private def mergeInto[M <: AnyRef](codec: Codec[M], spark: SparkSession,
+                                     dstDir: String, srcDir: String): Unit = {
     require(dstDir != srcDir, "cannot merge an index into itself")
     val f = fs(spark, dstDir)
     val (mid, md) = refresh(f, dstDir)
     maybeKill(dstDir, "stage")
-    val (dstCents, dstCbs) = readIvfModel(spark, dstDir, md,
-      modelKey(f, dstDir, md))
-    val src = load(spark, srcDir)
-    require(dstCents.map(_.toSeq).toSeq == src.centroids.map(_.toSeq).toSeq &&
-        dstCbs.map(_.map(_.toSeq).toSeq).toSeq == src.cbs.map(_.map(_.toSeq).toSeq).toSeq,
+    val dst = readModel(codec, spark, dstDir, md, modelKey(f, dstDir, md))
+    val src = open(codec, spark, srcDir, asOf = None)
+    require(codec.same(dst, src.model),
       s"model mismatch: $srcDir was not built with $dstDir's " +
-        "centroids/codebooks — codes are not comparable across models")
+        s"${codec.modelNames} — codes are not comparable across models")
     val segName = freshName("batch-")
-    val copied = src.codes
-      .select(col("neighbor_id"), col("_cell").as("cell"), col("codes"))
-    val n = writeCounted(copied.repartition(col("cell")),
-      s"$dstDir/data/$segName", cellPartitioned = true)
+    // the copied rows keep their cell column, so the segment keeps the
+    // destination's layout
+    val n = writeCounted(src.codes.withColumnRenamed(codec.cellCol, "cell"),
+      s"$dstDir/data/$segName")
     if (n == 0) { f.delete(path(s"$dstDir/data/$segName"), true); return }
     commitWithRetry(f, dstDir, (mid, md),
       m => m.copy(segs = m.segs :+ Art(m.nextId, n, segName),
@@ -1272,15 +1366,20 @@ object AnnIndex {
     * includes them). */
   def retrain(corpus: DataFrame, idCol: String, vecCol: String,
               dir: String, centroids: Array[Array[Double]],
-              cbs: Array[Array[Array[Double]]]): Unit = {
+              cbs: Array[Array[Array[Double]]]): Unit =
+    retrainWith(PqCodec, corpus, idCol, vecCol, dir, (centroids, cbs))
+
+  private def retrainWith[M <: AnyRef](codec: Codec[M], corpus: DataFrame,
+                                       idCol: String, vecCol: String,
+                                       dir: String, m: M): Unit = {
     val spark = corpus.sparkSession
     val f = fs(spark, dir)
     val (mid, md) = refresh(f, dir)
     maybeKill(dir, "stage")
     val modelDir = freshName("model-")
-    writeModelArtifacts(spark, s"$dir/$modelDir", centroids, cbs)
+    codec.writeModel(spark, s"$dir/$modelDir", m)
     val segName = freshName("batch-")
-    val n = writeSegment(corpus, idCol, vecCol, dir, segName, centroids, cbs)
+    val n = writeSegment(codec, corpus, idCol, vecCol, dir, segName, m)
     def cleanup(): Unit = {
       f.delete(path(s"$dir/data/$segName"), true)
       f.delete(path(s"$dir/$modelDir"), true)
@@ -1359,7 +1458,16 @@ object AnnIndex {
                              vecCol: String, dir: String,
                              splits: Seq[(Int, Array[Array[Double]])],
                              expectMid: Option[Long],
-                             hotOverride: Option[DataFrame]): Unit = {
+                             hotOverride: Option[DataFrame]): Unit =
+    splitCells(PqCodec, corpus, idCol, vecCol, dir, splits, expectMid,
+      hotOverride)
+
+  private def splitCells[M <: AnyRef](codec: Codec[M], corpus: DataFrame,
+                                      idCol: String, vecCol: String,
+                                      dir: String,
+                                      splits: Seq[(Int, Array[Array[Double]])],
+                                      expectMid: Option[Long],
+                                      hotOverride: Option[DataFrame]): Unit = {
     val spark = corpus.sparkSession
     val f = fs(spark, dir)
     val (mid, md) = refresh(f, dir)
@@ -1367,18 +1475,19 @@ object AnnIndex {
       if (mid != e) throw new java.util.ConcurrentModificationException(
         s"another writer committed to $dir after the policy derived its " +
           s"sub-centroids (snapshot $e -> $mid) — the derivation is " +
-          "stale; re-run rebalance against the fresh snapshot")
+          s"stale; re-run rebalance${codec.tier} against the fresh snapshot")
     }
     maybeKill(dir, "stage")
-    val idx = load(spark, dir, asOf = Some(mid))
+    val idx = open(codec, spark, dir, asOf = Some(mid))
+    val cents = cellsOf(codec.centroids(idx.model), s"splitCell${codec.tier}")
     require(splits.nonEmpty, "no cells to split")
     val cells = splits.map(_._1)
     require(cells.distinct.length == cells.length,
       s"duplicate cells in one split pass: ${cells.mkString(",")}")
-    val dim = idx.centroids.head.length
+    val dim = cents.head.length
     splits.foreach { case (cell, subs) =>
-      require(cell >= 1 && cell <= idx.nlist,
-        s"cell $cell out of range 1..${idx.nlist}")
+      require(cell >= 1 && cell <= cents.length,
+        s"cell $cell out of range 1..${cents.length}")
       require(subs.length >= 2,
         s"a split needs >= 2 sub-centroids, got ${subs.length} (cell $cell)")
       require(subs.forall(_.length == dim),
@@ -1393,7 +1502,7 @@ object AnnIndex {
     // duplicated member to its single corpus row (the tombstone masks
     // every old copy; the same id cannot land twice in one segment)
     val memberIds = idx.codes
-      .filter(col("_cell").isin(cells.map(Int.box): _*))
+      .filter(col(codec.cellCol).isin(cells.map(Int.box): _*))
       .select(col("neighbor_id")).distinct()
     val hot = hotOverride.getOrElse(corpus
       .select(col(idCol), col(vecCol))
@@ -1404,16 +1513,15 @@ object AnnIndex {
     // hottest-first fold: each split replaces its cell's slot with
     // sub-0 and appends the rest — existing cell ids never shift, and
     // the appended ids are pinned by the caller's split order
-    val newCents = splits.foldLeft(idx.centroids) {
+    val model = codec.withCentroids(idx.model, splits.foldLeft(cents) {
       case (cs, (cell, subs)) => cs.updated(cell - 1, subs.head) ++ subs.tail
-    }
+    })
     val modelDir = freshName("model-")
-    writeModelArtifacts(spark, s"$dir/$modelDir", newCents, idx.cbs)
+    codec.writeModel(spark, s"$dir/$modelDir", model)
     val segName = freshName("batch-")
     val tombName = freshName("t-")
-    val n = writeSegment(hot, idCol, vecCol, dir, segName, newCents, idx.cbs)
-    val tn = writeCounted(memberIds, s"$dir/tomb/$tombName",
-      cellPartitioned = false)
+    val n = writeSegment(codec, hot, idCol, vecCol, dir, segName, model)
+    val tn = writeCounted(memberIds, s"$dir/tomb/$tombName")
     def cleanup(): Unit = {
       f.delete(path(s"$dir/data/$segName"), true)
       f.delete(path(s"$dir/tomb/$tombName"), true)
@@ -1423,7 +1531,7 @@ object AnnIndex {
       cleanup()
       throw new IllegalArgumentException(
         s"cell(s) $cellsMsg of $dir are empty — nothing to split (re-read " +
-          "cellStats; the imbalance may have been compacted away)")
+          s"cellStats${codec.tier}; the imbalance may have been compacted away)")
     }
     if (n != tn) {
       cleanup()
@@ -1444,7 +1552,8 @@ object AnnIndex {
       throw new java.util.ConcurrentModificationException(
         s"another writer committed to $dir during the split — its rows " +
           "may sit in the cell being split and would be stranded under a " +
-          "retired centroid; re-run splitCell against the fresh snapshot")
+          s"retired centroid; re-run splitCell${codec.tier} against the " +
+          "fresh snapshot")
     }
     maybeKill(dir, "published")
   }
@@ -1502,75 +1611,41 @@ object AnnIndex {
   def rebalanceReport(corpus: DataFrame, idCol: String, vecCol: String,
                       dir: String, maxImbalance: Double = 4.0,
                       maxSplits: Int = 8): PolicyReport =
-    policyLoop(corpus, idCol, vecCol, maxImbalance, maxSplits,
-      stats = () => {
-        val (mid, _) = refresh(fs(corpus.sparkSession, dir), dir)
-        val idx = load(corpus.sparkSession, dir, asOf = Some(mid))
-        (cellStats(idx).collect()
-          .map(r => (r.getAs[Int]("cell"), r.getAs[Long]("n_vectors"))),
-          idx.nlist, idx.codes, "_cell", mid)
-      },
-      split = (planned, hot, mid) =>
-        splitCellsImpl(corpus, idCol, vecCol, dir, planned,
-          expectMid = Some(mid), hotOverride = Some(hot)))
+    rebalanceWith(PqCodec, corpus, idCol, vecCol, dir, maxImbalance,
+      maxSplits)
 
-  /** [[rebalance]] for the SQ8 tier — same policy, same deterministic
-    * derivation, over [[cellStatsSq]] and [[splitCellSq]]. Requires a
-    * cell-partitioned SQ index (buildSq with centroids). */
-  def rebalanceSq(corpus: DataFrame, idCol: String, vecCol: String,
-                  dir: String, maxImbalance: Double = 4.0,
-                  maxSplits: Int = 8): Int =
-    rebalanceSqReport(corpus, idCol, vecCol, dir, maxImbalance,
-      maxSplits).splits
-
-  /** [[rebalanceSq]] returning the full [[PolicyReport]]. */
-  def rebalanceSqReport(corpus: DataFrame, idCol: String, vecCol: String,
-                        dir: String, maxImbalance: Double = 4.0,
-                        maxSplits: Int = 8): PolicyReport =
-    policyLoop(corpus, idCol, vecCol, maxImbalance, maxSplits,
-      stats = () => {
-        val (mid, _) = refresh(fs(corpus.sparkSession, dir), dir)
-        val idx = loadSq(corpus.sparkSession, dir, asOf = Some(mid))
-        require(idx.centroids.nonEmpty,
-          "rebalanceSq needs a cell-partitioned SQ index (buildSq with " +
-            "centroids)")
-        (cellStatsSq(idx).collect()
-          .map(r => (r.getAs[Int]("cell"), r.getAs[Long]("n_vectors"))),
-          idx.nlist, idx.codes, "cell", mid)
-      },
-      split = (planned, hot, mid) =>
-        splitCellsSqImpl(corpus, idCol, vecCol, dir, planned,
-          expectMid = Some(mid), hotOverride = Some(hot)))
-
-  /** The tier-shared policy loop (see [[rebalance]]'s doc): `stats`
-    * re-reads (per-cell counts, nlist, the codes frame, its cell
-    * column, the snapshot generation) from the CURRENT snapshot each
-    * pass — every split grows nlist, which tightens the bar. Each pass
-    * materializes ONE members frame covering all of the pass's hot
-    * cells (id, raw vector, normalized vector, owning cell) and caches
-    * it for the pass's lifetime: seed A / seed B / the assignment sums
-    * of every hot cell AND the split re-encode read the cache instead
-    * of re-scanning the corpus (~3 scans per cell + 1 per split
-    * before; 1 per pass now — the fix that matters at 100 TB, where a
-    * corpus scan is the whole cost). Unpersisted per pass, like
-    * Components' round frames. */
-  private def policyLoop(corpus: DataFrame, idCol: String, vecCol: String,
-                         maxImbalance: Double, maxSplits: Int,
-                         stats: () => (Array[(Int, Long)], Int, DataFrame,
-                           String, Long),
-                         split: (Seq[(Int, Array[Array[Double]])],
-                           DataFrame, Long) => Unit): PolicyReport = {
+  /** The policy loop of [[rebalance]]'s doc over either codec. Each pass
+    * re-reads the per-cell counts from the CURRENT snapshot — every
+    * split grows nlist, which tightens the bar — and materializes ONE
+    * members frame covering all of the pass's hot cells (id, raw
+    * vector, normalized vector, owning cell), cached for the pass's
+    * lifetime: seed A / seed B / the assignment sums of every hot cell
+    * AND the split re-encode read the cache instead of re-scanning the
+    * corpus (~3 scans per cell + 1 per split before; 1 per pass now —
+    * the fix that matters at 100 TB, where a corpus scan is the whole
+    * cost). Unpersisted per pass, like Components' round frames. */
+  private def rebalanceWith[M <: AnyRef](codec: Codec[M], corpus: DataFrame,
+                                         idCol: String, vecCol: String,
+                                         dir: String, maxImbalance: Double,
+                                         maxSplits: Int): PolicyReport = {
     require(maxImbalance > 1.0,
       s"maxImbalance must exceed 1 (the balanced share), got $maxImbalance")
     require(maxSplits >= 1, s"maxSplits must be >= 1, got $maxSplits")
     import graft.functions.{VectorFunctions => VF}
+    val spark = corpus.sparkSession
+    val cellCol = codec.cellCol
     var splits = 0
     var passes = 0
     val cellsSplit = scala.collection.mutable.ArrayBuffer[Int]()
     val unsplittable = scala.collection.mutable.Set[Int]()
     var done = false
     while (!done && splits < maxSplits) {
-      val (counts, nlist, codes, cellCol, mid) = stats()
+      val (mid, _) = refresh(fs(spark, dir), dir)
+      val idx = open(codec, spark, dir, asOf = Some(mid))
+      val nlist = cellsOf(codec.centroids(idx.model),
+        s"rebalance${codec.tier}").length
+      val counts = cellCounts(idx.codes, cellCol).collect()
+        .map(r => (r.getAs[Int]("cell"), r.getAs[Long]("n_vectors")))
       val total = counts.map(_._2).sum
       val bar = maxImbalance * total.toDouble / nlist
       val hotCells = counts
@@ -1581,7 +1656,7 @@ object AnnIndex {
       if (hotCells.isEmpty) done = true
       else {
         passes += 1
-        val memberIds = codes
+        val memberIds = idx.codes
           .filter(col(cellCol).isin(hotCells.map(Int.box): _*))
           .select(col("neighbor_id").as("_rid"),
             col(cellCol).cast("int").as("_mcell"))
@@ -1612,7 +1687,8 @@ object AnnIndex {
                 .isin(planned.map(t => Int.box(t._1)): _*))
               .dropDuplicates("_rid")
               .select(col(idCol), col(vecCol))
-            split(planned.toSeq, hot, mid)
+            splitCells(codec, corpus, idCol, vecCol, dir, planned.toSeq,
+              expectMid = Some(mid), hotOverride = Some(hot))
             splits += planned.size
             cellsSplit ++= planned.map(_._1)
           }
@@ -1688,58 +1764,12 @@ object AnnIndex {
     * scans (the cheap tier's trade); a CELL-PARTITIONED SQ index keeps
     * the same full-scan default while also serving [[topKSq]]'s pruned
     * mode — one layout, both read paths. */
-  final case class LoadedSq(model: graft.operators.Sq.Model,
+  final case class LoadedSq(model: Sq.Model,
                             centroids: Option[Array[Array[Double]]],
                             codes: DataFrame, nrows: Long,
                             batches: Seq[Long]) {
     def dim: Int = model.dim
     def nlist: Int = centroids.map(_.length).getOrElse(0)
-  }
-
-  /** Land one SQ segment. With a coarse quantizer the encoded rows gain
-    * a `cell` column (nearest centroid of the RAW vector — the same
-    * assignment the IVF-PQ tier makes) and the segment is PARTITIONED
-    * BY it, exactly like [[writeSegment]] — so the probe filter can
-    * become a parquet PartitionFilter in pruned reads. */
-  private def writeSqSegment(delta: DataFrame, idCol: String,
-                             vecCol: String, dir: String, segName: String,
-                             m: graft.operators.Sq.Model,
-                             centroids: Option[Array[Array[Double]]]): Long = {
-    import graft.operators.Sq
-    val seg = s"$dir/data/$segName"
-    val spread = graft.operators.Spread.toCores(delta)
-    centroids match {
-      case None =>
-        writeCounted(Sq.encode(spread, idCol, vecCol, m), seg,
-          cellPartitioned = false)
-      case Some(cents) =>
-        import graft.plans.SketchExpressions.nearestCentroids
-        val e = spread.select(col(idCol).as("neighbor_id"),
-            Sq.encodeExpr(col(vecCol), m).as("codes"),
-            element_at(nearestCentroids(col(vecCol), cents, 1), 1).as("cell"))
-          .withColumn("recon_norm", Sq.reconNormExpr(col("codes"), m))
-        writeCounted(e.repartition(col("cell")), seg, cellPartitioned = true)
-    }
-  }
-
-  /** Land the parameter-sized SQ model tables (affine model, meta,
-    * optional coarse centroids) under `root` — the build writes them
-    * at the index root (model version 0), [[retrainSq]] under a fresh
-    * `model-<uniq>/` directory. */
-  private def writeSqModelArtifacts(spark: SparkSession, root: String,
-                                    m: graft.operators.Sq.Model,
-                                    centroids: Option[Array[Array[Double]]]): Unit = {
-    import spark.implicits._
-    (0 until m.dim).map(i => (i, m.mins(i), m.steps(i), m.invSteps(i)))
-      .toDF("i", "mn", "step", "inv")
-      .repartition(1).write.mode("overwrite").parquet(s"$root/model")
-    Seq((m.dim, "sq8")).toDF("dim", "kind")
-      .repartition(1).write.mode("overwrite").parquet(s"$root/meta")
-    centroids.foreach { cents =>
-      cents.zipWithIndex.map { case (v, i) => (i + 1, v.toSeq) }.toSeq
-        .toDF("cell", "vec")
-        .repartition(1).write.mode("overwrite").parquet(s"$root/centroids")
-    }
   }
 
   /** Build and atomically publish a fresh SQ8 index at `dir` — same
@@ -1751,213 +1781,116 @@ object AnnIndex {
     * [[topKSq]] gains the probe-pruned read path — while the default
     * full scan stays hash-identical to the flat layout (q155's gate). */
   def buildSq(corpus: DataFrame, idCol: String, vecCol: String,
-              dir: String, m: graft.operators.Sq.Model,
-              centroids: Option[Array[Array[Double]]] = None): Unit = {
-    val spark = corpus.sparkSession
-    val f = fs(spark, dir)
-    val target = path(dir)
-    val parent = Option(target.getParent).getOrElse(path("."))
-    f.mkdirs(parent)
-    val tmp = path(parent.toString + s"/_tmp.${target.getName}")
-    f.delete(tmp, true)
+              dir: String, m: Sq.Model,
+              centroids: Option[Array[Array[Double]]] = None): Unit =
+    build(SqCodec, corpus, idCol, vecCol, dir, (m, centroids))
 
-    writeSqModelArtifacts(spark, tmp.toString, m, centroids)
-    val segName = freshName("batch-")
-    val n = writeSqSegment(corpus, idCol, vecCol, tmp.toString, segName, m,
-      centroids)
-    writeManifest(f, tmp.toString, 0L,
-      ManifestData(Seq(Art(0L, n, segName)), Seq.empty, hw = 0L, shw = -1L))
-
-    f.delete(target, true)
-    if (!f.rename(tmp, target))
-      throw new java.io.IOException(s"rename $tmp -> $target failed")
-  }
-
-  /** Append a new immutable SQ8 segment — model (and coarse quantizer,
-    * when present) read FROM the index, same high-water allocation,
-    * idempotent `dedupKey` contract and empty-delta short-circuit as
-    * [[appendIvfPq]]. */
+  /** [[appendIvfPq]] on an SQ8 index. */
   def appendSq(delta: DataFrame, idCol: String, vecCol: String,
-               dir: String, dedupKey: Option[Long] = None): Unit = {
-    val spark = delta.sparkSession
-    val f = fs(spark, dir)
-    val (mid, md) = refresh(f, dir)
-    if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
-    maybeKill(dir, "stage")
-    val (model, cents) = readSqModel(spark, dir, md, modelKey(f, dir, md))
-    val segName = freshName("batch-")
-    val n = writeSqSegment(delta, idCol, vecCol, dir, segName, model, cents)
-    if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); return }
-    commitWithRetry(f, dir, (mid, md),
-      m => m.copy(segs = m.segs :+ Art(m.nextId, n, segName),
-        hw = m.nextId, shw = math.max(m.shw, dedupKey.getOrElse(m.shw))),
-      dedupKey, Seq(s"$dir/data/$segName"),
-      abortOnModelChange = true, verb = "append")
-  }
+               dir: String, dedupKey: Option[Long] = None): Unit =
+    ingest(SqCodec, delta, idCol, vecCol, dir, dedupKey, upsert = false)
 
-  /** [[streamAppend]]'s cheap-tier twin: continuous SQ8 index
-    * ingestion, one idempotent [[appendSq]] segment per micro-batch
-    * with the foreachBatch id as the dedup key — the same at-least-once
-    * replay and compaction-survival contract. */
+  /** [[streamAppend]] into an SQ8 index. */
   def streamAppendSq(updates: DataFrame, idCol: String, vecCol: String,
                      dir: String, checkpoint: String,
-                     trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        appendSq(batch.toDF(), idCol, vecCol, dir, dedupKey = Some(id))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+                     trigger: Trigger): StreamingQuery =
+    streamBatches(updates, checkpoint, trigger)((batch, id) =>
+      appendSq(batch, idCol, vecCol, dir, dedupKey = Some(id)))
 
-  /** [[upsertBatchIvfPq]]'s cheap-tier twin: one streamed-CORRECTION
-    * batch on an SQ8 index — the batch's ids are tombstoned at id `t`
-    * (masking every older segment's copy) and the re-encoded batch
-    * lands as segment `t+1`, both published by one atomic manifest
-    * swap. Same `dedupKey` replay contract, empty-batch short-circuit,
-    * re-base on lost races, and loud abort under a concurrent
-    * [[retrainSq]]. */
+  /** [[upsertBatchIvfPq]] on an SQ8 index. */
   def upsertBatchSq(batch: DataFrame, idCol: String, vecCol: String,
-                    dir: String, dedupKey: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    val f = fs(spark, dir)
-    val (mid, md) = refresh(f, dir)
-    if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
-    maybeKill(dir, "stage")
-    val (model, cents) = readSqModel(spark, dir, md, modelKey(f, dir, md))
-    val segName = freshName("batch-")
-    val tombName = freshName("t-")
-    val n = writeSqSegment(batch, idCol, vecCol, dir, segName, model, cents)
-    if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); return }
-    val tn = writeCounted(
-      batch.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
-      s"$dir/tomb/$tombName", cellPartitioned = false)
-    commitWithRetry(f, dir, (mid, md),
-      m => m.copy(segs = m.segs :+ Art(m.nextId + 1, n, segName),
-        tombs = m.tombs :+ Art(m.nextId, tn, tombName),
-        hw = m.nextId + 1,
-        shw = math.max(m.shw, dedupKey.getOrElse(m.shw))),
-      dedupKey, Seq(s"$dir/data/$segName", s"$dir/tomb/$tombName"),
-      abortOnModelChange = true, verb = "upsert")
-  }
+                    dir: String, dedupKey: Option[Long] = None): Unit =
+    ingest(SqCodec, batch, idCol, vecCol, dir, dedupKey, upsert = true)
 
-  /** [[streamUpsert]]'s cheap-tier twin: continuous CORRECTION ingest
-    * into an SQ8 index, [[upsertBatchSq]] per micro-batch with the
-    * foreachBatch id as the dedup key. */
+  /** [[streamUpsert]] into an SQ8 index. */
   def streamUpsertSq(updates: DataFrame, idCol: String, vecCol: String,
                      dir: String, checkpoint: String,
-                     trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        upsertBatchSq(batch.toDF(), idCol, vecCol, dir, dedupKey = Some(id))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+                     trigger: Trigger): StreamingQuery =
+    streamBatches(updates, checkpoint, trigger)((batch, id) =>
+      upsertBatchSq(batch, idCol, vecCol, dir, dedupKey = Some(id)))
 
-  /** [[merge]]'s cheap-tier twin: land `src`'s visible SQ rows
-    * (tombstones applied) as one new segment of `dst` without
-    * re-encoding — the shard-federation verb over the SQ8 tier. Both
-    * indexes must carry bit-equal affine models (and, when
-    * cell-partitioned, bit-equal coarse quantizers); the copied
-    * segment keeps the destination's layout because the rows already
-    * carry their `cell` column when one exists. Same optimistic-
-    * concurrency publish and concurrent-retrain abort as [[merge]]. */
-  def mergeSq(spark: SparkSession, dstDir: String, srcDir: String): Unit = {
-    require(dstDir != srcDir, "cannot merge an index into itself")
-    val f = fs(spark, dstDir)
-    val (mid, md) = refresh(f, dstDir)
-    maybeKill(dstDir, "stage")
-    val (dstModel, dstCents) = readSqModel(spark, dstDir, md,
-      modelKey(f, dstDir, md))
-    val src = loadSq(spark, srcDir)
-    require(dstModel.mins.toSeq == src.model.mins.toSeq &&
-        dstModel.steps.toSeq == src.model.steps.toSeq &&
-        dstCents.map(_.map(_.toSeq).toSeq) ==
-          src.centroids.map(_.map(_.toSeq).toSeq),
-      s"model mismatch: $srcDir was not built with $dstDir's affine " +
-        "model/quantizer — codes are not comparable across models")
-    val segName = freshName("batch-")
-    val seg = s"$dstDir/data/$segName"
-    val n =
-      if (src.codes.columns.contains("cell"))
-        writeCounted(src.codes.repartition(col("cell")), seg,
-          cellPartitioned = true)
-      else writeCounted(src.codes, seg, cellPartitioned = false)
-    if (n == 0) { f.delete(path(seg), true); return }
-    commitWithRetry(f, dstDir, (mid, md),
-      m => m.copy(segs = m.segs :+ Art(m.nextId, n, segName),
-        hw = m.nextId),
-      dedupKey = None, staged = Seq(seg),
-      abortOnModelChange = true, verb = "merge")
-  }
+  /** [[merge]] of SQ8 shards: the affine models (and, when
+    * cell-partitioned, the coarse quantizers) must be bit-equal. */
+  def mergeSq(spark: SparkSession, dstDir: String, srcDir: String): Unit =
+    mergeInto(SqCodec, spark, dstDir, srcDir)
 
-  /** [[retrain]]'s cheap-tier twin: re-fit the affine model (and
-    * optionally the coarse quantizer) on the current corpus and
-    * re-encode it as the next generation of the SAME manifest chain.
-    * Identical contract: `retrainSq(corpus')` ≡ `buildSq(corpus')`
-    * (q164 gates it), pinned pre-retrain readers keep the old model
-    * through the manifest's model pointer, post-retrain appends
-    * resolve the new one, and a concurrent [[appendSq]] aborts loudly
-    * on the model-version change. An SQ model drifts exactly like an
-    * IVF one — the per-dimension min/max ranges fitted at build time
-    * clip vectors a moved distribution produces. */
+  /** [[retrain]] of an SQ8 index onto a re-fitted affine model (and
+    * optionally a new coarse quantizer); `retrainSq(corpus')` ≡
+    * `buildSq(corpus')` (q164 gates it). */
   def retrainSq(corpus: DataFrame, idCol: String, vecCol: String,
-                dir: String, m: graft.operators.Sq.Model,
-                centroids: Option[Array[Array[Double]]] = None): Unit = {
-    val spark = corpus.sparkSession
-    val f = fs(spark, dir)
-    val (mid, md) = refresh(f, dir)
-    maybeKill(dir, "stage")
-    val modelDir = freshName("model-")
-    writeSqModelArtifacts(spark, s"$dir/$modelDir", m, centroids)
-    val segName = freshName("batch-")
-    val n = writeSqSegment(corpus, idCol, vecCol, dir, segName, m, centroids)
-    def cleanup(): Unit = {
-      f.delete(path(s"$dir/data/$segName"), true)
-      f.delete(path(s"$dir/$modelDir"), true)
-    }
-    if (n == 0) {
-      cleanup()
-      throw new IllegalArgumentException(
-        s"refusing to retrain $dir onto an empty corpus")
-    }
-    // like [[retrain]]: a lost race means someone committed rows this
-    // retrain's corpus may not include — abort loudly, never erase
-    maybeKill(dir, "staged")
-    fireTestHook(dir)
-    if (!tryPublish(f, dir, mid + 1, ManifestData(
-        Seq(Art(md.nextId, n, segName)), Seq.empty,
-        hw = md.nextId, shw = md.shw,
-        model = md.model + 1, modelDir = modelDir))) {
-      cleanup()
-      throw new java.util.ConcurrentModificationException(
-        s"another writer committed to $dir during the retrain — its rows " +
-          "are not in this retrain's corpus and must not be erased; " +
-          "re-run retrain against a corpus that includes them")
-    }
-    maybeKill(dir, "published")
-  }
+                dir: String, m: Sq.Model,
+                centroids: Option[Array[Array[Double]]] = None): Unit =
+    retrainWith(SqCodec, corpus, idCol, vecCol, dir, (m, centroids))
 
-  /** Open an SQ8 snapshot (model validated against meta; coarse
-    * centroids loaded when the index has the cell layout). `asOf`
-    * time-travels to an older manifest generation exactly as
-    * [[load]]'s does — the manifest machinery is shared across both
-    * index families, so retention ([[expire]]`(keepLast)`) and pinned
-    * reads behave identically on the cheap tier. */
+  /** [[load]] of an SQ8 snapshot (coarse centroids loaded when the
+    * index has the cell layout). */
   def loadSq(spark: SparkSession, dir: String,
              asOf: Option[Long] = None): LoadedSq = {
-    val f = fs(spark, dir)
-    val (_, md) = resolveReadManifest(f, dir, asOf)
-    // model artifacts resolve THROUGH the pinned manifest (see [[load]])
-    val mkey = modelKey(f, dir, md)
-    val (m, cents) = readSqModel(spark, dir, md, mkey)
-    LoadedSq(m, cents, visibleUnion(spark, dir, md, mkey),
-      md.segs.map(_.n).sum, md.segs.map(_.id))
+    val s = open(SqCodec, spark, dir, asOf)
+    LoadedSq(s.model._1, s.model._2, s.codes, s.nrows, s.batches)
   }
 
+  /** [[cellStats]] for the SQ8 tier's cell-partitioned layout. */
+  def cellStatsSq(idx: LoadedSq): DataFrame = {
+    cellsOf(idx.centroids, "cellStatsSq")
+    cellCounts(idx.codes, SqCodec.cellCol)
+  }
+
+  /** [[splitCell]] for the SQ8 tier — same semantics (index membership
+    * authoritative, centroid ids never shift, one manifest swap of
+    * tombstone + re-keyed segment + bumped model) with one structural
+    * simplification the cheap tier earns: SQ codes are a per-dimension
+    * affine of the RAW vector, independent of the cell, so the
+    * "re-encode" reproduces bit-identical codes — the split only moves
+    * rows to new partition keys under the grown centroid table. The
+    * corpus is still required: the index stores codes, and the NEW
+    * assignment needs the raw vectors. */
+  def splitCellSq(corpus: DataFrame, idCol: String, vecCol: String,
+                  dir: String, cell: Int,
+                  subCentroids: Array[Array[Double]]): Unit =
+    splitCellsSqImpl(corpus, idCol, vecCol, dir, Seq(cell -> subCentroids),
+      expectMid = None, hotOverride = None)
+
+  private[graft] def splitCellsSqImpl(corpus: DataFrame, idCol: String,
+                               vecCol: String, dir: String,
+                               splits: Seq[(Int, Array[Array[Double]])],
+                               expectMid: Option[Long],
+                               hotOverride: Option[DataFrame]): Unit =
+    splitCells(SqCodec, corpus, idCol, vecCol, dir, splits, expectMid,
+      hotOverride)
+
+  /** [[rebalance]] for a cell-partitioned SQ8 index. */
+  def rebalanceSq(corpus: DataFrame, idCol: String, vecCol: String,
+                  dir: String, maxImbalance: Double = 4.0,
+                  maxSplits: Int = 8): Int =
+    rebalanceSqReport(corpus, idCol, vecCol, dir, maxImbalance,
+      maxSplits).splits
+
+  /** [[rebalanceSq]] returning the full [[PolicyReport]]. */
+  def rebalanceSqReport(corpus: DataFrame, idCol: String, vecCol: String,
+                        dir: String, maxImbalance: Double = 4.0,
+                        maxSplits: Int = 8): PolicyReport =
+    rebalanceWith(SqCodec, corpus, idCol, vecCol, dir, maxImbalance,
+      maxSplits)
+
+  /** Query an opened SQ8 snapshot — [[Sq.topK]]'s factored-dot scan
+    * over the pinned segment union. The DEFAULT is the full codes scan
+    * (the cheap tier's exact-over-compressed contract — hash-identical
+    * whether the layout is flat or cell-partitioned). `prune = true` on
+    * a cell-built index restricts candidates to the queries' nprobe
+    * nearest coarse cells, pushed into every segment scan as a parquet
+    * PartitionFilter (the IVF trade: nprobe/nlist of the scan I/O for
+    * approximate recall — [[topK]]'s plan with SQ scoring). Pruning a
+    * flat index fails loudly rather than silently full-scanning. */
+  def topKSq(idx: LoadedSq, queries: DataFrame, idCol: String,
+             vecCol: String, k: Int = 10, nprobe: Int = 4,
+             prune: Boolean = false): DataFrame =
+    if (!prune) Sq.topK(queries, idx.codes, idCol, vecCol, idx.model, k)
+    else {
+      val (q, codes) = probe(idx.codes, SqCodec.cellCol,
+        cellsOf(idx.centroids, "prune=true"), queries, idCol, vecCol, nprobe)
+      Sq.topK(q, codes, idCol, vecCol, idx.model, k)
+    }
   /** Serving-batch snapshot cap: a pruned search runs the queries plan
     * twice (probe-cell collect, then the scoring join), so the batch
     * is SNAPSHOTTED first. Up to this many rows it becomes a driver
@@ -2029,157 +1962,6 @@ object AnnIndex {
         }
       }
       spark.read.schema(proj.schema).parquet(dir)
-    }
-  }
-
-  /** [[cellStats]] for the SQ8 tier's cell-partitioned layout — the
-    * same per-cell balance audit over the `cell` partition column. */
-  def cellStatsSq(idx: LoadedSq): DataFrame = {
-    require(idx.centroids.nonEmpty,
-      "cellStatsSq needs a cell-partitioned SQ index (buildSq with centroids)")
-    // pinned (≤ nlist rows): the share projection AND the 1-row total
-    // consume it — without the cut each re-scanned the visible codes
-    val counts = graft.operators.Pin.param(idx.codes.groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_vectors")))
-    val total = counts.agg(sum(col("n_vectors")).as("_t"))
-    counts.crossJoin(broadcast(total))
-      .select(col("cell").cast("int").as("cell"),
-        col("n_vectors"),
-        bround(col("n_vectors") / col("_t"), 6).as("frac"))
-  }
-
-  /** [[splitCell]] for the SQ8 tier — same semantics (index membership
-    * authoritative, centroid ids never shift, one manifest swap of
-    * tombstone + re-keyed segment + bumped model) with one structural
-    * simplification the cheap tier earns: SQ codes are a per-dimension
-    * affine of the RAW vector, independent of the cell, so the
-    * "re-encode" reproduces bit-identical codes — the split only moves
-    * rows to new partition keys under the grown centroid table. The
-    * corpus is still required: the index stores codes, and the NEW
-    * assignment needs the raw vectors. */
-  def splitCellSq(corpus: DataFrame, idCol: String, vecCol: String,
-                  dir: String, cell: Int,
-                  subCentroids: Array[Array[Double]]): Unit =
-    splitCellsSqImpl(corpus, idCol, vecCol, dir, Seq(cell -> subCentroids),
-      expectMid = None, hotOverride = None)
-
-  /** [[splitCellsImpl]] for the SQ8 tier — the same batched,
-    * snapshot-pinned, one-swap split over [[cellStatsSq]]'s layout
-    * (see the IVF twin's doc for `expectMid` / `hotOverride`). */
-  private[graft] def splitCellsSqImpl(corpus: DataFrame, idCol: String,
-                               vecCol: String, dir: String,
-                               splits: Seq[(Int, Array[Array[Double]])],
-                               expectMid: Option[Long],
-                               hotOverride: Option[DataFrame]): Unit = {
-    val spark = corpus.sparkSession
-    val f = fs(spark, dir)
-    val (mid, md) = refresh(f, dir)
-    expectMid.foreach { e =>
-      if (mid != e) throw new java.util.ConcurrentModificationException(
-        s"another writer committed to $dir after the policy derived its " +
-          s"sub-centroids (snapshot $e -> $mid) — the derivation is " +
-          "stale; re-run rebalanceSq against the fresh snapshot")
-    }
-    maybeKill(dir, "stage")
-    val idx = loadSq(spark, dir, asOf = Some(mid))
-    val cents = idx.centroids.getOrElse(throw new IllegalArgumentException(
-      "splitCellSq needs a cell-partitioned SQ index (buildSq with " +
-        "centroids)"))
-    require(splits.nonEmpty, "no cells to split")
-    val cells = splits.map(_._1)
-    require(cells.distinct.length == cells.length,
-      s"duplicate cells in one split pass: ${cells.mkString(",")}")
-    val dim = idx.dim
-    splits.foreach { case (cell, subs) =>
-      require(cell >= 1 && cell <= cents.length,
-        s"cell $cell out of range 1..${cents.length}")
-      require(subs.length >= 2,
-        s"a split needs >= 2 sub-centroids, got ${subs.length} (cell $cell)")
-      require(subs.forall(_.length == dim),
-        s"sub-centroid dim != index dim $dim (cell $cell)")
-    }
-    val cellsMsg = cells.mkString(",")
-    val memberIds = idx.codes
-      .filter(col("cell").isin(cells.map(Int.box): _*))
-      .select(col("neighbor_id")).distinct()
-    val hot = hotOverride.getOrElse(corpus
-      .select(col(idCol), col(vecCol))
-      .join(memberIds.withColumnRenamed("neighbor_id", "_split_mid"),
-        col(idCol).cast("long") === col("_split_mid"))
-      .drop("_split_mid"))
-    val newCents = splits.foldLeft(cents) {
-      case (cs, (cell, subs)) => cs.updated(cell - 1, subs.head) ++ subs.tail
-    }
-    val modelDir = freshName("model-")
-    writeSqModelArtifacts(spark, s"$dir/$modelDir", idx.model, Some(newCents))
-    val segName = freshName("batch-")
-    val tombName = freshName("t-")
-    val n = writeSqSegment(hot, idCol, vecCol, dir, segName, idx.model,
-      Some(newCents))
-    val tn = writeCounted(memberIds, s"$dir/tomb/$tombName",
-      cellPartitioned = false)
-    def cleanup(): Unit = {
-      f.delete(path(s"$dir/data/$segName"), true)
-      f.delete(path(s"$dir/tomb/$tombName"), true)
-      f.delete(path(s"$dir/$modelDir"), true)
-    }
-    if (tn == 0) {
-      cleanup()
-      throw new IllegalArgumentException(
-        s"cell(s) $cellsMsg of $dir are empty — nothing to split (re-read " +
-          "cellStatsSq; the imbalance may have been compacted away)")
-    }
-    if (n != tn) {
-      cleanup()
-      throw new IllegalArgumentException(
-        s"corpus does not cover cell(s) $cellsMsg exactly: the index " +
-          s"holds $tn rows, the re-key landed $n — a member id is " +
-          "missing from (or duplicated in) the corpus; splitting would " +
-          "drop or duplicate those rows")
-    }
-    maybeKill(dir, "staged")
-    fireTestHook(dir)
-    if (!tryPublish(f, dir, mid + 1, md.copy(
-        segs = md.segs :+ Art(md.nextId + 1, n, segName),
-        tombs = md.tombs :+ Art(md.nextId, tn, tombName),
-        hw = md.nextId + 1,
-        model = md.model + 1, modelDir = modelDir))) {
-      cleanup()
-      throw new java.util.ConcurrentModificationException(
-        s"another writer committed to $dir during the split — its rows " +
-          "may sit in the cell being split and would be stranded under a " +
-          "retired centroid; re-run splitCellSq against the fresh snapshot")
-    }
-    maybeKill(dir, "published")
-  }
-
-  /** Query an opened SQ8 snapshot — [[Sq.topK]]'s factored-dot scan
-    * over the pinned segment union. The DEFAULT is the full codes scan
-    * (the cheap tier's exact-over-compressed contract — hash-identical
-    * whether the layout is flat or cell-partitioned). `prune = true` on
-    * a cell-built index restricts candidates to the queries' nprobe
-    * nearest coarse cells, pushed into every segment scan as a parquet
-    * PartitionFilter (the IVF trade: nprobe/nlist of the scan I/O for
-    * approximate recall — [[topK]]'s plan with SQ scoring). Pruning a
-    * flat index fails loudly rather than silently full-scanning. */
-  def topKSq(idx: LoadedSq, queries: DataFrame, idCol: String,
-             vecCol: String, k: Int = 10, nprobe: Int = 4,
-             prune: Boolean = false): DataFrame = {
-    import graft.plans.SketchExpressions.nearestCentroids
-    if (!prune)
-      graft.operators.Sq.topK(queries, idx.codes, idCol, vecCol, idx.model, k)
-    else {
-      val cents = idx.centroids.getOrElse(throw new IllegalArgumentException(
-        "prune=true needs a cell-partitioned SQ index (buildSq with centroids)"))
-      val q = snapshotQueries(queries, idCol, vecCol)
-      val probed = q
-        .select(explode(nearestCentroids(col(vecCol), cents, nprobe))
-          .as("_cell"))
-        .distinct().collect().map(_.getInt(0)).sorted
-      val codes =
-        if (probed.length >= cents.length) idx.codes
-        else idx.codes.filter(col("cell").isin(probed.map(Int.box): _*))
-      graft.operators.Sq.topK(q, codes, idCol, vecCol, idx.model, k)
     }
   }
 
@@ -2312,16 +2094,8 @@ object AnnIndex {
     * `VERSION AS OF` read); default is the current (highest) manifest.
     * Fails loudly on an expired or unknown id. */
   def load(spark: SparkSession, dir: String, asOf: Option[Long] = None): Loaded = {
-    val f = fs(spark, dir)
-    val (_, md) = resolveReadManifest(f, dir, asOf)
-    // model artifacts resolve THROUGH the pinned manifest: a reader
-    // pinned before a [[retrain]] keeps scoring with the model its
-    // segments were encoded with (version 0 = the build's root dirs)
-    val mkey = modelKey(f, dir, md)
-    val (cents, cbs) = readIvfModel(spark, dir, md, mkey)
-    val codes = visibleUnion(spark, dir, md, mkey)
-      .select(col("neighbor_id"), col("cell").as("_cell"), col("codes"))
-    Loaded(cents, cbs, codes, md.segs.map(_.n).sum, md.segs.map(_.id))
+    val s = open(PqCodec, spark, dir, asOf)
+    Loaded(s.model._1, s.model._2, s.codes, s.nrows, s.batches)
   }
 
   /** Recover a chain WEDGED by a publisher that died mid-write: a
@@ -2515,18 +2289,20 @@ object AnnIndex {
   def versionsOf(spark: SparkSession, dir: String): Seq[Long] =
     generations(fs(spark, dir), dir)
 
-  /** The distinct allowed-id mask, re-planted as a broadcast LITERAL
-    * when it fits under `smallMask` rows (the tiny-allowlist hatch
-    * shared by [[topKWhere]] and [[topKWhereSq]]). */
-  private def allowedMask(spark: SparkSession, allowed: DataFrame,
+  /** `codes` restricted to the distinct allowed ids, the mask re-planted
+    * as a broadcast LITERAL when it fits under `smallMask` rows (the
+    * tiny-allowlist hatch of [[topKWhere]]). */
+  private def allowedOnly(codes: DataFrame, allowed: DataFrame,
                           allowedIdCol: String, smallMask: Int): DataFrame = {
     val mask = allowed.select(col(allowedIdCol).cast("long")
       .as("neighbor_id")).distinct()
     val small = mask.limit(smallMask + 1).collect()
-    if (small.length <= smallMask)
-      broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(small: _*), mask.schema))
-    else mask
+    val m =
+      if (small.length <= smallMask)
+        broadcast(allowed.sparkSession.createDataFrame(
+          java.util.Arrays.asList(small: _*), mask.schema))
+      else mask
+    codes.join(m, Seq("neighbor_id"), "left_semi")
   }
 
   /** FILTERED search — the metadata-predicate vector query every
@@ -2556,48 +2332,36 @@ object AnnIndex {
   def topKWhere(idx: Loaded, queries: DataFrame, idCol: String,
                 vecCol: String, allowed: DataFrame, allowedIdCol: String,
                 k: Int = 10, nprobe: Int = 4,
-                prune: Boolean = true, smallMask: Int = 1024): DataFrame = {
-    val mask = allowedMask(queries.sparkSession, allowed, allowedIdCol,
-      smallMask)
-    topK(idx.copy(codes = idx.codes.join(mask, Seq("neighbor_id"),
-        "left_semi")),
-      queries, idCol, vecCol, k, nprobe, prune)
-  }
+                prune: Boolean = true, smallMask: Int = 1024): DataFrame =
+    topK(idx.copy(codes = allowedOnly(idx.codes, allowed, allowedIdCol,
+      smallMask)), queries, idCol, vecCol, k, nprobe, prune)
 
-  /** [[topKWhere]]'s cheap-tier twin: filtered search over an SQ8
-    * snapshot with the same PRE-FILTER semantics (the allowed-id set is
-    * semi-joined into the codes scan BEFORE ranking, so each query
-    * still returns up to k ALLOWED neighbors) and the same
-    * tiny-allowlist literal hatch. The SQ model is fitted on the WHOLE
-    * corpus at build time, so mask-at-read scores each allowed row
-    * exactly as the unfiltered scan would — the restriction changes
-    * which rows are ranked, never how (q163 hash-gates it). Works on
-    * flat and cell-partitioned layouts; `prune = true` composes the
-    * probe PartitionFilter with the mask exactly as [[topKSq]] does. */
+  /** [[topKWhere]] over an SQ8 snapshot (full scan unless `prune`). The
+    * SQ model is fitted on the WHOLE corpus at build time, so
+    * mask-at-read scores each allowed row exactly as the unfiltered
+    * scan would (q163 hash-gates it). */
   def topKWhereSq(idx: LoadedSq, queries: DataFrame, idCol: String,
                   vecCol: String, allowed: DataFrame, allowedIdCol: String,
                   k: Int = 10, nprobe: Int = 4,
-                  prune: Boolean = false, smallMask: Int = 1024): DataFrame = {
-    val mask = allowedMask(queries.sparkSession, allowed, allowedIdCol,
-      smallMask)
-    topKSq(idx.copy(codes = idx.codes.join(mask, Seq("neighbor_id"),
-        "left_semi")),
-      queries, idCol, vecCol, k, nprobe, prune)
-  }
+                  prune: Boolean = false, smallMask: Int = 1024): DataFrame =
+    topKSq(idx.copy(codes = allowedOnly(idx.codes, allowed, allowedIdCol,
+      smallMask)), queries, idCol, vecCol, k, nprobe, prune)
 
   /** Per-cell population report over an opened snapshot — the ops-side
     * balance audit (an IVF list 100× the mean is a latency and recall
     * hazard: every query probing it scans 100× the codes; Faiss's
     * imbalance_factor). One nlist-bounded hash agg over the codes scan
     * plus a broadcast 1-row total — no sort, no collect. */
-  def cellStats(idx: Loaded): DataFrame = {
+  def cellStats(idx: Loaded): DataFrame = cellCounts(idx.codes, PqCodec.cellCol)
+
+  private def cellCounts(codes: DataFrame, cellCol: String): DataFrame = {
     // pinned (≤ nlist rows): the share projection AND the 1-row total
     // consume it — without the cut each re-scanned the visible codes
-    val counts = graft.operators.Pin.param(idx.codes.groupBy(col("_cell"))
+    val counts = graft.operators.Pin.param(codes.groupBy(col(cellCol))
       .agg(count(lit(1)).as("n_vectors")))
     val total = counts.agg(sum(col("n_vectors")).as("_t"))
     counts.crossJoin(broadcast(total))
-      .select(col("_cell").cast("int").as("cell"),
+      .select(col(cellCol).cast("int").as("cell"),
         col("n_vectors"),
         bround(col("n_vectors") / col("_t"), 6).as("frac"))
   }
@@ -2614,22 +2378,30 @@ object AnnIndex {
     * frame would otherwise probe a different cell set than the search
     * scores), leaving nothing behind in the cache manager. */
   def topK(idx: Loaded, queries: DataFrame, idCol: String, vecCol: String,
-           k: Int = 10, nprobe: Int = 4, prune: Boolean = true): DataFrame = {
-    import graft.plans.SketchExpressions.nearestCentroids
+           k: Int = 10, nprobe: Int = 4, prune: Boolean = true): DataFrame =
     if (!prune)
       Pq.ivfPqSearch(idx.codes, queries, idCol, vecCol, idx.centroids,
         idx.cbs, k, nprobe)
     else {
-      val q = snapshotQueries(queries, idCol, vecCol)
-      val probed = q
-        .select(explode(nearestCentroids(col(vecCol), idx.centroids,
-          nprobe)).as("_cell"))
-        .distinct().collect().map(_.getInt(0)).sorted
-      val codes =
-        if (probed.length >= idx.nlist) idx.codes
-        else idx.codes.filter(col("_cell").isin(probed.map(Int.box): _*))
+      val (q, codes) = probe(idx.codes, PqCodec.cellCol, idx.centroids,
+        queries, idCol, vecCol, nprobe)
       Pq.ivfPqSearch(codes, q, idCol, vecCol, idx.centroids, idx.cbs,
         k, nprobe)
     }
+
+  /** The pruned-probe step of [[topK]] and [[topKSq]]: the snapshotted
+    * query batch, and `codes` filtered to the cells its queries probe. */
+  private def probe(codes: DataFrame, cellCol: String,
+                    cents: Array[Array[Double]], queries: DataFrame,
+                    idCol: String, vecCol: String,
+                    nprobe: Int): (DataFrame, DataFrame) = {
+    import graft.plans.SketchExpressions.nearestCentroids
+    val q = snapshotQueries(queries, idCol, vecCol)
+    val probed = q
+      .select(explode(nearestCentroids(col(vecCol), cents, nprobe))
+        .as("_cell"))
+      .distinct().collect().map(_.getInt(0)).sorted
+    (q, if (probed.length >= cents.length) codes
+      else codes.filter(col(cellCol).isin(probed.map(Int.box): _*)))
   }
 }

@@ -432,6 +432,23 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.topKSq(AnnIndex.loadSq(spark, fullFixed), q, "vec_id",
         "embedding", k = 3).collect().map(_.toSeq).toSet,
       "SQ correction diverged from the corrected-corpus build")
+    // the same correction, streamed through streamUpsertSq onto a fresh
+    // build of the uncorrected corpus (its own checkpoint: independent
+    // keyed streams must not share an index)
+    val streamed = s"$root/streamed"
+    AnnIndex.buildSq(e, "vec_id", "embedding", streamed, m)
+    corr.coalesce(1).write.parquet(s"$root/corrLanding")
+    AnnIndex.streamUpsertSq(spark.readStream.schema(corr.schema)
+        .parquet(s"$root/corrLanding"), "vec_id", "embedding", streamed,
+      s"$root/corrCkpt", Trigger.AvailableNow()).awaitTermination()
+    val streamedIdx = AnnIndex.loadSq(spark, streamed)
+    assert(streamedIdx.codes.filter(col("neighbor_id") === 7L).count() == 1,
+      "streamed SQ correction duplicated or dropped the row")
+    assert(AnnIndex.topKSq(streamedIdx, q, "vec_id", "embedding", k = 3)
+        .collect().map(_.toSeq).toSet ==
+      AnnIndex.topKSq(AnnIndex.loadSq(spark, fullFixed), q, "vec_id",
+        "embedding", k = 3).collect().map(_.toSeq).toSet,
+      "streamed SQ correction diverged from the corrected-corpus build")
   }
 
   test("an uncommitted segment (no manifest entry) is invisible to readers") {
@@ -565,6 +582,17 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.loadSq(spark, s"$root/pq")
     }
     assert(ex.getMessage.contains("sq8"))
+    // ...and every IVF-PQ verb refuses an sq8 directory, leaving the
+    // destination's manifest chain untouched
+    val pqVersions = AnnIndex.versionsOf(spark, s"$root/pq")
+    val sqVersions = AnnIndex.versionsOf(spark, dir)
+    intercept[IllegalArgumentException](AnnIndex.load(spark, dir))
+    intercept[IllegalArgumentException](AnnIndex.appendIvfPq(
+      e.filter(col("vec_id") < 5), "vec_id", "embedding", dir))
+    assert(AnnIndex.versionsOf(spark, dir) == sqVersions)
+    intercept[IllegalArgumentException](
+      AnnIndex.merge(spark, s"$root/pq", dir))
+    assert(AnnIndex.versionsOf(spark, s"$root/pq") == pqVersions)
   }
 
   test("upsertBatchIvfPq: correction atomically replaces the stale vector; replay is a no-op") {
@@ -603,6 +631,25 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.compact(spark, dir)
     val compacted = AnnIndex.load(spark, dir)
     assert(compacted.nrows == 40 && compacted.codes.count() == 40)
+    // the same correction, streamed: a fresh stale build corrected
+    // through streamUpsert from one landing file searches exactly like
+    // the true build
+    import org.apache.spark.sql.streaming.Trigger
+    val streamed = s"$root/streamed"
+    AnnIndex.buildIvfPq(stale, "vec_id", "embedding", streamed, cents, cbs)
+    e.coalesce(1).write.parquet(s"$root/landing")
+    AnnIndex.streamUpsert(spark.readStream.schema(e.schema)
+        .parquet(s"$root/landing"), "vec_id", "embedding", streamed,
+      s"$root/ckpt", Trigger.AvailableNow()).awaitTermination()
+    val fixedIdx = AnnIndex.load(spark, streamed)
+    assert(fixedIdx.codes.filter(col("neighbor_id") === 7L).count() == 1,
+      "streamed correction duplicated or dropped the row")
+    val q = e.filter(col("vec_id") % 10 === 0)
+    assert(AnnIndex.topK(fixedIdx, q, "vec_id", "embedding", k = 3,
+        nprobe = 2).collect().map(_.toSeq).toSet ==
+      AnnIndex.topK(AnnIndex.load(spark, trueDir), q, "vec_id", "embedding",
+        k = 3, nprobe = 2).collect().map(_.toSeq).toSet,
+      "streamed correction diverged from the corrected-corpus build")
   }
 
   test("cell-partitioned SQ8: full scan == flat layout; pruned probe is a partition filter") {
@@ -957,6 +1004,20 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(new java.io.File(tmp).renameTo(f))
     val ex = intercept[IllegalArgumentException](AnnIndex.load(spark, dir))
     assert(ex.getMessage.contains("codebooks"))
+    // an SQ8 cell index whose centroids table lost an interior row must
+    // not open: its probes would route to the wrong cells
+    val sq = s"${tmpDir()}/sq"
+    AnnIndex.buildSq(e, "vec_id", "embedding", sq,
+      graft.operators.Sq.fit(e, "embedding"), Some(cents))
+    AnnIndex.loadSq(spark, sq)
+    val centPath = s"$sq/centroids"
+    val centTmp = s"$sq/centroids_tmp"
+    spark.read.parquet(centPath).filter(col("cell") =!= 2)
+      .write.parquet(centTmp)
+    rm(new java.io.File(centPath))
+    assert(new java.io.File(centTmp).renameTo(new java.io.File(centPath)))
+    val exSq = intercept[IllegalArgumentException](AnnIndex.loadSq(spark, sq))
+    assert(exSq.getMessage.contains("centroids"), exSq.getMessage)
   }
 
   test("re-opening an unchanged index launches no Spark job; a warm append reads no model") {
@@ -994,13 +1055,34 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(AnnIndex.loadSq(spark, sq).model.mins(0) == sq1.model.mins(0))
     // the append's encode model comes from the memo; only its write
     // runs. A model read starts with the `meta` collect on the calling
-    // thread, whose call site names readIvfModel
+    // thread, whose call site names readModel
     val (_, appendJobs) = jobsOf(AnnIndex.appendIvfPq(
       e.filter(col("vec_id") >= 30), "vec_id", "embedding", pq))
     assert(appendJobs.nonEmpty, "the append wrote nothing")
-    assert(!appendJobs.exists(_.contains("readIvfModel")),
+    assert(!appendJobs.exists(_.contains("readModel")),
       "appendIvfPq launched a job to read the model")
     assert(AnnIndex.load(spark, pq).nrows == 40)
+    val (_, sqAppendJobs) = jobsOf(AnnIndex.appendSq(
+      e.filter(col("vec_id") < 5), "vec_id", "embedding", sq))
+    assert(sqAppendJobs.nonEmpty, "the SQ append wrote nothing")
+    assert(!sqAppendJobs.exists(_.contains("readModel")),
+      "appendSq launched a job to read the model")
+    // positive control: the first append onto an index no one has opened
+    // reads its model, and that job's call site names readModel
+    val coldPq = s"$root/coldPq"
+    val coldSq = s"$root/coldSq"
+    AnnIndex.buildIvfPq(e.filter(col("vec_id") < 30), "vec_id", "embedding",
+      coldPq, cents, cbs)
+    AnnIndex.buildSq(e, "vec_id", "embedding", coldSq,
+      Sq.fit(e, "embedding"), Some(cents))
+    val (_, coldPqJobs) = jobsOf(AnnIndex.appendIvfPq(
+      e.filter(col("vec_id") >= 30), "vec_id", "embedding", coldPq))
+    assert(coldPqJobs.exists(_.contains("readModel")),
+      "a cold appendIvfPq launched no job named readModel: " + coldPqJobs)
+    val (_, coldSqJobs) = jobsOf(AnnIndex.appendSq(
+      e.filter(col("vec_id") < 5), "vec_id", "embedding", coldSq))
+    assert(coldSqJobs.exists(_.contains("readModel")),
+      "a cold appendSq launched no job named readModel: " + coldSqJobs)
   }
 
   test("a rebuild in place within the same second opens the new model") {
