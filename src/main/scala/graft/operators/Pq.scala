@@ -100,6 +100,36 @@ object Pq {
       element_at(element_at(dt, s + 1), element_at(codes, s + 1)))
       .reduce(_ + _)
 
+  /** [[adcFromTable]] over primitive tables — the per-pair cost of
+    * [[graft.sources.AnnIndex]]'s serving search: the same m lookups,
+    * summed left to right from the subspace-0 term, so the doubles are
+    * bit-identical. Where the Column form reads NULL (a NULL or
+    * out-of-range code, fewer than m codes) and its ascending sort
+    * would rank the row FIRST, this fails loudly, naming the row. */
+  private[graft] def adc(dt: Array[Array[Double]],
+                         codes: org.apache.spark.sql.catalyst.util.ArrayData,
+                         id: Long): Double = {
+    val m = dt.length
+    if (codes == null || codes.numElements() < m)
+      throw new IllegalArgumentException(
+        s"malformed PQ codes for neighbor_id $id: expected $m codes, got " +
+          (if (codes == null) "NULL" else codes.numElements().toString))
+    var acc = 0.0
+    var s = 0
+    while (s < m) {
+      val row = dt(s)
+      if (codes.isNullAt(s) || codes.getInt(s) < 1 || codes.getInt(s) > row.length)
+        throw new IllegalArgumentException(
+          s"malformed PQ codes for neighbor_id $id: subspace $s code " +
+            (if (codes.isNullAt(s)) "NULL" else codes.getInt(s).toString) +
+            s" outside 1..${row.length}")
+      val d = row(codes.getInt(s) - 1)
+      acc = if (s == 0) d else acc + d
+      s += 1
+    }
+    acc
+  }
+
   /** PQ reconstruction-error report — the index-quality audit a
     * pipeline runs BEFORE trusting ADC results: per subspace, the mean
     * and max squared-L2 between each vector's subvector and its

@@ -123,6 +123,18 @@ object Sq {
     aggregate(zip_with(codes, weights, (c, w) => c.cast("double") * w),
       lit(0.0), (acc, x) => acc + x)
 
+  /** A query's side of the factored dot: its weight array `_w`, bias
+    * `_bias` and norm `_qn` — shared by [[topK]] and
+    * [[graft.sources.AnnIndex]]'s serving search. */
+  private[graft] def queryState(vec: Column, m: Model): Seq[Column] = {
+    val mins = typedLit(m.mins.toSeq)
+    val steps = typedLit(m.steps.toSeq)
+    Seq(transform(asDouble(vec), (x, i) => x * element_at(steps, i + 1)).as("_w"),
+      aggregate(transform(asDouble(vec), (x, i) => x * element_at(mins, i + 1)),
+        lit(0.0), (acc, x) => acc + x).as("_bias"),
+      norm2(vec).as("_qn"))
+  }
+
   /** Approximate cosine top-k over the codes table. Queries broadcast
     * with their precomputed weight array / bias / norm; the corpus side
     * never shuffles before the per-query rank-limit window (partial
@@ -131,16 +143,8 @@ object Sq {
     * are filtered, mirrored by the oracle. */
   def topK(queries: DataFrame, codesDf: DataFrame, idCol: String,
            vecCol: String, m: Model, k: Int = 10): DataFrame = {
-    val mins = typedLit(m.mins.toSeq)
-    val steps = typedLit(m.steps.toSeq)
-    val q = queries.select(col(idCol).as("query_id"),
-      transform(asDouble(col(vecCol)),
-        (x, i) => x * element_at(steps, i + 1)).as("_w"),
-      aggregate(
-        transform(asDouble(col(vecCol)),
-          (x, i) => x * element_at(mins, i + 1)),
-        lit(0.0), (acc, x) => acc + x).as("_bias"),
-      norm2(col(vecCol)).as("_qn"))
+    val q = queries.select(col(idCol).as("query_id") +:
+      queryState(col(vecCol), m): _*)
     val scored = codesDf.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .filter(col("_qn") =!= 0.0 && col("recon_norm") =!= 0.0)

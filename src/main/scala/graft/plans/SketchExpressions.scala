@@ -231,7 +231,6 @@ case class PqDistTable(child: Expression, cbs: Array[Array[Array[Double]]])
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    val m = cbs.length
     val dim = arr.numElements()
     val vec = new Array[Double](dim)
     var i = 0
@@ -240,13 +239,28 @@ case class PqDistTable(child: Expression, cbs: Array[Array[Array[Double]]])
       case DoubleType => while (i < dim) { vec(i) = arr.getDouble(i); i += 1 }
       case _ => while (i < dim) { vec(i) = arr.get(i, elemType).toString.toDouble; i += 1 }
     }
-    val out = new Array[Any](m)
+    new GenericArrayData(PqDistTable.table(vec, cbs)
+      .map(row => new GenericArrayData(row): Any))
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): PqDistTable =
+    copy(child = newChild)
+}
+
+object PqDistTable {
+  /** The table loop itself, over a plain vector — shared by the
+    * expression and [[graft.sources.AnnIndex]]'s serving search, which
+    * derives each (query, cell) table inside its scan task. */
+  def table(vec: Array[Double],
+            cbs: Array[Array[Array[Double]]]): Array[Array[Double]] = {
+    val dim = vec.length
+    val out = new Array[Array[Double]](cbs.length)
     var s = 0
-    while (s < m) {
+    while (s < cbs.length) {
       val cb = cbs(s)
       val dsub = cb(0).length
       val base = s * dsub
-      val row = new Array[Any](cb.length)
+      val row = new Array[Double](cb.length)
       var c = 0
       while (c < cb.length) {
         val cw = cb(c)
@@ -261,14 +275,11 @@ case class PqDistTable(child: Expression, cbs: Array[Array[Array[Double]]])
         row(c) = d
         c += 1
       }
-      out(s) = new GenericArrayData(row)
+      out(s) = row
       s += 1
     }
-    new GenericArrayData(out)
+    out
   }
-
-  override protected def withNewChildInternal(newChild: Expression): PqDistTable =
-    copy(child = newChild)
 }
 
 /** PQ code for a numeric-array vector: per subspace, the 1-based index
@@ -616,6 +627,14 @@ case class SqDotCodes(left: Expression, right: Expression)
     case other => throw new IllegalArgumentException(s"expected two arrays, got $other")
   }
 
+  override def nullSafeEval(l: Any, r: Any): Any =
+    SqDotCodes.dot(l.asInstanceOf[ArrayData], etL, r.asInstanceOf[ArrayData], etR)
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): SqDotCodes = copy(left = newLeft, right = newRight)
+}
+
+object SqDotCodes {
   private def toD(arr: ArrayData, et: DataType, i: Int): Double = et match {
     case IntegerType => arr.getInt(i).toDouble
     case LongType    => arr.getLong(i).toDouble
@@ -624,23 +643,22 @@ case class SqDotCodes(left: Expression, right: Expression)
     case _           => arr.get(i, et).toString.toDouble
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  /** The fold loop itself (NULL as documented on the expression) —
+    * shared by the expression and [[graft.sources.AnnIndex]]'s serving
+    * search. */
+  def dot(a: ArrayData, etA: DataType, b: ArrayData,
+          etB: DataType): java.lang.Double = {
     val n = a.numElements()
     if (b.numElements() != n) return null
     var acc = 0.0
     var i = 0
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      acc += toD(a, etL, i) * toD(b, etR, i)
+      acc += toD(a, etA, i) * toD(b, etB, i)
       i += 1
     }
     java.lang.Double.valueOf(acc)
   }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): SqDotCodes = copy(left = newLeft, right = newRight)
 }
 
 /** SQ8 encode: per dimension `clamp(round((x - min) * invStep), 0, 255)`

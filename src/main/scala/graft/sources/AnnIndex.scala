@@ -1,11 +1,15 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 import graft.operators.{Pq, Sq}
+import graft.plans.{PqDistTable, SqDotCodes}
 
 /** Persisted IVF-PQ index — the build-once / query-many shape every
   * production ANN deployment actually runs (Faiss `write_index` /
@@ -119,6 +123,26 @@ import graft.operators.{Pq, Sq}
   * snapshot open. The manifest, segment, tombstone and commit/repair
   * protocol never sees a codec; each `…Sq` verb is a one-expression
   * delegate.
+  *
+  * SERVING: every Spark job has a large fixed cost, so a serving search
+  * is ONE job. [[topK]], [[topKSq]], [[topKWhere]] and [[topKWhereSq]]
+  * first collect the batch into a driver local relation (up to
+  * [[snapshotCollectMax]] rows). The codec's query-side Column
+  * expressions (probe cells, SQ8 weights/bias/norm, IVF-PQ residuals)
+  * fold over it on the driver, so the probe set is known before the scan
+  * is planned. Then one job scans each partition of the visible codes
+  * once, scores each row against the queries that probe its cell (an
+  * IVF-PQ distance table is derived in the task per (query, cell)), and
+  * keeps a bounded top-k heap per query id, ordered by score, then
+  * `neighbor_id`. The partial heaps merge on the driver as tasks finish,
+  * so the driver holds queries × k candidates. The result is a local
+  * relation with the operator plans' schema, `bround(score, 6)` and
+  * 1-based `rank`. The per-pair arithmetic is shared with
+  * [[Pq.ivfPqSearch]] and [[Sq.topK]] (the distance-table and code-dot
+  * loops are one function each), and AnnServeSpec pins the two equal
+  * row for row. A larger batch, and `topK(prune = false)`, run those
+  * operator plans. A tombstone set adds one job: the broadcast of its
+  * scan into the anti-join.
   *
   * MIGRATION (pre-high-water manifests): a manifest written before the
   * `shw` line existed came from the era whose streamed micro-batch `id`
@@ -745,9 +769,12 @@ object AnnIndex {
     * tombstone sets with a HIGHER id (sequence-number rule — a
     * tombstone never masks a segment appended after it, so
     * delete-then-reinsert works). Tombstone sets are takedown-sized
-    * relative to the corpus, so AQE plans the anti-joins as broadcasts;
-    * a tombstone set that has grown large is the signal to [[compact]],
-    * which physically drops the rows and clears the sets. */
+    * relative to the corpus, so the planner broadcasts each mask's scan
+    * straight into its anti-join — no dedup first: a duplicate id
+    * cannot change an anti-join, and a distinct would cost a shuffle
+    * job before the broadcast. A tombstone set that has grown large is
+    * the signal to [[compact]], which physically drops the rows and
+    * clears the sets. */
   private def visibleUnion(spark: SparkSession, dir: String,
                            md: ManifestData,
                            mkey: Seq[String]): DataFrame = {
@@ -770,8 +797,7 @@ object AnnIndex {
         .parquet(s"$dir/data/${b.dirName}")
       val masks = md.tombs.collect { case t if t.id > b.id => tombFrames(t.id) }
       if (masks.isEmpty) base
-      else base.join(
-        masks.reduce(_ unionByName _).select(col("neighbor_id")).distinct(),
+      else base.join(masks.reduce(_ unionByName _).select(col("neighbor_id")),
         Seq("neighbor_id"), "left_anti")
     }.reduce(_ unionByName _)
   }
@@ -857,10 +883,12 @@ object AnnIndex {
     * `metaKind` is the `kind` value the codec's `meta` table carries
     * (`label` names it in errors), `cellCol` names the cell column of
     * its opened codes, `tier` suffixes its public verb names in errors,
-    * and `modelNames` names what a merge compares. */
+    * `modelNames` names what a merge compares, `scoreCol` names its
+    * search score, and `desc` says a higher score ranks first. */
   private sealed abstract class Codec[M <: AnyRef](val kind: String,
       val metaKind: String, val label: String, val metaSchema: StructType,
-      val cellCol: String, val tier: String, val modelNames: String) {
+      val cellCol: String, val tier: String, val modelNames: String,
+      val scoreCol: String, val desc: Boolean) {
     /** Land the parameter-sized model tables under `root`: the build at
       * the index root (model version 0), [[retrain]] and [[splitCell]]
       * under a fresh `model-<uniq>/` directory. */
@@ -876,6 +904,17 @@ object AnnIndex {
     def same(a: M, b: M): Boolean
     /** The opened codes of a snapshot's visible union. */
     def opened(union: DataFrame): DataFrame = union
+    /** SERVING: a query's state columns over its vector (and its probe
+      * list, when the search probes cells). */
+    def queryState(m: M, vec: Column, probes: Option[Column]): Seq[Column]
+    /** SERVING: the scorer of collected query rows, given each row's
+      * heap, id, probe list and [[queryState]] struct. */
+    def scorer(m: M, codes: StructType, qi: Array[Int], qid: Array[Long],
+               probes: Array[Array[Int]], state: Array[Row]): Scorer
+    /** The operator plan of a search: the kernel's reference, and what
+      * runs for a batch the kernel does not take. */
+    def reference(m: M, codes: DataFrame, q: DataFrame, idCol: String,
+                  vecCol: String, k: Int, nprobe: Int): DataFrame
   }
 
   private def writeTable(df: DataFrame, dest: String): Unit =
@@ -905,7 +944,7 @@ object AnnIndex {
     a.map(_.toSeq).toSeq
 
   private object PqCodec extends Codec[PqModel]("ivf", null, "IVF-PQ",
-      ivfMetaSchema, "_cell", "", "centroids/codebooks") {
+      ivfMetaSchema, "_cell", "", "centroids/codebooks", "adist", false) {
     def writeModel(spark: SparkSession, root: String, m: PqModel): Unit = {
       import spark.implicits._
       val (cents, cbs) = m
@@ -944,10 +983,28 @@ object AnnIndex {
       deep(a._1) == deep(b._1) && a._2.map(deep).toSeq == b._2.map(deep).toSeq
     override def opened(union: DataFrame): DataFrame =
       union.select(col("neighbor_id"), col("cell").as("_cell"), col("codes"))
+    def queryState(m: PqModel, vec: Column,
+                   probes: Option[Column]): Seq[Column] =
+      Seq(transform(probes.get, c => Pq.residualExpr(vec, c, m._1)).as("_res"))
+    def scorer(m: PqModel, codes: StructType, qi: Array[Int],
+               qid: Array[Long], probes: Array[Array[Int]],
+               state: Array[Row]): Scorer = {
+      // a NULL residual element reads as 0.0 in the distance table
+      val byCell = probes.indices.flatMap { j =>
+        val res = Option(state(j).getSeq[collection.Seq[Any]](0)).getOrElse(Nil)
+        probes(j).zip(res).map { case (c, r) => c -> (j, r.map {
+          case null => 0.0
+          case x => x.asInstanceOf[Double] }.toArray) }
+      }.groupBy(_._1).map { case (c, js) => c -> js.map(_._2).toArray }
+      new PqScorer(m._2, qi, qid, byCell)
+    }
+    def reference(m: PqModel, codes: DataFrame, q: DataFrame, idCol: String,
+                  vecCol: String, k: Int, nprobe: Int): DataFrame =
+      Pq.ivfPqSearch(codes, q, idCol, vecCol, m._1, m._2, k, nprobe)
   }
 
   private object SqCodec extends Codec[SqModel]("sq", "sq8", "sq8",
-      sqMetaSchema, "cell", "Sq", "affine model/quantizer") {
+      sqMetaSchema, "cell", "Sq", "affine model/quantizer", "cosine_sq", true) {
     def writeModel(spark: SparkSession, root: String, m: SqModel): Unit = {
       import spark.implicits._
       val (sq, cents) = m
@@ -986,6 +1043,25 @@ object AnnIndex {
     def same(a: SqModel, b: SqModel): Boolean =
       a._1.mins.toSeq == b._1.mins.toSeq &&
         a._1.steps.toSeq == b._1.steps.toSeq && a._2.map(deep) == b._2.map(deep)
+    def queryState(m: SqModel, vec: Column,
+                   probes: Option[Column]): Seq[Column] =
+      Sq.queryState(vec, m._1)
+    def scorer(m: SqModel, codes: StructType, qi: Array[Int],
+               qid: Array[Long], probes: Array[Array[Int]],
+               state: Array[Row]): Scorer = {
+      // Sq.topK's filter: a query with a NULL or zero norm scores nothing
+      val live = state.indices.filter(j => !state(j).isNullAt(2) &&
+        state(j).getDouble(2) != 0.0).toArray
+      val w: Array[ArrayData] = live.map(j =>
+        new GenericArrayData(state(j).getSeq[Any](0).toArray): ArrayData)
+      new SqScorer(live.map(qi), live.map(qid), w,
+        live.map(j => state(j).getAs[java.lang.Double](1)),
+        live.map(state(_).getDouble(2)),
+        codes("codes").dataType.asInstanceOf[ArrayType].elementType)
+    }
+    def reference(m: SqModel, codes: DataFrame, q: DataFrame, idCol: String,
+                  vecCol: String, k: Int, nprobe: Int): DataFrame =
+      Sq.topK(q, codes, idCol, vecCol, m._1, k)
   }
 
   /** Read ONLY the model tables of a pinned manifest — the writer verbs
@@ -1873,30 +1949,32 @@ object AnnIndex {
     rebalanceWith(SqCodec, corpus, idCol, vecCol, dir, maxImbalance,
       maxSplits)
 
-  /** Query an opened SQ8 snapshot — [[Sq.topK]]'s factored-dot scan
-    * over the pinned segment union. The DEFAULT is the full codes scan
-    * (the cheap tier's exact-over-compressed contract — hash-identical
-    * whether the layout is flat or cell-partitioned). `prune = true` on
-    * a cell-built index restricts candidates to the queries' nprobe
-    * nearest coarse cells, pushed into every segment scan as a parquet
+  /** Query an opened SQ8 snapshot with [[Sq.topK]]'s factored-dot
+    * scoring over the pinned segment union. The DEFAULT is the full
+    * codes scan (the cheap tier's exact-over-compressed contract —
+    * hash-identical whether the layout is flat or cell-partitioned).
+    * `prune = true` on a cell-built index restricts candidates to the
+    * rows in the batch's probed cells (each query's nprobe nearest
+    * coarse cells), pushed into every segment scan as a parquet
     * PartitionFilter (the IVF trade: nprobe/nlist of the scan I/O for
-    * approximate recall — [[topK]]'s plan with SQ scoring). Pruning a
-    * flat index fails loudly rather than silently full-scanning. */
+    * approximate recall). Pruning a flat index fails loudly rather than
+    * silently full-scanning. A serving batch runs as ONE Spark job
+    * either way (SERVING on the object); a batch above
+    * [[snapshotCollectMax]] rows runs [[Sq.topK]]. */
   def topKSq(idx: LoadedSq, queries: DataFrame, idCol: String,
              vecCol: String, k: Int = 10, nprobe: Int = 4,
              prune: Boolean = false): DataFrame =
-    if (!prune) Sq.topK(queries, idx.codes, idCol, vecCol, idx.model, k)
-    else {
-      val (q, codes) = probe(idx.codes, SqCodec.cellCol,
-        cellsOf(idx.centroids, "prune=true"), queries, idCol, vecCol, nprobe)
-      Sq.topK(q, codes, idCol, vecCol, idx.model, k)
-    }
-  /** Serving-batch snapshot cap: a pruned search runs the queries plan
-    * twice (probe-cell collect, then the scoring join), so the batch
-    * is SNAPSHOTTED first. Up to this many rows it becomes a driver
-    * local relation (the probe collect already pays one pass — ≤ a few
-    * MB at embedding dims); larger batches land once to a scratch
-    * parquet and are read back. Both are stable across re-execution —
+    search(SqCodec, (idx.model, idx.centroids), idx.codes, queries, idCol,
+      vecCol, k, nprobe,
+      if (prune) Some(cellsOf(idx.centroids, "prune=true")) else None)
+
+  /** Serving-batch snapshot cap. A search first collects up to this
+    * many rows of its batch into a driver local relation — the input of
+    * the one-job serving kernel, ≤ a few MB at embedding dims. A larger
+    * batch runs the operator plan, which reads the batch twice when it
+    * probes cells (probe-cell collect, then the scoring join), so it
+    * lands once to a scratch parquet and is read back
+    * ([[snapshotQueries]]). Both snapshots are stable across re-execution —
     * stronger than the previous MEMORY_AND_DISK persist, whose blocks
     * could be EVICTED and silently recompute a nondeterministic source
     * — and neither leaves anything in the cache manager behind (the
@@ -1931,38 +2009,54 @@ object AnnIndex {
   private val scratchLandings =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
+  /** The batch's `(idCol, vecCol)` rows as a driver local relation,
+    * or None above [[snapshotCollectMax]] rows. */
+  private def localBatch(queries: DataFrame, idCol: String,
+                         vecCol: String): Option[DataFrame] = {
+    val proj = queries.select(col(idCol), col(vecCol))
+    val rows = proj.limit(snapshotCollectMax + 1).collect()
+    if (rows.length > snapshotCollectMax) None
+    else Some(queries.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), proj.schema))
+  }
+
+  /** The batch snapshotted for the operator plan: [[localBatch]], or
+    * above the cap one scratch landing read back (see
+    * [[snapshotCollectMax]]). */
   private[graft] def snapshotQueries(queries: DataFrame, idCol: String,
                                      vecCol: String,
                                      minAgeMs: Long = scratchMinAgeMs)
-      : DataFrame = {
+      : DataFrame =
+    localBatch(queries, idCol, vecCol).getOrElse(
+      land(queries, idCol, vecCol, minAgeMs))
+
+  /** One scratch landing of the batch, read back; the oldest landings
+    * rotate out as described on [[snapshotCollectMax]]. */
+  private def land(queries: DataFrame, idCol: String, vecCol: String,
+                   minAgeMs: Long = scratchMinAgeMs): DataFrame = {
     val spark = queries.sparkSession
     val proj = queries.select(col(idCol), col(vecCol))
-    val rows = proj.limit(snapshotCollectMax + 1).collect()
-    if (rows.length <= snapshotCollectMax)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), proj.schema)
-    else {
-      val dir = graft.streaming.StreamHarness.scratch(
-        s"ann_query_snapshot_${snapshotCounter.incrementAndGet()}")
-      proj.write.mode("overwrite").parquet(dir)
-      // check-and-remove must be ATOMIC: with a bare peek→poll, a
-      // concurrent above-cap snapshot can poll between the two and the
-      // age check then authorizes deleting a DIFFERENT (younger)
-      // landing — yanking it from under a caller mid-query. The lock
-      // is cheap and rare (above-cap landings only).
-      scratchLandings.synchronized {
-        scratchLandings.add(dir)
-        val cutoff = System.currentTimeMillis() - minAgeMs
-        while (scratchLandings.size > scratchRetain &&
-            Option(scratchLandings.peek()).exists(
-              new java.io.File(_).lastModified() < cutoff)) {
-          val old = scratchLandings.poll()
-          if (old != null)
-            graft.streaming.StreamHarness.deleteRecursively(
-              new java.io.File(old))
-        }
+    val dir = graft.streaming.StreamHarness.scratch(
+      s"ann_query_snapshot_${snapshotCounter.incrementAndGet()}")
+    proj.write.mode("overwrite").parquet(dir)
+    // check-and-remove must be ATOMIC: with a bare peek→poll, a
+    // concurrent above-cap snapshot can poll between the two and the
+    // age check then authorizes deleting a DIFFERENT (younger)
+    // landing — yanking it from under a caller mid-query. The lock
+    // is cheap and rare (above-cap landings only).
+    scratchLandings.synchronized {
+      scratchLandings.add(dir)
+      val cutoff = System.currentTimeMillis() - minAgeMs
+      while (scratchLandings.size > scratchRetain &&
+          Option(scratchLandings.peek()).exists(
+            new java.io.File(_).lastModified() < cutoff)) {
+        val old = scratchLandings.poll()
+        if (old != null)
+          graft.streaming.StreamHarness.deleteRecursively(
+            new java.io.File(old))
       }
-      spark.read.schema(proj.schema).parquet(dir)
     }
+    spark.read.schema(proj.schema).parquet(dir)
   }
 
   /** Snapshot retention + garbage collection (the Iceberg
@@ -2366,42 +2460,237 @@ object AnnIndex {
         bround(col("n_vectors") / col("_t"), 6).as("frac"))
   }
 
-  /** Query an opened snapshot: [[Pq.ivfPqSearch]] over the pinned
-    * segment union, with the probe set pushed into EVERY segment scan
-    * as a partition filter. The probed-cell collect is bounded by nlist
-    * REGARDLESS of query count (distinct over the exploded probe list),
-    * so pruning is always parameter-sized; `prune = false` keeps the
-    * plain cell-join plan for the corpus-as-queries shape where every
-    * cell is probed anyway. The prune path executes the queries plan
-    * TWICE (probe-cell collect, then the search join), so it SNAPSHOTS
-    * the batch first ([[snapshotQueries]] — a nondeterministic queries
-    * frame would otherwise probe a different cell set than the search
-    * scores), leaving nothing behind in the cache manager. */
+  /** Query an opened snapshot, probing each query's `nprobe` nearest
+    * cells; the probed cells reach EVERY segment scan as a partition
+    * filter. A serving batch runs as ONE Spark job (SERVING on the
+    * object) and comes back as a local relation; a batch above
+    * [[snapshotCollectMax]] rows is landed once and searched by
+    * [[Pq.ivfPqSearch]]. `prune = false` keeps [[Pq.ivfPqSearch]]'s
+    * plain cell-join plan for the corpus-as-queries shape, where every
+    * cell is probed anyway. Both paths return the same rows:
+    * `(query_id, neighbor_id, adist, rank)`. */
   def topK(idx: Loaded, queries: DataFrame, idCol: String, vecCol: String,
            k: Int = 10, nprobe: Int = 4, prune: Boolean = true): DataFrame =
     if (!prune)
       Pq.ivfPqSearch(idx.codes, queries, idCol, vecCol, idx.centroids,
         idx.cbs, k, nprobe)
-    else {
-      val (q, codes) = probe(idx.codes, PqCodec.cellCol, idx.centroids,
-        queries, idCol, vecCol, nprobe)
-      Pq.ivfPqSearch(codes, q, idCol, vecCol, idx.centroids, idx.cbs,
-        k, nprobe)
+    else search(PqCodec, (idx.centroids, idx.cbs), idx.codes, queries,
+      idCol, vecCol, k, nprobe, Some(idx.centroids))
+
+  // ---- serving (see SERVING on the object) -------------------------
+
+  /** The search of [[topK]] and [[topKSq]] over either codec; `cents`
+    * is the coarse quantizer when the search probes cells. A batch that
+    * fits under [[snapshotCollectMax]] (with integral query and
+    * neighbour ids) runs the fused kernel: its state is folded from the
+    * codec's Column expressions over the local relation on the driver,
+    * and the probe set is known before the scan is planned. Any other
+    * batch runs the codec's operator plan. */
+  private def search[M <: AnyRef](codec: Codec[M], model: M,
+      codes: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      k: Int, nprobe: Int, cents: Option[Array[Array[Double]]]): DataFrame = {
+    import graft.plans.SketchExpressions.nearestCentroids
+    val probes = cents.map(c => nearestCentroids(col(vecCol), c, nprobe))
+    def probed(cells: Array[Int]): DataFrame =
+      if (cents.forall(cells.length >= _.length)) codes
+      else codes.filter(col(codec.cellCol).isin(cells.sorted.map(Int.box): _*))
+    localBatch(queries, idCol, vecCol) match {
+      case Some(q) if integral(q.schema(idCol).dataType) &&
+          integral(codes.schema("neighbor_id").dataType) =>
+        val rows = q.select(col(idCol), probes.getOrElse(lit(null)),
+            struct(codec.queryState(model, col(vecCol), probes): _*))
+          .collect()
+        // a query with a NULL id scores nothing, but its probes still
+        // widen the scan, as in the operator plan
+        val cells = rows.flatMap(r =>
+          Option(r.getSeq[Int](1)).getOrElse(Nil)).distinct
+        serve(codec, model, probed(cells), q.schema(idCol).dataType,
+          rows.filterNot(_.isNullAt(0)), k)
+      case local =>
+        // a batch the operator plan reads twice (probe, then search)
+        // must be stable: the landed snapshot, never the raw frame
+        val q = local.getOrElse(
+          if (probes.isEmpty) queries else land(queries, idCol, vecCol))
+        val cells = probes.map(p => q.select(explode(p)).distinct()
+          .collect().map(_.getInt(0)))
+        codec.reference(model, cells.fold(codes)(probed), q, idCol, vecCol,
+          k, nprobe)
+    }
+  }
+
+  private def integral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** The fused search over `codes` for the collected query `rows`
+    * (`id, probes, state`): one job scans each partition once, scores
+    * every row against the queries that probe its cell (all of them for
+    * SQ8) and keeps a bounded heap per query id; the partial heaps merge
+    * on the driver as tasks finish. The result is a local relation with
+    * the operator plan's schema. */
+  private def serve[M <: AnyRef](codec: Codec[M], model: M,
+      codes: DataFrame, idType: DataType, rows: Array[Row],
+      k: Int): DataFrame = {
+    val spark = codes.sparkSession
+    // one heap per distinct query id, in first-appearance order
+    val qid = rows.map(_.getAs[Number](0).longValue)
+    val ids = scala.collection.mutable.LinkedHashMap.empty[Long, Any]
+    rows.zip(qid).foreach { case (r, id) => ids.getOrElseUpdate(id, r.get(0)) }
+    val slot = ids.keys.zipWithIndex.toMap
+    val scorer = codec.scorer(model, codes.schema, qid.map(slot), qid,
+      rows.map(r => Option(r.getSeq[Int](1)).fold(Array.empty[Int])(_.toArray)),
+      rows.map(_.getStruct(2)))
+    val (n, desc) = (ids.size, codec.desc)
+    val heaps =
+      if (n == 0) new Heaps(k, 0, desc)
+      else {
+        val qe = codes.select(scorer.cols: _*).queryExecution
+        try SQLExecution.withNewExecutionId(qe, Some("topK")) {
+          val partial = qe.toRdd.mapPartitions { it =>
+            val h = new Heaps(k, n, desc)
+            it.foreach(scorer.task(h))
+            Iterator.single(h)
+          }
+          if (partial.partitions.isEmpty) new Heaps(k, n, desc)
+          else partial.reduce(_ merge _)
+        } catch {
+          // a malformed row fails the task; surface the kernel's own error
+          case e: org.apache.spark.SparkException
+              if e.getCause.isInstanceOf[IllegalArgumentException] =>
+            throw e.getCause
+        }
+      }
+    val out = ids.values.zipWithIndex.flatMap { case (id, j) =>
+      heaps.ranked(j).zipWithIndex.map { case ((s, nid), r) =>
+        Row(id, nid, s, r + 1) }
+    }.toSeq
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+        StructField("query_id", idType), StructField("neighbor_id", LongType),
+        StructField("_s", DoubleType), StructField("rank", IntegerType, false))))
+      .select(col("query_id"),
+        col("neighbor_id").cast(codes.schema("neighbor_id").dataType),
+        bround(col("_s"), 6).as(codec.scoreCol), col("rank"))
+  }
+
+  /** One kept candidate; its score is NULL when `isNull`. */
+  private final case class Hit(score: Double, isNull: Boolean, id: Long)
+
+  /** The operator plans' window order: score ascending (descending
+    * when `desc`), a NULL score after every number, then `neighbor_id`
+    * ascending. */
+  private final class HitOrder(desc: Boolean)
+      extends java.util.Comparator[Hit] with Serializable {
+    def compare(a: Hit, b: Hit): Int =
+      if (a.isNull != b.isNull) (if (a.isNull) 1 else -1)
+      else {
+        val c = if (a.isNull) 0
+          else SQLOrderingUtil.compareDoubles(a.score, b.score) * (if (desc) -1 else 1)
+        if (c != 0) c else java.lang.Long.compare(a.id, b.id)
+      }
+  }
+
+  /** Bounded top-k heaps, one per distinct query id, each holding its
+    * WORST kept candidate at the head, so a better one replaces it in
+    * O(log k). */
+  private final class Heaps(k: Int, n: Int, desc: Boolean)
+      extends Serializable {
+    private val order = new HitOrder(desc)
+    private val kept = Array.fill(n)(
+      new java.util.PriorityQueue[Hit](java.util.Collections.reverseOrder(order)))
+
+    /** Offer candidate `id` with score `s` (NULL when `isNull`) to query `q`. */
+    def offer(q: Int, s: Double, isNull: Boolean, id: Long): Unit = {
+      val h = kept(q)
+      val hit = Hit(s, isNull, id)
+      if (h.size < k) h.add(hit)
+      else if (k > 0 && order.compare(hit, h.peek) < 0) { h.poll(); h.add(hit) }
     }
 
-  /** The pruned-probe step of [[topK]] and [[topKSq]]: the snapshotted
-    * query batch, and `codes` filtered to the cells its queries probe. */
-  private def probe(codes: DataFrame, cellCol: String,
-                    cents: Array[Array[Double]], queries: DataFrame,
-                    idCol: String, vecCol: String,
-                    nprobe: Int): (DataFrame, DataFrame) = {
-    import graft.plans.SketchExpressions.nearestCentroids
-    val q = snapshotQueries(queries, idCol, vecCol)
-    val probed = q
-      .select(explode(nearestCentroids(col(vecCol), cents, nprobe))
-        .as("_cell"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    (q, if (probed.length >= cents.length) codes
-      else codes.filter(col(cellCol).isin(probed.map(Int.box): _*)))
+    def merge(o: Heaps): Heaps = {
+      for (q <- 0 until n) o.kept(q).forEach(e => offer(q, e.score, e.isNull, e.id))
+      this
+    }
+
+    /** Query `q`'s kept candidates, best first: (score or null, id). */
+    def ranked(q: Int): Seq[(java.lang.Double, Long)] =
+      kept(q).toArray(Array.empty[Hit]).sorted(Ordering.comparatorToOrdering(order))
+        .map(e => (if (e.isNull) null else java.lang.Double.valueOf(e.score), e.id))
+        .toSeq
+  }
+
+  /** One codec's scoring of scan rows against a collected query batch:
+    * built on the driver, shipped in the task closure. Query row `j`
+    * feeds heap `qi(j)` and never scores neighbour `qid(j)`. */
+  private abstract class Scorer(qi: Array[Int], qid: Array[Long])
+      extends Serializable {
+    /** The scan columns [[task]] reads, in order. */
+    def cols: Seq[Column]
+    /** A per-task function offering each scan row to `h`. */
+    def task(h: Heaps): InternalRow => Unit
+    protected def heap(j: Int): Int = qi(j)
+    protected def self(j: Int, nid: Long): Boolean = qid(j) == nid
+  }
+
+  /** IVF-PQ: a row scores against the queries that probe its cell, each
+    * through its (query, cell) distance table — derived in the task from
+    * the shipped residual, once per cell change (segments are
+    * partitioned by cell, so a task meets few cells). */
+  private final class PqScorer(cbs: Array[Array[Array[Double]]],
+      qi: Array[Int], qid: Array[Long],
+      byCell: Map[Int, Array[(Int, Array[Double])]])
+      extends Scorer(qi, qid) {
+    def cols: Seq[Column] = Seq(col("neighbor_id").cast("long"),
+      col(PqCodec.cellCol).cast("int"), col("codes"))
+    def task(h: Heaps): InternalRow => Unit = {
+      var cell = Int.MinValue
+      var qs = Array.empty[Int]
+      var tables = Array.empty[Array[Array[Double]]]
+      r => if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        if (r.getInt(1) != cell) {
+          cell = r.getInt(1)
+          val probing = byCell.getOrElse(cell, Array.empty)
+          qs = probing.map(_._1)
+          tables = probing.map(p => PqDistTable.table(p._2, cbs))
+        }
+        val nid = r.getLong(0)
+        val codes = if (r.isNullAt(2)) null else r.getArray(2)
+        var e = 0
+        while (e < qs.length) {
+          if (!self(qs(e), nid))
+            h.offer(heap(qs(e)), Pq.adc(tables(e), codes, nid), false, nid)
+          e += 1
+        }
+      }
+    }
+  }
+
+  /** SQ8: a row scores against every query — `(dot(codes, _w) + _bias)
+    * / (_qn · recon_norm)`, [[Sq.topK]]'s expression with its NULLs
+    * (and its zero-norm filter). */
+  private final class SqScorer(qi: Array[Int], qid: Array[Long],
+      w: Array[ArrayData], bias: Array[java.lang.Double], qn: Array[Double],
+      codesType: DataType) extends Scorer(qi, qid) {
+    def cols: Seq[Column] = Seq(col("neighbor_id").cast("long"), col("codes"),
+      col("recon_norm").cast("double"))
+    def task(h: Heaps): InternalRow => Unit = r =>
+      if (!r.isNullAt(0) && !r.isNullAt(2) && r.getDouble(2) != 0.0) {
+        val nid = r.getLong(0)
+        val codes = if (r.isNullAt(1)) null else r.getArray(1)
+        val rn = r.getDouble(2)
+        var j = 0
+        while (j < qid.length) {
+          if (!self(j, nid)) {
+            val d = if (codes == null) null
+              else SqDotCodes.dot(codes, codesType, w(j), DoubleType)
+            val den = qn(j) * rn
+            if (d == null || bias(j) == null || den == 0.0)
+              h.offer(heap(j), 0.0, true, nid)
+            else h.offer(heap(j),
+              (d.doubleValue + bias(j).doubleValue) / den, false, nid)
+          }
+          j += 1
+        }
+      }
   }
 }

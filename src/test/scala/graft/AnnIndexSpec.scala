@@ -43,6 +43,23 @@ class AnnIndexSpec extends AnyFunSuite {
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("ann_index_spec").toString
 
+  /** Runs a search and returns its result with the executed plan of
+    * the search itself: the one query `body` ran over the index
+    * segments (a serving search returns a local relation, so the
+    * result frame's own plan no longer shows the scan). */
+  private def searchPlan[T](body: => T)
+      : (T, org.apache.spark.sql.execution.SparkPlan) = {
+    val (out, plans) = TestSpark.plansOf(body)
+    val overSegments = plans.filter(_.exists {
+      case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
+        sc.relation.location.rootPaths.exists(_.toString.contains("/data/batch-"))
+      case _ => false
+    })
+    assert(overSegments.size == 1,
+      s"expected one search plan over the segments, got ${overSegments.size}")
+    (out, overSegments.head)
+  }
+
   test("round trip: persisted search equals the in-memory ivfPqTopK path") {
     val e = corpus(80).cache()
     val (cents, cbs) = model(e)
@@ -75,10 +92,8 @@ class AnnIndexSpec extends AnyFunSuite {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val (res, plan) =
-      try {
-        val r = AnnIndex.topK(idx, q, "vec_id", "embedding", k = 3, nprobe = 1)
-        (r, r.queryExecution.executedPlan)
-      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      try searchPlan(AnnIndex.topK(idx, q, "vec_id", "embedding", k = 3, nprobe = 1))
+      finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     val scans = plan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec
           if s.relation.location.rootPaths.exists(_.toString.contains("/data/batch-"))
@@ -682,9 +697,9 @@ class AnnIndexSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val (res, plan) =
       try {
-        val r = AnnIndex.topKSq(ci, q1, "vec_id", "embedding", k = 3,
-          nprobe = 1, prune = true)
-        (r.collect().map(_.toSeq).toSet, r.queryExecution.executedPlan)
+        val (r, plan) = searchPlan(AnnIndex.topKSq(ci, q1, "vec_id",
+          "embedding", k = 3, nprobe = 1, prune = true))
+        (r.collect().map(_.toSeq).toSet, plan)
       } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     val scans = plan.collect {
       case sc: org.apache.spark.sql.execution.FileSourceScanExec
@@ -785,8 +800,8 @@ class AnnIndexSpec extends AnyFunSuite {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val plan =
-      try AnnIndex.topK(idx, q, "vec_id", "embedding", k = 3, nprobe = 1)
-        .queryExecution.executedPlan
+      try searchPlan(AnnIndex.topK(idx, q, "vec_id", "embedding", k = 3,
+        nprobe = 1))._2
       finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     val segScans = plan.collect {
       case sc: org.apache.spark.sql.execution.FileSourceScanExec
@@ -857,10 +872,10 @@ class AnnIndexSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val res =
       try {
-        val r = AnnIndex.topKWhereSq(idx, q, "vec_id", "embedding",
-          allowed = allowed, allowedIdCol = "vec_id", k = 3, nprobe = 1,
-          prune = true)
-        val scans = r.queryExecution.executedPlan.collect {
+        val (r, plan) = searchPlan(AnnIndex.topKWhereSq(idx, q, "vec_id",
+          "embedding", allowed = allowed, allowedIdCol = "vec_id", k = 3,
+          nprobe = 1, prune = true))
+        val scans = plan.collect {
           case sc: org.apache.spark.sql.execution.FileSourceScanExec
               if sc.relation.location.rootPaths.exists(_.toString.contains("/data/batch-"))
             => sc
@@ -892,8 +907,8 @@ class AnnIndexSpec extends AnyFunSuite {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val plan =
-      try AnnIndex.topKSq(idx, q, "vec_id", "embedding", k = 3, nprobe = 1,
-        prune = true).queryExecution.executedPlan
+      try searchPlan(AnnIndex.topKSq(idx, q, "vec_id", "embedding", k = 3,
+        nprobe = 1, prune = true))._2
       finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     val segScans = plan.collect {
       case sc: org.apache.spark.sql.execution.FileSourceScanExec
@@ -922,9 +937,9 @@ class AnnIndexSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val (small, big) =
       try {
-        val s = AnnIndex.topKWhere(idx, q, "vec_id", "embedding",
-          allowed = allowed, allowedIdCol = "vec_id", k = 3, nprobe = 1)
-        val plan = s.queryExecution.executedPlan
+        val (s, plan) = searchPlan(AnnIndex.topKWhere(idx, q, "vec_id",
+          "embedding", allowed = allowed, allowedIdCol = "vec_id", k = 3,
+          nprobe = 1))
         // the allowed-side subplan collapsed to a literal local relation
         assert(plan.exists {
           case _: org.apache.spark.sql.execution.LocalTableScanExec => true
@@ -1246,5 +1261,41 @@ class AnnIndexSpec extends AnyFunSuite {
       "vec_id", "embedding", dir2, hot, subs2)
     assert(AnnIndex.load(spark, dir2).nlist == cents.length + 1)
     assert(AnnIndex.load(spark, dir2).codes.count() == 41)
+  }
+
+  test("a warm serving search is one Spark job; one tombstone set adds one") {
+    import graft.operators.Sq
+    val e = corpus(60).cache()
+    val (cents, cbs) = model(e)
+    val root = tmpDir()
+    val (pq, sqFlat, sqCells) = (s"$root/pq", s"$root/sqf", s"$root/sqc")
+    val m = Sq.fit(e, "embedding")
+    AnnIndex.buildIvfPq(e, "vec_id", "embedding", pq, cents, cbs)
+    AnnIndex.buildSq(e, "vec_id", "embedding", sqFlat, m)
+    AnnIndex.buildSq(e, "vec_id", "embedding", sqCells, m, Some(cents))
+    // the request carries its vectors (a driver local relation)
+    val rows = e.filter(col("vec_id") % 10 === 0).collect()
+    val q = spark.createDataFrame(java.util.Arrays.asList(rows: _*), e.schema)
+    // each search opens its snapshot; a warm open launches no job
+    val searches: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pruned topK" -> (() => AnnIndex.topK(AnnIndex.load(spark, pq), q,
+        "vec_id", "embedding", k = 3, nprobe = 2)),
+      "flat topKSq" -> (() => AnnIndex.topKSq(AnnIndex.loadSq(spark, sqFlat),
+        q, "vec_id", "embedding", k = 3)),
+      "pruned topKSq" -> (() => AnnIndex.topKSq(
+        AnnIndex.loadSq(spark, sqCells), q, "vec_id", "embedding", k = 3,
+        nprobe = 2, prune = true)))
+    def jobCounts(): Seq[(String, Int)] = searches.map { case (what, search) =>
+      search().collect() // warm: model memo, codegen
+      what -> jobsOf(search().collect())._2.size
+    }
+    jobCounts().foreach { case (what, n) =>
+      assert(n == 1, s"$what on a tombstone-free snapshot launched $n jobs")
+    }
+    Seq(pq, sqFlat, sqCells).foreach(dir =>
+      AnnIndex.delete(Seq(11L, 22L, 33L).toDF("vec_id"), "vec_id", dir))
+    jobCounts().foreach { case (what, n) =>
+      assert(n == 2, s"$what with one tombstone set launched $n jobs")
+    }
   }
 }

@@ -53,4 +53,33 @@ object TestSpark {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Runs `body` and returns the executed physical plans of the queries
+    * it ran, in completion order, read by a `QueryExecutionListener`. A
+    * marker query is awaited before the plans are read, so every earlier
+    * query's end has reached the listener. */
+  def plansOf[T](body: => T)
+      : (T, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val marker = s"plansOf_marker_${java.util.UUID.randomUUID.toString.replace('-', '_')}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) markerSeen.countDown()
+        else seen.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      spark.range(1).toDF(marker).collect()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "marker query never reached the listener")
+      (out, seen.toArray(Array.empty[SparkPlan]).toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
