@@ -142,7 +142,8 @@ import graft.plans.{PqDistTable, SqDotCodes}
   * loops are one function each), and AnnServeSpec pins the two equal
   * row for row. A larger batch, and `topK(prune = false)`, run those
   * operator plans. A tombstone set adds one job: the broadcast of its
-  * scan into the anti-join.
+  * scan into the anti-join. Query and neighbour ids are integral, as the
+  * lifecycle's deletes and upserts already read them (BIGINT).
   *
   * MIGRATION (pre-high-water manifests): a manifest written before the
   * `shw` line existed came from the era whose streamed micro-batch `id`
@@ -1974,7 +1975,7 @@ object AnnIndex {
     * batch runs the operator plan, which reads the batch twice when it
     * probes cells (probe-cell collect, then the scoring join), so it
     * lands once to a scratch parquet and is read back
-    * ([[snapshotQueries]]). Both snapshots are stable across re-execution —
+    * ([[land]]). Both snapshots are stable across re-execution —
     * stronger than the previous MEMORY_AND_DISK persist, whose blocks
     * could be EVICTED and silently recompute a nondeterministic source
     * — and neither leaves anything in the cache manager behind (the
@@ -2002,7 +2003,7 @@ object AnnIndex {
 
   /** Minimum age before a rotated-out landing is deleted (15 min — far
     * beyond any active consumption). Specs pass an explicit `minAgeMs`
-    * to [[snapshotQueries]] instead of mutating process-wide state. */
+    * to [[land]] instead of mutating process-wide state. */
   private[graft] val scratchMinAgeMs: Long = 15L * 60 * 1000
 
   private val snapshotCounter = new java.util.concurrent.atomic.AtomicLong
@@ -2020,20 +2021,11 @@ object AnnIndex {
       java.util.Arrays.asList(rows: _*), proj.schema))
   }
 
-  /** The batch snapshotted for the operator plan: [[localBatch]], or
-    * above the cap one scratch landing read back (see
-    * [[snapshotCollectMax]]). */
-  private[graft] def snapshotQueries(queries: DataFrame, idCol: String,
-                                     vecCol: String,
-                                     minAgeMs: Long = scratchMinAgeMs)
-      : DataFrame =
-    localBatch(queries, idCol, vecCol).getOrElse(
-      land(queries, idCol, vecCol, minAgeMs))
-
-  /** One scratch landing of the batch, read back; the oldest landings
-    * rotate out as described on [[snapshotCollectMax]]. */
-  private def land(queries: DataFrame, idCol: String, vecCol: String,
-                   minAgeMs: Long = scratchMinAgeMs): DataFrame = {
+  /** One scratch landing of an above-cap batch, read back; the oldest
+    * landings rotate out as described on [[snapshotCollectMax]]. */
+  private[graft] def land(queries: DataFrame, idCol: String,
+                          vecCol: String,
+                          minAgeMs: Long = scratchMinAgeMs): DataFrame = {
     val spark = queries.sparkSession
     val proj = queries.select(col(idCol), col(vecCol))
     val dir = graft.streaming.StreamHarness.scratch(
@@ -2481,11 +2473,10 @@ object AnnIndex {
 
   /** The search of [[topK]] and [[topKSq]] over either codec; `cents`
     * is the coarse quantizer when the search probes cells. A batch that
-    * fits under [[snapshotCollectMax]] (with integral query and
-    * neighbour ids) runs the fused kernel: its state is folded from the
-    * codec's Column expressions over the local relation on the driver,
-    * and the probe set is known before the scan is planned. Any other
-    * batch runs the codec's operator plan. */
+    * fits under [[snapshotCollectMax]] runs the fused kernel: its state
+    * is folded from the codec's Column expressions over the local
+    * relation on the driver, and the probe set is known before the scan
+    * is planned. A larger batch runs the codec's operator plan. */
   private def search[M <: AnyRef](codec: Codec[M], model: M,
       codes: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int, cents: Option[Array[Array[Double]]]): DataFrame = {
@@ -2495,8 +2486,7 @@ object AnnIndex {
       if (cents.forall(cells.length >= _.length)) codes
       else codes.filter(col(codec.cellCol).isin(cells.sorted.map(Int.box): _*))
     localBatch(queries, idCol, vecCol) match {
-      case Some(q) if integral(q.schema(idCol).dataType) &&
-          integral(codes.schema("neighbor_id").dataType) =>
+      case Some(q) =>
         val rows = q.select(col(idCol), probes.getOrElse(lit(null)),
             struct(codec.queryState(model, col(vecCol), probes): _*))
           .collect()
@@ -2506,21 +2496,18 @@ object AnnIndex {
           Option(r.getSeq[Int](1)).getOrElse(Nil)).distinct
         serve(codec, model, probed(cells), q.schema(idCol).dataType,
           rows.filterNot(_.isNullAt(0)), k)
-      case local =>
+      case None =>
         // a batch the operator plan reads twice (probe, then search)
-        // must be stable: the landed snapshot, never the raw frame
-        val q = local.getOrElse(
-          if (probes.isEmpty) queries else land(queries, idCol, vecCol))
+        // must be stable: the landed snapshot, never the raw frame. A
+        // flat search reads it once, so the raw frame serves; the
+        // cap probe above read at most snapshotCollectMax + 1 of its
+        // rows and discarded them.
+        val q = if (probes.isEmpty) queries else land(queries, idCol, vecCol)
         val cells = probes.map(p => q.select(explode(p)).distinct()
           .collect().map(_.getInt(0)))
         codec.reference(model, cells.fold(codes)(probed), q, idCol, vecCol,
           k, nprobe)
     }
-  }
-
-  private def integral(t: DataType): Boolean = t match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case _ => false
   }
 
   /** The fused search over `codes` for the collected query `rows`
@@ -2634,8 +2621,11 @@ object AnnIndex {
 
   /** IVF-PQ: a row scores against the queries that probe its cell, each
     * through its (query, cell) distance table — derived in the task from
-    * the shipped residual, once per cell change (segments are
-    * partitioned by cell, so a task meets few cells). */
+    * the shipped residual, once per cell the task meets. Rows arrive
+    * grouped by cell from the cell-partitioned segments, but interleaved
+    * behind a shuffled (sort-merge) tombstone or mask join, so a task
+    * keeps the tables of every cell it met, up to [[tableBudget]]
+    * doubles; past that it drops them all and derives afresh. */
   private final class PqScorer(cbs: Array[Array[Array[Double]]],
       qi: Array[Int], qid: Array[Long],
       byCell: Map[Int, Array[(Int, Array[Double])]])
@@ -2643,16 +2633,21 @@ object AnnIndex {
     def cols: Seq[Column] = Seq(col("neighbor_id").cast("long"),
       col(PqCodec.cellCol).cast("int"), col("codes"))
     def task(h: Heaps): InternalRow => Unit = {
-      var cell = Int.MinValue
-      var qs = Array.empty[Int]
-      var tables = Array.empty[Array[Array[Double]]]
+      val perTable = cbs.map(_.length.toLong).sum
+      val met = scala.collection.mutable.HashMap
+        .empty[Int, (Array[Int], Array[Array[Array[Double]]])]
+      var held = 0L
+      def tablesOf(cell: Int) = met.getOrElse(cell, {
+        val probing = byCell.getOrElse(cell, Array.empty)
+        val size = probing.length * perTable
+        if (held + size > tableBudget) { met.clear(); held = 0 }
+        held += size
+        val t = (probing.map(_._1), probing.map(p => PqDistTable.table(p._2, cbs)))
+        met(cell) = t
+        t
+      })
       r => if (!r.isNullAt(0) && !r.isNullAt(1)) {
-        if (r.getInt(1) != cell) {
-          cell = r.getInt(1)
-          val probing = byCell.getOrElse(cell, Array.empty)
-          qs = probing.map(_._1)
-          tables = probing.map(p => PqDistTable.table(p._2, cbs))
-        }
+        val (qs, tables) = tablesOf(r.getInt(1))
         val nid = r.getLong(0)
         val codes = if (r.isNullAt(2)) null else r.getArray(2)
         var e = 0
@@ -2664,6 +2659,9 @@ object AnnIndex {
       }
     }
   }
+
+  /** Distance-table doubles one [[PqScorer]] task keeps (32 MiB). */
+  private final val tableBudget = 1L << 22
 
   /** SQ8: a row scores against every query — `(dot(codes, _w) + _bias)
     * / (_qn · recon_norm)`, [[Sq.topK]]'s expression with its NULLs

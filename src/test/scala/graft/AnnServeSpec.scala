@@ -167,6 +167,38 @@ class AnnServeSpec extends AnyFunSuite {
     }
   }
 
+  test("IVF-PQ kernel == Pq.ivfPqSearch when shuffled joins interleave the cells") {
+    // with broadcasts off, the tombstone anti-join and the mask semi-join
+    // sort the codes by neighbor_id, so a task meets its cells row by row
+    val dir = indexed(
+      (df, d) => AnnIndex.buildIvfPq(df, "vec_id", "embedding", d, cents, cbs),
+      (df, d) => AnnIndex.appendIvfPq(df, "vec_id", "embedding", d))
+    val idx = AnnIndex.load(spark, dir)
+    val prev = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+      .map(key => key -> spark.conf.get(key))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      for (nprobe <- Seq(2, cents.length)) {
+        val (got, plans) = TestSpark.plansOf(
+          AnnIndex.topK(idx, queries, "vec_id", "embedding", 200, nprobe))
+        assert(plans.exists(_.exists {
+          case _: org.apache.spark.sql.execution.joins.SortMergeJoinExec => true
+          case _ => false
+        }), "the tombstone anti-join did not shuffle")
+        assertSame(s"shuffled topK nprobe=$nprobe", got,
+          Pq.ivfPqSearch(idx.codes, queries, "vec_id", "embedding", cents, cbs,
+            200, nprobe))
+      }
+      assertSame("shuffled topKWhere",
+        AnnIndex.topKWhere(idx, queries, "vec_id", "embedding", allowedIds,
+          "vec_id", k = 200, nprobe = 2, smallMask = 0),
+        Pq.ivfPqSearch(idx.codes.join(allowedIds.select(col("vec_id")
+          .as("neighbor_id")), Seq("neighbor_id"), "left_semi"), queries,
+          "vec_id", "embedding", cents, cbs, 200, 2))
+    } finally prev.foreach { case (key, v) => spark.conf.set(key, v) }
+  }
+
   test("a malformed PQ code fails loudly, naming its row, instead of ranking first") {
     val dir = s"${tmpDir()}/idx"
     AnnIndex.buildIvfPq(corpus, "vec_id", "embedding", dir, cents, cbs)

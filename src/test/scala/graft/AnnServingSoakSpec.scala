@@ -91,8 +91,8 @@ class AnnServingSoakSpec extends AnyFunSuite {
   }
 
   test("above-cap query snapshots rotate: bounded scratch disk for a long-lived driver") {
-    // an above-cap batch (snapshotCollectMax = 8192) forces the scratch
-    // parquet landing; many of them must hold at most scratchRetain dirs
+    // an above-cap batch (snapshotCollectMax = 8192) lands to scratch
+    // parquet; many landings must hold at most scratchRetain dirs
     val big = spark.range(8193).select(col("id").as("vec_id"),
       array(lit(1.0f), lit(2.0f)).as("embedding"))
     val scratchRoot = new java.io.File(
@@ -107,7 +107,7 @@ class AnnServingSoakSpec extends AnyFunSuite {
     var first: org.apache.spark.sql.DataFrame = null
     var newest: org.apache.spark.sql.DataFrame = null
     for (i <- 1 to AnnIndex.scratchRetain + 8) {
-      newest = AnnIndex.snapshotQueries(big, "vec_id", "embedding")
+      newest = AnnIndex.land(big, "vec_id", "embedding")
       if (i == 1) first = newest
     }
     assert(landings() >= AnnIndex.scratchRetain + 8,
@@ -118,7 +118,7 @@ class AnnServingSoakSpec extends AnyFunSuite {
     // the spec passes an explicit minAgeMs instead of mutating a
     // process-wide knob — a parallel suite's landings keep the
     // production grace window
-    newest = AnnIndex.snapshotQueries(big, "vec_id", "embedding",
+    newest = AnnIndex.land(big, "vec_id", "embedding",
       minAgeMs = -1000)
     assert(landings() <= AnnIndex.scratchRetain,
       s"scratch landings not rotated: ${landings()} dirs on disk")

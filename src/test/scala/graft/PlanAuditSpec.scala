@@ -280,6 +280,37 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("the plans the ANN index queries run over index segments satisfy the standing plan rules") {
+    // a serving search returns a local relation, so the query's result
+    // plan no longer shows the codes scan with its tombstone anti-joins
+    // and mask semi-joins; audit every plan the query executed that
+    // scans the index segments, captured by TestSpark.plansOf
+    val annQueries = Seq("q142_ann_index_search", "q144_ann_index_append",
+      "q146_ann_index_compact", "q148_sq_index_search", "q149_ann_index_stats",
+      "q152_ann_index_delete", "q153_ann_index_serve", "q155_sq_cell_search",
+      "q156_sq_pruned_search", "q157_ann_time_travel",
+      "q158_ann_delete_compact", "q159_ann_filtered_search",
+      "q160_ann_retention", "q161_ann_retrain", "q162_ann_filtered_tiny",
+      "q163_sq_filtered_search", "q164_sq_retrain", "q165_ann_shard_merge",
+      "q166_sq_shard_merge", "q167_sq_filtered_serve", "q168_ann_split_cell",
+      "q169_ann_rebalance", "q170_sq_rebalance")
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val failures = annQueries.flatMap { name =>
+        val (_, plans) = TestSpark.plansOf(SparkEntry.queries(name)(spark, sfDir))
+        val overSegments = plans.filter(_.exists {
+          case sc: FileSourceScanExec =>
+            sc.relation.location.rootPaths.exists(_.toString.contains("/data/batch-"))
+          case _ => false
+        })
+        assert(overSegments.nonEmpty, s"$name ran no plan over index segments")
+        overSegments.flatMap(audit(name, _))
+      }
+      assert(failures.isEmpty, s"plan-rule violations:\n  ${failures.mkString("\n  ")}")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
   test("rule 4 catches an expensive projection on a raw scan, passes a spread one") {
     // reconstruct the exact pre-fix q135 anti-pattern: the fused DSIR
     // scorer fed straight from the parquet scan (one split at this SF →
