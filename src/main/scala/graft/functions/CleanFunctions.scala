@@ -208,7 +208,6 @@ object CleanFunctions {
   def validTransactionId(c: Column): Column = c.rlike("^4[0-9]{4}$")
   def validPassengerId(c: Column): Column  = c.rlike("^P[0-8][0-9]{4}$")
   def validFlightId(c: Column): Column     = c.rlike("^[A-Z]{1,2}[0-9]{1,5}$")
-  def validFlightNumber(c: Column): Column = c.rlike("^[A-Z]{2,3}[0-9]{1,4}[A-Z]?$")
 
   /** P10 — numeric range validation (functions.py:339-349). */
   def inRange(c: Column, min: Double, max: Double): Column = c.between(min, max)

@@ -135,29 +135,51 @@ object FuzzyJoin {
   def fuzzyFix(df: DataFrame, valueCol: String, dict: DataFrame,
                dictCol: String, threshold: Double = 85.0,
                out: String = null,
-               scorer: (Column, Column) => Column =
-                 (a, b) => similarityRatio(upper(a), upper(b))): DataFrame = {
-    val outCol = Option(out).getOrElse(valueCol)
-    val dictVals = dict.select(col(dictCol).as("_dict_val")).distinct()
-    val distinctVals = df.select(col(valueCol).as("_dirty_val")).distinct()
+               scorer: (Column, Column) => Column = caseFoldedRatio): DataFrame =
+    applyRepair(df, valueCol,
+      repairMap(df.select(col(valueCol)), dict, dictCol, threshold, scorer),
+      Option(out).getOrElse(valueCol))
+
+  private val caseFoldedRatio: (Column, Column) => Column =
+    (a, b) => similarityRatio(upper(a), upper(b))
+
+  /** The repairs [[fuzzyFix]] makes for the values in the first column of
+    * `values`: one row `(_dirty_val, _repaired_val)` per distinct value
+    * that is not in the dictionary and whose best entry scores >= threshold.
+    * One map can serve several columns over the same dictionary (the
+    * flights pipeline repairs origin and destination airports with one). */
+  private[graft] def repairMap(values: DataFrame, dict: DataFrame,
+                               dictCol: String, threshold: Double = 85.0,
+                               scorer: (Column, Column) => Column = caseFoldedRatio)
+      : DataFrame = {
+    val dictVals = dict.select(col(dictCol).as("_dict_val"))
+    val distinctVals = values.select(col(values.columns.head).as("_dirty_val"))
+      .distinct()
 
     // Exact hits skip scoring entirely; only misses pay the cross product.
+    // A repeated dictionary entry cannot change the anti-join; the cross
+    // join de-duplicates, so its nested loop builds an aggregate.
     val misses = distinctVals.join(broadcast(dictVals),
       distinctVals("_dirty_val") === dictVals("_dict_val"), "left_anti")
 
-    val scored = misses.crossJoin(broadcast(dictVals))
+    val scored = misses.crossJoin(broadcast(dictVals.distinct()))
       .withColumn("_score", scorer(col("_dirty_val"), col("_dict_val")))
     val top1 = Window.partitionBy(col("_dirty_val"))
       .orderBy(col("_score").desc, col("_dict_val"))
-    val repaired = scored
+    scored
       .withColumn("_rn", row_number().over(top1))
       .filter(col("_rn") === 1 && col("_score") >= threshold)
       .select(col("_dirty_val"), col("_dict_val").as("_repaired_val"))
+  }
 
-    df.join(broadcast(repaired), df(valueCol) === repaired("_dirty_val"), "left")
+  /** Write `valueCol` repaired by `map` (a [[repairMap]]) to `outCol`;
+    * values the map does not name are kept. */
+  private[graft] def applyRepair(df: DataFrame, valueCol: String,
+                                 map: DataFrame, outCol: String): DataFrame =
+    // by name: the same map may already be joined upstream of `df`
+    df.join(broadcast(map), col(valueCol) === col("_dirty_val"), "left")
       .withColumn(outCol, coalesce(col("_repaired_val"), col(valueCol)))
       .drop("_dirty_val", "_repaired_val")
-  }
 
   /** J5 — prefix repair: take the first-2-alphanumeric prefix, fuzzy-repair
     * it against the airline-key dictionary, splice it back

@@ -628,24 +628,6 @@ object Similarity {
     (out, counts)
   }
 
-  /** `steps` distributed Lloyd's iterations from `init` — each step is
-    * one corpus job plus a parameter-sized collect (see
-    * [[kmeansStepDistributed]]). Returns the final centroids and the
-    * final step's member counts. */
-  def kmeansFitDistributed(df: DataFrame, vecCol: String,
-                           init: Array[Array[Double]],
-                           steps: Int): (Array[Array[Double]], Array[Long]) = {
-    require(steps >= 1, s"need at least one step, got $steps")
-    var cents = init
-    var counts = new Array[Long](init.length)
-    var i = 0
-    while (i < steps) {
-      val (c, n) = kmeansStepDistributed(df, vecCol, cents)
-      cents = c; counts = n; i += 1
-    }
-    (cents, counts)
-  }
-
   /** Quantizer size for a corpus of `n` vectors at a target mean cell
     * population — the SemDeDup paper's scaling knob. Cells ∝ corpus keeps
     * the within-cell quadratic term at ~targetCellSize per row (linear

@@ -261,14 +261,6 @@ object TextDedup {
     sigFrameWith(docs, textCol, idCol, shingleSize,
       graft.plans.OracleHashExpressions.minHashSig31(_, numHashes))
 
-  /** [[minHashCandidates]] with SQL-reproducible hashing. */
-  def minHashCandidates31(docs: DataFrame, textCol: String, idCol: String,
-                          shingleSize: Int = 5, bands: Int = 16,
-                          rowsPerBand: Int = 4,
-                          maxBucketSize: Int = 1000): DataFrame =
-    bandPairsWith(sigFrame31(docs, textCol, idCol, shingleSize, bands * rowsPerBand),
-      bands, rowsPerBand, maxBucketSize, md5(_))
-
   /** [[minHashNearDups]] with SQL-reproducible hashing. */
   def minHashNearDups31(docs: DataFrame, textCol: String, idCol: String,
                         threshold: Double = 0.8, shingleSize: Int = 5,

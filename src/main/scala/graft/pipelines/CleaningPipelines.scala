@@ -104,7 +104,14 @@ object CleaningPipelines {
   /** Flights pipeline (cleaning.py:399-452): literal JK→JFK fix, key
     * normalize, airline-prefix repair against the airline dim (J5), fuzzy
     * airport-code repair (J4), then validation: flightkey pattern, IATA
-    * codes, origin ≠ dest, keep-first per flightkey. */
+    * codes, origin ≠ dest, keep-first per flightkey.
+    *
+    * The reference chains the three repairs, but none reads a column
+    * another one writes, so every repair map is built from the normalized
+    * input: the airline-prefix map, and ONE airport map over the origin ∪
+    * destination values that repairs both columns. The maps' broadcasts
+    * therefore run side by side instead of each waiting on the previous
+    * repair's join. */
   def flights(in: DataFrame, airlineKeys: DataFrame, airlineKeyCol: String,
               airportKeys: DataFrame, airportKeyCol: String): CleanResult = {
     val df0 = withIngestId(normalizeColumns(in))
@@ -116,16 +123,17 @@ object CleaningPipelines {
       .withColumn("originairportkey",
         when(col("originairportkey") === "JK", "JFK").otherwise(col("originairportkey")))
 
-    val prefixFixed = FuzzyJoin.fixKeyPrefix(df0, "flightkey",
-      airlineKeys, airlineKeyCol)
-    val originFixed = FuzzyJoin.fuzzyFix(prefixFixed, "originairportkey",
+    val airportMap = FuzzyJoin.repairMap(
+      df0.select(col("originairportkey"))
+        .union(df0.select(col("destinationairportkey"))),
       airportKeys, airportKeyCol)
-    val destFixed = FuzzyJoin.fuzzyFix(originFixed, "destinationairportkey",
-      airportKeys, airportKeyCol)
+    val repaired = Seq("originairportkey", "destinationairportkey")
+      .foldLeft(FuzzyJoin.fixKeyPrefix(df0, "flightkey", airlineKeys, airlineKeyCol))(
+        (d, c) => FuzzyJoin.applyRepair(d, c, airportMap, c))
 
-    val deduped = Dedup.dupFlag(destFixed, Seq("flightkey"), IngestId)
+    val deduped = Dedup.dupFlag(repaired, Seq("flightkey"), IngestId)
     split(deduped,
-      col("flightkey").rlike("^[A-Za-z0-9]{2}[0-9]+$") &&
+      CF.validFlightKey(col("flightkey")) &&
       CF.validIata(col("originairportkey")) &&
       CF.validIata(col("destinationairportkey")) &&
       col("originairportkey") =!= col("destinationairportkey") &&

@@ -68,10 +68,6 @@ object OracleHashes {
   def aListSql(k: Int): String = (0 until k).map(aConst).mkString("[", ",", "]")
   def bListSql(k: Int): String = (0 until k).map(bConst).mkString("[", ",", "]")
 
-  /** SQL fragment for h31 of a string expression (DuckDB dialect). */
-  def h31Sql(expr: String): String =
-    s"(('0x' || substr(md5($expr), 1, 15))::BIGINT % 2147483647)"
-
   private val md5Local = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
 

@@ -21,13 +21,24 @@ import org.apache.spark.sql.functions._
   *    (write-new-then-swap via overwrite mode).
   *
   * Scale: one shuffle for the per-key latest on the (small) incoming
-  * batch, one key-join against existing; with existing bucketed by the
-  * key the join is co-located and only changed partitions rewrite
-  * (partition-overwrite mode on a partitioned sink).
+  * batch, and one anti-join of existing against the batch's KEY SET.
+  * The key set is projected straight from the incoming rows, so its
+  * broadcast runs beside the window's shuffle instead of after it, and
+  * `existing` streams through the anti-join unshuffled whenever the key
+  * set is small enough to broadcast. With existing bucketed by the key
+  * only changed partitions need a rewrite (partition-overwrite mode on a
+  * partitioned sink).
   */
 object UpsertSink {
 
   /** Post-merge state of `existing` after applying `incoming`.
+    *
+    * Existing rows are dropped by an anti-join on the incoming key set,
+    * not on the per-key latest rows: both hold the same non-null keys, and
+    * a NULL key matches nothing in either. `incoming` is therefore read
+    * twice (keys, and the windowed latest), so its key columns must be
+    * deterministic — a key drawn from `rand()` or an unordered id would
+    * differ between the two reads.
     *
     * @param orderCol column ordering versions WITHIN the incoming batch;
     *                 the highest wins (a batch can carry several versions
@@ -41,7 +52,8 @@ object UpsertSink {
       .filter(col("_rn") === 1)
       .drop("_rn")
       .select(existing.columns.map(col): _*)
-    existing.join(latest, keys, "left_anti").unionByName(latest)
+    existing.join(incoming.select(keys.map(col): _*), keys, "left_anti")
+      .unionByName(latest)
   }
 
   /** Idempotent parquet materialization of the merged state. */

@@ -109,8 +109,19 @@ class PinSpec extends AnyFunSuite {
       graft.sources.CsvSource.writeQuarantine(flights.quarantine,
         out.resolve("quarantine").toString)
     }
+    // A collection that does not depend on System.gc(), which a JVM run
+    // with -XX:+DisableExplicitGC ignores: drop the only reference to a
+    // sentinel, then allocate until the collector has cleared it.
+    def collectGarbage(): Unit = {
+      val sentinel = new java.lang.ref.WeakReference(new Array[Byte](1 << 10))
+      var churn: Array[Byte] = null
+      System.gc()
+      while (sentinel.get != null) churn = new Array[Byte](1 << 20)
+      churn = null
+      Thread.sleep(300)
+    }
     invoke()
-    System.gc(); Thread.sleep(500)
+    collectGarbage()
     val base = sc.getPersistentRDDs.size
     (1 to 4).foreach(_ => invoke())
     // every result frame above is now unreachable — the pins inside
@@ -120,7 +131,7 @@ class PinSpec extends AnyFunSuite {
     val deadline = System.currentTimeMillis() + 30000
     var live = sc.getPersistentRDDs.size
     while (live > base && System.currentTimeMillis() < deadline) {
-      System.gc(); Thread.sleep(300)
+      collectGarbage()
       live = sc.getPersistentRDDs.size
     }
     assert(live <= base,

@@ -1,9 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.{CleanFunctions => CF}
+import graft.operators.{Dedup, FuzzyJoin}
 import graft.pipelines.CleaningPipelines
 import graft.pipelines.CleaningPipelines.IngestId
+import graft.sources.CsvSource
 
 /** Fixture tests mirroring FIXTURES.md §A fault classes (derived from the
   * reference's real dirty inputs). */
@@ -217,5 +221,109 @@ class PipelinesSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       CleaningPipelines.cleanFile("nonsense", airlines)
     }
+  }
+
+  /** The flights pipeline as the reference writes it: three chained
+    * repairs, each over the previous one's output. */
+  private def chainedFlights(in: DataFrame, airlineKeys: DataFrame,
+                             airportKeys: DataFrame): (DataFrame, DataFrame) = {
+    val df0 = CleaningPipelines.withIngestId(CleaningPipelines.normalizeColumns(in))
+      .withColumn("flightkey", upper(trim(col("flightkey"))))
+      .withColumn("originairportkey", upper(trim(col("originairportkey"))))
+      .withColumn("destinationairportkey", upper(trim(col("destinationairportkey"))))
+      .withColumn("aircrafttype", CF.titleCase(col("aircrafttype")))
+      .withColumn("originairportkey",
+        when(col("originairportkey") === "JK", "JFK").otherwise(col("originairportkey")))
+    val prefixFixed = FuzzyJoin.fixKeyPrefix(df0, "flightkey",
+      airlineKeys, "airlinekey")
+    val originFixed = FuzzyJoin.fuzzyFix(prefixFixed, "originairportkey",
+      airportKeys, "airportkey")
+    val destFixed = FuzzyJoin.fuzzyFix(originFixed, "destinationairportkey",
+      airportKeys, "airportkey")
+    val flagged = Dedup.dupFlag(destFixed, Seq("flightkey"), IngestId)
+      .withColumn("_valid", coalesce(
+        col("flightkey").rlike("^[A-Za-z0-9]{2}[0-9]+$") &&
+        CF.validIata(col("originairportkey")) &&
+        CF.validIata(col("destinationairportkey")) &&
+        col("originairportkey") =!= col("destinationairportkey") &&
+        !col("_is_dup"), lit(false)))
+    (flagged.filter(col("_valid")).drop("_valid", "_is_dup"),
+      flagged.filter(!col("_valid")).drop("_valid", "_is_dup"))
+  }
+
+  test("M4 flights: one airport map for both columns equals the chained repairs") {
+    // lowercase and mixed-case entries make case-only misses repairable
+    // (the default scorer case-folds); duplicated rows and the Sfo/sfo
+    // tie exercise the top-1's tie-break
+    val airlines = Seq("AA", "DL", "DL", "ua", "ua").toDF("airlinekey")
+    val airports = Seq("JFK", "LAX", "ORD", "ORD", "sfo", "Sfo", "Sfo", "KENNEDY")
+      .toDF("airportkey")
+    val in = Seq[(Long, String, String, String, String)](
+      (0L, "AA100", "JK", "LAX", "boeing  737"),    // JK→JFK
+      (1L, "dl200", "LAX", "ORD", "airbus a320"),   // lowercase key
+      (2L, "U-A300", "ORD", "JFK", "e190"),         // near-miss prefix → ua300
+      (3L, "A.A400", "ORD", "ORD", "x"),            // origin = destination
+      (4L, "AA100", "JFK", "LAX", "dup key"),       // duplicate flightkey
+      (5L, "XY500", " lax", "jfk ", "a"),           // unknown airline prefix
+      (6L, "B6 600", "KENNEDYX", "JFK", "b"),       // repaired, not IATA
+      (7L, null, "JFK", "LAX", "c"),                // missing flightkey
+      (8L, "AA700", null, "LAX", "d"),              // missing origin
+      (9L, "AA800", "SFO", "KENNEDY1", "e"),        // Sfo/sfo tie; dest repaired
+      (10L, "AA900", "SFO", "SFO", "f"),            // equal once both repaired
+      (11L, "DL1000", "ORD", "SFO", "g"),           // value in both columns
+      (12L, "ua", "JFK", "ORD", "h"),               // prefix only, no digits
+      (13L, "ua1", "JK", "JK", "i")                 // JK fixed on origin only
+    ).toDF(IngestId, "flightkey", "originairportkey", "destinationairportkey",
+      "aircrafttype")
+    val r = CleaningPipelines.flights(in, airlines, "airlinekey", airports, "airportkey")
+    val (clean, quarantine) = chainedFlights(in, airlines, airports)
+    assert(r.clean.columns.toSeq == clean.columns.toSeq)
+    assert(TestSpark.multiset(r.clean) == TestSpark.multiset(clean))
+    assert(TestSpark.multiset(r.quarantine) == TestSpark.multiset(quarantine))
+    // the repairs did fire: prefixes to `ua`, SFO to the tie's winner
+    val got = r.clean.orderBy(IngestId)
+      .select("flightkey", "originairportkey", "destinationairportkey")
+      .as[(String, String, String)].collect().toSeq
+    assert(got == Seq(("AA100", "JFK", "LAX"), ("DL200", "LAX", "ORD"),
+      ("ua300", "ORD", "JFK"), ("XY500", "LAX", "JFK"), ("DL1000", "ORD", "Sfo")))
+    assert(r.quarantine.select(IngestId).as[Long].collect().toSet ==
+      Set(3L, 4L, 6L, 7L, 8L, 9L, 10L, 12L, 13L))
+  }
+
+  test("M4 flights: an uploaded file is read, cleaned and written in 13 Spark jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_flights_jobs")
+    def file(name: String, body: String): String = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.writeString(f, body)
+      f.toString
+    }
+    val airlines = file("airlines.csv", "airlinekey\nAA\nDL\nua\n")
+    val airports = file("airports.csv", "airportkey\nJFK\nLAX\nORD\nsfo\n")
+    val flights = file("flights.csv",
+      """flightkey,originairportkey,destinationairportkey,aircrafttype
+        |AA100,JK,LAX,boeing 737
+        |dl200,LAX,ORD,airbus a320
+        |U-A300,SFO,JFK,e190
+        |AA400,ORD,ORD,x
+        |AA100,JFK,LAX,dup key
+        |""".stripMargin)
+    val (res, jobs) = TestSpark.jobsOf {
+      val r = CleaningPipelines.cleanFile("flights",
+        CsvSource.readAllString(spark, flights),
+        airlineKeys = Some(CsvSource.readAllString(spark, airlines).select("airlinekey")),
+        airportKeys = Some(CsvSource.readAllString(spark, airports).select("airportkey")))
+      CsvSource.writeClean(r.clean, dir.resolve("clean").toString)
+      CsvSource.writeQuarantine(r.quarantine, dir.resolve("quarantine").toString)
+    }
+    // per repair map: the dictionary's broadcast for the anti-join, the
+    // distinct dictionary's shuffle and broadcast for the cross join, the
+    // distinct values' shuffle and the map's broadcast; then the dedup
+    // shuffle and the two writes. The chained repairs, three maps with
+    // one per airport column, launched 17.
+    val launched = jobs.size
+    assert(launched == 13, s"jobs launched by the flights upload: $launched")
+    def rows(kind: String) = spark.read.option("header", "true")
+      .csv(dir.resolve(kind).toString).count()
+    assert(rows("clean") == 3 && rows("quarantine") == 2)
   }
 }

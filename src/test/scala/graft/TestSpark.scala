@@ -13,10 +13,17 @@ object TestSpark {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** The rows of `df` as a multiset: each row's values with its count. */
+  def multiset(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity)
+      .map { case (k, v) => k -> v.size }
 
   /** Runs `body` under a job group of its own and returns, per Spark job
     * it launched, the long call sites of the job's stages. A marker job
