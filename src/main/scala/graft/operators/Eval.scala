@@ -15,14 +15,15 @@ import org.apache.spark.sql.types.DecimalType
   * with R_pos the sum of positive rows' ranks under the score order and
   * TIES taking the average rank of their run. The textbook formulation
   * (`rank() OVER (ORDER BY score)`) is the single-task global window
-  * this codebase bans; here ranks come from the same distributed
-  * machinery as [[Pack.globalIndex]]:
+  * this codebase bans; here ranks come from the distributed
+  * [[PrefixScan]] (order key unique and deterministic — the score
+  * groups — and a null key sorts first):
   *
   *  1. one hash aggregation collapses rows to (score, n, n_pos) — ties
   *     merge here, so the scan is score-cardinality-sized;
-  *  2. the distributed prefix scan ([[Pack.prefixSum]], range Exchange +
-  *     config-bounded carry) gives each score group its exclusive
-  *     count-below — average rank = below + (n+1)/2, exactly;
+  *  2. the prefix scan's `Sum` (range Exchange + config-bounded carry)
+  *     gives each score group its exclusive count-below — average rank
+  *     = below + (n+1)/2, exactly;
   *  3. one global aggregate folds the rank sums; kept in ×2 integer
   *     arithmetic (DECIMAL) until the final division so no fractional
   *     rank ever touches a double.
@@ -81,10 +82,11 @@ object Eval {
     * doubles from exact integer counts.
     *
     * Same machinery as [[auc]]: one score-keyed hash agg (the sweep is
-    * score-cardinality-sized, NOT data-sized), [[Pack.prefixSum]] for
-    * the exclusive below-counts, and the corpus totals broadcast as a
-    * 1-row frame — no global sort window, no collect. TP at threshold
-    * t = total_pos − pos_below(t); kept = N − below(t). F1 is 0 when
+    * score-cardinality-sized, NOT data-sized), ONE [[PrefixScan]] with
+    * two `Sum`s for the exclusive below-counts (one planning pass), and
+    * the corpus totals broadcast as a 1-row frame — no global sort
+    * window, no collect. TP at threshold t = total_pos − pos_below(t);
+    * kept = N − below(t). F1 is 0 when
     * precision + recall is 0 (no division blow-up on an all-negative
     * tail). Null scores are the caller's problem, as in [[auc]]. */
   def prCurve(df: DataFrame, score: Column, label: Column): DataFrame = {
@@ -98,15 +100,15 @@ object Eval {
       .select(score.as("_s"), when(label, 1L).otherwise(0L).as("_y"))
       .groupBy(col("_s"))
       .agg(count(lit(1)).as("_n"), sum(col("_y")).as("_np")))
-    val below = Pack.prefixSum(grouped, col("_n"), "_s", "_below")
-    val belowPos = Pack.prefixSum(below, col("_np"), "_s", "_pbelow")
+    val below = PrefixScan(grouped, "_s",
+      PrefixScan.Sum(col("_n"), "_below"), PrefixScan.Sum(col("_np"), "_pbelow"))
     val totals = grouped.agg(sum(col("_n")).as("_tot"),
       sum(col("_np")).as("_totp"))
     val p = (col("_tp").cast("double") / col("kept_n"))
     // all-negative input: recall is 0 by convention, not 0/0 = NaN
     val r = when(col("_totp") === 0, lit(0.0))
       .otherwise(col("_tp").cast("double") / col("_totp"))
-    belowPos.crossJoin(broadcast(totals))
+    below.crossJoin(broadcast(totals))
       .withColumn("kept_n", col("_tot") - col("_below"))
       .withColumn("_tp", col("_totp") - col("_pbelow"))
       .select(col("_s").as("threshold"), col("kept_n"),
@@ -124,7 +126,7 @@ object Eval {
     * exact-inputs (both fit a double far beyond any realistic corpus
     * before the 2^53 integer ceiling — ~9e15 rank-sum units). */
   def auc(df: DataFrame, score: Column, label: Column): DataFrame = {
-    // pinned (distinct-score-sized): prefixSum's planning pass and its
+    // pinned (distinct-score-sized): the prefix scan's planning pass and its
     // wide branch both consume this frame — unpinned, the corpus
     // aggregation (and the caller's scoring pipeline below it) would
     // run twice per execution. Same GC-release lifecycle as [[prCurve]].
@@ -132,7 +134,7 @@ object Eval {
       .select(score.as("_s"), when(label, 1L).otherwise(0L).as("_y"))
       .groupBy(col("_s"))
       .agg(count(lit(1)).as("_n"), sum(col("_y")).as("_np")))
-    val ranked = Pack.prefixSum(grouped, col("_n"), "_s", "_below")
+    val ranked = PrefixScan(grouped, "_s", PrefixScan.Sum(col("_n"), "_below"))
     // sum over positive rows of 2*avg_rank = np * (2*below + n + 1).
     // The product is taken in DECIMAL, not Long: np×(2·below+n+1) can
     // exceed 2^63 around ~1e10 rows (below ≈ N), and with ANSI off a

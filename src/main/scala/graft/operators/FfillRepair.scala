@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** Forward-fill and id-repair operators (SURVEY.md §2.5 W2/W3).
   *
@@ -13,100 +13,15 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * explicit column.
   *
   * Scale: a naive global-order ffill is a one-partition window — the
-  * whole dataset funnels through a single task. Instead this implements
-  * the distributed prefix-scan: range-partition on the order column,
-  * forward-fill WITHIN each partition in parallel, aggregate one
-  * (partition, last-non-null) row per partition, prefix-scan that tiny
-  * summary on the driver, and broadcast the carry-in back. Two parallel
-  * shuffles, no single-task stage, bit-identical to the global window.
+  * whole dataset funnels through a single task. Both operators run the
+  * distributed [[PrefixScan]] instead (its `Last` accumulator), which
+  * reproduces the global window exactly under its order-key contract.
   */
 object FfillRepair {
 
-  private val Pid = "_ffill_pid"
-  private val Carry = "_ffill_carry"
-
-  /** df + `out` column = last non-null `value` over the global order of
-    * `orderCol` (inclusive of the current row when `inclusive`). The core
-    * scalable prefix-scan shared by [[ffill]] and [[repairIds]].
-    *
-    * CONTRACT: `orderCol` is a unique, NON-NULL total order (an
-    * ingest/order key by construction at every caller) — partition
-    * boundaries are derived from its values.
-    *
-    * SHAPE (round-19 rework, guide §2.3/§2.4): the planning pass —
-    * range Exchange (whose reservoir-sampling job evaluates its whole
-    * input), pinned checkpoint, and per-partition summary — runs over
-    * the NARROW (orderCol, value) projection only, so column pruning
-    * reaches the caller's scan and the checkpoint stores two columns.
-    * The summary collects each nonempty partition's (max orderCol, last
-    * non-null value); the WIDE frame then derives the SAME partition id
-    * from its order key with one literal binary search per row
-    * ([[graft.plans.RangeBucketExpr]]) — it is never sampled, never
-    * checkpointed, and shuffles exactly once (the window's hash
-    * Exchange on the derived pid, as before). The previous full-frame
-    * pin evaluated the caller's whole expression tree TWICE (sampling +
-    * checkpoint) and wrote every column to block storage: measured
-    * 1.7 s/invocation at sf0.1 on the q37 transactions pipeline, and a
-    * full corpus checkpoint write at 100 TB. Pid-vs-branch consistency
-    * no longer depends on physical partitioning at all: the wide pid is
-    * a pure function of (orderCol value, collected boundaries). */
-  private def prefixLast(df: DataFrame, value: Column, orderCol: String,
-                         inclusive: Boolean, out: String): DataFrame = {
-    val spark = df.sparkSession
-    val n = math.max(1, spark.conf.get("spark.sql.shuffle.partitions").toInt)
-
-    // Eager localCheckpoint, NOT persist: spark_partition_id() on the
-    // narrow frame must be read by exactly one materialization (a
-    // persist can be evicted and recomputed with different AQE
-    // coalescing). Blocks are ContextCleaner-released when the frame
-    // becomes unreachable. Executor-loss trade-off centralized in [[Pin]].
-    val narrow = Pin.data(df
-      .select(col(orderCol), value.as("_ffill_v"))
-      .repartitionByRange(n, col(orderCol))
-      .withColumn(Pid, spark_partition_id()))
-
-    // one row per NONEMPTY partition: its orderCol upper bound and its
-    // last non-null value (max_by ignores null ordering keys, so rows
-    // with null value never win)
-    val summary = narrow.groupBy(col(Pid))
-      .agg(max(col(orderCol)).as("_hi"),
-        max_by(col("_ffill_v"),
-          when(col("_ffill_v").isNotNull, col(orderCol))).as("_last"))
-      .collect()
-      .sortBy(_.getInt(0))
-
-    val orderType = narrow.schema(orderCol).dataType
-    val valueType = narrow.schema("_ffill_v").dataType
-    // compacted pid space over the nonempty partitions, in range order:
-    // boundaries = every partition's max orderCol except the last;
-    // carry(j) = last non-null value of any partition before j
-    val bounds = summary.dropRight(1).map(_.get(1)).toIndexedSeq
-    var running: Any = null
-    val carries = summary.indices.map { j =>
-      val c = running
-      if (!summary(j).isNullAt(2)) running = summary(j).get(2)
-      Row(j, c)
-    }
-    val carryDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(carries, 1),
-      StructType(Seq(StructField(Pid, IntegerType, nullable = false),
-                     StructField(Carry, valueType, nullable = true))))
-
-    val frameEnd = if (inclusive) 0L else -1L
-    val w = Window.partitionBy(col(Pid)).orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, frameEnd)
-    df.withColumn("_ffill_v", value)
-      .withColumn(Pid,
-        graft.plans.RangeBucket.bucket(col(orderCol), bounds, orderType))
-      .join(broadcast(carryDf), Pid)
-      .withColumn(out,
-        coalesce(last(col("_ffill_v"), ignoreNulls = true).over(w), col(Carry)))
-      .drop(Pid, Carry, "_ffill_v")
-  }
-
   /** W2 — pandas ffill(): last non-null value up to the current row.
     * With `partitionBy` the fill restarts per group (one parallel window);
-    * without it, the scalable global prefix-scan above. */
+    * without it, the scalable global [[PrefixScan]]. */
   def ffill(df: DataFrame, c: String, orderCol: String,
             partitionBy: Seq[String] = Nil): DataFrame =
     if (partitionBy.nonEmpty) {
@@ -114,8 +29,7 @@ object FfillRepair {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       df.withColumn(c, last(col(c), ignoreNulls = true).over(w))
     } else {
-      prefixLast(df, col(c), orderCol, inclusive = true, out = "_ffill_out")
-        .withColumn(c, col("_ffill_out")).drop("_ffill_out")
+      PrefixScan(df, orderCol, PrefixScan.Last(col(c), c, inclusive = true))
     }
 
   /** W3 — id repair with the reference's exact quirk: every non-numeric id
@@ -126,7 +40,7 @@ object FfillRepair {
   def repairIds(df: DataFrame, idCol: String, orderCol: String,
                 seed: Long = 40000L, out: String = "id_repaired"): DataFrame = {
     val numeric = when(col(idCol).rlike("^[0-9]+$"), col(idCol).cast(LongType))
-    prefixLast(df, numeric, orderCol, inclusive = false, out = "_ffill_prev")
+    PrefixScan(df, orderCol, PrefixScan.Last(numeric, "_ffill_prev", inclusive = false))
       .withColumn(out,
         when(numeric.isNotNull, numeric)
           .otherwise(coalesce(col("_ffill_prev"), lit(seed)) + 1))

@@ -157,7 +157,7 @@ object NgramLM {
     // both consumers below (the quantile and the final join) would
     // otherwise re-run the ENTIRE scoring pipeline. The scored frame is
     // one row per doc; checkpoint it once (eager, lineage-cut,
-    // ContextCleaner-released — the Pack/FfillRepair pattern; trade-off
+    // ContextCleaner-released — the PrefixScan pattern; trade-off
     // in [[Pin]]) so scoring happens exactly once.
     val scored = Pin.data(scoredIn)
     val cut = Quantiles.exact(scored, Nil, "avg_logprob",

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** Global ordering operators for training pipelines: contiguous row
   * indexing and GPT-style sequence packing (concatenate all documents in
@@ -12,91 +11,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * Both need an order-wide running total — the textbook case where the
   * naive formulation (`row_number()`/`sum() over (ORDER BY ...)` with no
   * partition) collapses Spark into ONE task holding the whole dataset.
-  * Like [[FfillRepair]], this uses the distributed prefix-scan instead:
-  * range-partition on the order column, aggregate one partial sum per
-  * partition, prefix-scan that ≤ numShufflePartitions-row summary on the
-  * driver (a CONFIG-bounded collect — one long per shuffle partition,
-  * never data-sized), and broadcast the carry-in offsets back.
-  *
-  * The range-partitioned frame is pinned with an eager
-  * `localCheckpoint()` — NOT `persist()`: `spark_partition_id()` is only
-  * meaningful if the partial-sum branch and the carry-join branch see
-  * the SAME physical partitioning, and with AQE a recomputed Exchange
-  * may be read back with different partition coalescing per branch
-  * (observed: wrong offsets). The checkpoint freezes the pids once, its
-  * blocks are released by the ContextCleaner when the frame becomes
-  * unreachable (no CacheManager entry to leak), and lineage is cut.
-  * Executor-loss trade-off centralized in [[Pin]].
+  * Every running total here is the distributed [[PrefixScan]]'s `Sum`
+  * accumulator instead, under its order-key contract.
   */
 object Pack {
-
-  private val Pid = "_pack_pid"
-  private val Off = "_pack_off"
-
-  /** df + `out` = the EXCLUSIVE running sum of `value` over the global
-    * order of `orderCol` (0 for the first row). `orderCol` must be a
-    * total order (unique), or the result is ambiguous — same contract as
-    * any ORDER BY prefix sum. */
-  def prefixSum(df: DataFrame, value: Column, orderCol: String,
-                out: String): DataFrame = {
-    val spark = df.sparkSession
-    val n = math.max(1, spark.conf.get("spark.sql.shuffle.partitions").toInt)
-
-    // SHAPE (round-19 rework, guide §2.3/§2.4 — the FfillRepair.prefixLast
-    // twin): the planning pass — range Exchange (whose reservoir-sampling
-    // job evaluates its whole input), pinned checkpoint, per-partition
-    // sums — runs over the NARROW (orderCol, value) projection only, so
-    // column pruning reaches the caller's scan and the checkpoint holds
-    // two columns, not (for the packing callers) the corpus text. The
-    // WIDE frame derives the SAME partition id from its order key with a
-    // literal binary search ([[graft.plans.RangeBucketExpr]] over each
-    // nonempty partition's collected upper bound) — never sampled, never
-    // checkpointed, shuffled exactly once by the window's hash Exchange.
-    // Branch consistency no longer rests on physical partitioning: the
-    // wide pid is a pure function of (orderCol value, boundaries).
-    // CONTRACT unchanged (unique total order) plus NON-NULL orderCol
-    // (boundaries are derived from its values).
-    val narrow = Pin.data(df
-      .select(col(orderCol),
-        coalesce(value.cast(LongType), lit(0L)).as("_pack_v"))
-      .repartitionByRange(n, col(orderCol))
-      .withColumn(Pid, spark_partition_id()))
-      // ^ pin pids once (a persist could be evicted and recomputed with
-      //   different AQE coalescing); GC-cleaned, not leaked
-
-    // one row per NONEMPTY range partition: its orderCol upper bound
-    // and its partial sum, prefix-scanned DRIVER-SIDE into each
-    // partition's exclusive carry-in — ≤ `n` rows (the shuffle-partition
-    // count, a config constant, not a function of data volume).
-    val summary = narrow.groupBy(col(Pid))
-      .agg(max(col(orderCol)).as("_hi"), sum(col("_pack_v")).as("_s"))
-      .collect()
-      .sortBy(_.getInt(0))
-    val orderType = narrow.schema(orderCol).dataType
-    // compacted pid space over the nonempty partitions in range order
-    val bounds = summary.dropRight(1).map(_.get(1)).toIndexedSeq
-    var running = 0L
-    val carries = summary.indices.map { j =>
-      val c = running
-      running += summary(j).getLong(2)
-      Row(j, c)
-    }
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(carries, 1),
-      StructType(Seq(StructField(Pid, IntegerType, nullable = false),
-                     StructField(Off, LongType, nullable = false))))
-
-    // local exclusive cumsum within each derived partition + the
-    // partition's broadcast carry-in
-    val w = Window.partitionBy(col(Pid)).orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, -1L)
-    df.withColumn("_pack_v", coalesce(value.cast(LongType), lit(0L)))
-      .withColumn(Pid,
-        graft.plans.RangeBucket.bucket(col(orderCol), bounds, orderType))
-      .join(broadcast(offDf), Pid)
-      .withColumn(out, coalesce(sum(col("_pack_v")).over(w), lit(0L)) + col(Off))
-      .drop(Pid, Off, "_pack_v")
-  }
 
   /** Contiguous 0-based global row index in `orderCol` order — the
     * scalable replacement for `row_number() OVER (ORDER BY ...)`
@@ -104,7 +22,7 @@ object Pack {
     * drops to RDDs). */
   def globalIndex(df: DataFrame, orderCol: String,
                   out: String = "row_idx"): DataFrame =
-    prefixSum(df, lit(1L), orderCol, out)
+    PrefixScan(df, orderCol, PrefixScan.Sum(lit(1L), out))
 
   /** Materialize the packed training sequences themselves: concatenate
     * all documents in `orderCol` order and emit one row per
@@ -123,8 +41,8 @@ object Pack {
     require(budget > 0, s"budget must be positive, got $budget")
     val withToks = df.withColumn("_toks",
       graft.functions.TextFunctions.tokens(col(textCol)))
-    val withOff = prefixSum(withToks,
-      size(col("_toks")).cast(LongType), orderCol, "_off")
+    val withOff = PrefixScan(withToks, orderCol,
+      PrefixScan.Sum(size(col("_toks")), "_off"))
     withOff
       .select(col("_off"), posexplode(col("_toks")).as(Seq("_pos", "_tok")))
       .select((col("_off") + col("_pos")).as("_p"), col("_tok"))
@@ -149,8 +67,8 @@ object Pack {
   def packByTokenBudget(df: DataFrame, tokenCount: Column, orderCol: String,
                         budget: Int): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    prefixSum(df.withColumn("n_tokens", coalesce(tokenCount.cast(LongType), lit(0L))),
-        col("n_tokens"), orderCol, "tok_offset")
+    PrefixScan(df.withColumn("n_tokens", coalesce(tokenCount.cast(LongType), lit(0L))),
+        orderCol, PrefixScan.Sum(col("n_tokens"), "tok_offset"))
       .withColumn("seq_first",
         floor(col("tok_offset") / budget).cast(LongType))
       .withColumn("seq_last",
@@ -213,9 +131,9 @@ object Pack {
   def shardAssign(df: DataFrame, tokenCount: Column, orderCol: String,
                   shardBudget: Long): DataFrame = {
     require(shardBudget > 0, s"shardBudget must be positive, got $shardBudget")
-    prefixSum(df.withColumn("n_tokens",
+    PrefixScan(df.withColumn("n_tokens",
         coalesce(tokenCount.cast(LongType), lit(0L))),
-        col("n_tokens"), orderCol, "_tok_off")
+        orderCol, PrefixScan.Sum(col("n_tokens"), "_tok_off"))
       .withColumn("shard_id", expr(s"_tok_off DIV $shardBudget"))
       .drop("_tok_off")
   }

@@ -29,7 +29,7 @@ import org.apache.spark.sql.DataFrame
   *    checkpoint dir is configured):
   *    `Components` edge frames + labels (4 sites), `TextDedup` minhash
   *    signature frames + `sourceOverlap`'s distinct (source, gram)
-  *    frame, `Pack.prefixSum` / `FfillRepair` range-partitioned inputs,
+  *    frame, `PrefixScan`'s range-partitioned narrow frame,
   *    `NgramLM` per-doc scored frame, `BpeTrain` word-frequency dict
   *    (unique-word-count-sized) + the per-round incremental token state
   *    (lazy — see `eager` on [[data]]), `CleaningPipelines.split`'s

@@ -99,9 +99,10 @@ object Quantiles {
     * The grouped path's cumulative-count window has no partition key when
     * `keys` is empty, which Spark executes as ONE task holding every
     * distinct value. Here the cumulative position comes from the
-    * distributed prefix-scan instead ([[Pack.prefixSum]]: range-partition
-    * the value-frequency frame by value, per-partition partial sums, a
-    * config-bounded summary scan, broadcast carry-in) — so the only
+    * distributed [[PrefixScan]] instead (a `Sum` over the value-frequency
+    * frame ordered by the distinct, non-null value: range-partition,
+    * per-partition partial sums, a config-bounded summary scan, broadcast
+    * carry-in) — so the only
     * data-sized stages are hash aggregations and a range Exchange of the
     * DISTINCT values; the lone single-task stage is the ≤
     * shuffle-partitions-row summary scan, bounded by config not data. */
@@ -119,7 +120,7 @@ object Quantiles {
     // scoring pipeline) — one raw pass instead of two.
     val counts = Pin.data(df.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol).as("_v")).agg(count(lit(1)).as("_cnt")))
-    val ranked = Pack.prefixSum(counts, col("_cnt"), "_v", "_below")
+    val ranked = PrefixScan(counts, "_v", PrefixScan.Sum(col("_cnt"), "_below"))
       .withColumn("_cum", col("_below") + col("_cnt"))
     val total = counts.agg(sum(col("_cnt")).as("_n"))
 

@@ -199,19 +199,19 @@ object Split {
     * filled). Adds `cum_before` = tokens admitted strictly ahead of the
     * row.
     *
-    * Scale: the global running sum is [[Pack.prefixSum]]'s distributed
-    * prefix scan over a range partitioning of the (−score, id) sort key
-    * — one range Exchange + a config-bounded carry join; NO
-    * single-task `ORDER BY` window, no collect, and the filter is a
-    * projection over the scanned frame. NaN scores are the caller's
-    * bug (−NaN breaks the range order); score NULLs sort like the
-    * underlying range partitioner places them — filter them first. */
+    * Scale: the global running sum is a [[PrefixScan]] `Sum` over the
+    * (−score, id) sort key — one range Exchange + a config-bounded
+    * carry join; NO single-task `ORDER BY` window, no collect, and the
+    * filter is a projection over the scanned frame. The key is unique
+    * when ids are; NaN scores are the caller's bug (−NaN breaks the
+    * range order), and a null score sorts before every scored row
+    * (nulls first inside the struct key too) — filter them first. */
   def tokenBudgetSelect(df: DataFrame, score: Column, tokens: Column,
                         idCol: String, budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     val keyed = df.withColumn("_sel_key",
       struct((-score).as("ns"), col(idCol).as("id")))
-    Pack.prefixSum(keyed, tokens, "_sel_key", "cum_before")
+    PrefixScan(keyed, "_sel_key", PrefixScan.Sum(tokens, "cum_before"))
       .filter(col("cum_before") < budget)
       .drop("_sel_key")
   }

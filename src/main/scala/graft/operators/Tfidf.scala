@@ -91,15 +91,15 @@ object Tfidf {
     * that covers 95 % of the corpus"; the curve's knee sizes the vocab.
     *
     * The running total is a corpus-wide ordered sum — computed with the
-    * distributed prefix scan ([[Pack.prefixSum]]) over a composite
-    * (inverted zero-padded frequency | term) key, NOT a global-order
-    * window that would funnel the vocabulary through one task. The key
-    * makes the order total (term breaks frequency ties), so the curve
-    * is deterministic and engine-portable.
+    * distributed [[PrefixScan]] over a composite (inverted zero-padded
+    * frequency | term) key, NOT a global-order window that would funnel
+    * the vocabulary through one task. The key is the scan's unique,
+    * deterministic order (term breaks frequency ties, and it is never
+    * null), so the curve is engine-portable.
     *
     * Scale: one explode + hash agg collapses the corpus to its
     * vocabulary; everything after runs on vocabulary-sized frames
-    * (two range Exchanges from the prefix scan, one broadcast of the
+    * (the prefix scan's range and window Exchanges, one broadcast of the
     * 1-row total). */
   def vocabCoverage(docs: DataFrame, textCol: String): DataFrame = {
     // pinned (vocabulary-sized): the prefix-scan ranking AND the 1-row
@@ -110,7 +110,7 @@ object Tfidf {
     val keyed = tf.withColumn("_ckey",
       concat(lpad((lit(999999999999L) - col("freq")).cast("string"), 12, "0"),
         lit("|"), col("term")))
-    val cum = Pack.prefixSum(keyed, col("freq"), "_ckey", "_cumex")
+    val cum = PrefixScan(keyed, "_ckey", PrefixScan.Sum(col("freq"), "_cumex"))
     cum.crossJoin(broadcast(tf.agg(sum(col("freq")).as("_total"))))
       .select(col("term"), col("freq"),
         bround((col("_cumex") + col("freq")).cast("double")

@@ -48,7 +48,7 @@ object CorpusPipeline {
     // both consume this frame, and its lineage contains the dedup
     // window (a corpus Exchange) — unpinned, that shuffle would run
     // twice per execution (the Eval.auc hazard). Narrower than the
-    // pre-round-19 shape too: prefixSum used to checkpoint the full
+    // pre-round-19 shape too: the prefix scan used to checkpoint the full
     // frame WITH text riding. GC-release lifecycle per Pin's contract.
     val slim = graft.operators.Pin.data(train.select(col(idCol),
       col("quality"),

@@ -11,11 +11,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Partition index of `child` within a LITERAL sorted boundary list —
   * the value-derived replacement for a second range Exchange in the
-  * distributed prefix-scan operators (FfillRepair / Pack): the narrow
-  * planning pass collects each range partition's upper bound, and the
-  * full-width frame then derives the SAME partition id from its order
-  * key with one binary search per row — no reservoir-sampling pass over
-  * the wide frame, no wide checkpoint, no re-attachment join.
+  * distributed [[graft.operators.PrefixScan]]: the narrow planning pass
+  * collects each range partition's upper bound, and the full-width
+  * frame then derives the SAME partition id from its order key with one
+  * binary search per row — no reservoir-sampling pass over the wide
+  * frame, no wide checkpoint, no re-attachment join.
   *
   * Returns the count of boundaries strictly below the key (lower
   * bound): key ≤ boundaries(i) and key > boundaries(i-1) → i; key above
@@ -59,8 +59,11 @@ case class RangeBucketExpr(child: Expression, boundaries: IndexedSeq[Any],
 
 object RangeBucket {
   /** `boundaries` are EXTERNAL (Row.get) values of `elemType`; converted
-    * to Catalyst-internal form once here. Must be sorted ascending. */
+    * to Catalyst-internal form once here. Must be sorted ascending and
+    * non-null: null keys sort first and always map to partition 0, so a
+    * null boundary would only be compared silently as if it were data. */
   def bucket(c: Column, boundaries: Seq[Any], elemType: DataType): Column = {
+    require(!boundaries.contains(null), "range_bucket boundaries must be non-null")
     val conv = CatalystTypeConverters.createToCatalystConverter(elemType)
     ColumnBridge.column(RangeBucketExpr(ColumnBridge.expression(c),
       boundaries.map(conv).toIndexedSeq, elemType))

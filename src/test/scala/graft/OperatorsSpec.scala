@@ -37,6 +37,13 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got == Seq(Some(1.0), Some(1.0), Some(1.0), Some(4.0), Some(4.0)))
   }
 
+  test("W2 ffill carries a null order key's value forward (nulls sort first)") {
+    val df = Seq((None, Some(7)), (Some(1L), None), (Some(2L), None)).toDF("k", "v")
+    val got = FfillRepair.ffill(df, "v", "k")
+      .orderBy(col("k").asc).as[(Option[Long], Option[Int])].collect().toSeq
+    assert(got == Seq((None, Some(7)), (Some(1L), Some(7)), (Some(2L), Some(7))))
+  }
+
   test("W3 repairIds: consecutive bad ids get the SAME repaired id (reference quirk)") {
     val df = Seq((0L, "40001"), (1L, "4AN"), (2L, "4GW"), (3L, "40005"), (4L, "xx"))
       .toDF("_ingest_id", "id")
@@ -302,7 +309,7 @@ class OperatorsSpec extends AnyFunSuite {
     val plan = Quantiles.exact(df, Nil, "v", Seq(0.5))
       .queryExecution.executedPlan.toString
     val windows = plan.linesIterator.filter(_.contains("Window ")).toSeq
-    assert(windows.nonEmpty && windows.forall(_.contains("_pack_pid")), plan)
+    assert(windows.nonEmpty && windows.forall(_.contains("_prefix_pid")), plan)
   }
 
   test("mixturePlan budgets tokens per source; applyMixture samples deterministically") {

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Pack
+import graft.operators.{Pack, PrefixScan}
 
 class PackSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -20,7 +20,7 @@ class PackSpec extends AnyFunSuite {
   test("prefixSum == in-memory exclusive scan, nulls count as zero") {
     val rows = Seq((1L, Some(10L)), (2L, None), (3L, Some(5L)), (4L, Some(0L)),
       (5L, Some(7L))).toDF("k", "v").repartition(3)
-    val got = Pack.prefixSum(rows, col("v"), "k", "ps")
+    val got = PrefixScan(rows, "k", PrefixScan.Sum(col("v"), "ps"))
       .select("k", "ps").as[(Long, Long)].collect.toMap
     assert(got == Map(1L -> 0L, 2L -> 10L, 3L -> 10L, 4L -> 15L, 5L -> 15L))
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, FfillRepair}
 import graft.functions.{CleanFunctions => CF}
@@ -55,6 +56,47 @@ class PropertySpec extends AnyFunSuite {
       }
       got == expected
     })
+  }
+
+  test("PrefixScan == the global window: Sum, Last and all three in one call") {
+    import graft.operators.PrefixScan
+    import org.apache.spark.sql.expressions.Window
+    // few rows per partition and half the values null, so partitions
+    // holding only the null key or only null values are common
+    val gen = for {
+      n <- Gen.choose(1, 16)
+      keys <- Gen.pick(n, -50L until 50L)
+      vals <- Gen.listOfN(n, Gen.oneOf(Gen.const(None), Gen.choose(-50, 50).map(Some(_))))
+      nullKey <- Gen.oneOf(true, false)
+      inParts <- Gen.choose(1, 6)
+      parts <- Gen.choose(1, 8)
+    } yield {
+      val ks = keys.toList.map(Option(_))
+      ((if (nullKey) None :: ks.tail else ks).zip(vals), inParts, parts)
+    }
+    // no shrinking: every shrink step reruns the Spark jobs
+    check("prefixScan", Prop.forAllNoShrink(gen) { case (rows, inParts, parts) =>
+      // a session of its own, so the partition count stays local to the case
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", parts.toLong)
+      val df = s.createDataFrame(rows).toDF("k", "v").repartition(inParts)
+      val w = Window.orderBy(col("k").asc)
+      def upTo(end: Long) = w.rowsBetween(Window.unboundedPreceding, end)
+      val want = df.select(col("k"),
+        coalesce(sum(col("v").cast("long")).over(upTo(-1L)), lit(0L)).as("s"),
+        last(col("v"), ignoreNulls = true).over(upTo(0L)).as("li"),
+        last(col("v"), ignoreNulls = true).over(upTo(-1L)).as("le"))
+      def same(got: DataFrame, outs: String*) =
+        TestSpark.multiset(got.select("k", outs: _*)) ==
+          TestSpark.multiset(want.select("k", outs: _*))
+      val sum0 = PrefixScan.Sum(col("v"), "s")
+      val incl = PrefixScan.Last(col("v"), "li", inclusive = true)
+      val excl = PrefixScan.Last(col("v"), "le", inclusive = false)
+      same(PrefixScan(df, "k", sum0), "s") &&
+        same(PrefixScan(df, "k", incl), "li") &&
+        same(PrefixScan(df, "k", excl), "le") &&
+        same(PrefixScan(df, "k", sum0, incl, excl), "s", "li", "le")
+    }, n = 10)
   }
 
   test("W1 keepFirst == first row per key in explicit order") {
