@@ -4,15 +4,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      Runtime.getRuntime.availableProcessors().toString).toInt
+    val spark = GraftSession.local(cpus, "graft-bench")
     // SPARK_GRAFT_LOGLEVEL=INFO -> per-job timings in stderr (profiling)
     spark.sparkContext.setLogLevel(
       sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))

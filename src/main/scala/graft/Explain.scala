@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan of selected
   * queries so pushdown (`PushedFilters`), column pruning (`ReadSchema`),
   * broadcast-vs-shuffle join choices, and WholeStageCodegen spans can be
@@ -14,13 +12,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.isEmpty || names.contains(n) }

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One-call session factory — the settings every graft operator assumes,
-  * collected so a library user starts from the same contract the test
-  * suite, Verify, and Bench run under:
+/** The one place that composes session settings: every main, the test
+  * suite and the repo benchmark build their session here, and a library
+  * user starts from the same contract:
   *
   *  - non-ANSI casts (pandas `errors='coerce'` parity: bad input → NULL,
   *    never an exception mid-pipeline);
@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   *  - micros parquet timestamps + nanos-as-long reads (the physical
   *    types external engines and the reference data carry);
   *  - AQE on (runtime skew-join splitting and partition coalescing);
-  *  - the graft SQL extensions: function library + the Levenshtein
-  *    bound-prefilter optimizer rule (`plans/GraftExtensions`);
+  *  - the graft SQL function library, injected by
+  *    `plans/GraftExtensions` into every session of the builder;
   *  - a generated-code cache of [[CodegenCacheEntries]] classes.
   */
 object GraftSession {
@@ -48,7 +48,7 @@ object GraftSession {
 
   /** Workstation-sized local session: `local[cores]` with shuffle
     * partitions = cores (not the 200 default — 32 threads shuffling 200
-    * partitions is pure overhead), functions registered. */
+    * partitions is pure overhead). */
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft"): SparkSession = {
     val s = builder()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Catalyst-phase profiler (optimization-round measurement tool): for
   * each named query (or all), reports DataFrame BUILD time, execution
   * wall, the QueryPlanningTracker phase breakdown
@@ -16,14 +14,9 @@ object PhaseProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+      Runtime.getRuntime.availableProcessors().toString).toInt
     val only = args.toSet
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(cpus, "graft-phaseprof")
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only.contains(n) }

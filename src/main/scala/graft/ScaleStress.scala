@@ -152,17 +152,14 @@ object ScaleStress {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
+    val spark = GraftSession.attach(GraftSession.builder()
       .master(s"local[$cpus]")
+      .appName("graft-scalestress")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
       // reclaim superseded reliable checkpoints as their frames become
       // unreachable (the checkpoint_cost exhibit; no-op without a dir)
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     // fail fast on malformed measurement knobs — before any synth/run
     val (_, _) = (nPasses, spreadGate)

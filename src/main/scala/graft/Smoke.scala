@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke entry: mirrors the driver's t1 check — SparkEntry.entry on
   * sf0.001 must return rows. Usage: runMain graft.Smoke */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4, "graft-smoke")
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

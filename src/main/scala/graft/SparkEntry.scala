@@ -6,30 +6,17 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
   */
 object SparkEntry {
 
-  /** Session settings every query depends on, applied defensively in case
-    * the caller's session was built with different defaults: non-ANSI
-    * null-on-error casts (pandas `errors='coerce'` parity), UTC, and
-    * micros parquet timestamps (matches the DuckDB oracle's physical type).
-    */
-  private def prep(s: SparkSession): SparkSession = {
-    s.conf.set("spark.sql.ansi.enabled", "false")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    // events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
-    // default; read as long and convert explicitly (Queries.eventsTs).
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s
-  }
-
   /** Flagship query (M10 eligibility) on /root/testdata/sf0.001;
     * driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q12_eligibility")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each call
+    * applies [[GraftSession.attach]] first, so a session built outside
+    * graft still runs under the session contract. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Queries.all.map(q => q.name ->
-      ((s: SparkSession, dir: String) => q.fn(prep(s), dir))).toMap
+      ((s: SparkSession, dir: String) => q.fn(GraftSession.attach(s), dir))).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

@@ -77,7 +77,7 @@ object Eligibility {
     val schedS = col(scheduledCol)
     val actS   = col(actualCol)
     val missing = schedS.isNull || schedS === "" || actS.isNull || actS === ""
-    // non-ANSI session (SparkEntry.prep): unparseable -> null, not error
+    // non-ANSI session (GraftSession): unparseable -> null, not error
     val schedT = to_timestamp(schedS)
     val actT   = to_timestamp(actS)
     val delay  = jsRound((unix_timestamp(actT) - unix_timestamp(schedT)) / 60.0)

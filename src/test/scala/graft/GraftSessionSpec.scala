@@ -2,12 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The session contract a library user gets from GraftSession. The suite
-  * shares one JVM-wide session, so `attach` (the existing-session path)
-  * is what can be exercised here; `local()`/`builder()` feed the same
-  * conf set to getOrCreate and are covered end-to-end by the Verify and
-  * Bench mains, which build real sessions from it for the full
-  * oracle gate. */
+import graft.plans.GraftFunctions
+
+/** The session contract a library user gets from GraftSession. Every main
+  * (Bench, Verify, Smoke, Explain, PhaseProf, ScaleStress) and this
+  * suite's shared session ([[TestSpark]], built by `GraftSession.local`)
+  * start from `GraftSession.builder()`, so the cases below check both the
+  * builder-time half of the contract on the shared session and `attach`,
+  * the path for a session built outside graft. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("attach applies the runtime contract and registers the functions") {
@@ -21,6 +23,101 @@ class GraftSessionSpec extends AnyFunSuite {
       == "Gold Star")
     assert(s.sql("SELECT graft_normalize_unicode('a\u200Bb')").head.getString(0)
       == "ab")
+  }
+
+  test("the shared session carries the builder-time contract") {
+    val conf = TestSpark.spark.conf
+    assert(conf.get("spark.sql.extensions") == "graft.plans.GraftExtensions")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+  }
+
+  /** One SQL argument list per function of [[GraftFunctions.table]]. */
+  private val probeArgs: Map[String, String] = {
+    val text = "'the cat sat on the mat'"
+    val ts = "TIMESTAMP'2023-01-01 00:00:00', TIMESTAMP'2023-01-01 02:30:00'"
+    val vec = "array(3.0D, 4.0D)"
+    Map(
+      "graft_normalize_ws" -> "'  a   b '",
+      "graft_normalize_unicode" -> "'a b'",
+      "graft_title_case" -> "'gold star'",
+      "graft_capitalize_first" -> "'gold'",
+      "graft_strip_non_alpha" -> "'a1-b'",
+      "graft_clean_money" -> "'$1,540.00'",
+      "graft_is_digits" -> "'123'",
+      "graft_alnum_prefix" -> "'ab12-x'",
+      "graft_strip_key_from_email" -> "'ann12@x.com', '12'",
+      "graft_first_name" -> "'Ann Lee'",
+      "graft_last_name" -> "'Ann Lee'",
+      "graft_mask_email" -> "'alice@example.com'",
+      "graft_mask_phone" -> "'555-123-4567'",
+      "graft_mask_address" -> "'1 Main St'",
+      "graft_md5_key" -> "'a', 1",
+      "graft_parse_date" -> "'20-Jan-23'",
+      "graft_iso_date" -> "DATE'2023-01-20'",
+      "graft_age_years" -> "DATE'2000-01-01', DATE'2023-01-01'",
+      "graft_ranges_overlap" -> "1, 3, 2, 4",
+      "graft_duration_hours" -> ts,
+      "graft_delay_minutes" -> ts,
+      "graft_haversine_km" -> "0.0D, 0.0D, 1.0D, 1.0D",
+      "graft_convert_currency" -> "10.0D, 'USD', 'EUR'",
+      "graft_reconcile" -> "1.0D, 0.5D, 0.5D, 2.0D",
+      "graft_refund" -> "100.0D, 10.0D",
+      "graft_similarity_ratio" -> "'ABCDE', 'ABCDF'",
+      "graft_token_sort_ratio" -> "'a b', 'b a'",
+      "graft_tokens" -> text,
+      "graft_token_count" -> text,
+      "graft_bpe_token_count" -> text,
+      "graft_lang_id" -> text,
+      "graft_quality_score" -> text,
+      "graft_fingerprint" -> text,
+      "graft_content_key" -> text,
+      "graft_dot" -> s"$vec, $vec",
+      "graft_norm2" -> vec,
+      "graft_cosine" -> s"$vec, $vec",
+      "graft_normalize_vec" -> vec,
+      "graft_char_shingles" -> s"$text, 5",
+      "graft_word_shingles" -> s"$text, 2",
+      "graft_minhash_sig" -> "array('ab', 'bc'), 4",
+      "graft_est_jaccard" -> "array(1L, 2L), array(1L, 3L)",
+      "graft_bpe_tokens" -> "'the then'",
+      "graft_bucket16" -> "7",
+      "graft_bucket65536" -> "CAST(42 AS BIGINT)",
+      "graft_dsir_bucket" -> "'ab', 16")
+  }
+
+  test("every graft function resolves in a newSession of the graft-built session") {
+    val names = GraftFunctions.table.map(_._1)
+    assert(names.distinct.size == names.size, s"duplicate names in $names")
+    assert(probeArgs.keySet == names.toSet,
+      "probeArgs must hold exactly one argument list per table function")
+    // a fresh session holds no temp functions: only the extensions'
+    // injections can resolve these
+    val fresh = TestSpark.spark.newSession()
+    names.foreach(name => fresh.sql(s"SELECT $name(${probeArgs(name)})").collect())
+    assert(fresh.sql(s"SELECT graft_lang_id(${probeArgs("graft_lang_id")})")
+      .head.getString(0) == "en")
+  }
+
+  test("no source file outside GraftSession.scala calls the session builder") {
+    // built from two parts so this file does not match itself
+    val needle = "SparkSession" + ".builder()"
+    val roots = Seq("src/main/scala", "src/test/scala").map(java.nio.file.Paths.get(_))
+    roots.foreach(r => assert(java.nio.file.Files.isDirectory(r),
+      s"$r is missing: run the suite from the project root"))
+    import scala.jdk.CollectionConverters._
+    val hits = roots.flatMap { r =>
+      val files = java.nio.file.Files.walk(r)
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.filterNot(_.getFileName.toString == "GraftSession.scala")
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains(needle) => s"$p:${i + 1}"
+        }
+      }
+    assert(hits.isEmpty,
+      s"build sessions through GraftSession.local/builder, not: ${hits.mkString(", ")}")
   }
 
   test("sketch/selection family is callable from pure SQL") {

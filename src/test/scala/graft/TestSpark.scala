@@ -2,20 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (lazy; never stopped). */
+/** One shared local session for all suites (lazy; never stopped), built
+  * through the session contract every entry point uses. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.CodegenCacheEntries.toString)
-      .getOrCreate()
+    val s = GraftSession.local(4, "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
