@@ -10,6 +10,8 @@ import org.apache.spark.sql.types._
 
 import graft.operators.{Pq, Sq}
 import graft.plans.{PqDistTable, SqDotCodes}
+import graft.sources.IndexLog.{Art, ManifestData, Staged, commit, freshName,
+  maybeKill, publishStaged, refresh, resolve, writeManifest}
 
 /** Persisted IVF-PQ index — the build-once / query-many shape every
   * production ANN deployment actually runs (Faiss `write_index` /
@@ -41,22 +43,11 @@ import graft.plans.{PqDistTable, SqDotCodes}
   *     re-appended after a delete is visible again, and a streamed
   *     correction can tombstone the stale vector and append the new one
   *     in a single commit.
-  *   - `manifest/m-<n>` — the index state as of generation n: a `v2`
-  *     header line, a `model <v>` line (which model version encodes
-  *     this snapshot's segments — 0 is the build's root-level
-  *     `centroids/`/`codebooks/`/`meta/`, higher versions live under
-  *     `model-v<v>/` and are written by [[retrain]]), a `hw <id>`
-  *     high-water line (the highest segment/tombstone id EVER
-  *     allocated — never reused, even after a compaction drops the
-  *     segment that carried it), a `shw <key>` line (the highest
-  *     committed stream dedup key, see [[appendIvfPq]]), one
-  *     `batch-<id> <nrows>` line per live segment, one
-  *     `tomb-<id> <nrows>` line per live tombstone set, and a final
-  *     `commit` sentinel (a reader that opens the file mid-write sees
-  *     a missing sentinel and retries — the create-exclusive publish
-  *     below is atomic for WRITERS but not for a racing read of the
-  *     few-hundred-byte body). A segment not listed in any manifest
-  *     does not exist to readers.
+  *   - `manifest/m-<n>` — the index state as of generation n: its live
+  *     segments and tombstone sets with their row counts, the id and
+  *     stream high-water marks and the model version. [[IndexLog]] owns
+  *     the format and the commit, repair and expiry protocol over it. A
+  *     segment not listed in any manifest does not exist to readers.
   *   - `meta/` one row `(dim, nlist, m, ncode)` — load-time model check.
   *
   * Snapshot semantics come from two rules (the Iceberg/Delta core,
@@ -71,24 +62,13 @@ import graft.plans.{PqDistTable, SqDotCodes}
   *    consistent snapshot — a concurrent append or delete never
   *    changes (or half-changes) what it scans. Reopen to see new data.
   *
-  * CONCURRENT WRITERS are safe via optimistic concurrency (the
-  * Iceberg/Delta commit loop, reduced to one primitive): manifest
-  * generation n+1 is published with `create(path, overwrite = false)`
-  * — atomic create-exclusive, the put-if-absent every HDFS-like and
-  * object-store FS exposes — so of two writers that both read m-n,
-  * exactly ONE wins m-n+1. The loser re-reads the new current
-  * manifest, RE-BASES (its artifacts were staged under UNIQUE names,
-  * so the retry only re-assigns their logical ids from the fresh
-  * high-water mark in the manifest line — no data moves, and two
-  * in-flight writers can never overwrite each other's staging), and
-  * retries against m-n+2. A
-  * [[compact]] that loses rewrites from the fresh snapshot instead
-  * (its output depends on the base it read — the Iceberg
-  * rewrite-data-files validation rule); a writer that observes the
-  * MODEL VERSION changed underneath it (a concurrent [[retrain]])
-  * aborts loudly rather than commit codes encoded with a stale model.
-  * At 100 TB this is the difference between "the streaming ingester
-  * and the nightly compactor are one process" and letting them race.
+  * CONCURRENT WRITERS are safe via optimistic concurrency: every
+  * in-chain verb stages its artifacts under unique names and commits
+  * through [[IndexLog.commit]] (a lost publish race re-bases and
+  * retries), [[compact]] rewrites from the fresh snapshot when it loses,
+  * and [[retrain]] and [[splitCell]] abort loudly. At 100 TB this is the
+  * difference between "the streaming ingester and the nightly compactor
+  * are one process" and letting them race.
   *
   * [[appendIvfPq]] reads the model FROM THE INDEX (never from the
   * caller), so appended codes are always encoded against the same
@@ -120,9 +100,8 @@ import graft.plans.{PqDistTable, SqDotCodes}
   * lifecycle owns everything else and is written once over the codec:
   * build, append, upsert, the streaming wrapper, merge, retrain, split,
   * rebalance, cell stats, the pruned probe, filtered search and the
-  * snapshot open. The manifest, segment, tombstone and commit/repair
-  * protocol never sees a codec; each `…Sq` verb is a one-expression
-  * delegate.
+  * snapshot open. The commit log ([[IndexLog]]) never sees a codec; each
+  * `…Sq` verb is a one-expression delegate.
   *
   * SERVING: every Spark job has a large fixed cost, so a serving search
   * is ONE job. [[topK]], [[topKSq]], [[topKWhere]] and [[topKWhereSq]]
@@ -145,21 +124,8 @@ import graft.plans.{PqDistTable, SqDotCodes}
   * scan into the anti-join. Query and neighbour ids are integral, as the
   * lifecycle's deletes and upserts already read them (BIGINT).
   *
-  * MIGRATION (pre-high-water manifests): a manifest written before the
-  * `shw` line existed came from the era whose streamed micro-batch `id`
-  * landed as segment id `id + 1` (build owned segment 0, the stream
-  * owned 1…N sequentially) with manifest-membership as the dedup rule —
-  * so the committed stream high-water is RECOVERABLE as
-  * `max segment id − 1`, and [[readManifest]] normalizes a legacy
-  * manifest to exactly that at parse time. Resuming an old streaming
-  * checkpoint against an old-format index therefore deduplicates its
-  * crash-window replay correctly with NO manual migration step, and the
-  * first new-format commit stamps the real `shw` going forward. The one
-  * unrecoverable case is inherited, not introduced: an index COMPACTED
-  * by the pre-high-water code had already entangled segment and batch
-  * ids (the collision its era was known for) — checkpoints that predate
-  * such a compact were unsafe under the old code too and must be
-  * discarded. */
+  * Legacy (pre-high-water) manifests stay readable and recover their
+  * stream dedup floor at parse time: see MIGRATION on [[IndexLog]]. */
 object AnnIndex {
 
   /** An opened index snapshot: driver-side model literals + the lazy
@@ -182,566 +148,6 @@ object AnnIndex {
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
 
   private def path(s: String) = new org.apache.hadoop.fs.Path(s)
-
-  /** One committed artifact: its LOGICAL id (the sequence number that
-    * orders tombstones against segments), row count, and the PHYSICAL
-    * directory name under `data/` or `tomb/`. The two are decoupled
-    * because ids are allocated optimistically: a writer stages its
-    * data under a unique name, and a lost publish race re-assigns only
-    * the id in the retried manifest line — no data moves, and two
-    * in-flight writers can never overwrite each other's staging (the
-    * Iceberg unique-file-name + metadata-pointer rule). Legacy
-    * manifests (2-token lines) imply dirName = `batch-<id>`/`t-<id>`. */
-  private final case class Art(id: Long, n: Long, dirName: String)
-
-  /** One manifest generation, parsed. `hw` is the segment/tombstone id
-    * high-water mark: every id ≤ hw has been allocated by SOME
-    * committed generation (possibly since compacted away) and is never
-    * allocated again — the invariant that makes compaction safe under
-    * concurrent-in-time stream replays. `shw` is the highest committed
-    * stream dedup key (−1 before any keyed append). `model` is the
-    * model version this generation's segments are encoded with (0 =
-    * the build's root artifacts; a [[retrain]] bumps it). */
-  private final case class ManifestData(segs: Seq[Art],
-                                        tombs: Seq[Art],
-                                        hw: Long, shw: Long,
-                                        model: Long = 0L,
-                                        modelDir: String = "") {
-    def nextId: Long = hw + 1
-  }
-
-  /** Unique staging name for a new artifact directory — what lets two
-    * writers stage concurrently without ever colliding on a path. */
-  private def freshName(prefix: String): String =
-    prefix + java.util.UUID.randomUUID.toString.replace("-", "").take(16)
-
-  /** Committed manifest ids, oldest first (empty on a fresh/absent
-    * index). */
-  private def generations(f: org.apache.hadoop.fs.FileSystem,
-                          dir: String): Seq[Long] = {
-    val mdir = path(s"$dir/manifest")
-    if (!f.exists(mdir)) Seq.empty
-    else f.listStatus(mdir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("m-"))
-      .flatMap(st => scala.util.Try(st.getPath.getName.drop(2).toLong).toOption)
-      .sorted
-  }
-
-  /** Highest committed manifest id, or None on a fresh/absent index. */
-  private def currentManifestId(f: org.apache.hadoop.fs.FileSystem,
-                                dir: String): Option[Long] =
-    generations(f, dir).lastOption
-
-  /** Reader retry budget for a sentinel-less manifest (25 ms apart —
-    * 3 s at the default): long enough that a LIVE publisher's
-    * few-hundred-byte body write always lands within it, short enough
-    * that a wedged chain fails fast. */
-  private[graft] val manifestRetryAttempts = 120
-
-  /** Per-index-dir override of the reader retry budget (keyed like
-    * [[testKillPoint]]). The crash/concurrency specs wedge THEIR
-    * index's chain hundreds of times and must not sleep 3 s per read —
-    * but a process-wide knob (the previous design) would make an
-    * unrelated suite's reader, racing a live publish on a slow FS
-    * under parallel execution, fail spuriously as truncated, and a
-    * spec that crashed before restoring it would poison the rest of
-    * the run. Scoped per dir, neither can happen. */
-  private[graft] val manifestRetryOverride =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
-
-  private val legacyShwWarned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Parse manifest `id`. A `v2` manifest (create-exclusive-published)
-    * must end with its `commit` sentinel — a reader racing the
-    * few-hundred-byte body write sees a truncated file and RETRIES
-    * briefly before failing loudly (never silently parses a partial
-    * snapshot). A non-`v2` file is accepted as a LEGACY manifest
-    * (rename-published, hence content-atomic) only when it contains at
-    * least one recognized manifest line — a torn read whose visible
-    * prefix is shorter than the `v2` header must retry like any other
-    * truncation, never parse as an empty index. Legacy manifests
-    * default hw = max listed id, and their stream high-water is
-    * NORMALIZED to `max segment id − 1` — the committed high-water
-    * their era's sequential `segment id = batch id + 1` scheme implies
-    * (see the MIGRATION doc on the object) — so every downstream dedup
-    * check, carry-forward and publish handles old-format indexes with
-    * no special casing. */
-  private def readManifest(f: org.apache.hadoop.fs.FileSystem, dir: String,
-                           id: Long): ManifestData = {
-    val retryBudget = Option(manifestRetryOverride.get(dir))
-      .fold(manifestRetryAttempts)(_.intValue)
-    var attempt = 0
-    var lastIncomplete = "no commit sentinel"
-    while (true) {
-      // On a checksummed store (ChecksumFileSystem wraps every local
-      // dir) a publish torn between the data flush and the CRC flush —
-      // or a repair-delete racing a re-publish, which can leave a stale
-      // .crc against fresh bytes (delete/create of the data+crc pair is
-      // not atomic on ChecksumFileSystem) — surfaces as a CRC or EOF
-      // error, NOT as a short sentinel-less read. Protocol-wise these
-      // are the SAME state as a missing commit sentinel: an incomplete
-      // publish. They consume the same retry budget (a live publisher's
-      // few-hundred-byte body + checksum land within it) and then fail
-      // with the SAME loud truncated-manifest error [[repair]]
-      // classifies — never escape as a raw ChecksumException.
-      val txtOpt: Option[String] =
-        try {
-          val in = f.open(path(s"$dir/manifest/m-$id"))
-          try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-          finally in.close()
-        } catch {
-          case _: org.apache.hadoop.fs.ChecksumException =>
-            lastIncomplete = "checksum mismatch on a checksummed store"
-            None
-          case _: java.io.EOFException =>
-            lastIncomplete = "short read past the checksum frame"
-            None
-        }
-      if (txtOpt.isEmpty) {
-        attempt += 1
-        if (attempt > retryBudget)
-          throw new java.io.IOException(
-            s"manifest m-$id under $dir is truncated ($lastIncomplete) — " +
-              "its writer is either mid-publish on a slow FS or died; run " +
-              "AnnIndex.repair, which supersedes the corpse only once it is " +
-              "older than the stale window (never a live publish)")
-        Thread.sleep(25)
-      } else {
-      val txt = txtOpt.get
-      val lines = txt.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-      val v2 = lines.headOption.contains("v2")
-      val legacyOk = !v2 && lines.exists(l =>
-        l.startsWith("batch-") || l.startsWith("tomb-") ||
-          l.startsWith("hw ") || l.startsWith("shw ") ||
-          l.startsWith("model "))
-      if ((v2 && lines.last == "commit") || legacyOk) {
-        var hw = -1L
-        var shwOpt = Option.empty[Long]
-        var model = 0L
-        var modelDir = ""
-        val segs = Seq.newBuilder[Art]
-        val tombs = Seq.newBuilder[Art]
-        lines.foreach { line =>
-          line.split("\\s+") match {
-            case Array("hw", v) => hw = v.toLong
-            case Array("shw", v) => shwOpt = Some(v.toLong)
-            case Array("model", v) => model = v.toLong
-            case Array("model", v, d) => model = v.toLong; modelDir = d
-            case Array(k, v) if k.startsWith("batch-") =>
-              segs += Art(k.drop(6).toLong, v.toLong, k)
-            case Array(k, v, d) if k.startsWith("batch-") =>
-              segs += Art(k.drop(6).toLong, v.toLong, d)
-            case Array(k, v) if k.startsWith("tomb-") =>
-              tombs += Art(k.drop(5).toLong, v.toLong, "t-" + k.drop(5))
-            case Array(k, v, d) if k.startsWith("tomb-") =>
-              tombs += Art(k.drop(5).toLong, v.toLong, d)
-            case _ => // v2 / commit sentinels / `supersedes N` (repair's
-                      // burial marker — deliberately NOT parsed into
-                      // ManifestData, so a verb re-basing on a supersede
-                      // can never carry the marker forward)
-          }
-        }
-        val s = segs.result()
-        val t = tombs.result()
-        val maxListed = (s.map(_.id) ++ t.map(_.id)).maxOption.getOrElse(-1L)
-        // legacy normalization: no shw line ⇒ the old sequential scheme,
-        // whose committed stream high-water is max segment id − 1.
-        // Warned once per dir: on a legacy index that ALSO took keyless
-        // appends or an old-code compact, that floor can OVER-estimate
-        // the committed stream batch, and a resumed checkpoint would
-        // silently skip batches ≤ the floor — an operator must be able
-        // to SEE the recovered value before trusting a resume.
-        val shw = shwOpt.getOrElse {
-          val floor = s.map(_.id).maxOption.getOrElse(0L) - 1L
-          if (legacyShwWarned.add(dir))
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"legacy (pre-shw) manifest at $dir: stream high-water " +
-                s"recovered as $floor (max segment id - 1). If this index " +
-                "ever took keyless appends or an old-code compact, that " +
-                "floor can over-estimate the committed stream batch and a " +
-                "resumed checkpoint would silently skip batches <= it — " +
-                "verify the checkpoint's last committed batch against the " +
-                "index before resuming")
-          floor
-        }
-        return ManifestData(s, t, math.max(hw, maxListed), shw, model,
-          modelDir)
-      }
-      lastIncomplete = "no commit sentinel"
-      attempt += 1
-      if (attempt > retryBudget)
-        throw new java.io.IOException(
-          s"manifest m-$id under $dir is truncated ($lastIncomplete) — " +
-            "its writer is either mid-publish on a slow FS or died; run " +
-            "AnnIndex.repair, which supersedes the corpse only once it is " +
-            "older than the stale window (never a live publish)")
-      Thread.sleep(25)
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  /** Resolve the generation a reader pins: the caller's `asOf`
-    * verbatim (failing loudly on an expired or unknown id — the caller
-    * asked for a SPECIFIC snapshot), else the latest listed generation
-    * via [[refresh]], which already tolerates a peer [[repair]]
-    * reclaiming the listed top between list and read. */
-  private def resolveReadManifest(f: org.apache.hadoop.fs.FileSystem,
-                                  dir: String,
-                                  asOf: Option[Long]): (Long, ManifestData) =
-    asOf match {
-      case Some(mid) =>
-        require(f.exists(path(s"$dir/manifest/m-$mid")),
-          s"manifest m-$mid does not exist under $dir (expired or never " +
-            "published)")
-        (mid, readManifest(f, dir, mid))
-      case None => refresh(f, dir)
-    }
-
-  /** One-shot, per-index test hook fired immediately before a publish
-    * attempt — lets a spec inject a COMPETING commit deterministically
-    * into the race window (read-manifest → publish) that a wall-clock
-    * interleaving could only hit probabilistically. Keyed by index dir
-    * and removed atomically before it runs, so the competing commit
-    * itself does not recurse and concurrent suites cannot steal each
-    * other's hooks. */
-  private[graft] val testBeforePublish =
-    new java.util.concurrent.ConcurrentHashMap[String, () => Unit]()
-  private def fireTestHook(dir: String): Unit =
-    Option(testBeforePublish.remove(dir)).foreach(_())
-
-  /** Crash-injection seam: arming `testKillPoint(dir) = point` makes
-    * the NEXT time the named point is reached on that index throw
-    * [[InjectedCrash]] — simulating a writer that died exactly there.
-    * Points, in verb order: `stage` (before any artifact is written),
-    * `staged` (artifacts complete, manifest not yet attempted),
-    * `publish-torn` (destination reserved, body NOT written — the only
-    * crash that wedges the chain, loudly, until [[repair]]),
-    * `published` (the commit is durable; the caller just never heard).
-    * One-shot and keyed by index dir (atomic conditional remove), so
-    * parallel suites cannot steal each other's crashes. The soak spec
-    * drives these from a seeded RNG across every verb on both tiers —
-    * the difference between "the interleavings we thought of" and "the
-    * protocol holds under arbitrary death". */
-  private[graft] final class InjectedCrash(val point: String)
-    extends RuntimeException(s"injected crash at $point")
-  private[graft] val testKillPoint =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def maybeKill(dir: String, point: String): Unit =
-    if (testKillPoint.remove(dir, point)) throw new InjectedCrash(point)
-
-  /** The one primitive the whole commit protocol rests on: atomically
-    * create `dest` holding `body` iff nothing exists there
-    * (put-if-absent), returning false when the destination is already
-    * taken (a concurrent writer won that generation). Pluggable because
-    * the atomicity is a PER-STORE property, not a given:
-    *   - HDFS: `create(overwrite = false)` is atomic at the NameNode —
-    *     the default committer is production-correct as-is.
-    *   - S3: plain create-then-write is NOT conditional; route this
-    *     seam through a conditional PUT (`If-None-Match: *`), which is
-    *     atomic WITH the body — such a store has no torn-publish window
-    *     at all and may ignore `beforeBody`.
-    *   - GCS: same via an `ifGenerationMatch(0)` precondition.
-    *   - Local FS (the test substrate): Hadoop's RawLocalFileSystem
-    *     implements the flag as exists-then-open — a check-then-act
-    *     window the multi-writer storm caught LIVE losing whole
-    *     batches (~1/3 of runs), so the default committer reserves
-    *     local slots through O_CREAT|O_EXCL (atomic at the kernel)
-    *     and only then writes the body through the checksummed FS.
-    * The FIRST publish through any FileSystem runs [[probeCommitter]] —
-    * a store whose committer silently overwrites (losing the winner's
-    * commit) fails LOUDLY before it ever carries a real manifest.
-    * `beforeBody` runs between reserving the destination and writing
-    * the body — the crash-injection seam for create-then-write stores
-    * (a writer that dies there leaves the sentinel-less manifest
-    * [[repair]] recovers). */
-  private[graft] trait ManifestCommitter {
-    def putIfAbsent(f: org.apache.hadoop.fs.FileSystem,
-                    dest: org.apache.hadoop.fs.Path,
-                    body: Array[Byte], beforeBody: () => Unit): Boolean
-  }
-
-  private[graft] object CreateExclusiveCommitter extends ManifestCommitter {
-    def putIfAbsent(f: org.apache.hadoop.fs.FileSystem,
-                    dest: org.apache.hadoop.fs.Path,
-                    body: Array[Byte], beforeBody: () => Unit): Boolean = {
-      val scheme = Option(dest.toUri.getScheme)
-        .getOrElse(f.getUri.getScheme)
-      if (scheme == "file") {
-        // Hadoop's RawLocalFileSystem implements create(overwrite =
-        // false) as exists-then-open — a check-then-act window in
-        // which two RACING writers both pass the exists check, both
-        // get streams, and one body silently overwrites the other:
-        // both callers report "won generation N" and the loser's-
-        // overwritten commit vanishes wholesale. Not theoretical: the
-        // multi-writer storm reproduced it at ~1/3 per run (two
-        // writers logging `won m-1`, one batch missing at the
-        // barrier). Reserve the slot through O_CREAT|O_EXCL instead —
-        // atomic at the kernel — then write the body through the
-        // checksummed FS so the .crc sidecar machinery stays live.
-        // The torn window (reserved, body unwritten) remains, by
-        // design: that is [[repair]]'s substrate.
-        val p = java.nio.file.Paths.get(dest.toUri.getPath)
-        Option(p.getParent)
-          .foreach(java.nio.file.Files.createDirectories(_))
-        try java.nio.file.Files
-          .newByteChannel(p, java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
-          .close()
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException => return false
-        }
-        val out = f.create(dest, true) // the slot is ours (O_EXCL won)
-        try { beforeBody(); out.write(body) }
-        finally out.close()
-        true
-      } else {
-        // HDFS: create(overwrite = false) is atomic at the NameNode
-        val out =
-          try f.create(dest, false)
-          catch {
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-              return false
-            case _: java.io.IOException if f.exists(dest) => return false
-          }
-        try { beforeBody(); out.write(body) }
-        finally out.close()
-        true
-      }
-    }
-  }
-
-  @volatile private[graft] var committer: ManifestCommitter =
-    CreateExclusiveCommitter
-
-  /** Once per FileSystem per JVM, before the first real publish:
-    * create a uniquely-named probe file twice through the committer —
-    * the second attempt MUST report the destination taken. A store
-    * that passes both (an overwrite-happy FS behind a naive committer)
-    * would silently lose one of two racing commits, so it fails loudly
-    * here instead. Probe files are unique-named (two processes probing
-    * concurrently never interfere) and deleted afterwards. */
-  private val probedFs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private[graft] def probeCommitter(f: org.apache.hadoop.fs.FileSystem,
-                                    dir: String): Unit = {
-    val probe = path(s"$dir/manifest/" + freshName("_probe-"))
-    val body = "probe\n".getBytes("UTF-8")
-    try {
-      if (!committer.putIfAbsent(f, probe, body, () => ()))
-        throw new java.io.IOException(
-          s"committer capability probe could not create $probe")
-      if (committer.putIfAbsent(f, probe, body, () => ()))
-        throw new IllegalStateException(
-          s"the manifest committer on ${f.getUri} is NOT put-if-absent: " +
-            "re-creating an existing path succeeded, so two racing " +
-            "writers would both 'win' a generation and one commit would " +
-            "be silently lost. Configure a conditional-write committer " +
-            "for this store (AnnIndex.committer) — S3: conditional PUT " +
-            "If-None-Match; GCS: ifGenerationMatch(0)")
-    } finally f.delete(probe, true): Unit
-  }
-  private def probeCommitterOnce(f: org.apache.hadoop.fs.FileSystem,
-                                 dir: String): Unit =
-    probedFs.computeIfAbsent(f.getUri.toString, { _ =>
-      probeCommitter(f, dir); java.lang.Boolean.TRUE
-    }): Unit
-
-  /** One unretried look at manifest slot `id` — the [[burialCheck]]
-    * and [[repair]] classification primitive. `SlotComplete` carries
-    * the slot's `supersedes` marker when it is a [[repair]] supersede
-    * (the marker a buried writer detects itself by). */
-  private sealed trait SlotProbe
-  private case object SlotAbsent extends SlotProbe
-  private case object SlotTorn extends SlotProbe
-  private final case class SlotComplete(supersedes: Option[Long])
-    extends SlotProbe
-
-  private def probeSlot(f: org.apache.hadoop.fs.FileSystem, dir: String,
-                        id: Long): SlotProbe =
-    try {
-      val in = f.open(path(s"$dir/manifest/m-$id"))
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val lines = txt.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-      val v2 = lines.headOption.contains("v2")
-      val legacyOk = !v2 && lines.exists(l =>
-        l.startsWith("batch-") || l.startsWith("tomb-") ||
-          l.startsWith("hw ") || l.startsWith("shw ") ||
-          l.startsWith("model "))
-      if ((v2 && lines.lastOption.contains("commit")) || legacyOk)
-        SlotComplete(lines.collectFirst {
-          case l if l.startsWith("supersedes ") =>
-            l.drop("supersedes ".length).trim.toLong
-        })
-      else SlotTorn
-    } catch {
-      case _: java.io.FileNotFoundException => SlotAbsent
-      case _: org.apache.hadoop.fs.ChecksumException => SlotTorn
-      case _: java.io.EOFException => SlotTorn
-    }
-
-  /** WRITER-SIDE BURIAL DETECTION — run after every successful
-    * put-if-absent, it closes (to a vanishing corner) the fencing-
-    * lease hole documented on [[repair]]: a publisher stalled between
-    * reserving slot `id` and writing the body looks like a corpse, and
-    * a repair running in that gap supersedes it at `id + 1`; without
-    * this check the late writer's body lands in a buried generation it
-    * reports as committed (silent whole-batch loss). Supersede
-    * manifests DECLARE their corpse (`supersedes N`), so the writer
-    * checks slot `id + 1` once its body is durable:
-    *   - absent → sealed: any future repair re-reads slot `id`
-    *     complete and never supersedes it;
-    *   - complete successor → built on us (it read `id` complete);
-    *   - complete supersede OF US → buried: report the publish LOST —
-    *     the caller re-bases exactly like a lost race and the batch
-    *     lands exactly once in a live generation;
-    *   - torn → a mid-write publisher: wait within the reader budget.
-    *     If it completes, classify as above. If it STAYS torn it is
-    *     itself a corpse, and its future repair picks the HIGHEST
-    *     complete generation below it — us — as the donor, so
-    *     reporting committed is consistent either way.
-    * The remaining corner — a repair that pauses between its staleness
-    * verdict and its supersede publish for longer than our body write
-    * plus this check's budget — is the irreducible lease assumption on
-    * [[repair]]; this check removes every timing in which the
-    * supersede lands before or during our publish. */
-  private def burialCheck(f: org.apache.hadoop.fs.FileSystem, dir: String,
-                          id: Long): Boolean = {
-    val retryBudget = Option(manifestRetryOverride.get(dir))
-      .fold(manifestRetryAttempts)(_.intValue)
-    var attempt = 0
-    while (true) {
-      probeSlot(f, dir, id + 1) match {
-        case SlotAbsent => return true
-        case SlotComplete(sup) => return !sup.contains(id)
-        case SlotTorn =>
-          attempt += 1
-          if (attempt > retryBudget) return true
-          Thread.sleep(25)
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  /** Attempt to publish manifest `id` through the [[ManifestCommitter]]
-    * seam (put-if-absent — see its doc for the per-store atomicity
-    * mapping and the first-publish capability probe): returns false
-    * when generation `id` already exists, i.e. a concurrent writer won
-    * the race and the caller must re-base and retry. This is the
-    * primitive rename-over could not give us: on RawLocalFileSystem and
-    * several object-store FS impls a rename onto an existing
-    * destination silently REPLACES it, dropping the winner's commit.
-    * A writer that dies between reserving the destination and writing
-    * the body leaves a sentinel-less manifest that wedges the chain
-    * LOUDLY — [[repair]] is the recovery verb. */
-  private def tryPublish(f: org.apache.hadoop.fs.FileSystem, dir: String,
-                         id: Long, md: ManifestData,
-                         supersedes: Option[Long] = None): Boolean = {
-    f.mkdirs(path(s"$dir/manifest"))
-    probeCommitterOnce(f, dir)
-    val dest = path(s"$dir/manifest/m-$id")
-    val modelLine =
-      if (md.modelDir.isEmpty) s"model ${md.model}"
-      else s"model ${md.model} ${md.modelDir}"
-    // `supersedes N` marks a [[repair]] supersede and is written ONLY
-    // from repair's own publish (readManifest skips it; it never
-    // propagates into ManifestData, so a later verb re-basing on the
-    // supersede cannot accidentally carry the marker forward) — it is
-    // what [[burialCheck]] reads to tell "successor built on me" from
-    // "my slot was judged a corpse"
-    val body = (Seq("v2", modelLine, s"hw ${md.hw}",
-        s"shw ${md.shw}") ++
-      supersedes.map(s => s"supersedes $s").toSeq ++
-      md.segs.map(a => s"batch-${a.id} ${a.n} ${a.dirName}") ++
-      md.tombs.map(a => s"tomb-${a.id} ${a.n} ${a.dirName}") ++
-      Seq("commit"))
-      .mkString("", "\n", "\n")
-    committer.putIfAbsent(f, dest, body.getBytes("UTF-8"),
-      () => maybeKill(dir, "publish-torn")) &&
-      burialCheck(f, dir, id)
-  }
-
-  /** Publish manifest `id`, failing loudly on a conflict — for the
-    * builds, whose staging tree cannot be contended. */
-  private def writeManifest(f: org.apache.hadoop.fs.FileSystem, dir: String,
-                            id: Long, md: ManifestData): Unit =
-    if (!tryPublish(f, dir, id, md))
-      throw new java.io.IOException(s"manifest m-$id publish failed")
-
-  /** The freshest committed (generation id, manifest) — what a loser
-    * of a publish race re-bases onto. Under the current protocol no
-    * verb deletes a top manifest ([[repair]] SUPERSEDES a torn corpse
-    * rather than deleting it, and [[expire]] never drops the top), so
-    * the FileNotFoundException retry below is DEFENSIVE legacy
-    * tolerance: an operator-deleted file, or a pre-supersede peer,
-    * should re-list rather than leak a raw FNFE to the caller. */
-  private def refresh(f: org.apache.hadoop.fs.FileSystem,
-                      dir: String): (Long, ManifestData) = {
-    var attempt = 0
-    while (true) {
-      val mid = currentManifestId(f, dir).getOrElse(
-        throw new IllegalArgumentException(s"no committed manifest under $dir"))
-      try return (mid, readManifest(f, dir, mid))
-      catch {
-        case e: java.io.FileNotFoundException =>
-          attempt += 1
-          if (attempt > 16) throw e
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  private val maxCommitAttempts = 64
-
-  /** The ONE optimistic-concurrency commit loop every in-chain verb
-    * shares (append/upsert/delete/merge on both tiers): attempt to
-    * publish `make(md)` as the next generation; on a lost race,
-    * re-read the winner's manifest and RE-BASE (the staged artifacts
-    * have unique names, so only the ids inside `make`'s output move).
-    * `dedupKey` re-checks the stream high-water after every refresh (a
-    * replica may have committed this very batch — then the staged
-    * artifacts are deleted and the call is a no-op); a model-version
-    * change underneath a writer whose artifacts were ENCODED with the
-    * base model aborts loudly rather than commit stale codes
-    * (`abortOnModelChange` — id-only verbs like delete pass false).
-    * Factored to one place because the eight hand-rolled copies of
-    * this loop had already drifted apart once. */
-  private def commitWithRetry(f: org.apache.hadoop.fs.FileSystem,
-                              dir: String, base: (Long, ManifestData),
-                              make: ManifestData => ManifestData,
-                              dedupKey: Option[Long],
-                              staged: Seq[String],
-                              abortOnModelChange: Boolean,
-                              verb: String): Unit = {
-    var (mid, md) = base
-    var attempts = 0
-    maybeKill(dir, "staged")
-    while (true) {
-      fireTestHook(dir)
-      if (tryPublish(f, dir, mid + 1, make(md))) {
-        maybeKill(dir, "published"); return
-      }
-      attempts += 1
-      if (attempts >= maxCommitAttempts)
-        throw new java.io.IOException(
-          s"$verb on $dir lost $attempts publish races — giving up")
-      val (nmid, nmd) = refresh(f, dir)
-      if (dedupKey.exists(_ <= nmd.shw)) { // a replica committed this batch
-        staged.foreach(p => f.delete(path(p), true): Unit)
-        return
-      }
-      if (abortOnModelChange && nmd.model != md.model) {
-        staged.foreach(p => f.delete(path(p), true): Unit)
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent retrain of $dir (model ${md.model} -> " +
-            s"${nmd.model}) — this commit's codes carry the old model; " +
-            s"re-run the $verb")
-      }
-      mid = nmid; md = nmd
-    }
-  }
 
   /** Write `df` as a parquet segment and return its row count, observed
     * DURING the write job (`Dataset.observe` — a CollectMetrics node
@@ -1092,7 +498,7 @@ object AnnIndex {
   private def open[M <: AnyRef](codec: Codec[M], spark: SparkSession,
                                 dir: String, asOf: Option[Long]): Snapshot[M] = {
     val f = fs(spark, dir)
-    val (_, md) = resolveReadManifest(f, dir, asOf)
+    val (_, md) = resolve(f, dir, asOf)
     // model artifacts resolve THROUGH the pinned manifest: a reader
     // pinned before a [[retrain]] keeps scoring with the model its
     // segments were encoded with (version 0 = the build's root dirs)
@@ -1238,28 +644,29 @@ object AnnIndex {
                                   upsert: Boolean): Unit = {
     val spark = delta.sparkSession
     val f = fs(spark, dir)
-    val (mid, md) = refresh(f, dir)
-    if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
-    maybeKill(dir, "stage")
-    val model = readModel(codec, spark, dir, md, modelKey(f, dir, md))
-    val segName = freshName("batch-")
-    val n = writeSegment(codec, delta, idCol, vecCol, dir, segName, model)
-    if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); return }
-    // an upsert's tombstone takes id t and its segment t+1
-    val tomb = if (!upsert) None else {
-      val tombName = freshName("t-")
-      Some(tombName -> writeCounted(
-        delta.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
-        s"$dir/tomb/$tombName"))
+    commit(f, dir, dedupKey, abortOnModelChange = true,
+        verb = if (upsert) "upsert" else "append") { md =>
+      val model = readModel(codec, spark, dir, md, modelKey(f, dir, md))
+      val segName = freshName("batch-")
+      val n = writeSegment(codec, delta, idCol, vecCol, dir, segName, model)
+      if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); None }
+      else {
+        // an upsert's tombstone takes id t and its segment t+1
+        val tomb = if (!upsert) None else {
+          val tombName = freshName("t-")
+          Some(tombName -> writeCounted(
+            delta.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
+            s"$dir/tomb/$tombName"))
+        }
+        val segOffset = tomb.size
+        Some(Staged(
+          s"$dir/data/$segName" +: tomb.map(t => s"$dir/tomb/${t._1}").toSeq,
+          m => m.copy(segs = m.segs :+ Art(m.nextId + segOffset, n, segName),
+            tombs = m.tombs ++ tomb.map { case (t, tn) => Art(m.nextId, tn, t) },
+            hw = m.nextId + segOffset,
+            shw = math.max(m.shw, dedupKey.getOrElse(m.shw)))))
+      }
     }
-    val segOffset = tomb.size
-    commitWithRetry(f, dir, (mid, md),
-      m => m.copy(segs = m.segs :+ Art(m.nextId + segOffset, n, segName),
-        tombs = m.tombs ++ tomb.map { case (t, tn) => Art(m.nextId, tn, t) },
-        hw = m.nextId + segOffset,
-        shw = math.max(m.shw, dedupKey.getOrElse(m.shw))),
-      dedupKey, s"$dir/data/$segName" +: tomb.map(t => s"$dir/tomb/${t._1}").toSeq,
-      abortOnModelChange = true, verb = if (upsert) "upsert" else "append")
   }
 
   /** Continuous CORRECTION ingest: [[upsertBatchIvfPq]] per micro-batch
@@ -1297,25 +704,23 @@ object AnnIndex {
     * (IVF-PQ or SQ8) — only ids and the manifest are involved.
     * An empty id set is a no-op. */
   def delete(ids: DataFrame, idCol: String, dir: String): Unit = {
-    val spark = ids.sparkSession
-    val f = fs(spark, dir)
-    val (mid, md) = refresh(f, dir)
-    maybeKill(dir, "stage")
-    val tombName = freshName("t-")
-    val n = writeCounted(
-      ids.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
-      s"$dir/tomb/$tombName")
-    if (n == 0) { f.delete(path(s"$dir/tomb/$tombName"), true); return }
+    val f = fs(ids.sparkSession, dir)
     // a re-based delete applies AS OF ITS COMMIT: a fresh tombstone id
     // (> every committed segment) also masks matching rows a concurrent
     // append just landed — delete-after-append semantics, exactly what
     // commit ordering says happened. Tombstones are id-only, so a
     // concurrent retrain does not invalidate them (no model abort).
-    commitWithRetry(f, dir, (mid, md),
-      m => m.copy(tombs = m.tombs :+ Art(m.nextId, n, tombName),
-        hw = m.nextId),
-      dedupKey = None, staged = Seq(s"$dir/tomb/$tombName"),
-      abortOnModelChange = false, verb = "delete")
+    commit(f, dir, dedupKey = None, abortOnModelChange = false,
+        verb = "delete") { _ =>
+      val tombName = freshName("t-")
+      val n = writeCounted(
+        ids.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
+        s"$dir/tomb/$tombName")
+      if (n == 0) { f.delete(path(s"$dir/tomb/$tombName"), true); None }
+      else Some(Staged(Seq(s"$dir/tomb/$tombName"),
+        m => m.copy(tombs = m.tombs :+ Art(m.nextId, n, tombName),
+          hw = m.nextId)))
+    }
   }
 
   /** Compact the current snapshot into one segment (Iceberg
@@ -1333,11 +738,7 @@ object AnnIndex {
     * compacted into an unreadable zero-row segment). */
   def compact(spark: SparkSession, dir: String): Unit = {
     val f = fs(spark, dir)
-    var attempts = 0
-    while (true) {
-      val (mid, md) = refresh(f, dir)
-      maybeKill(dir, "stage")
-      if (md.segs.length <= 1 && md.tombs.isEmpty) return
+    IndexLog.compact(f, dir) { md =>
       val segName = freshName("batch-")
       val n = writeCounted(visibleUnion(spark, dir, md, modelKey(f, dir, md)),
         s"$dir/data/$segName")
@@ -1346,27 +747,7 @@ object AnnIndex {
         throw new IllegalStateException(
           s"refusing to compact $dir: every row is tombstoned — rebuild")
       }
-      maybeKill(dir, "staged")
-      fireTestHook(dir)
-      if (tryPublish(f, dir, mid + 1, ManifestData(
-          Seq(Art(md.nextId, n, segName)), Seq.empty,
-          hw = md.nextId, shw = md.shw,
-          // carry BOTH model fields: dropping modelDir would silently
-          // repoint post-retrain readers at the version-0 root model
-          // while the compacted codes carry the retrained one
-          model = md.model, modelDir = md.modelDir))) {
-        maybeKill(dir, "published"); return
-      }
-      // Lost the race: the compacted segment reflects a base that is no
-      // longer current (an append's rows would vanish, a delete's rows
-      // would resurrect if the stale rewrite were published anyway) —
-      // drop it and rewrite from the fresh snapshot, the Iceberg
-      // rewrite-data-files validation rule.
-      f.delete(path(s"$dir/data/$segName"), true)
-      attempts += 1
-      if (attempts >= maxCommitAttempts)
-        throw new java.io.IOException(
-          s"compact of $dir lost $attempts publish races — giving up")
+      (segName, n)
     }
   }
 
@@ -1393,24 +774,23 @@ object AnnIndex {
                                      dstDir: String, srcDir: String): Unit = {
     require(dstDir != srcDir, "cannot merge an index into itself")
     val f = fs(spark, dstDir)
-    val (mid, md) = refresh(f, dstDir)
-    maybeKill(dstDir, "stage")
-    val dst = readModel(codec, spark, dstDir, md, modelKey(f, dstDir, md))
-    val src = open(codec, spark, srcDir, asOf = None)
-    require(codec.same(dst, src.model),
-      s"model mismatch: $srcDir was not built with $dstDir's " +
-        s"${codec.modelNames} — codes are not comparable across models")
-    val segName = freshName("batch-")
-    // the copied rows keep their cell column, so the segment keeps the
-    // destination's layout
-    val n = writeCounted(src.codes.withColumnRenamed(codec.cellCol, "cell"),
-      s"$dstDir/data/$segName")
-    if (n == 0) { f.delete(path(s"$dstDir/data/$segName"), true); return }
-    commitWithRetry(f, dstDir, (mid, md),
-      m => m.copy(segs = m.segs :+ Art(m.nextId, n, segName),
-        hw = m.nextId),
-      dedupKey = None, staged = Seq(s"$dstDir/data/$segName"),
-      abortOnModelChange = true, verb = "merge")
+    commit(f, dstDir, dedupKey = None, abortOnModelChange = true,
+        verb = "merge") { md =>
+      val dst = readModel(codec, spark, dstDir, md, modelKey(f, dstDir, md))
+      val src = open(codec, spark, srcDir, asOf = None)
+      require(codec.same(dst, src.model),
+        s"model mismatch: $srcDir was not built with $dstDir's " +
+          s"${codec.modelNames} — codes are not comparable across models")
+      val segName = freshName("batch-")
+      // the copied rows keep their cell column, so the segment keeps the
+      // destination's layout
+      val n = writeCounted(src.codes.withColumnRenamed(codec.cellCol, "cell"),
+        s"$dstDir/data/$segName")
+      if (n == 0) { f.delete(path(s"$dstDir/data/$segName"), true); None }
+      else Some(Staged(Seq(s"$dstDir/data/$segName"),
+        m => m.copy(segs = m.segs :+ Art(m.nextId, n, segName),
+          hw = m.nextId)))
+    }
   }
 
   /** MODEL-DRIFT MIGRATION (Faiss's "retrain when the distribution
@@ -1466,9 +846,7 @@ object AnnIndex {
       throw new IllegalArgumentException(
         s"refusing to retrain $dir onto an empty corpus")
     }
-    maybeKill(dir, "staged")
-    fireTestHook(dir)
-    if (!tryPublish(f, dir, mid + 1, ManifestData(
+    if (!publishStaged(f, dir, mid + 1, ManifestData(
         Seq(Art(md.nextId, n, segName)), Seq.empty,
         hw = md.nextId, shw = md.shw,
         model = md.model + 1, modelDir = modelDir))) {
@@ -1478,7 +856,6 @@ object AnnIndex {
           "are not in this retrain's corpus and must not be erased; " +
           "re-run retrain against a corpus that includes them")
     }
-    maybeKill(dir, "published")
   }
 
   /** CELL-SKEW REMEDIATION (Faiss re-clusters, SPANN splits postings):
@@ -1618,9 +995,7 @@ object AnnIndex {
           "missing from (or duplicated in) the corpus; splitting would " +
           "drop or duplicate those rows")
     }
-    maybeKill(dir, "staged")
-    fireTestHook(dir)
-    if (!tryPublish(f, dir, mid + 1, md.copy(
+    if (!publishStaged(f, dir, mid + 1, md.copy(
         segs = md.segs :+ Art(md.nextId + 1, n, segName),
         tombs = md.tombs :+ Art(md.nextId, tn, tombName),
         hw = md.nextId + 1,
@@ -1632,7 +1007,6 @@ object AnnIndex {
           s"retired centroid; re-run splitCell${codec.tier} against the " +
           "fresh snapshot")
     }
-    maybeKill(dir, "published")
   }
 
   /** What a policy run did: splits committed, stats→split passes paid
@@ -2078,250 +1452,37 @@ object AnnIndex {
     * reaping it mid-commit would publish a manifest pointing at
     * nothing. */
   def expire(spark: SparkSession, dir: String, keepLast: Int = 1,
-             orphanGraceMs: Long = 24L * 3600 * 1000): Unit = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val f = fs(spark, dir)
-    // Three read outcomes per listed generation, each handled:
-    //  - a generation that VANISHES between list and read (a peer
-    //    expire's delete) → re-list and re-split, never a raw FNFE;
-    //  - a BURIED corpse (a [[repair]]-superseded torn publish — left
-    //    in place by design, see repair's doc) → contributes no live
-    //    artifacts (it committed nothing; its creator's staged files
-    //    are orphans under the grace reap) and is DELETED with the
-    //    dropped range once it ages out of retention — this expiry is
-    //    how buried corpses leave the chain. Freeing such an ancient
-    //    slot is safe: writers target `top + 1` off a refresh taken
-    //    microseconds earlier, never a slot `keepLast` generations
-    //    deep. A corpse AT THE TOP still aborts loudly (the truncated
-    //    error): the chain is wedged — repair first.
-    var relist = 0
-    var snapshot: (Seq[Long], Seq[Long], Seq[Option[ManifestData]],
-      Seq[Option[ManifestData]]) = null
-    def readOrCorpse(gens: Seq[Long], g: Long): Option[ManifestData] =
-      try Some(readManifest(f, dir, g))
-      catch {
-        case e: java.io.IOException if e.getMessage != null &&
-            e.getMessage.contains("truncated") =>
-          if (g == gens.last) throw e // wedged top: repair first
-          None // buried corpse: no content, reclaimed with its range
-      }
-    while (snapshot == null) {
-      val gens = versionsOf(spark, dir)
-      if (gens.isEmpty)
-        throw new IllegalArgumentException(s"no committed manifest under $dir")
-      val (dropped, kept) = gens.splitAt(math.max(0, gens.length - keepLast))
-      try snapshot = (dropped, kept,
-        dropped.map(readOrCorpse(gens, _)), kept.map(readOrCorpse(gens, _)))
-      catch {
-        case e: java.io.FileNotFoundException =>
-          relist += 1
-          if (relist > 16) throw e
-      }
-    }
-    val (dropped, kept, droppedOpts, keptOpts) = snapshot
-    val droppedMds = droppedOpts.flatten
-    val keptMds = keptOpts.flatten
-    val liveData = keptMds.flatMap(_.segs.map(_.dirName)).toSet
-    val liveTombs = keptMds.flatMap(_.tombs.map(_.dirName)).toSet
-    val liveModelDirs = keptMds.map(_.modelDir).filter(_.nonEmpty).toSet
-    // MANIFESTS GO FIRST (crash-ordering invariant): once a dropped
-    // generation's manifest is gone, a late time-travel reader fails
-    // loudly with "does not exist" — never opens a manifest whose
-    // segments this expire already deleted (a scan failure that looks
-    // like corruption). An expire that dies between the two phases
-    // leaves the dropped generations' artifacts referenced by NOTHING,
-    // which is exactly the orphan class the grace-windowed reap below
-    // (or the next expire) reclaims — re-running expire completes the
-    // job, nothing is ever half-readable.
-    dropped.foreach(g => f.delete(path(s"$dir/manifest/m-$g"), true): Unit)
-    maybeKill(dir, "expire-torn")
-    // committed-but-dropped artifacts: no writer can be mid-commit on
-    // them (they were published), reclaim immediately
-    (droppedMds.flatMap(_.segs.map(_.dirName)).toSet -- liveData)
-      .foreach(d => f.delete(path(s"$dir/data/$d"), true): Unit)
-    (droppedMds.flatMap(_.tombs.map(_.dirName)).toSet -- liveTombs)
-      .foreach(d => f.delete(path(s"$dir/tomb/$d"), true): Unit)
-    (droppedMds.map(_.modelDir).filter(_.nonEmpty).toSet -- liveModelDirs)
-      .foreach(d => f.delete(path(s"$dir/$d"), true): Unit)
-    // true orphans: referenced by NOTHING — grace-windowed reap
-    val cutoff = System.currentTimeMillis() - orphanGraceMs
-    def reapOrphans(sub: String, prefix: String, live: Set[String]): Unit = {
-      val d = path(s"$dir/$sub")
-      if (f.exists(d)) f.listStatus(d).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith(prefix) && !live(name) &&
-            st.getModificationTime < cutoff)
-          f.delete(st.getPath, true): Unit
-      }
-    }
-    reapOrphans("data", "batch-", liveData)
-    reapOrphans("tomb", "t-", liveTombs)
-    // capability-probe files stranded by a JVM that died mid-probe
-    // (no manifest ever lists them; m- readers already skip them)
-    reapOrphans("manifest", "_probe-", Set.empty)
-    // model dirs staged by a retrain that died (or aborted) before its
-    // publish live at the index root under the "model-" prefix — same
-    // orphan rule (never referenced by any manifest, grace-windowed)
-    f.listStatus(path(dir)).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith("model-") &&
-          !liveModelDirs(name) && st.getModificationTime < cutoff)
-        f.delete(st.getPath, true): Unit
-    }
-  }
+             orphanGraceMs: Long = 24L * 3600 * 1000): Unit =
+    IndexLog.expire(fs(spark, dir), dir, keepLast, orphanGraceMs)
 
   /** Open a snapshot: collect the parameter-sized model tables into
     * driver literals (validated against `meta`), pin a manifest, and
     * union its segment scans lazily (tombstones of THAT generation
     * masked — a handle opened before a [[delete]] still sees the
     * deleted rows). `asOf` time-travels to an OLDER manifest generation
-    * (any id [[versionsOf]] lists — useful to reproduce a search
-    * exactly as it ran before an append, the Iceberg/Delta
+    * (any committed id [[versionsOf]] lists — useful to reproduce a
+    * search exactly as it ran before an append, the Iceberg/Delta
     * `VERSION AS OF` read); default is the current (highest) manifest.
-    * Fails loudly on an expired or unknown id. */
+    * Fails loudly on an expired or unknown id, and on one a [[repair]]
+    * superseded, naming the superseding generation. */
   def load(spark: SparkSession, dir: String, asOf: Option[Long] = None): Loaded = {
     val s = open(PqCodec, spark, dir, asOf)
     Loaded(s.model._1, s.model._2, s.codes, s.nrows, s.batches)
   }
 
-  /** Recover a chain WEDGED by a publisher that died mid-write: a
-    * writer that crashed between create-exclusive and close leaves a
-    * sentinel-less manifest at the highest generation, which makes
-    * every reader and writer fail loudly (truncated-manifest error) —
-    * correct, but stuck until the file goes away. `repair` deletes
-    * that manifest IF it is stale (older than `staleAfterMs` — a live
-    * publisher finishes its few-hundred-byte body in milliseconds, so
-    * age separates dead from slow), falling the chain back to the last
-    * complete generation; the dead writer's staged artifacts become
-    * orphans that [[expire]] grace-reaps. Returns true when something
-    * was repaired, false when the chain was already healthy. Refuses
-    * (loudly) to touch a FRESH incomplete manifest — that is an
-    * in-flight publish, not a corpse.
-    *
-    * SAFE UNDER CONCURRENT REPAIRERS — BY SUPERSEDE, NEVER DELETE:
-    * takedown job, compactor and ingester are separate processes and
-    * may all call repair on the same wedge with no shared lock. Any
-    * delete-based recovery is unfixably racy there, in two ways the
-    * multi-writer soak caught live: (1) between one repairer's stale
-    * verdict and its delete, a peer can reclaim the corpse and a
-    * wedged writer re-publish the SAME slot healthy — an arbitrarily
-    * suspended repairer then wakes and deletes a live commit;
-    * (2) deleting the corpse at all FREES its slot, and a writer
-    * suspended between its refresh (which read `corpse − 1`) and its
-    * put-if-absent at `corpse` can then WIN the freed slot — its
-    * "successful" commit lands in a buried, never-read generation.
-    * So repair touches no contended slot. It SUPERSEDES: publish
-    * `m-(corpse+1)` carrying the last complete generation's manifest
-    * through the same put-if-absent [[ManifestCommitter]] every real
-    * commit uses — atomic arbitration, one winner; a loser (or a
-    * repairer finding peer progress) just re-evaluates the chain. The
-    * corpse file stays in place, buried and inert — every reader
-    * resolves past it, no writer can ever target its slot again — and
-    * [[expire]] reclaims it once it ages out of the retention window.
-    * "Torn" includes CRC-mismatch and EOF corpses on checksummed
-    * stores (see [[readManifest]]'s classification).
-    *
-    * `staleAfterMs` IS A FENCING LEASE, and the one assumption this
-    * protocol shares with every lease-based recovery scheme: it must
-    * exceed the maximum reserve→close stall of any LIVE publisher on
-    * this store. A publisher suspended longer than the window between
-    * reserving its slot and writing the body looks exactly like a
-    * corpse, and a repair running in that gap supersedes it. The late
-    * writer is NOT silently lost: supersede manifests declare their
-    * corpse (`supersedes N`), and every publish runs a writer-side
-    * [[burialCheck]] once its body is durable — a buried writer reads
-    * the marker at slot+1 and reports its commit LOST (re-base and
-    * retry, exactly like a lost race), so the loss becomes loud in
-    * every timing where the supersede lands before or during the
-    * writer's publish. The irreducible corner is a repair pausing
-    * between its staleness verdict and its supersede publish for
-    * longer than the writer's body write plus its check budget — that
-    * is what the lease bounds. The production default (10 min) dwarfs
-    * any real publish of a few-hundred-byte body; soaks that shrink
-    * the window for wall-clock reasons must keep it above the test
-    * host's worst scheduling stall. Stores whose reserve is atomic
-    * WITH the body (S3 conditional PUT, GCS generation-match) have no
-    * such window at all — plug them in via [[ManifestCommitter]]. */
+  /** Recover a chain WEDGED by a publisher that died mid-write (its
+    * sentinel-less top manifest makes every reader and writer fail
+    * loudly): if that manifest is older than `staleAfterMs`, republish
+    * the last complete generation on top of it; the dead writer's staged
+    * artifacts become orphans [[expire]] grace-reaps. True when something
+    * was repaired, false on a healthy chain; a FRESH incomplete manifest
+    * (an in-flight publish) is refused loudly. Safe under concurrent
+    * repairers. `staleAfterMs` is a fencing lease: keep it above the
+    * longest stall of a live publisher on this store (see
+    * [[IndexLog.repair]]). */
   def repair(spark: SparkSession, dir: String,
-             staleAfterMs: Long = 10L * 60 * 1000): Boolean = {
-    val f = fs(spark, dir)
-    val gens = versionsOf(spark, dir)
-    if (gens.isEmpty) return false
-    val top = gens.last
-    def reEvaluate(): Boolean = repair(spark, dir, staleAfterMs)
-    // one UNRETRIED read, classified three ways: complete / incomplete
-    // (sentinel-less, CRC-mismatched, or short) / vanished (a peer
-    // repairer got there first) — [[probeSlot]], the same primitive
-    // the writer-side burial check uses
-    def completeNow(id: Long): Option[Boolean] =
-      probeSlot(f, dir, id) match {
-        case SlotAbsent => None
-        case SlotTorn => Some(false)
-        case SlotComplete(_) => Some(true)
-      }
-    val complete =
-      try { readManifest(f, dir, top); true }
-      catch {
-        // the torn-publish classification: a sentinel-less body, a CRC
-        // mismatch and a short read past the checksum frame all exit
-        // readManifest's retry budget as this one loud error
-        case e: java.io.IOException if e.getMessage != null &&
-            e.getMessage.contains("truncated") => false
-        // defensive: these cannot escape readManifest's own
-        // classification, but if a future read path leaks one it IS an
-        // incomplete publish, not a reader bug
-        case _: org.apache.hadoop.fs.ChecksumException => false
-        case _: java.io.EOFException => false
-        case _: java.io.FileNotFoundException => return reEvaluate()
-      }
-    if (complete) return false
-    val st =
-      try f.getFileStatus(path(s"$dir/manifest/m-$top"))
-      catch { case _: java.io.FileNotFoundException => return reEvaluate() }
-    val age = System.currentTimeMillis() - st.getModificationTime
-    if (age < staleAfterMs)
-      throw new IllegalStateException(
-        s"manifest m-$top under $dir is incomplete but only ${age} ms old " +
-          "— likely an IN-FLIGHT publish, not a dead writer; retry repair " +
-          "after the stale window")
-    require(gens.length > 1,
-      s"the only manifest under $dir is truncated — the index never " +
-        "completed a build; rebuild it")
-    // SUPERSEDE, NEVER DELETE (see the method doc): republish the last
-    // complete generation's manifest at `top + 1` through the
-    // put-if-absent committer. Writers cannot contend for that slot (a
-    // writer only publishes at `g + 1` after READING a complete `g`,
-    // and m-top was never complete), so the only contenders are peer
-    // repairers — and put-if-absent picks exactly one winner. An
-    // arbitrarily suspended repairer that wakes after a peer's
-    // supersede simply loses the publish and re-evaluates.
-    //
-    // The corpse file is LEFT IN PLACE, buried: deleting it would FREE
-    // its slot, and a writer suspended between its refresh (which read
-    // m-(top-1)) and its put-if-absent at `top` could then WIN the
-    // freed slot below the supersede — a commit that "succeeds" into a
-    // non-top generation is silently invisible (the multi-writer soak
-    // caught exactly this as whole-batch losses). A buried corpse is
-    // inert — every reader resolves past it — and [[expire]] reclaims
-    // its file once it ages out of the retention window, when no
-    // staged writer can still be targeting its slot.
-    val donor = gens.init.reverse
-      .find(g => completeNow(g).contains(true))
-      .getOrElse(throw new IllegalStateException(
-        s"no complete manifest below corpse m-$top under $dir — the " +
-          "index has no recoverable generation; rebuild it"))
-    val donorMd = readManifest(f, dir, donor)
-    // the `supersedes` marker is the burial check's signal: a writer
-    // whose slot this supersede buries (its body landed AFTER our
-    // staleness sample) reads it at publish time and reports its own
-    // commit LOST instead of phantom-succeeding into a buried
-    // generation. A lost supersede race (false here) includes the case
-    // where a peer superseded OUR mid-write supersede — reEvaluate
-    // re-reads the chain and converges either way.
-    if (!tryPublish(f, dir, top + 1, donorMd, supersedes = Some(top)))
-      return reEvaluate()
-    true
-  }
+             staleAfterMs: Long = 10L * 60 * 1000): Boolean =
+    IndexLog.repair(fs(spark, dir), dir, staleAfterMs)
 
   /** Ops-side index metadata as a DataFrame — what an operator looks at
     * before deciding to compact, expire, or page someone: one row per
@@ -2332,48 +1493,35 @@ object AnnIndex {
     * describing a 100 TB index costs a directory listing. */
   def describe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val f = fs(spark, dir)
-    val gens = versionsOf(spark, dir)
     // a generation named by a later supersede marker is VOID history
     // even when its manifest is complete (a writer stalled past the
-    // fencing lease, finished its body after the supersede, detected
-    // the burial and re-based — see burialCheck): without the label an
-    // operator would read it as a live snapshot. Markers are in the
-    // parameter-sized manifests, so this stays a directory-listing-
-    // cost report.
-    val buried = gens.flatMap(g => probeSlot(f, dir, g) match {
-      case SlotComplete(sup) => sup
-      case _ => None
-    }).toSet
-    gens.flatMap { gen =>
-      // a buried corpse (repair-superseded torn publish, non-top) is
-      // REPORTED, not fatal — ops should see it awaiting its expiry;
-      // a corpse at the top still fails loudly: repair first
-      val mdOpt =
-        try Some(readManifest(f, dir, gen))
-        catch {
-          case e: java.io.IOException if e.getMessage != null &&
-              e.getMessage.contains("truncated") && gen != gens.last => None
-        }
-      val pre = if (buried(gen)) "buried-" else ""
-      mdOpt match {
+    // fencing lease finished its body after the supersede, reported the
+    // commit lost and re-based): without the `buried-` label an operator
+    // would read it as a live snapshot. A torn corpse below the top is
+    // REPORTED, not fatal — ops should see it awaiting its expiry; a
+    // corpse at the top still fails loudly: repair first.
+    IndexLog.history(fs(spark, dir), dir).flatMap { g =>
+      val pre = if (g.buried) "buried-" else ""
+      g.md match {
         case Some(md) =>
           md.segs.map(a =>
-            (gen, pre + "segment", a.id, a.n, md.hw, md.shw, md.model)) ++
+            (g.id, pre + "segment", a.id, a.n, md.hw, md.shw, md.model)) ++
             md.tombs.map(a =>
-              (gen, pre + "tombstone", a.id, a.n, md.hw, md.shw, md.model))
+              (g.id, pre + "tombstone", a.id, a.n, md.hw, md.shw, md.model))
         case None =>
-          Seq((gen, "torn-corpse", -1L, -1L, -1L, -1L, -1L))
+          Seq((g.id, "torn-corpse", -1L, -1L, -1L, -1L, -1L))
       }
     }.toDF("generation", "kind", "artifact_id", "n_rows",
       "id_high_water", "stream_high_water", "model_version")
   }
 
-  /** Published manifest generations — the snapshot ids [[load]]'s
-    * `asOf` accepts (oldest first; [[expire]] collapses this to the
-    * current one). */
+  /** Published manifest generations, oldest first ([[expire]] collapses
+    * this to the current one). Every id a commit produced is a snapshot
+    * [[load]]'s `asOf` accepts; the list also holds what a [[repair]]
+    * superseded (a torn corpse, or a stalled writer's late body), which
+    * `asOf` rejects and [[describe]] labels. */
   def versionsOf(spark: SparkSession, dir: String): Seq[Long] =
-    generations(fs(spark, dir), dir)
+    IndexLog.generations(fs(spark, dir), dir)
 
   /** `codes` restricted to the distinct allowed ids, the mask re-planted
     * as a broadcast LITERAL when it fits under `smallMask` rows (the

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Pq
-import graft.sources.AnnIndex
+import graft.sources.{AnnIndex, IndexLog}
 
 /** Concurrent-writer commit safety for the persisted index
   * ([[graft.sources.AnnIndex]]): manifest publish is atomic
@@ -66,7 +66,7 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     // the append below reads m-1, stages its segment, and THEN the
     // hook compacts (m-2) — the append's publish of m-2 must lose,
     // re-base onto the compacted snapshot, and win m-3
-    AnnIndex.testBeforePublish.put(dir,
+    IndexLog.testBeforePublish.put(dir,
       () => AnnIndex.compact(spark, dir))
     AnnIndex.appendIvfPq(e.filter(col("vec_id") >= 40), "vec_id",
       "embedding", dir)
@@ -96,7 +96,7 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     // compact reads m-1 and rewrites its union; the hook lands a THIRD
     // segment at m-2. Publishing the stale rewrite would silently drop
     // those 20 rows — the loser must discard it and recompact from m-2.
-    AnnIndex.testBeforePublish.put(dir,
+    IndexLog.testBeforePublish.put(dir,
       () => AnnIndex.appendIvfPq(e.filter(col("vec_id") >= 40), "vec_id",
         "embedding", dir))
     AnnIndex.compact(spark, dir)
@@ -116,7 +116,7 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     val dir = s"${tmpDir()}/idx"
     AnnIndex.buildIvfPq(e.filter(col("vec_id") < 40), "vec_id", "embedding",
       dir, cents, cbs)
-    AnnIndex.testBeforePublish.put(dir,
+    IndexLog.testBeforePublish.put(dir,
       () => AnnIndex.appendIvfPq(e.filter(col("vec_id") >= 40), "vec_id",
         "embedding", dir))
     AnnIndex.delete(Seq(1L, 2L, 3L).toDF("vec_id"), "vec_id", dir)
@@ -256,7 +256,7 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     val dir = s"${tmpDir()}/idx"
     AnnIndex.buildIvfPq(e.filter(col("vec_id") < 40), "vec_id", "embedding",
       dir, badC, badCb)
-    AnnIndex.testBeforePublish.put(dir,
+    IndexLog.testBeforePublish.put(dir,
       () => AnnIndex.retrain(e.filter(col("vec_id") < 40), "vec_id",
         "embedding", dir, goodC, goodCb))
     intercept[java.util.ConcurrentModificationException] {
@@ -299,7 +299,7 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     val dir2 = s"${tmpDir()}/sq2"
     AnnIndex.buildSq(e.filter(col("vec_id") < 40), "vec_id", "embedding",
       dir2, badM)
-    AnnIndex.testBeforePublish.put(dir2,
+    IndexLog.testBeforePublish.put(dir2,
       () => AnnIndex.retrainSq(e.filter(col("vec_id") < 40), "vec_id",
         "embedding", dir2, goodM))
     intercept[java.util.ConcurrentModificationException] {
@@ -345,7 +345,7 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     // window: the retrain must NOT republish a manifest that erases it
     // (and must NOT carry shw forward — the checkpoint replay of batch
     // 5 would then be suppressed forever, permanent silent data loss)
-    AnnIndex.testBeforePublish.put(dir,
+    IndexLog.testBeforePublish.put(dir,
       () => AnnIndex.appendIvfPq(e.filter(col("vec_id") >= 20), "vec_id",
         "embedding", dir, dedupKey = Some(5L)))
     intercept[java.util.ConcurrentModificationException] {
@@ -447,7 +447,7 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     val d4 = s"$root/shard4"
     AnnIndex.buildIvfPq(e.filter(col("vec_id") >= 30), "vec_id", "embedding",
       d4, cents, cbs)
-    AnnIndex.testBeforePublish.put(d1,
+    IndexLog.testBeforePublish.put(d1,
       () => AnnIndex.retrain(e.filter(col("vec_id") < 30), "vec_id",
         "embedding", d1, otherC, otherCb))
     intercept[java.util.ConcurrentModificationException] {
@@ -575,11 +575,11 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     // index (hw = −1, zero segments) — a writer re-basing onto that
     // would erase every committed row. It must read as truncated.
     val w = new java.io.FileWriter(s"$dir/manifest/m-1"); w.write("v"); w.close()
-    AnnIndex.manifestRetryOverride.put(dir, 2)
+    IndexLog.manifestRetryOverride.put(dir, 2)
     try {
       val ex = intercept[java.io.IOException](AnnIndex.load(spark, dir))
       assert(ex.getMessage.contains("truncated"), ex.getMessage)
-    } finally AnnIndex.manifestRetryOverride.remove(dir)
+    } finally IndexLog.manifestRetryOverride.remove(dir)
   }
 
   test("committer capability probe: an overwrite-happy store fails loudly before carrying a manifest") {
@@ -601,12 +601,12 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     val dir = s"${tmpDir()}/probe"
     new java.io.File(s"$dir/manifest").mkdirs()
     val ex = intercept[IllegalStateException](
-      AnnIndex.probeCommitter(overwriteHappy, dir))
+      IndexLog.probeCommitter(overwriteHappy, dir))
     assert(ex.getMessage.contains("NOT put-if-absent"), ex.getMessage)
     // the honest store passes the same probe
     val honest = new org.apache.hadoop.fs.RawLocalFileSystem()
     honest.initialize(new java.net.URI("file:///"), conf)
-    AnnIndex.probeCommitter(honest, dir)
+    IndexLog.probeCommitter(honest, dir)
   }
 
   test("a publisher stalled past the stale window detects its burial: the superseded commit reports LOST and re-lands exactly once") {
@@ -624,9 +624,9 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     val dir = s"${tmpDir()}/idx"
     AnnIndex.buildIvfPq(e.filter(col("vec_id") < 20), "vec_id", "embedding",
       dir, cents, cbs)
-    val real = AnnIndex.committer
+    val real = IndexLog.committer
     val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
-    AnnIndex.committer = new AnnIndex.ManifestCommitter {
+    IndexLog.committer = new IndexLog.ManifestCommitter {
       def putIfAbsent(f: org.apache.hadoop.fs.FileSystem,
                       dest: org.apache.hadoop.fs.Path,
                       body: Array[Byte], beforeBody: () => Unit): Boolean =
@@ -643,7 +643,7 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     try
       AnnIndex.appendIvfPq(e.filter(col("vec_id") >= 20), "vec_id",
         "embedding", dir)
-    finally AnnIndex.committer = real
+    finally IndexLog.committer = real
     // exactly once, in a live generation — not zero (silent burial),
     // not twice (blind re-run of a live commit)
     val idx = AnnIndex.load(spark, dir)
@@ -654,6 +654,9 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     assert(AnnIndex.versionsOf(spark, dir) == Seq(0L, 1L, 2L, 3L))
     assert(AnnIndex.load(spark, dir, asOf = Some(2L)).codes.count() == 20,
       "the supersede generation must be the donor's (build-only) content")
+    val voidEx = intercept[IllegalArgumentException](
+      AnnIndex.load(spark, dir, asOf = Some(1L)))
+    assert(voidEx.getMessage.contains("superseded by m-2"), voidEx.getMessage)
     // ops visibility: describe labels the buried-but-complete
     // generation's rows — an operator must not read void history as a
     // live snapshot
@@ -685,7 +688,7 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
       val ths = Seq("writer-A\n", "writer-B\n").map { b =>
         new Thread(() => {
           latch.await()
-          if (AnnIndex.committer.putIfAbsent(f, dest,
+          if (IndexLog.committer.putIfAbsent(f, dest,
               b.getBytes("UTF-8"), () => ())) {
             wins.incrementAndGet(); winner.set(b); ()
           }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{Pq, Sq}
-import graft.sources.AnnIndex
+import graft.sources.{AnnIndex, IndexLog}
 
 /** Randomized crash-injection soak of the optimistic commit protocol
   * ([[graft.sources.AnnIndex]]): a seeded RNG drives a long random walk
@@ -72,7 +72,7 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
     // per-DIR retry override: this test wedges ITS index repeatedly and
     // must not sleep the full reader budget — other suites' readers
     // keep the production budget
-    AnnIndex.manifestRetryOverride.put(dir, 2)
+    IndexLog.manifestRetryOverride.put(dir, 2)
     try {
       val e = df((0L until 80L).map(i => (i, vec(i, 0))))
       val (cents, cbs) = ivfModel(e)
@@ -90,11 +90,11 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
           Trigger.AvailableNow()).awaitTermination()
       }
       def ingestCrashes(point: String): Unit = {
-        AnnIndex.testKillPoint.put(dir, point)
+        IndexLog.testKillPoint.put(dir, point)
         val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
           ingest())
         def injected(t: Throwable): Boolean = t != null &&
-          (t.isInstanceOf[AnnIndex.InjectedCrash] || injected(t.getCause))
+          (t.isInstanceOf[IndexLog.InjectedCrash] || injected(t.getCause))
         assert(injected(ex), s"stream failed for another reason: $ex")
       }
 
@@ -142,21 +142,21 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
         "embedding", k = 3, nprobe = 2).collect().map(_.toSeq).toSet
       assert(got == want, "crash-ridden stream ingest diverged from the " +
         "one-shot build")
-    } finally AnnIndex.manifestRetryOverride.remove(dir)
+    } finally IndexLog.manifestRetryOverride.remove(dir)
   }
 
   test("a wedged chain stops concurrent writers LOUDLY; repair restores liveness for all of them") {
     val dir = java.nio.file.Files
       .createTempDirectory("ann_wedge_ccy").toString + "/idx"
-    AnnIndex.manifestRetryOverride.put(dir, 2)
+    IndexLog.manifestRetryOverride.put(dir, 2)
     try {
       val e = df((0L until 60L).map(i => (i, vec(i, 0))))
       val (cents, cbs) = ivfModel(e)
       AnnIndex.buildIvfPq(e.filter(col("vec_id") < 20), "vec_id",
         "embedding", dir, cents, cbs)
       // writer A dies mid-publish (torn manifest at the top generation)
-      AnnIndex.testKillPoint.put(dir, "publish-torn")
-      intercept[AnnIndex.InjectedCrash] {
+      IndexLog.testKillPoint.put(dir, "publish-torn")
+      intercept[IndexLog.InjectedCrash] {
         AnnIndex.appendIvfPq(e.filter(col("vec_id") >= 20 && col("vec_id") < 40),
           "vec_id", "embedding", dir)
       }
@@ -178,7 +178,7 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
       val idx = AnnIndex.load(spark, dir)
       assert(idx.codes.count() == 39,
         "post-repair commits lost rows or resurrected the dead publish")
-    } finally AnnIndex.manifestRetryOverride.remove(dir)
+    } finally IndexLog.manifestRetryOverride.remove(dir)
   }
 
   test("a torn expire never leaves a half-readable generation; the re-run completes the reclaim") {
@@ -195,8 +195,8 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
     AnnIndex.compact(spark, dir)
     // expire dies AFTER deleting the dropped manifests, BEFORE deleting
     // their artifacts (the crash-ordering invariant: manifests first)
-    AnnIndex.testKillPoint.put(dir, "expire-torn")
-    intercept[AnnIndex.InjectedCrash] {
+    IndexLog.testKillPoint.put(dir, "expire-torn")
+    intercept[IndexLog.InjectedCrash] {
       AnnIndex.expire(spark, dir, keepLast = 1, orphanGraceMs = -1000)
     }
     // the dropped generations are GONE loudly (never a manifest whose
@@ -223,9 +223,9 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
     // spend the suite's wall-clock inside the reader's retry sleep.
     // Scoped to THIS walk's index dir: other suites' readers keep the
     // production budget even under parallel execution
-    AnnIndex.manifestRetryOverride.put(s"$root/idx", 2)
+    IndexLog.manifestRetryOverride.put(s"$root/idx", 2)
     try walkImpl(tier, steps, seed, root)
-    finally AnnIndex.manifestRetryOverride.remove(s"$root/idx")
+    finally IndexLog.manifestRetryOverride.remove(s"$root/idx")
   }
 
   private def walkImpl(tier: String, steps: Int, seed: Long,
@@ -385,7 +385,7 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
         else if (k < 0.40) "" else if (k < 0.55) "stage"
         else if (k < 0.70) "staged" else if (k < 0.85) "publish-torn"
         else "published"
-      if (kill.nonEmpty) AnnIndex.testKillPoint.put(dir, kill)
+      if (kill.nonEmpty) IndexLog.testKillPoint.put(dir, kill)
 
       // execute with the documented operator runbook as recovery
       var done = false
@@ -395,7 +395,7 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
         assert(attempts <= 4, s"[$tier/$step] $verb did not converge")
         try { runVerb(); done = true }
         catch {
-          case c: AnnIndex.InjectedCrash =>
+          case c: IndexLog.InjectedCrash =>
             fired(c.point) += 1
             if (c.point == "publish-torn") {
               // the wedge must be LOUD — a reader can never silently
@@ -420,7 +420,7 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
       // a verb that legitimately short-circuited (e.g. a no-op
       // compact) may leave its arm unfired — clear it so it cannot
       // leak into the next step
-      AnnIndex.testKillPoint.remove(dir)
+      IndexLog.testKillPoint.remove(dir)
 
       // the verb is now committed exactly once — fold it into truth
       verb match {

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Pq, Sq}
-import graft.sources.AnnIndex
+import graft.sources.{AnnIndex, IndexLog}
 
 /** Concurrent multi-writer crash soak of the optimistic commit protocol
   * ([[graft.sources.AnnIndex]]) — the missing leg between
@@ -116,7 +116,7 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
       try { AnnIndex.repair(spark, dir, staleAfterMs = 1200); done = true }
       catch {
         case _: IllegalStateException => Thread.sleep(300) // in-flight
-        case _: AnnIndex.InjectedCrash =>
+        case _: IndexLog.InjectedCrash =>
           // a kill armed by a CONCURRENT writer fired inside THIS
           // repairer's own supersede publish (repair shares tryPublish's
           // publish-torn seam) — a repairer dying mid-supersede is just
@@ -160,12 +160,12 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
       .createTempDirectory(s"ann_mw_$tier").toString
     val dir = s"$root/idx"
     // wedged chains are read (loudly) many times; scoped to THIS dir
-    AnnIndex.manifestRetryOverride.put(dir, 2)
+    IndexLog.manifestRetryOverride.put(dir, 2)
     try stormImpl(tier, nWriters, phases, roundsPerPhase, seed, root, dir,
       boostKills)
     finally {
-      AnnIndex.manifestRetryOverride.remove(dir)
-      AnnIndex.testKillPoint.remove(dir)
+      IndexLog.manifestRetryOverride.remove(dir)
+      IndexLog.testKillPoint.remove(dir)
     }
   }
 
@@ -294,7 +294,7 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
         else if (k < 0.50) "" else if (k < 0.62) "stage"
         else if (k < 0.74) "staged" else if (k < 0.87) "publish-torn"
         else "published"
-      if (kill.nonEmpty) AnnIndex.testKillPoint.put(dir, kill)
+      if (kill.nonEmpty) IndexLog.testKillPoint.put(dir, kill)
 
       // execute with the documented multi-writer runbook
       var done = false
@@ -305,7 +305,7 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
         assert(attempts <= 15, s"[$tier/w$w] $verb did not converge")
         try { runVerb(); done = true; committed = true }
         catch {
-          case c: AnnIndex.InjectedCrash =>
+          case c: IndexLog.InjectedCrash =>
             firedInc(c.point)
             c.point match {
               case "published" =>
@@ -381,7 +381,7 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
         if (k < 0.25) "" else if (k < 0.45) "stage"
         else if (k < 0.65) "staged" else if (k < 0.85) "publish-torn"
         else "published"
-      if (kill.nonEmpty) AnnIndex.testKillPoint.put(dir, kill)
+      if (kill.nonEmpty) IndexLog.testKillPoint.put(dir, kill)
       var done = false
       var attempts = 0
       while (!done) {
@@ -405,7 +405,7 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
           }
           done = true
         } catch {
-          case c: AnnIndex.InjectedCrash =>
+          case c: IndexLog.InjectedCrash =>
             firedInc(c.point)
             c.point match {
               case "published" => done = true
@@ -414,7 +414,7 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
             }
         }
       }
-      AnnIndex.testKillPoint.remove(dir)
+      IndexLog.testKillPoint.remove(dir)
       curSqCents = AnnIndex.loadSq(spark, dir).centroids
         .getOrElse(curSqCents)
       checkVisible(s"phase $phase post-maintenance")
@@ -433,7 +433,7 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
           })
         }
         futures.foreach(_.get(300, TimeUnit.SECONDS))
-        AnnIndex.testKillPoint.remove(dir) // a lingering unconsumed arm
+        IndexLog.testKillPoint.remove(dir) // a lingering unconsumed arm
         checkVisible(s"phase $phase barrier")
         if (tier == "sq") sqInterlude(phase)
       }
@@ -516,7 +516,7 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
     val root = java.nio.file.Files
       .createTempDirectory("ann_mw_contested").toString
     val dir = s"$root/idx"
-    AnnIndex.manifestRetryOverride.put(dir, 2)
+    IndexLog.manifestRetryOverride.put(dir, 2)
     try {
       val pool = (100L until 112L).toVector // 12 contested ids
       val baseRows = (0L until 40L).map(i => (i, vec(i, 0))) ++
@@ -546,7 +546,7 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
             if (k < 0.55) "" else if (k < 0.70) "stage"
             else if (k < 0.80) "staged" else if (k < 0.90) "publish-torn"
             else "published"
-          if (kill.nonEmpty) AnnIndex.testKillPoint.put(dir, kill)
+          if (kill.nonEmpty) IndexLog.testKillPoint.put(dir, kill)
           var done = false
           var committed = false
           var attempts = 0
@@ -557,7 +557,7 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
               AnnIndex.upsertBatchIvfPq(df(rows), "vec_id", "embedding", dir)
               done = true; committed = true
             } catch {
-              case c: AnnIndex.InjectedCrash => c.point match {
+              case c: IndexLog.InjectedCrash => c.point match {
                 case "published" => done = true; committed = true
                 case "publish-torn" => unwedge(dir)
                 case _ => // re-run
@@ -580,7 +580,7 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
         }
         futures.foreach(_.get(300, TimeUnit.SECONDS))
       } finally pool2.shutdownNow()
-      AnnIndex.testKillPoint.remove(dir)
+      IndexLog.testKillPoint.remove(dir)
 
       // exactly-once visible per contested id (a torn upsert — tombstone
       // without segment or vice versa — would leave 0 or 2 rows)
@@ -614,8 +614,8 @@ class AnnIndexMultiWriterSoakSpec extends AnyFunSuite {
             "a lost/torn/mixed write survived the storm")
       }
     } finally {
-      AnnIndex.manifestRetryOverride.remove(dir)
-      AnnIndex.testKillPoint.remove(dir)
+      IndexLog.manifestRetryOverride.remove(dir)
+      IndexLog.testKillPoint.remove(dir)
     }
   }
 }

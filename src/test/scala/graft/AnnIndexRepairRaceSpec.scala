@@ -5,7 +5,7 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Sq
-import graft.sources.AnnIndex
+import graft.sources.{AnnIndex, IndexLog}
 
 /** [[AnnIndex.repair]] under CONCURRENT repairers racing a LIVE
   * publish — the production shape the round-16 soak could only pass by
@@ -53,7 +53,7 @@ class AnnIndexRepairRaceSpec extends AnyFunSuite {
       "vec_id", "embedding", dir,
       Sq.fit(baseIds.map(i => (i, vec(i))).toDF("vec_id", "embedding"),
         "embedding"))
-    AnnIndex.manifestRetryOverride.put(dir, 2)
+    IndexLog.manifestRetryOverride.put(dir, 2)
 
     val f = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
@@ -130,7 +130,7 @@ class AnnIndexRepairRaceSpec extends AnyFunSuite {
       assert(!AnnIndex.repair(spark, dir), "chain should end healthy")
     } finally {
       pool.shutdownNow()
-      AnnIndex.manifestRetryOverride.remove(dir)
+      IndexLog.manifestRetryOverride.remove(dir)
     }
   }
 }

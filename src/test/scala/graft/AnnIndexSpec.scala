@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Pq
-import graft.sources.AnnIndex
+import graft.sources.{AnnIndex, IndexLog}
 
 /** Persisted IVF-PQ index ([[graft.sources.AnnIndex]]): the
   * build→publish→load→search round trip must be lossless vs the
@@ -1244,7 +1244,7 @@ class AnnIndexSpec extends AnyFunSuite {
       .orderBy("vec_id")
       .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
       .collect().map(_.getSeq[Double](0).toArray)
-    AnnIndex.testBeforePublish.put(dir2, () =>
+    IndexLog.testBeforePublish.put(dir2, () =>
       AnnIndex.appendIvfPq(
         Seq((1000L, Array.fill(dim)(9.0f).toSeq)).toDF("vec_id", "embedding"),
         "vec_id", "embedding", dir2))

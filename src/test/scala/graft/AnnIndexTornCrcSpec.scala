@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Sq
-import graft.sources.AnnIndex
+import graft.sources.{AnnIndex, IndexLog}
 
 /** Deterministic regression for the round-16 multi-writer-soak catch:
   * on a CHECKSUMMED store (Hadoop's `ChecksumFileSystem` wraps every
@@ -83,7 +83,7 @@ class AnnIndexTornCrcSpec extends AnyFunSuite {
   private def checkContract(tag: String,
                             corrupt: java.io.RandomAccessFile => Unit): Unit = {
     val (dir, ids) = freshIndex(tag)
-    AnnIndex.manifestRetryOverride.put(dir, 2)
+    IndexLog.manifestRetryOverride.put(dir, 2)
     try {
       val planted = plantCorrupt(dir, corrupt)
 
@@ -133,7 +133,7 @@ class AnnIndexTornCrcSpec extends AnyFunSuite {
       val visible2 = AnnIndex.loadSq(spark, dir).codes
         .select("neighbor_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(visible2 == ids.sorted.toSeq)
-    } finally AnnIndex.manifestRetryOverride.remove(dir)
+    } finally IndexLog.manifestRetryOverride.remove(dir)
   }
 
   test("CRC-mismatch corpse (stale .crc over mutated bytes): reader classifies as torn, repair reclaims after the stale window") {

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.operators.Pq
-import graft.sources.AnnIndex
+import graft.sources.{AnnIndex, IndexLog}
 
 /** [[AnnIndex.rebalance]] — the imbalance-gated split POLICY on top of
   * the q168-gated splitCell VERB: given a skew-planted index (most of
@@ -212,7 +212,7 @@ class AnnRebalanceSpec extends AnyFunSuite {
     val dir2 = s"$root/idx2"
     build(dir2, e)
     val nBefore = AnnIndex.load(spark, dir2).nrows
-    AnnIndex.testBeforePublish.put(dir2, () =>
+    IndexLog.testBeforePublish.put(dir2, () =>
       AnnIndex.appendIvfPq(
         Seq((200000L, Seq.fill(dim)(0.5f))).toDF("vec_id", "embedding"),
         "vec_id", "embedding", dir2))
