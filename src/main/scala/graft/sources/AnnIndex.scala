@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -79,15 +79,19 @@ import graft.sources.IndexLog.{Art, ManifestData, Staged, commit, freshName,
   * MODEL MEMO: the model tables (`meta`, `centroids`, `codebooks` or
   * `model`) under a model root are never rewritten once a build,
   * [[retrain]] or [[splitCell]] lands them, and segments are immutable
-  * too. So every open reads the validated model literals and the first
-  * segment's schema through one bounded, driver-side memo. The model
-  * key is the qualified model root plus the name and length of every
-  * data file in each model table (a filesystem listing, no Spark job);
-  * the schema key is the first segment's qualified path plus that model
-  * key. Spark names part files after the write job's UUID, so any
-  * rewrite of a model table (a rebuild in place, even within the same
-  * second) changes the key and misses. The manifest is still listed and
-  * parsed on every open.
+  * too. So every open reads the validated model literals and the
+  * segment schema through one bounded, driver-side memo. The model key
+  * is the qualified model root plus the name and length of every data
+  * file in each model table (a filesystem listing, no Spark job). The
+  * schema key is that model key alone: every segment of one model
+  * shares the schema by protocol (append, upsert, merge and compact
+  * write it with the model's own encode), so the search right after a
+  * [[compact]] infers nothing. Spark names part files after the write
+  * job's UUID, so any rewrite of a model table (a rebuild in place, even
+  * within the same second) changes the key and misses. Tombstone sets
+  * are immutable too, and the memo holds their ids under the set's path
+  * plus its part-file names and lengths. The manifest is still listed
+  * and parsed on every open.
   *
   * CODECS: an index holds IVF-PQ codes (coarse centroids + residual PQ
   * codebooks) or SQ8 codes (a per-dimension affine model, with optional
@@ -120,8 +124,10 @@ import graft.sources.IndexLog.{Art, ManifestData, Staged, commit, freshName,
   * [[Pq.ivfPqSearch]] and [[Sq.topK]] (the distance-table and code-dot
   * loops are one function each), and AnnServeSpec pins the two equal
   * row for row. A larger batch, and `topK(prune = false)`, run those
-  * operator plans. A tombstone set adds one job: the broadcast of its
-  * scan into the anti-join. Query and neighbour ids are integral, as the
+  * operator plans. Pending tombstones add no job while the snapshot's
+  * tombstone rows fit under [[tombInlineMax]]: the open reads their ids
+  * on the driver and each mask run's scan filters them out
+  * ([[visibleUnion]]). Query and neighbour ids are integral, as the
   * lifecycle's deletes and upserts already read them (BIGINT).
   *
   * Legacy (pre-high-water) manifests stay readable and recover their
@@ -175,38 +181,133 @@ object AnnIndex {
   /** The snapshot's visible code union: each live segment masked by the
     * tombstone sets with a HIGHER id (sequence-number rule — a
     * tombstone never masks a segment appended after it, so
-    * delete-then-reinsert works). Tombstone sets are takedown-sized
-    * relative to the corpus, so the planner broadcasts each mask's scan
-    * straight into its anti-join — no dedup first: a duplicate id
-    * cannot change an anti-join, and a distinct would cost a shuffle
-    * job before the broadcast. A tombstone set that has grown large is
-    * the signal to [[compact]], which physically drops the rows and
-    * clears the sets. */
-  private def visibleUnion(spark: SparkSession, dir: String,
-                           md: ManifestData,
+    * delete-then-reinsert works). Segments that no tombstone id
+    * separates share one mask, so each such MASK RUN is read as one
+    * multi-path scan. While the snapshot's tombstone rows
+    * (the manifest's counts) fit under [[tombInlineMax]], their ids are
+    * read on the driver ([[tombIds]], no Spark job) and each run keeps
+    * the rows `neighbor_id IS NULL OR NOT (CAST(neighbor_id AS BIGINT)
+    * IN ids)` — exactly the `left_anti` USING join's rows (a NULL id
+    * matches nothing on either side), with no broadcast job before the
+    * scan. Above the cap each run is anti-joined with its sets' scans as
+    * before. A tombstone set that has grown large is the signal to
+    * [[compact]], which physically drops the rows and clears the sets. */
+  private def visibleUnion(spark: SparkSession, f: org.apache.hadoop.fs.FileSystem,
+                           dir: String, md: ManifestData,
                            mkey: Seq[String]): DataFrame = {
-    // tombstone sets share the fixed writer schema — explicit schema
-    // keeps the read inference-free (one footer job per tombstone per
-    // snapshot open otherwise; same class as the model-table reads)
-    val tombFrames = md.tombs.map { t =>
-      t.id -> spark.read.schema(tombSchema).parquet(s"$dir/tomb/${t.dirName}") }.toMap
-    // all segments of one index share a schema by protocol (append
-    // re-encodes with the index's own model) — infer it ONCE from the
-    // first segment and reuse, so opening an N-segment snapshot costs
-    // one footer-inference job instead of N, and a re-open of the same
-    // first segment under the same model costs none
-    val first = s"$dir/data/${md.segs.head.dirName}"
-    val segSchema = memoized(Seq("schema",
-        fs(spark, dir).makeQualified(path(first)).toString) ++ mkey)(
-      spark.read.parquet(first).schema)
-    md.segs.map { b =>
-      val base = spark.read.schema(segSchema)
-        .parquet(s"$dir/data/${b.dirName}")
-      val masks = md.tombs.collect { case t if t.id > b.id => tombFrames(t.id) }
+    // every segment of one model shares a schema by protocol (append,
+    // compact and merge write it with the model's own encode), so it is
+    // inferred once per model key and every snapshot over it reuses it
+    val segSchema = memoized(Seq("schema") ++ mkey)(
+      spark.read.parquet(s"$dir/data/${md.segs.head.dirName}").schema)
+    // each set's ids, read once per open, while the snapshot is under the cap
+    val inlineIds =
+      if (md.tombs.map(_.n).sum > tombInlineMax) None
+      else Some(md.tombs.map(t => t.id -> tombIds(f, s"$dir/tomb/${t.dirName}")).toMap)
+    val runs = md.segs.groupBy(b => md.tombs.filter(_.id > b.id)).toSeq
+      .sortBy { case (_, segs) => segs.head.id }
+    runs.map { case (masks, segs) =>
+      val base = segmentScan(spark, segSchema,
+        segs.map(b => s"$dir/data/${b.dirName}"))
       if (masks.isEmpty) base
-      else base.join(masks.reduce(_ unionByName _).select(col("neighbor_id")),
-        Seq("neighbor_id"), "left_anti")
+      else inlineIds match {
+        case Some(byTomb) =>
+          val ids = masks.flatMap(t => byTomb(t.id)).distinct
+          base.filter(col("neighbor_id").isNull ||
+            !col("neighbor_id").cast("long").isin(ids: _*))
+        case None =>
+          base.join(masks.map(t => spark.read.schema(tombSchema)
+              .parquet(s"$dir/tomb/${t.dirName}")).reduce(_ unionByName _),
+            Seq("neighbor_id"), "left_anti")
+      }
     }.reduce(_ unionByName _)
+  }
+
+  /** Tombstone rows a snapshot open reads onto the driver as id masks
+    * (see [[visibleUnion]]); a snapshot with more pending tombstone rows
+    * anti-joins them instead. A few thousand ids are a few tens of KiB
+    * on the driver and in each task's filter. */
+  private val tombInlineMax = 4096
+
+  /** One scan over the segment directories `paths` (all of one model,
+    * so one schema and one layout). Spark's partition discovery refuses
+    * several partitioned roots unless told to accept them, and it lists
+    * one partition directory per root and cell; [[RunIndex]] merges
+    * them, so a pruned scan lists one partition per probed cell. */
+  private def segmentScan(spark: SparkSession, schema: StructType,
+                          paths: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val scan = spark.read.schema(schema)
+      .option("ignoreInvalidPartitionPaths", "true").parquet(paths: _*)
+    val LogicalRelation(r: HadoopFsRelation, _, _, _, _) =
+      scan.queryExecution.analyzed: @unchecked
+    spark.baseRelationToDataFrame(
+      r.copy(location = new RunIndex(r.location))(r.sparkSession))
+  }
+
+  /** A mask run's file index: the one Spark listed, with each cell's
+    * directories across the run's segments reported as one partition. */
+  private final class RunIndex(
+      inner: org.apache.spark.sql.execution.datasources.FileIndex)
+      extends org.apache.spark.sql.execution.datasources.FileIndex {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.datasources.PartitionDirectory
+    def rootPaths: Seq[org.apache.hadoop.fs.Path] = inner.rootPaths
+    def listFiles(partitionFilters: Seq[Expression],
+                  dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val dirs = inner.listFiles(partitionFilters, dataFilters)
+      def key(d: PartitionDirectory) = d.values.toSeq(partitionSchema)
+      val byCell = dirs.groupBy(key)
+      dirs.map(key).distinct.map { v =>
+        PartitionDirectory(byCell(v).head.values, byCell(v).flatMap(_.files))
+      }
+    }
+    def inputFiles: Array[String] = inner.inputFiles
+    def refresh(): Unit = inner.refresh()
+    def sizeInBytes: Long = inner.sizeInBytes
+    def partitionSchema: StructType = inner.partitionSchema
+    override def metadataOpsTimeNs: Option[Long] = inner.metadataOpsTimeNs
+  }
+
+  /** The non-NULL ids of the tombstone set at `tdir`, read on the driver
+    * with parquet-hadoop (no Spark job) and memoized: a tombstone set is
+    * immutable, and its key (qualified path plus part-file names and
+    * lengths) changes with any rewrite. A set's column is BIGINT
+    * ([[delete]], upserts) or the segments' integral id type
+    * ([[splitCell]]). */
+  private def tombIds(f: org.apache.hadoop.fs.FileSystem,
+                      tdir: String): Array[Long] = {
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val parts = f.listStatus(path(tdir)).toSeq.filterNot { st =>
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+    memoized(Seq("tomb", f.makeQualified(path(tdir)).toString) ++
+        parts.map(st => s"${st.getPath.getName}:${st.getLen}")) {
+      val ids = Array.newBuilder[Long]
+      parts.foreach { st =>
+        val r = ParquetReader.builder(new GroupReadSupport(), st.getPath)
+          .withConf(f.getConf).build()
+        try {
+          var g = r.read()
+          while (g != null) {
+            if (g.getFieldRepetitionCount("neighbor_id") > 0)
+              ids += (g.getType.getType("neighbor_id").asPrimitiveType
+                  .getPrimitiveTypeName match {
+                case PrimitiveTypeName.INT64 => g.getLong("neighbor_id", 0)
+                case PrimitiveTypeName.INT32 => g.getInteger("neighbor_id", 0).toLong
+                case t => throw new IllegalArgumentException(
+                  s"tombstone set $tdir holds $t ids, not integral ones")
+              })
+            g = r.read()
+          }
+        } finally r.close()
+      }
+      ids.result()
+    }
   }
 
   // ---- model-table schemas (fixed: written by this object) ---------
@@ -232,14 +333,16 @@ object AnnIndex {
 
   // ---- model memo (see MODEL MEMO on the object) -------------------
   /** Entry cap of [[memo]]. An open index uses two entries (its model
-    * literals and its first segment's schema); entries a compaction or
-    * retrain left behind age out least-recently-used first. A model
-    * entry is parameter-sized, so the cap bounds driver memory at a few
+    * literals and its segment schema) plus one per pending tombstone set
+    * under [[tombInlineMax]]; entries a compaction or retrain left behind
+    * age out least-recently-used first. A model entry is
+    * parameter-sized and the id sets of one snapshot hold at most
+    * [[tombInlineMax]] ids, so the cap bounds driver memory at a few
     * dozen models. */
   private val memoCap = 32
 
-  /** Validated model literals and first-segment schemas, least recently
-    * used evicted first. Keys start with a kind tag, so the codecs'
+  /** Validated model literals, segment schemas and tombstone ids, least
+    * recently used evicted first. Keys start with a kind tag, so the codecs'
     * value types never share a key. */
   private val memo =
     new java.util.LinkedHashMap[Seq[String], AnyRef](16, 0.75f, true) {
@@ -459,8 +562,13 @@ object AnnIndex {
       // Sq.topK's filter: a query with a NULL or zero norm scores nothing
       val live = state.indices.filter(j => !state(j).isNullAt(2) &&
         state(j).getDouble(2) != 0.0).toArray
-      val w: Array[ArrayData] = live.map(j =>
-        new GenericArrayData(state(j).getSeq[Any](0).toArray): ArrayData)
+      // the weights decoded once here; a NULL element makes every dot
+      // of that query NULL (the fold meets it, or the lengths differ)
+      val w: Array[Array[Double]] = live.map { j =>
+        val ws = state(j).getSeq[Any](0)
+        if (ws == null || ws.contains(null)) null
+        else ws.map(_.asInstanceOf[Double]).toArray
+      }
       new SqScorer(live.map(qi), live.map(qid), w,
         live.map(j => state(j).getAs[java.lang.Double](1)),
         live.map(state(_).getDouble(2)),
@@ -473,8 +581,8 @@ object AnnIndex {
 
   /** Read ONLY the model tables of a pinned manifest — the writer verbs
     * (append/upsert/merge-dst) need the encode model and nothing else;
-    * a full [[open]] would also read the first segment's schema for a
-    * visible union the writer never evaluates. Validated once per model
+    * a full [[open]] would also read the segment schema and tombstone ids
+    * for a visible union the writer never evaluates. Validated once per model
     * key (MODEL MEMO on the object); every call gets its own copy of
     * the arrays. */
   private def readModel[M <: AnyRef](codec: Codec[M], spark: SparkSession,
@@ -498,13 +606,19 @@ object AnnIndex {
   private def open[M <: AnyRef](codec: Codec[M], spark: SparkSession,
                                 dir: String, asOf: Option[Long]): Snapshot[M] = {
     val f = fs(spark, dir)
-    val (_, md) = resolve(f, dir, asOf)
+    open(codec, spark, f, dir, resolve(f, dir, asOf)._2)
+  }
+
+  /** The snapshot of the manifest `md` the caller already resolved. */
+  private def open[M <: AnyRef](codec: Codec[M], spark: SparkSession,
+                                f: org.apache.hadoop.fs.FileSystem, dir: String,
+                                md: ManifestData): Snapshot[M] = {
     // model artifacts resolve THROUGH the pinned manifest: a reader
     // pinned before a [[retrain]] keeps scoring with the model its
     // segments were encoded with (version 0 = the build's root dirs)
     val mkey = modelKey(f, dir, md)
     val model = readModel(codec, spark, dir, md, mkey)
-    Snapshot(model, codec.opened(visibleUnion(spark, dir, md, mkey)),
+    Snapshot(model, codec.opened(visibleUnion(spark, f, dir, md, mkey)),
       md.segs.map(_.n).sum, md.segs.map(_.id))
   }
 
@@ -695,8 +809,8 @@ object AnnIndex {
   /** Tombstone `ids` (one column named `idCol`) out of the CURRENT
     * snapshot — the takedown/eviction verb: the id set lands as an
     * immutable `tomb/t-<n>` parquet and the next manifest generation
-    * lists it; readers of that generation anti-join it out of every
-    * OLDER segment's scan ([[visibleUnion]]'s sequence-number rule), so
+    * lists it; readers of that generation mask it out of every OLDER
+    * segment's scan ([[visibleUnion]]'s sequence-number rule), so
     * a later re-append of the same id is visible again. Rows are
     * physically dropped — and the tombstone sets cleared — by the next
     * [[compact]]. Pinned pre-delete readers are untouched (their
@@ -740,7 +854,7 @@ object AnnIndex {
     val f = fs(spark, dir)
     IndexLog.compact(f, dir) { md =>
       val segName = freshName("batch-")
-      val n = writeCounted(visibleUnion(spark, dir, md, modelKey(f, dir, md)),
+      val n = writeCounted(visibleUnion(spark, f, dir, md, modelKey(f, dir, md)),
         s"$dir/data/$segName")
       if (n == 0) {
         f.delete(path(s"$dir/data/$segName"), true)
@@ -932,7 +1046,7 @@ object AnnIndex {
           s"stale; re-run rebalance${codec.tier} against the fresh snapshot")
     }
     maybeKill(dir, "stage")
-    val idx = open(codec, spark, dir, asOf = Some(mid))
+    val idx = open(codec, spark, f, dir, md)
     val cents = cellsOf(codec.centroids(idx.model), s"splitCell${codec.tier}")
     require(splits.nonEmpty, "no cells to split")
     val cells = splits.map(_._1)
@@ -1091,8 +1205,9 @@ object AnnIndex {
     val unsplittable = scala.collection.mutable.Set[Int]()
     var done = false
     while (!done && splits < maxSplits) {
-      val (mid, _) = refresh(fs(spark, dir), dir)
-      val idx = open(codec, spark, dir, asOf = Some(mid))
+      val f = fs(spark, dir)
+      val (mid, md) = refresh(f, dir)
+      val idx = open(codec, spark, f, dir, md)
       val nlist = cellsOf(codec.centroids(idx.model),
         s"rebalance${codec.tier}").length
       val counts = cellCounts(idx.codes, cellCol).collect()
@@ -1815,7 +1930,7 @@ object AnnIndex {
     * / (_qn · recon_norm)`, [[Sq.topK]]'s expression with its NULLs
     * (and its zero-norm filter). */
   private final class SqScorer(qi: Array[Int], qid: Array[Long],
-      w: Array[ArrayData], bias: Array[java.lang.Double], qn: Array[Double],
+      w: Array[Array[Double]], bias: Array[java.lang.Double], qn: Array[Double],
       codesType: DataType) extends Scorer(qi, qid) {
     def cols: Seq[Column] = Seq(col("neighbor_id").cast("long"), col("codes"),
       col("recon_norm").cast("double"))
@@ -1827,8 +1942,8 @@ object AnnIndex {
         var j = 0
         while (j < qid.length) {
           if (!self(j, nid)) {
-            val d = if (codes == null) null
-              else SqDotCodes.dot(codes, codesType, w(j), DoubleType)
+            val d = if (codes == null || w(j) == null) null
+              else SqDotCodes.dot(codes, codesType, w(j))
             val den = qn(j) * rn
             if (d == null || bias(j) == null || den == 0.0)
               h.offer(heap(j), 0.0, true, nid)

@@ -2,10 +2,11 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The versioned-parquet ledger both streaming merge sinks share
-  * ([[UpsertSink.applyBatch]] last-writer-wins, `Scd2Stream` dimension
-  * history): a table is a directory of immutable version dirs
-  * `v<batchId>`, each the FULL post-merge state after that batch.
+/** The versioned-parquet ledger of the streaming merge sink
+  * ([[UpsertSink.applyBatch]] last-writer-wins, read back by
+  * [[UpsertSink.readLatest]]): a table is a directory of immutable
+  * version dirs `v<batchId>`, each the FULL post-merge state after that
+  * batch.
   *
   * Exactly-once without a transactional format rests on two properties
   * this utility centralizes:

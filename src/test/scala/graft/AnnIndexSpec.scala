@@ -1263,7 +1263,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(AnnIndex.load(spark, dir2).codes.count() == 41)
   }
 
-  test("a warm serving search is one Spark job; one tombstone set adds one") {
+  test("a warm search is one Spark job, tombstones or not; no job at load after compact") {
     import graft.operators.Sq
     val e = corpus(60).cache()
     val (cents, cbs) = model(e)
@@ -1295,7 +1295,14 @@ class AnnIndexSpec extends AnyFunSuite {
     Seq(pq, sqFlat, sqCells).foreach(dir =>
       AnnIndex.delete(Seq(11L, 22L, 33L).toDF("vec_id"), "vec_id", dir))
     jobCounts().foreach { case (what, n) =>
-      assert(n == 2, s"$what with one tombstone set launched $n jobs")
+      assert(n == 1, s"$what with one tombstone set launched $n jobs")
     }
+    // the compacted segment is read with the schema its model already has
+    AnnIndex.compact(spark, pq)
+    AnnIndex.compact(spark, sqCells)
+    val (_, pqLoad) = jobsOf(AnnIndex.load(spark, pq))
+    assert(pqLoad.isEmpty, s"a load after compact launched ${pqLoad.size} jobs")
+    val (_, sqLoad) = jobsOf(AnnIndex.loadSq(spark, sqCells))
+    assert(sqLoad.isEmpty, s"a loadSq after compact launched ${sqLoad.size} jobs")
   }
 }

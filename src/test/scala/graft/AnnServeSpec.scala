@@ -169,10 +169,15 @@ class AnnServeSpec extends AnyFunSuite {
 
   test("IVF-PQ kernel == Pq.ivfPqSearch when shuffled joins interleave the cells") {
     // with broadcasts off, the tombstone anti-join and the mask semi-join
-    // sort the codes by neighbor_id, so a task meets its cells row by row
+    // sort the codes by neighbor_id, so a task meets its cells row by row.
+    // The snapshot's tombstone sets are joined (not driver-held id masks)
+    // once they hold more rows than the open reads onto the driver: this
+    // one adds a set of the real ids plus absent ones above that cap
     val dir = indexed(
       (df, d) => AnnIndex.buildIvfPq(df, "vec_id", "embedding", d, cents, cbs),
       (df, d) => AnnIndex.appendIvfPq(df, "vec_id", "embedding", d))
+    AnnIndex.delete(spark.range(100000L, 105000L).toDF("vec_id")
+      .unionByName(Seq(9L, 18L, 101L).toDF("vec_id")), "vec_id", dir)
     val idx = AnnIndex.load(spark, dir)
     val prev = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
       .map(key => key -> spark.conf.get(key))
