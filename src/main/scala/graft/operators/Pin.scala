@@ -37,7 +37,11 @@ import org.apache.spark.sql.DataFrame
   *    read one evaluation instead of running the pipeline twice),
   *    `Warehouse` layer frames (q51),
   *    `QueriesText.nearDupPairs` (the shared q30 pair frame), q128's
-  *    brute-force recall ground truth (query-count × k rows).
+  *    brute-force recall ground truth (query-count × k rows),
+  *    `AnnIndex`'s pruned query batch above `snapshotCollectMax` rows
+  *    (its probe cells and the search read one evaluation),
+  *    `EligibilityStream.processSafe(eager = true)`'s dim (evaluated
+  *    inside the failure guard).
   *  - PARAMETER-SIZED (≤ f(config) rows, never data-proportional →
   *    [[param]], executor-local accepted — re-running the producing job
   *    is cheap and the frames are tiny): `Dsir` count table

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.operators.{Pq, Sq}
+import graft.operators.{Pin, Pq, Sq}
 import graft.plans.{PqDistTable, SqDotCodes}
 import graft.sources.IndexLog.{Art, ManifestData, Staged, commit, freshName,
   maybeKill, publishStaged, refresh, resolve, writeManifest}
@@ -124,11 +124,13 @@ import graft.sources.IndexLog.{Art, ManifestData, Staged, commit, freshName,
   * [[Pq.ivfPqSearch]] and [[Sq.topK]] (the distance-table and code-dot
   * loops are one function each), and AnnServeSpec pins the two equal
   * row for row. A larger batch, and `topK(prune = false)`, run those
-  * operator plans. Pending tombstones add no job while the snapshot's
-  * tombstone rows fit under [[tombInlineMax]]: the open reads their ids
-  * on the driver and each mask run's scan filters them out
-  * ([[visibleUnion]]). Query and neighbour ids are integral, as the
-  * lifecycle's deletes and upserts already read them (BIGINT).
+  * operator plans; a larger pruned batch reads its rows twice (probe
+  * cells, then the search), so it is pinned once with [[Pin.data]] and
+  * the caller's frame stays uncached. Pending tombstones add no job
+  * while the snapshot's tombstone rows fit under [[tombInlineMax]]: the
+  * open reads their ids on the driver and each mask run's scan filters
+  * them out ([[visibleUnion]]). Query and neighbour ids are integral,
+  * as the lifecycle's deletes and upserts already read them (BIGINT).
   *
   * Legacy (pre-high-water) manifests stay readable and recover their
   * stream dedup floor at parse time: see MIGRATION on [[IndexLog]]. */
@@ -1450,7 +1452,8 @@ object AnnIndex {
     * approximate recall). Pruning a flat index fails loudly rather than
     * silently full-scanning. A serving batch runs as ONE Spark job
     * either way (SERVING on the object); a batch above
-    * [[snapshotCollectMax]] rows runs [[Sq.topK]]. */
+    * [[snapshotCollectMax]] rows runs [[Sq.topK]], over the batch pinned
+    * once ([[Pin.data]]) when `prune` probes cells. */
   def topKSq(idx: LoadedSq, queries: DataFrame, idCol: String,
              vecCol: String, k: Int = 10, nprobe: Int = 4,
              prune: Boolean = false): DataFrame =
@@ -1458,86 +1461,19 @@ object AnnIndex {
       vecCol, k, nprobe,
       if (prune) Some(cellsOf(idx.centroids, "prune=true")) else None)
 
-  /** Serving-batch snapshot cap. A search first collects up to this
-    * many rows of its batch into a driver local relation — the input of
-    * the one-job serving kernel, ≤ a few MB at embedding dims. A larger
-    * batch runs the operator plan, which reads the batch twice when it
-    * probes cells (probe-cell collect, then the scoring join), so it
-    * lands once to a scratch parquet and is read back
-    * ([[land]]). Both snapshots are stable across re-execution —
-    * stronger than the previous MEMORY_AND_DISK persist, whose blocks
-    * could be EVICTED and silently recompute a nondeterministic source
-    * — and neither leaves anything in the cache manager behind (the
-    * round-13 serving-path leak: every pruned search pinned its query
-    * frame forever). Scratch landings are ROTATED: only the newest
-    * [[scratchRetain]] survive, the oldest is deleted as each new one
-    * lands, so a long-lived driver issuing many large pruned batches
-    * holds bounded scratch disk instead of accumulating until JVM exit
-    * (the shutdown hook remains the final backstop). The contract that
-    * rotation imposes is mild and stated: a search RESULT built from an
-    * above-cap batch must be consumed before `scratchRetain` further
-    * above-cap searches land — serving batches sit under the collect
-    * cap (zero-disk local relation, no rotation involved) and batch
-    * jobs consume each result as it is produced. */
-  private val snapshotCollectMax = 8192
+  /** Serving-batch snapshot cap: a search collects up to this many rows
+    * of its batch into a driver local relation, the input of the one-job
+    * serving kernel (≤ a few MB at embedding dims). A larger batch runs
+    * the codec's operator plan. */
+  private[graft] val snapshotCollectMax = 8192
 
-  /** Above-cap query-batch landings retained before the oldest becomes
-    * reclaim-ELIGIBLE. Eligibility also requires the landing be older
-    * than [[scratchMinAgeMs]] — so a burst of large batches can exceed
-    * the retain count briefly, but a landing is never yanked from
-    * under a result the caller is actively consuming: steady-state
-    * disk is bounded by the newest `scratchRetain`, burst disk by what
-    * lands within one grace window. */
-  private[graft] val scratchRetain = 32
-
-  /** Minimum age before a rotated-out landing is deleted (15 min — far
-    * beyond any active consumption). Specs pass an explicit `minAgeMs`
-    * to [[land]] instead of mutating process-wide state. */
-  private[graft] val scratchMinAgeMs: Long = 15L * 60 * 1000
-
-  private val snapshotCounter = new java.util.concurrent.atomic.AtomicLong
-  private val scratchLandings =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  /** The batch's `(idCol, vecCol)` rows as a driver local relation,
-    * or None above [[snapshotCollectMax]] rows. */
-  private def localBatch(queries: DataFrame, idCol: String,
-                         vecCol: String): Option[DataFrame] = {
-    val proj = queries.select(col(idCol), col(vecCol))
-    val rows = proj.limit(snapshotCollectMax + 1).collect()
-    if (rows.length > snapshotCollectMax) None
-    else Some(queries.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), proj.schema))
-  }
-
-  /** One scratch landing of an above-cap batch, read back; the oldest
-    * landings rotate out as described on [[snapshotCollectMax]]. */
-  private[graft] def land(queries: DataFrame, idCol: String,
-                          vecCol: String,
-                          minAgeMs: Long = scratchMinAgeMs): DataFrame = {
-    val spark = queries.sparkSession
-    val proj = queries.select(col(idCol), col(vecCol))
-    val dir = graft.streaming.StreamHarness.scratch(
-      s"ann_query_snapshot_${snapshotCounter.incrementAndGet()}")
-    proj.write.mode("overwrite").parquet(dir)
-    // check-and-remove must be ATOMIC: with a bare peek→poll, a
-    // concurrent above-cap snapshot can poll between the two and the
-    // age check then authorizes deleting a DIFFERENT (younger)
-    // landing — yanking it from under a caller mid-query. The lock
-    // is cheap and rare (above-cap landings only).
-    scratchLandings.synchronized {
-      scratchLandings.add(dir)
-      val cutoff = System.currentTimeMillis() - minAgeMs
-      while (scratchLandings.size > scratchRetain &&
-          Option(scratchLandings.peek()).exists(
-            new java.io.File(_).lastModified() < cutoff)) {
-        val old = scratchLandings.poll()
-        if (old != null)
-          graft.streaming.StreamHarness.deleteRecursively(
-            new java.io.File(old))
-      }
-    }
-    spark.read.schema(proj.schema).parquet(dir)
+  /** `df` as a driver local relation when it holds at most `cap` rows
+    * (one `limit(cap + 1)` collect), else None. */
+  private def collectUnder(df: DataFrame, cap: Int): Option[DataFrame] = {
+    val rows = df.limit(cap + 1).collect()
+    if (rows.length > cap) None
+    else Some(df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), df.schema))
   }
 
   /** Snapshot retention + garbage collection (the Iceberg
@@ -1645,13 +1581,8 @@ object AnnIndex {
                           allowedIdCol: String, smallMask: Int): DataFrame = {
     val mask = allowed.select(col(allowedIdCol).cast("long")
       .as("neighbor_id")).distinct()
-    val small = mask.limit(smallMask + 1).collect()
-    val m =
-      if (small.length <= smallMask)
-        broadcast(allowed.sparkSession.createDataFrame(
-          java.util.Arrays.asList(small: _*), mask.schema))
-      else mask
-    codes.join(m, Seq("neighbor_id"), "left_semi")
+    codes.join(collectUnder(mask, smallMask).fold(mask)(broadcast(_)),
+      Seq("neighbor_id"), "left_semi")
   }
 
   /** FILTERED search — the metadata-predicate vector query every
@@ -1706,7 +1637,7 @@ object AnnIndex {
   private def cellCounts(codes: DataFrame, cellCol: String): DataFrame = {
     // pinned (≤ nlist rows): the share projection AND the 1-row total
     // consume it — without the cut each re-scanned the visible codes
-    val counts = graft.operators.Pin.param(codes.groupBy(col(cellCol))
+    val counts = Pin.param(codes.groupBy(col(cellCol))
       .agg(count(lit(1)).as("n_vectors")))
     val total = counts.agg(sum(col("n_vectors")).as("_t"))
     counts.crossJoin(broadcast(total))
@@ -1719,8 +1650,8 @@ object AnnIndex {
     * cells; the probed cells reach EVERY segment scan as a partition
     * filter. A serving batch runs as ONE Spark job (SERVING on the
     * object) and comes back as a local relation; a batch above
-    * [[snapshotCollectMax]] rows is landed once and searched by
-    * [[Pq.ivfPqSearch]]. `prune = false` keeps [[Pq.ivfPqSearch]]'s
+    * [[snapshotCollectMax]] rows is pinned once ([[Pin.data]]) and
+    * searched by [[Pq.ivfPqSearch]]. `prune = false` keeps [[Pq.ivfPqSearch]]'s
     * plain cell-join plan for the corpus-as-queries shape, where every
     * cell is probed anyway. Both paths return the same rows:
     * `(query_id, neighbor_id, adist, rank)`. */
@@ -1748,7 +1679,8 @@ object AnnIndex {
     def probed(cells: Array[Int]): DataFrame =
       if (cents.forall(cells.length >= _.length)) codes
       else codes.filter(col(codec.cellCol).isin(cells.sorted.map(Int.box): _*))
-    localBatch(queries, idCol, vecCol) match {
+    collectUnder(queries.select(col(idCol), col(vecCol)),
+        snapshotCollectMax) match {
       case Some(q) =>
         val rows = q.select(col(idCol), probes.getOrElse(lit(null)),
             struct(codec.queryState(model, col(vecCol), probes): _*))
@@ -1761,11 +1693,12 @@ object AnnIndex {
           rows.filterNot(_.isNullAt(0)), k)
       case None =>
         // a batch the operator plan reads twice (probe, then search)
-        // must be stable: the landed snapshot, never the raw frame. A
+        // must be stable: one pinned evaluation, never the raw frame. A
         // flat search reads it once, so the raw frame serves; the
         // cap probe above read at most snapshotCollectMax + 1 of its
         // rows and discarded them.
-        val q = if (probes.isEmpty) queries else land(queries, idCol, vecCol)
+        val q = if (probes.isEmpty) queries
+          else Pin.data(queries.select(col(idCol), col(vecCol)))
         val cells = probes.map(p => q.select(explode(p)).distinct()
           .collect().map(_.getInt(0)))
         codec.reference(model, cells.fold(codes)(probed), q, idCol, vecCol,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamReader
 import org.apache.spark.sql.types._
 
-import graft.operators.Eligibility
+import graft.operators.{Eligibility, Pin}
 
 /** Structured-Streaming restatement of the reference's Kafka/CDC
   * eligibility path (SURVEY.md §2.9 T1-T6; backend/kafkaworker.js:41-150,
@@ -137,10 +137,10 @@ object EligibilityStream {
     * fine but fails at execution time (file deleted mid-batch, transient
     * source error) still fails the query, unlike the reference's per-batch
     * try/catch. Set `eager = true` to also catch execution-time failures:
-    * the dim is persisted and fully materialized inside the guard, so a
-    * source that can't actually be read lands on the db_query_error leg —
-    * at the cost of one blocking materialization (fine for the small
-    * per-key-latest dims this path joins; the caller owns unpersist). */
+    * the dim is pinned ([[Pin.data]]) inside the guard, so a source that
+    * can't actually be read lands on the db_query_error leg — at the cost
+    * of one blocking materialization (fine for the small per-key-latest
+    * dims this path joins). */
   def processSafe(messages: DataFrame, flightsLatest: () => DataFrame,
                   flightKeyCol: String = "flight_number",
                   scheduledCol: String = "scheduled_departure",
@@ -148,8 +148,7 @@ object EligibilityStream {
                   eager: Boolean = false): DataFrame =
     Try {
       val dim = flightsLatest()
-      if (eager) { dim.persist(); dim.count() }
-      dim
+      if (eager) Pin.data(dim) else dim
     } match {
       case Success(dim) =>
         process(messages, dim, flightKeyCol, scheduledCol, actualCol)

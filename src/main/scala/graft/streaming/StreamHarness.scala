@@ -455,7 +455,7 @@ object StreamHarness {
       "embedding", streamed, cb, cbs)
     val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
     val span = (maxId - 100) / 5 + 1
-    def land(i: Int): Unit =
+    def landPart(i: Int): Unit =
       e.filter(col("vec_id") >= 100 + i * span &&
           col("vec_id") < 100 + (i + 1) * span)
         .coalesce(1).write.mode("append").parquet(landing)
@@ -467,9 +467,9 @@ object StreamHarness {
       AnnIndex.streamAppend(stream, "vec_id", "embedding", streamed, ckpt,
         Trigger.AvailableNow()).awaitTermination()
     }
-    (0 until 3).foreach(land); ingest()
+    (0 until 3).foreach(landPart); ingest()
     AnnIndex.compact(spark, streamed)
-    (3 until 5).foreach(land); ingest()
+    (3 until 5).foreach(landPart); ingest()
     AnnIndex.buildIvfPq(e, "vec_id", "embedding", full, cb, cbs)
     val q = e.filter(col("vec_id") % 50 === 0)
     (AnnIndex.topK(AnnIndex.load(spark, streamed), q, "vec_id",

@@ -80,7 +80,7 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
       val ckpt = s"$root/ckpt"
       AnnIndex.buildIvfPq(e.filter(col("vec_id") < 20), "vec_id",
         "embedding", dir, cents, cbs)
-      def land(lo: Long, hi: Long): Unit =
+      def landRange(lo: Long, hi: Long): Unit =
         e.filter(col("vec_id") >= lo && col("vec_id") < hi)
           .coalesce(1).write.mode("append").parquet(landing)
       def ingest(): Unit = {
@@ -101,7 +101,7 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
       // phase 1: the publisher dies AFTER reserving the manifest slot
       // but before the body — the chain wedges LOUDLY, repair unwedges,
       // and the checkpoint restart replays the batch exactly once
-      land(20, 40)
+      landRange(20, 40)
       ingestCrashes("publish-torn")
       intercept[java.io.IOException](AnnIndex.load(spark, dir))
       assert(AnnIndex.repair(spark, dir, staleAfterMs = -1))
@@ -113,7 +113,7 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
       // before the checkpoint records the batch — the restart
       // re-delivers the same foreachBatch id and the dedup key makes
       // the replay a no-op (the at-least-once -> exactly-once core)
-      land(40, 60)
+      landRange(40, 60)
       ingestCrashes("published")
       assert(AnnIndex.load(spark, dir).nrows == 60,
         "the published commit should already be visible")
@@ -124,7 +124,7 @@ class AnnIndexCrashSoakSpec extends AnyFunSuite {
 
       // phase 3: the ingester dies with the segment staged but no
       // manifest attempt — nothing is visible, the restart re-stages
-      land(60, 80)
+      landRange(60, 80)
       ingestCrashes("staged")
       assert(AnnIndex.load(spark, dir).nrows == 60)
       ingest()

@@ -189,7 +189,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val ckpt = s"$root/ckpt"
     AnnIndex.buildIvfPq(e.filter(col("vec_id") < 20), "vec_id", "embedding",
       dir, cents, cbs)
-    def land(lo: Long, hi: Long): Unit =
+    def landRange(lo: Long, hi: Long): Unit =
       e.filter(col("vec_id") >= lo && col("vec_id") < hi)
         .coalesce(1).write.mode("append").parquet(landing)
     def ingest(): Unit = {
@@ -198,9 +198,9 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.streamAppend(stream, "vec_id", "embedding", dir, ckpt,
         Trigger.AvailableNow()).awaitTermination()
     }
-    land(20, 40); ingest()
+    landRange(20, 40); ingest()
     AnnIndex.compact(spark, dir) // the production maintenance step
-    land(40, 60); ingest()       // resume from the same checkpoint
+    landRange(40, 60); ingest()  // resume from the same checkpoint
     val idx = AnnIndex.load(spark, dir)
     assert(idx.nrows == 60,
       s"compaction ate the first post-compact micro-batch: ${idx.batches}")
@@ -361,7 +361,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val ckpt = s"$root/ckpt"
     AnnIndex.buildIvfPq(e.filter(col("vec_id") < 20), "vec_id", "embedding",
       dir, cents, cbs)
-    def land(lo: Long, hi: Long): Unit =
+    def landRange(lo: Long, hi: Long): Unit =
       e.filter(col("vec_id") >= lo && col("vec_id") < hi)
         .coalesce(1).write.mode("append").parquet(landing)
     def ingest(): Unit = {
@@ -370,9 +370,9 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.streamAppend(stream, "vec_id", "embedding", dir, ckpt,
         Trigger.AvailableNow()).awaitTermination()
     }
-    land(20, 40); ingest()            // phase 1: one micro-batch
+    landRange(20, 40); ingest()       // phase 1: one micro-batch
     assert(AnnIndex.load(spark, dir).nrows == 40)
-    land(40, 60); ingest()            // restart from the same checkpoint
+    landRange(40, 60); ingest()       // restart from the same checkpoint
     val idx = AnnIndex.load(spark, dir)
     assert(idx.nrows == 60,
       s"resume double-applied or skipped a batch: ${idx.batches}")
@@ -400,7 +400,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val ckpt = s"$root/ckpt"
     AnnIndex.buildSq(e.filter(col("vec_id") < 20), "vec_id", "embedding",
       dir, m)
-    def land(lo: Long, hi: Long): Unit =
+    def landRange(lo: Long, hi: Long): Unit =
       e.filter(col("vec_id") >= lo && col("vec_id") < hi)
         .coalesce(1).write.mode("append").parquet(landing)
     def ingest(): Unit = {
@@ -409,9 +409,9 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.streamAppendSq(stream, "vec_id", "embedding", dir, ckpt,
         Trigger.AvailableNow()).awaitTermination()
     }
-    land(20, 40); ingest()
+    landRange(20, 40); ingest()
     assert(AnnIndex.loadSq(spark, dir).nrows == 40)
-    land(40, 60); ingest() // restart from the same checkpoint
+    landRange(40, 60); ingest() // restart from the same checkpoint
     val idx = AnnIndex.loadSq(spark, dir)
     assert(idx.nrows == 60,
       s"resume double-applied or skipped a batch: ${idx.batches}")
@@ -498,6 +498,14 @@ class AnnIndexSpec extends AnyFunSuite {
     }
     assert(q.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       s"pruned search silently pinned the caller's query frame: ${q.storageLevel}")
+    // a batch above the snapshot cap runs the operator plan over a pinned
+    // copy of the batch, never a cache of the caller's frame
+    val big = spark.range(AnnIndex.snapshotCollectMax + 1).select(
+      col("id").as("vec_id"), transform(sequence(lit(0), lit(dim - 1)),
+        j => when(j === col("id") % 4 * 2, 10.0f).otherwise(0.0f)).as("embedding"))
+    assert(AnnIndex.topK(idx, big, "vec_id", "embedding", k = 3, nprobe = 2)
+      .count() > 0)
+    assert(big.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     // and the SQ pruned path makes the same promise
     val sqDir = s"${tmpDir()}/sq"
     AnnIndex.buildSq(e, "vec_id", "embedding", sqDir,

@@ -12,7 +12,9 @@ import graft.sources.AnnIndex
   * plans ([[Pq.ivfPqSearch]], [[Sq.topK]]) return over the same opened
   * codes — exact ties, self-exclusion, duplicate query ids, zero norms,
   * k above the candidate count and tombstones included — and a
-  * malformed PQ code fails loudly. */
+  * malformed PQ code fails loudly. A batch one row above
+  * [[AnnIndex.snapshotCollectMax]] runs the operator plans themselves,
+  * its probing searches over a pinned batch. */
 class AnnServeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -85,11 +87,11 @@ class AnnServeSpec extends AnyFunSuite {
     assert(g == w, s"$what: kernel\n${g.mkString("\n")}\nreference\n${w.mkString("\n")}")
   }
 
-  /** Rows of `codes` in the cells any query of the batch probes — the
+  /** Rows of `codes` in the cells any query of `batch` probes — the
     * pruned operator plan's candidate set. */
-  private def probedCodes(codes: DataFrame, cellCol: String,
-                          nprobe: Int): DataFrame = {
-    val cells = queries.select(explode(nearestCentroids(col("embedding"),
+  private def probedCodes(codes: DataFrame, cellCol: String, nprobe: Int,
+                          batch: DataFrame = queries): DataFrame = {
+    val cells = batch.select(explode(nearestCentroids(col("embedding"),
       cents, nprobe))).distinct().collect().map(_.getInt(0))
     codes.filter(col(cellCol).isin(cells.map(Int.box): _*))
   }
@@ -202,6 +204,58 @@ class AnnServeSpec extends AnyFunSuite {
           .as("neighbor_id")), Seq("neighbor_id"), "left_semi"), queries,
           "vec_id", "embedding", cents, cbs, 200, 2))
     } finally prev.foreach { case (key, v) => spark.conf.set(key, v) }
+  }
+
+  test("at the snapshot cap the kernel serves; one row above it the operator plans do, with the same rows") {
+    val (pqDir, sqDir) = (s"${tmpDir()}/pq", s"${tmpDir()}/sq")
+    AnnIndex.buildIvfPq(corpus, "vec_id", "embedding", pqDir, cents, cbs)
+    AnnIndex.buildSq(corpus, "vec_id", "embedding", sqDir, zeroMinModel,
+      Some(cents))
+    val (pq, sq) = (AnnIndex.load(spark, pqDir), AnnIndex.loadSq(spark, sqDir))
+    val cap = AnnIndex.snapshotCollectMax
+    // distinct ids near clusters 0 and 1 only, so a one-cell probe
+    // leaves cells out
+    def batch(n: Int) = spark.range(n).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(dim - 1)), j =>
+        when(j === col("id") % 2 * 2, 10.0).otherwise(0.0) +
+          sin(col("id") * 7 + j)).as("embedding"))
+    val above = batch(cap + 1)
+    val probed = probedCodes(sq.codes, "cell", 1, above)
+    assert(probed.count() < sq.codes.count(), "the probe prunes nothing")
+    val allowedCodes = pq.codes.join(allowedIds.select(col("vec_id")
+      .as("neighbor_id")), Seq("neighbor_id"), "left_semi")
+    // (search, reference over the above-cap batch, pins its batch)
+    val cases = Seq[(String, DataFrame => DataFrame, DataFrame, Boolean)](
+      ("pruned topK", AnnIndex.topK(pq, _, "vec_id", "embedding", k = 3,
+        nprobe = 1),
+        Pq.ivfPqSearch(pq.codes, above, "vec_id", "embedding", cents, cbs, 3, 1),
+        true),
+      ("topKWhere", AnnIndex.topKWhere(pq, _, "vec_id", "embedding",
+        allowedIds, "vec_id", k = 3, nprobe = 1),
+        Pq.ivfPqSearch(allowedCodes, above, "vec_id", "embedding", cents, cbs,
+          3, 1), true),
+      ("flat topKSq", AnnIndex.topKSq(sq, _, "vec_id", "embedding", k = 3),
+        Sq.topK(above, sq.codes, "vec_id", "embedding", zeroMinModel, 3),
+        false),
+      ("pruned topKSq", AnnIndex.topKSq(sq, _, "vec_id", "embedding", k = 3,
+        nprobe = 1, prune = true),
+        Sq.topK(above, probed, "vec_id", "embedding", zeroMinModel, 3), true))
+    for ((what, search, reference, pinned) <- cases) {
+      // a query's neighbours do not depend on the rest of its batch, so
+      // the cap-sized batch's reference drops the last query
+      val want = reference.cache()
+      val atCap = search(batch(cap))
+      assert(atCap.queryExecution.analyzed.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+        s"$what at the cap: not the kernel's local relation")
+      assertSame(s"$what at the cap", atCap, want.filter(col("query_id") < cap))
+      val got = search(above)
+      assert(got.queryExecution.analyzed.collectLeaves().exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) == pinned,
+        s"$what above the cap: reads a pinned batch != $pinned")
+      assertSame(s"$what above the cap", got, want)
+      want.unpersist()
+    }
   }
 
   test("a malformed PQ code fails loudly, naming its row, instead of ranking first") {

@@ -15,10 +15,7 @@ import graft.sources.AnnIndex
   * regression gate rather than a bench observation — and (2) bounded
   * latency drift (median of the last block ≤ 3× the post-warmup first
   * block — loose enough for CI noise, tight enough to catch a
-  * per-serve leak). Also gates the above-cap query-snapshot scratch
-  * ROTATION: a long-lived driver issuing many large pruned batches
-  * must hold bounded scratch disk (newest `scratchRetain` landings),
-  * not accumulate until JVM exit. */
+  * per-serve leak). */
 class AnnServingSoakSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -88,42 +85,5 @@ class AnnServingSoakSpec extends AnyFunSuite {
     assert(tail <= head * 3,
       f"serving latency drifted: post-warmup median $head%.1f ms -> " +
         f"final-block median $tail%.1f ms")
-  }
-
-  test("above-cap query snapshots rotate: bounded scratch disk for a long-lived driver") {
-    // an above-cap batch (snapshotCollectMax = 8192) lands to scratch
-    // parquet; many landings must hold at most scratchRetain dirs
-    val big = spark.range(8193).select(col("id").as("vec_id"),
-      array(lit(1.0f), lit(2.0f)).as("embedding"))
-    val scratchRoot = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_scratch_${ProcessHandle.current().pid()}")
-    def landings(): Int =
-      Option(scratchRoot.list()).map(
-        _.count(_.startsWith("ann_query_snapshot_"))).getOrElse(0)
-    // a BURST younger than the grace window is never reclaimed — the
-    // rotation must not yank a landing from under an actively-consumed
-    // result (the default grace is 15 min)
-    var first: org.apache.spark.sql.DataFrame = null
-    var newest: org.apache.spark.sql.DataFrame = null
-    for (i <- 1 to AnnIndex.scratchRetain + 8) {
-      newest = AnnIndex.land(big, "vec_id", "embedding")
-      if (i == 1) first = newest
-    }
-    assert(landings() >= AnnIndex.scratchRetain + 8,
-      "rotation reclaimed a landing younger than the grace window")
-    assert(first.count() == 8193, "a within-grace result lost its backing")
-    // once past the grace window, the cap applies: only the newest
-    // scratchRetain survive
-    // the spec passes an explicit minAgeMs instead of mutating a
-    // process-wide knob — a parallel suite's landings keep the
-    // production grace window
-    newest = AnnIndex.land(big, "vec_id", "embedding",
-      minAgeMs = -1000)
-    assert(landings() <= AnnIndex.scratchRetain,
-      s"scratch landings not rotated: ${landings()} dirs on disk")
-    // the newest landing (the one a caller would still be consuming)
-    // survives the rotation
-    assert(newest.count() == 8193)
   }
 }

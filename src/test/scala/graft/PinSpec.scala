@@ -87,6 +87,19 @@ class PinSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft_pin_clean")
+    // a 4-dim, two-cell IVF-PQ index; a batch above the snapshot cap
+    // pins its rows for the pruned search's two reads
+    val annDir = out.resolve("ann").toString
+    val vecs = (n: Long) => spark.range(n).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(3)), j =>
+        when(j === col("id") % 2 * 2, 10.0).otherwise(0.0) + sin(col("id") + j))
+        .as("embedding"))
+    graft.sources.AnnIndex.buildIvfPq(vecs(40), "vec_id", "embedding", annDir,
+      Array(Array(1.0, 0, 0, 0), Array(0, 0, 1.0, 0)),
+      graft.operators.Pq.codebooks(Array.tabulate(4)(i =>
+        Array.tabulate(4)(j => (i * j % 3).toDouble)), m = 2))
+    val ann = graft.sources.AnnIndex.load(spark, annDir)
+    val bigBatch = vecs(graft.sources.AnnIndex.snapshotCollectMax + 1L)
     // warm-up invocation so lazily-initialized session state doesn't
     // count against the baseline
     def invoke(): Unit = {
@@ -108,6 +121,8 @@ class PinSpec extends AnyFunSuite {
       graft.sources.CsvSource.writeClean(flights.clean, out.resolve("clean").toString)
       graft.sources.CsvSource.writeQuarantine(flights.quarantine,
         out.resolve("quarantine").toString)
+      graft.sources.AnnIndex.topK(ann, bigBatch, "vec_id", "embedding", k = 2,
+        nprobe = 1).collect()
     }
     // A collection that does not depend on System.gc(), which a JVM run
     // with -XX:+DisableExplicitGC ignores: drop the only reference to a
@@ -125,8 +140,9 @@ class PinSpec extends AnyFunSuite {
     val base = sc.getPersistentRDDs.size
     (1 to 4).foreach(_ => invoke())
     // every result frame above is now unreachable — the pins inside
-    // prCurve/calibration/resampleKeep (and their prefix-scan internals)
-    // and the clean/quarantine split of cleanFile
+    // prCurve/calibration/resampleKeep (and their prefix-scan internals),
+    // the clean/quarantine split of cleanFile and the above-cap topK's
+    // query batch
     // must be ContextCleaner-released on GC, not accumulate per call
     val deadline = System.currentTimeMillis() + 30000
     var live = sc.getPersistentRDDs.size
