@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -580,57 +580,12 @@ object Queries {
   private val q44 = Q("q44_ann_ivf",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      // bounded driver hop: 16 codebook rows, deterministic order
-      val cb = e.filter(col("vec_id") < 16).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
       Similarity.ivfTopKWithCentroids(e.filter(col("vec_id") % 50 === 0), e,
-        "vec_id", "embedding", cb, k = 3, nprobe = 4)
+        "vec_id", "embedding", QueriesText.unitCodebook(e, 16), k = 3, nprobe = 4)
     },
-    Some("""WITH cb AS (
-              SELECT vec_id + 1 AS ci,
-                     CASE WHEN n = 0 THEN vd ELSE list_transform(vd, x -> x / n) END AS cv
-              FROM (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
-                           sqrt(list_sum(list_transform(embedding,
-                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n
-                    FROM embeddings WHERE vec_id < 16)),
-            ev AS (
-              SELECT vec_id, embedding,
-                     list_sum(list_transform(embedding,
-                       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-              FROM embeddings),
-            dots AS (
-              SELECT ev.vec_id, cb.ci,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(ev.embedding[i] AS DOUBLE) * cb.cv[i])) *
-                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
-              FROM ev CROSS JOIN cb),
-            ranked AS (
-              SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-                       ORDER BY dp DESC, ci) AS rn
-              FROM dots),
-            ccell AS (SELECT vec_id AS neighbor_id, ci AS cell FROM ranked WHERE rn = 1),
-            qcell AS (SELECT vec_id AS query_id, ci AS cell FROM ranked
-                      WHERE rn <= 4 AND vec_id % 50 = 0),
-            sc AS (
-              SELECT q.query_id, c.neighbor_id,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))) /
-                     (sqrt(qe.nv) * sqrt(ce.nv)) AS cos
-              FROM qcell q
-              JOIN ccell c USING (cell)
-              JOIN ev qe ON qe.vec_id = q.query_id
-              JOIN ev ce ON ce.vec_id = c.neighbor_id
-              WHERE q.query_id <> c.neighbor_id),
-            r AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos DESC, neighbor_id) AS rn
-              FROM sc)
-            SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-                   CAST(rn AS INT) AS rank
-            FROM r WHERE rn <= 3"""))
+    Some("WITH " + QueriesText.ivfDotsCtes("embeddings WHERE vec_id < 16") +
+      ",\n            " + QueriesText.ivfProbeCtes("rn <= 4 AND vec_id % 50 = 0") +
+      QueriesText.cosTop3Select))
 
   // ---------------------------------------------------------------- q98
   // IVF with a TRAINED quantizer, end-to-end: oracle-mode spherical
@@ -651,7 +606,21 @@ object Queries {
         e.filter(col("vec_id") % 50 === 0), e, "vec_id", "embedding", cb,
         k = 3, nprobe = 2)
     },
-    Some("""WITH nv0 AS (
+    Some {
+      // Lloyd round r: assign the sample to c(r-1), sum each cell's
+      // micro-unit vectors, renormalize into c(r)
+      def round(r: Int): String = s"""d$r AS (SELECT sv.vec_id, sv.vq, c.cell,
+                          list_sum(list_transform(range(1, 65),
+                            i -> sv.v[i] * c.cv[i])) AS dp
+                   FROM sv CROSS JOIN c${r - 1} c),
+            a$r AS (SELECT vec_id, vq, cell FROM
+                    (SELECT vec_id, vq, cell, row_number() OVER
+                       (PARTITION BY vec_id ORDER BY dp DESC, cell) AS rn FROM d$r)
+                   WHERE rn = 1),
+            s$r AS (SELECT cell, i, sum(vq[i]) AS sq
+                   FROM a$r, range(1, 65) t(i) GROUP BY cell, i),
+            """ + QueriesText.centroidUpdateCtes(r)
+      s"""WITH nv0 AS (
               SELECT vec_id,
                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
                      sqrt(list_sum(list_transform(embedding,
@@ -670,71 +639,8 @@ object Queries {
             c0 AS (SELECT cell, v AS cv FROM
                     (SELECT row_number() OVER (ORDER BY h) AS cell, v FROM sv)
                    WHERE cell <= 8),
-            d1 AS (SELECT sv.vec_id, sv.vq, c.cell,
-                          list_sum(list_transform(range(1, 65),
-                            i -> sv.v[i] * c.cv[i])) AS dp
-                   FROM sv CROSS JOIN c0 c),
-            a1 AS (SELECT vec_id, vq, cell FROM
-                    (SELECT vec_id, vq, cell, row_number() OVER
-                       (PARTITION BY vec_id ORDER BY dp DESC, cell) AS rn FROM d1)
-                   WHERE rn = 1),
-            s1 AS (SELECT cell, i, sum(vq[i]) AS sq
-                   FROM a1, range(1, 65) t(i) GROUP BY cell, i),
-            l1 AS (SELECT cell, list(CAST(sq AS DOUBLE) ORDER BY i) AS sl
-                   FROM s1 GROUP BY cell),
-            n1 AS (SELECT cell, sl,
-                          sqrt(list_sum(list_transform(sl, x -> x * x))) AS nn
-                   FROM l1),
-            c1 AS (SELECT p.cell,
-                          COALESCE(CASE WHEN n.nn = 0 THEN n.sl
-                                        ELSE list_transform(n.sl, x -> x / n.nn) END,
-                                   p.cv) AS cv
-                   FROM c0 p LEFT JOIN n1 n ON p.cell = n.cell),
-            d2 AS (SELECT sv.vec_id, sv.vq, c.cell,
-                          list_sum(list_transform(range(1, 65),
-                            i -> sv.v[i] * c.cv[i])) AS dp
-                   FROM sv CROSS JOIN c1 c),
-            a2 AS (SELECT vec_id, vq, cell FROM
-                    (SELECT vec_id, vq, cell, row_number() OVER
-                       (PARTITION BY vec_id ORDER BY dp DESC, cell) AS rn FROM d2)
-                   WHERE rn = 1),
-            s2 AS (SELECT cell, i, sum(vq[i]) AS sq
-                   FROM a2, range(1, 65) t(i) GROUP BY cell, i),
-            l2 AS (SELECT cell, list(CAST(sq AS DOUBLE) ORDER BY i) AS sl
-                   FROM s2 GROUP BY cell),
-            n2 AS (SELECT cell, sl,
-                          sqrt(list_sum(list_transform(sl, x -> x * x))) AS nn
-                   FROM l2),
-            c2 AS (SELECT p.cell,
-                          COALESCE(CASE WHEN n.nn = 0 THEN n.sl
-                                        ELSE list_transform(n.sl, x -> x / n.nn) END,
-                                   p.cv) AS cv
-                   FROM c1 p LEFT JOIN n2 n ON p.cell = n.cell),
-            d3 AS (SELECT sv.vec_id, sv.vq, c.cell,
-                          list_sum(list_transform(range(1, 65),
-                            i -> sv.v[i] * c.cv[i])) AS dp
-                   FROM sv CROSS JOIN c2 c),
-            a3 AS (SELECT vec_id, vq, cell FROM
-                    (SELECT vec_id, vq, cell, row_number() OVER
-                       (PARTITION BY vec_id ORDER BY dp DESC, cell) AS rn FROM d3)
-                   WHERE rn = 1),
-            s3 AS (SELECT cell, i, sum(vq[i]) AS sq
-                   FROM a3, range(1, 65) t(i) GROUP BY cell, i),
-            l3 AS (SELECT cell, list(CAST(sq AS DOUBLE) ORDER BY i) AS sl
-                   FROM s3 GROUP BY cell),
-            n3 AS (SELECT cell, sl,
-                          sqrt(list_sum(list_transform(sl, x -> x * x))) AS nn
-                   FROM l3),
-            c3 AS (SELECT p.cell,
-                          COALESCE(CASE WHEN n.nn = 0 THEN n.sl
-                                        ELSE list_transform(n.sl, x -> x / n.nn) END,
-                                   p.cv) AS cv
-                   FROM c2 p LEFT JOIN n3 n ON p.cell = n.cell),
-            ev AS (
-              SELECT vec_id, embedding,
-                     list_sum(list_transform(embedding,
-                       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-              FROM embeddings),
+            ${(1 to 3).map(round).mkString(",\n            ")},
+            ${QueriesText.evCte()},
             dots AS (
               SELECT ev.vec_id, c.cell,
                      list_sum(list_transform(range(1, 65),
@@ -748,40 +654,29 @@ object Queries {
             ccell AS (SELECT vec_id AS neighbor_id, cell FROM ranked WHERE rn = 1),
             qcell AS (SELECT vec_id AS query_id, cell FROM ranked
                       WHERE rn <= 2 AND vec_id % 50 = 0),
-            sc AS (
-              SELECT q.query_id, c.neighbor_id,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))) /
-                     (sqrt(qe.nv) * sqrt(ce.nv)) AS cos
-              FROM qcell q
-              JOIN ccell c USING (cell)
-              JOIN ev qe ON qe.vec_id = q.query_id
-              JOIN ev ce ON ce.vec_id = c.neighbor_id
-              WHERE q.query_id <> c.neighbor_id),
-            r AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos DESC, neighbor_id) AS rn
-              FROM sc)
-            SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-                   CAST(rn AS INT) AS rank
-            FROM r WHERE rn <= 3"""))
+            ${QueriesText.probeCosCte("sc")},
+            ${QueriesText.cosRankCte("sc")}""" + QueriesText.cosTop3Select
+    })
+
+  /** The (total, n, gid) orders aggregates q45 and q52 group by. */
+  private def orderTotals(g: RelationalGroupedDataset): DataFrame = g.agg(
+    sum(col("o_totalprice").cast(DecimalType(18, 2))).cast(DoubleType).as("total"),
+    count(lit(1)).as("n"),
+    grouping_id().cast(LongType).as("gid"))
+
+  private lazy val orderTotalsSql: String = """SELECT o_orderstatus, o_orderpriority,
+                   CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
+                   count(*) AS n,
+                   CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
+            FROM orders"""
 
   // ---------------------------------------------------------------- q45
   // OLAP superset — ROLLUP with grouping id: subtotal + grand-total rows
   // (Catalyst expands to a single-shuffle Expand+Aggregate).
   private val q45 = Q("q45_rollup",
-    (s, dir) => t(s, dir, "orders")
-      .rollup(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(
-        sum(col("o_totalprice").cast(DecimalType(18, 2))).cast(DoubleType).as("total"),
-        count(lit(1)).as("n"),
-        grouping_id().cast(LongType).as("gid")),
-    Some("""SELECT o_orderstatus, o_orderpriority,
-                   CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
-                   count(*) AS n,
-                   CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
-            FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)"""))
+    (s, dir) => orderTotals(t(s, dir, "orders")
+      .rollup(col("o_orderstatus"), col("o_orderpriority"))),
+    Some(orderTotalsSql + " GROUP BY ROLLUP (o_orderstatus, o_orderpriority)"))
 
   // ---------------------------------------------------------------- q46
   // OLAP superset — exact interpolated quantiles per group WITHOUT a
@@ -821,20 +716,12 @@ object Queries {
   // cube specialize): chosen combinations only, still one Expand+Aggregate
   // pass and a single shuffle.
   private val q52 = Q("q52_grouping_sets",
-    (s, dir) => t(s, dir, "orders")
+    (s, dir) => orderTotals(t(s, dir, "orders")
       .groupingSets(
         Seq(Seq(col("o_orderstatus"), col("o_orderpriority")),
           Seq(col("o_orderstatus")), Seq()),
-        col("o_orderstatus"), col("o_orderpriority"))
-      .agg(
-        sum(col("o_totalprice").cast(DecimalType(18, 2))).cast(DoubleType).as("total"),
-        count(lit(1)).as("n"),
-        grouping_id().cast(LongType).as("gid")),
-    Some("""SELECT o_orderstatus, o_orderpriority,
-                   CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
-                   count(*) AS n,
-                   CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
-            FROM orders
+        col("o_orderstatus"), col("o_orderpriority"))),
+    Some(orderTotalsSql + """
             GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
                                     (o_orderstatus), ())"""))
 
@@ -1076,7 +963,23 @@ object Queries {
         .select(col("flight_number"), col("delay_minutes"), col("reason"),
           col("eligible"))
     },
-    Some("""WITH flights AS (
+    Some(eligibilityOracle(
+      """SELECT 'FL' || CAST(o_orderkey AS VARCHAR) AS flight_number,
+                     o_orderkey % 17 = 3 AS db_err
+              FROM orders WHERE o_orderkey % 2 = 0""",
+      keys = "flight_number", dbErr = true)))
+
+  /** The DuckDB replay of checkRaw over the q50-shaped flights, for the
+    * requests the `requests` SQL selects (q50 batch, q118 streamed):
+    * lookup, parse, the reference's reason-code order and the rounded
+    * delay, output keyed by `keys`. With `dbErr`, a request's `db_err`
+    * column marks a lookup failure. */
+  private def eligibilityOracle(requests: String, keys: String,
+                                dbErr: Boolean): String = {
+    val rCols = (keys.split(", ").map("r." + _) ++
+      (if (dbErr) Seq("r.db_err") else Nil)).mkString(", ")
+    val errCase = if (dbErr) "WHEN db_err THEN 'db_query_error'\n                          " else ""
+    s"""WITH flights AS (
               SELECT 'FL' || CAST(o_orderkey AS VARCHAR) AS flight_number,
                      strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS s,
                      CASE WHEN o_orderkey % 11 = 0 THEN ''
@@ -1085,31 +988,29 @@ object Queries {
                                         '%Y-%m-%d %H:%M:%S') END AS a
               FROM orders WHERE o_orderkey % 3 <> 0),
             requests AS (
-              SELECT 'FL' || CAST(o_orderkey AS VARCHAR) AS flight_number,
-                     o_orderkey % 17 = 3 AS db_err
-              FROM orders WHERE o_orderkey % 2 = 0),
+              $requests),
             j AS (
-              SELECT r.flight_number, r.db_err,
+              SELECT $rCols,
                      f.flight_number IS NOT NULL AS found, f.s, f.a,
                      try_strptime(f.s, '%Y-%m-%d %H:%M:%S') AS st,
                      try_strptime(f.a, '%Y-%m-%d %H:%M:%S') AS act
               FROM requests r LEFT JOIN flights f ON r.flight_number = f.flight_number),
             judged AS (
-              SELECT flight_number,
-                     CASE WHEN db_err THEN 'db_query_error'
-                          WHEN NOT found THEN 'flight_not_found'
+              SELECT $keys,
+                     CASE ${errCase}WHEN NOT found THEN 'flight_not_found'
                           WHEN s IS NULL OR s = '' OR a IS NULL OR a = '' THEN 'missing_time_data'
                           WHEN st IS NULL OR act IS NULL THEN 'invalid_time_format'
                           WHEN floor(date_diff('second', st, act) / 60.0 + 0.5) >= 120 THEN 'delay_threshold_met'
                           ELSE 'delay_below_threshold' END AS reason,
                      CAST(floor(date_diff('second', st, act) / 60.0 + 0.5) AS BIGINT) AS delay
               FROM j)
-            SELECT flight_number,
+            SELECT $keys,
                    CASE WHEN reason IN ('delay_threshold_met','delay_below_threshold')
                         THEN delay END AS delay_minutes,
                    reason,
                    reason = 'delay_threshold_met' AS eligible
-            FROM judged"""))
+            FROM judged"""
+  }
 
   // ---------------------------------------------------------------- q51
   // M8 complete — config-driven staging → pre-fact → dimension (SCD2) →
@@ -1438,6 +1339,15 @@ object Queries {
             FROM events JOIN customer ON user_id = c_custkey
             GROUP BY 1, 2"""))
 
+  /** `b` and `g`: the 20 equi-width o_totalprice bins over [0, 500000)
+    * (edges clamped) and their counts — q93's histogram, q103's input. */
+  private lazy val orderPriceBinsCtes: String = """WITH b AS (
+              SELECT least(19, greatest(0,
+                       CAST(floor((o_totalprice - 0.0) / 25000.0) AS INT)))
+                       AS bin
+              FROM orders WHERE o_totalprice IS NOT NULL),
+            g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY bin)"""
+
   // ---------------------------------------------------------------- q93
   // Equi-width histogram (distribution profiling): 20 buckets over
   // order totals, out-of-range clamped to the edge buckets so outliers
@@ -1448,12 +1358,7 @@ object Queries {
   private val q93 = Q("q93_histogram",
     (s, dir) => Profile.histogram(t(s, dir, "orders"), col("o_totalprice"),
       lo = 0.0, hi = 500000.0, bins = 20),
-    Some("""WITH b AS (
-              SELECT least(19, greatest(0,
-                       CAST(floor((o_totalprice - 0.0) / 25000.0) AS INT)))
-                       AS bin
-              FROM orders WHERE o_totalprice IS NOT NULL),
-            g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY bin)
+    Some(orderPriceBinsCtes + """
             SELECT bin,
                    round_even(0.0 + bin * 25000.0, 6) AS bin_lo,
                    round_even(0.0 + (bin + 1) * 25000.0, 6) AS bin_hi,
@@ -1477,12 +1382,7 @@ object Queries {
         lo = 0.0, hi = 500000.0, bins = 20).select(col("bin"), col("n")),
       lo = 0.0, hi = 500000.0, bins = 20,
       qs = Seq(0.25, 0.5, 0.9, 0.99)),
-    Some("""WITH b AS (
-              SELECT least(19, greatest(0,
-                       CAST(floor((o_totalprice - 0.0) / 25000.0) AS INT)))
-                       AS bin
-              FROM orders WHERE o_totalprice IS NOT NULL),
-            g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY bin),
+    Some(orderPriceBinsCtes + """,
             c AS (SELECT bin, n,
                          sum(n) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cum,
                          sum(n) OVER () AS total
@@ -1582,39 +1482,11 @@ object Queries {
   // (stream_parity.json) additionally pins sink == batch bit-parity.
   private val q118 = Q("q118_stream_eligibility",
     (s, dir) => graft.streaming.StreamHarness.eligibilitySinkRun(s, dir)._1,
-    Some("""WITH flights AS (
-              SELECT 'FL' || CAST(o_orderkey AS VARCHAR) AS flight_number,
-                     strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS s,
-                     CASE WHEN o_orderkey % 11 = 0 THEN ''
-                          WHEN o_orderkey % 11 = 1 THEN 'not-a-timestamp'
-                          ELSE strftime(o_orderdate + (o_orderkey % 300) * INTERVAL 1 MINUTE,
-                                        '%Y-%m-%d %H:%M:%S') END AS a
-              FROM orders WHERE o_orderkey % 3 <> 0),
-            requests AS (
-              SELECT 'P' || CAST(o_orderkey AS VARCHAR) AS passenger_id,
+    Some(eligibilityOracle(
+      """SELECT 'P' || CAST(o_orderkey AS VARCHAR) AS passenger_id,
                      'FL' || CAST(o_orderkey AS VARCHAR) AS flight_number
-              FROM orders WHERE o_orderkey % 2 = 0 AND o_orderkey % 50 <> 0),
-            j AS (
-              SELECT r.passenger_id, r.flight_number,
-                     f.flight_number IS NOT NULL AS found, f.s, f.a,
-                     try_strptime(f.s, '%Y-%m-%d %H:%M:%S') AS st,
-                     try_strptime(f.a, '%Y-%m-%d %H:%M:%S') AS act
-              FROM requests r LEFT JOIN flights f ON r.flight_number = f.flight_number),
-            judged AS (
-              SELECT passenger_id, flight_number,
-                     CASE WHEN NOT found THEN 'flight_not_found'
-                          WHEN s IS NULL OR s = '' OR a IS NULL OR a = '' THEN 'missing_time_data'
-                          WHEN st IS NULL OR act IS NULL THEN 'invalid_time_format'
-                          WHEN floor(date_diff('second', st, act) / 60.0 + 0.5) >= 120 THEN 'delay_threshold_met'
-                          ELSE 'delay_below_threshold' END AS reason,
-                     CAST(floor(date_diff('second', st, act) / 60.0 + 0.5) AS BIGINT) AS delay
-              FROM j)
-            SELECT passenger_id, flight_number,
-                   CASE WHEN reason IN ('delay_threshold_met','delay_below_threshold')
-                        THEN delay END AS delay_minutes,
-                   reason,
-                   reason = 'delay_threshold_met' AS eligible
-            FROM judged"""))
+              FROM orders WHERE o_orderkey % 2 = 0 AND o_orderkey % 50 <> 0""",
+      keys = "passenger_id, flight_number", dbErr = false)))
 
   /** All registered queries, in declaration order. */
   val all: Seq[Q] = Seq(q01, q02, q03, q04, q05, q06, q07, q08, q09, q10, q11,

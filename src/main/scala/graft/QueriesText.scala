@@ -34,6 +34,66 @@ object QueriesText {
         .withColumn("doc_id", col("doc_id") + 10000000L))
   }
 
+  /** `d`: the SQL twin of [[docsWithDups]]. */
+  private lazy val dupDocsCte: String = """d AS (
+              SELECT doc_id, text FROM documents
+              UNION ALL
+              SELECT doc_id + 10000000, text FROM documents WHERE doc_id % 5 = 0)"""
+
+  /** The first 60 docs of [[docsWithDups]] — the bounded slice q31, q62,
+    * q63 and q175 compare all pairs of. */
+  private def dupSlice(s: SparkSession, dir: String): DataFrame =
+    docsWithDups(s, dir).filter(col("doc_id") % 10000000L < 60)
+
+  /** The slice's 5-shingle Jaccard pairs at 0.2 (q31, q62, q63). */
+  private def slicePairs(docs: DataFrame): DataFrame =
+    TextDedup.ngramJaccardPairs(docs, "text", "doc_id",
+      shingleSize = 5, threshold = 0.2)
+
+  /** `d` (the [[dupSlice]] rows, carrying `cols`) and `sh` (each doc's
+    * distinct 5-char shingles). */
+  private def sliceShingleCtes(cols: String = ""): String =
+    s"""d AS (
+              SELECT doc_id, text$cols FROM documents WHERE doc_id < 60
+              UNION ALL
+              SELECT doc_id + 10000000, text$cols FROM documents
+              WHERE doc_id % 5 = 0 AND doc_id < 60),
+            sh AS (
+              SELECT doc_id,
+                     list_distinct(list_transform(
+                       range(1, greatest(len(s) - 4, 1) + 1),
+                       i -> substr(s, i, 5))) AS shingles
+              FROM (SELECT doc_id, lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS s FROM d))"""
+
+  /** `e` (the (id_a, id_b) rows of `pairs` in both directions) and
+    * `reach` (their transitive closure): the recursive components every
+    * near-dup oracle resolves (q62, q63, q72, q91, q110, q122). */
+  private def reachCtes(pairs: String): String =
+    s"""e AS (SELECT id_a AS a, id_b AS b FROM $pairs
+                  UNION SELECT id_b, id_a FROM $pairs),
+            reach(a, b) AS (
+              SELECT a, b FROM e
+              UNION
+              SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a)"""
+
+  /** `pairs` (the slice's pairs at Jaccard >= 0.2) and their
+    * [[reachCtes]]: q62, q63. */
+  private lazy val slicePairReachCtes: String = """pairs AS (
+              SELECT a.doc_id AS id_a, b.doc_id AS id_b
+              FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+              WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
+                      len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.2),
+            """ + reachCtes("pairs")
+
+  /** `tk`: the whitespace tokens of each `src` row's lowercased, trimmed
+    * text — the SQL of the TextFunctions tokenizer. */
+  private def tokensCte(src: String): String =
+    s"""tk AS (
+              SELECT doc_id,
+                     list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+                                 t -> len(t) > 0) AS tk
+              FROM $src)"""
+
   // ---------------------------------------------------------------- q25
   // Language ID via stopword-hit heuristic.
   private val q25 = Q("q25_lang_id",
@@ -62,16 +122,20 @@ object QueriesText {
 
   // ---------------------------------------------------------------- q26
   // Quality scoring (length / punctuation / stopword blend).
-  private val q26 = Q("q26_quality_score",
-    (s, dir) => t(s, dir, "documents")
-      .select(col("doc_id"), TF.qualityScore(col("text")).as("quality")),
-    Some("""WITH x AS (
+  /** `x`: each doc's tokens, char count and punctuation count — the
+    * inputs of the qualityScore replay (q26, q84). */
+  private lazy val qualityTokensCte: String = """x AS (
               SELECT doc_id, text,
                      list_filter(string_split_regex(lower(trim(text)), '\s+'),
                                  t -> len(t) > 0) AS tk,
                      CAST(length(text) AS DOUBLE) AS chars,
                      CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE) AS punct
-              FROM documents),
+              FROM documents)"""
+
+  private val q26 = Q("q26_quality_score",
+    (s, dir) => t(s, dir, "documents")
+      .select(col("doc_id"), TF.qualityScore(col("text")).as("quality")),
+    Some("WITH " + qualityTokensCte + """,
             y AS (
               SELECT doc_id,
                      CAST(len(tk) AS DOUBLE) AS ntok, chars, punct,
@@ -174,15 +238,7 @@ object QueriesText {
       .groupBy(col("fp")).agg(count(lit(1)).as("n_docs"),
         min(col("doc_id")).as("min_doc_id"))
       .filter(col("n_docs") > 1),
-    Some("""WITH d AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 10000000, text FROM documents WHERE doc_id % 5 = 0),
-            tk AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM d),
+    Some("WITH " + dupDocsCte + ",\n            " + tokensCte("d") + """,
             fp AS (
               SELECT doc_id,
                      list_reduce(list_prepend('', list_transform(tk, t -> md5(t))),
@@ -195,10 +251,7 @@ object QueriesText {
   // Exact-duplicate groups via content key.
   private val q29 = Q("q29_exact_dup_docs",
     (s, dir) => TextDedup.exactDupGroups(docsWithDups(s, dir), "text"),
-    Some("""WITH d AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 10000000, text FROM documents WHERE doc_id % 5 = 0)
+    Some("WITH " + dupDocsCte + """
             SELECT md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS content_key,
                    count(*) AS dup_count
             FROM d GROUP BY 1 HAVING count(*) > 1"""))
@@ -261,6 +314,13 @@ object QueriesText {
                        len(list_distinct(list_concat(sha, shb))) AS jaccard
               FROM est)"""
 
+    /** `WITH RECURSIVE` [[minhashCtes]], the verified pairs `p`
+      * (Jaccard >= 0.8) and their [[reachCtes]]. */
+    def nearDupReachCtes(p: String): String =
+      s"""WITH RECURSIVE $minhashCtes,
+            $p AS (SELECT id_a, id_b FROM ver WHERE jaccard >= 0.8),
+            """ + reachCtes(p)
+
     /** DuckDB rendering of TextFunctions.qualityScore over `textExpr` —
       * kept in lockstep with the q26 oracle formula. */
     def qualitySql(textExpr: String): String =
@@ -303,16 +363,19 @@ object QueriesText {
   // [[graft.operators.SessionFrameMemo]] (MemoSpec), not bespoke
   // registry code.
   private val pairsMemo = new SessionFrameMemo
+
+  /** The q30 MinHash-LSH pair pipeline over `docs` (31-bit oracle-mode
+    * hashing, 9-char shingles, 8 bands x 4 rows, Jaccard >= 0.8). */
+  private def minHashPairs(docs: DataFrame): DataFrame =
+    TextDedup.minHashNearDups31(docs, "text", "doc_id",
+      threshold = 0.8, shingleSize = 9, bands = 8, rowsPerBand = 4)
   private def nearDupPairs(s: SparkSession, dir: String): DataFrame =
     pairsMemo.getOrCompute(s, dir) {
-      Pin.data(TextDedup.minHashNearDups31(docsWithDups(s, dir),
-        "text", "doc_id",
-        threshold = 0.8, shingleSize = 9, bands = 8, rowsPerBand = 4))
+      Pin.data(minHashPairs(docsWithDups(s, dir)))
     }
 
   private val q30 = Q("q30_minhash_neardup",
-    (s, dir) => TextDedup.minHashNearDups31(docsWithDups(s, dir), "text", "doc_id",
-      threshold = 0.8, shingleSize = 9, bands = 8, rowsPerBand = 4),
+    (s, dir) => minHashPairs(docsWithDups(s, dir)),
     Some(s"""WITH ${SketchSql.minhashCtes}
             SELECT id_a, id_b, round(jaccard, 6) AS jaccard
             FROM ver WHERE jaccard >= 0.8"""))
@@ -321,20 +384,8 @@ object QueriesText {
   // Brute-force n-gram Jaccard pairs on a bounded slice (the oracle for
   // LSH): doc_id < 60 keeps the cross product tiny at any SF.
   private val q31 = Q("q31_ngram_jaccard",
-    (s, dir) => TextDedup.ngramJaccardPairs(
-      docsWithDups(s, dir).filter(col("doc_id") % 10000000L < 60),
-      "text", "doc_id", shingleSize = 5, threshold = 0.2),
-    Some("""WITH d AS (
-              SELECT doc_id, text FROM documents WHERE doc_id < 60
-              UNION ALL
-              SELECT doc_id + 10000000, text FROM documents
-              WHERE doc_id % 5 = 0 AND doc_id < 60),
-            sh AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                       range(1, greatest(len(s) - 4, 1) + 1),
-                       i -> substr(s, i, 5))) AS shingles
-              FROM (SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS s FROM d)),
+    (s, dir) => slicePairs(dupSlice(s, dir)),
+    Some(s"""WITH ${sliceShingleCtes()},
             pairs AS (
               SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                      CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
@@ -356,10 +407,7 @@ object QueriesText {
         s"CASE WHEN sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) >= 0 THEN (1::BIGINT << $j) ELSE 0 END AS b$j")
         .mkString(", ")
       val packed = (0 until 60).map(j => s"b$j").mkString(" + ")
-      s"""WITH d AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 10000000, text FROM documents WHERE doc_id % 5 = 0),
+      s"""WITH $dupDocsCte,
             tok AS (
               SELECT doc_id, unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
                                                 t -> len(t) > 0)) AS t
@@ -441,6 +489,23 @@ object QueriesText {
                          i -> CAST(s.embedding[i] AS DOUBLE) * pl.p[i])) AS dp
                 FROM $src s CROSS JOIN pl)
               GROUP BY $idAs, t)"""
+
+    /** `bc` (every corpus vector's bucket per table), `cnt` and `cok`
+      * (the corpus rows of buckets holding at most 10,000 vectors). */
+    lazy val cappedCorpusCtes: String =
+      bucketCte("bc", "embeddings", "neighbor_id") + """,
+            cnt AS (SELECT bucket, count(*) AS n FROM bc GROUP BY bucket),
+            cok AS (SELECT bc.neighbor_id, bc.bucket
+                    FROM bc JOIN cnt USING (bucket) WHERE cnt.n <= 10000)"""
+
+    /** `bq` (each `qs` query's buckets), [[cappedCorpusCtes]] and `cand`
+      * (the distinct capped-bucket (query, neighbor) pairs). */
+    lazy val lshCandCtes: String =
+      bucketCte("bq", "qs", "query_id") + ",\n            " + cappedCorpusCtes + """,
+            cand AS (
+              SELECT DISTINCT q.query_id, c.neighbor_id
+              FROM bq q JOIN cok c USING (bucket)
+              WHERE q.query_id <> c.neighbor_id)"""
   }
 
   // ---------------------------------------------------------------- q34
@@ -455,15 +520,7 @@ object QueriesText {
     },
     Some(s"""WITH pl(t, pli, p) AS (VALUES ${PlaneSql.planeValues(8, 8, 64, 42L)}),
             qs AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
-            ${PlaneSql.bucketCte("bq", "qs", "query_id")},
-            ${PlaneSql.bucketCte("bc", "embeddings", "neighbor_id")},
-            cnt AS (SELECT bucket, count(*) AS n FROM bc GROUP BY bucket),
-            cok AS (SELECT bc.neighbor_id, bc.bucket
-                    FROM bc JOIN cnt USING (bucket) WHERE cnt.n <= 10000),
-            cand AS (
-              SELECT DISTINCT q.query_id, c.neighbor_id
-              FROM bq q JOIN cok c USING (bucket)
-              WHERE q.query_id <> c.neighbor_id),
+            ${PlaneSql.lshCandCtes},
             sc AS (
               SELECT cand.query_id, cand.neighbor_id,
                      ${PlaneSql.cosSql("qe.embedding", "ce.embedding")} AS cos
@@ -479,6 +536,25 @@ object QueriesText {
                    CAST(rn AS INT) AS rank
             FROM r WHERE rn <= 3"""))
 
+  /** The embeddings plus a copy of every 20th vector (id + 10,000,000)
+    * with its first component nudged by 0.05: planted near-dups at
+    * cosine ~0.99 (q35, q80, q99). */
+  private def perturbedCorpus(e: DataFrame): DataFrame =
+    e.unionByName(e.filter(col("vec_id") % 20 === 0)
+      .withColumn("vec_id", col("vec_id") + 10000000L)
+      .withColumn("embedding",
+        transform(col("embedding"), (x, i) =>
+          when(i === 0, x + lit(0.05f)).otherwise(x))))
+
+  /** `corp`: [[perturbedCorpus]] in SQL, carrying `cols`. */
+  private def perturbedCorpusCte(cols: String = ""): String =
+    s"""corp AS (
+              SELECT vec_id, embedding$cols FROM embeddings
+              UNION ALL
+              SELECT vec_id + 10000000,
+                     list_concat([embedding[1] + CAST(0.05 AS FLOAT)], embedding[2:])$cols
+              FROM embeddings WHERE vec_id % 20 = 0)"""
+
   // ---------------------------------------------------------------- q35
   // Embedding-cosine near-duplicate pairs via LSH buckets; same embedded
   // plane literals, window bucket cap, pair self-join and cosine verify
@@ -488,21 +564,11 @@ object QueriesText {
       // random embeddings have no natural near-dups — inject a perturbed
       // copy of every 20th vector (one component nudged: cosine ~0.99).
       val e = t(s, dir, "embeddings")
-      val perturbed = e.filter(col("vec_id") % 20 === 0)
-        .withColumn("vec_id", col("vec_id") + 10000000L)
-        .withColumn("embedding",
-          transform(col("embedding"), (x, i) =>
-            when(i === 0, x + lit(0.05f)).otherwise(x)))
-      Similarity.embeddingNearDups(e.unionByName(perturbed),
+      Similarity.embeddingNearDups(perturbedCorpus(e),
         "vec_id", "embedding", threshold = 0.9)
     },
     Some(s"""WITH pl(t, pli, p) AS (VALUES ${PlaneSql.planeValues(8, 8, 64, 42L)}),
-            corp AS (
-              SELECT vec_id, embedding FROM embeddings
-              UNION ALL
-              SELECT vec_id + 10000000,
-                     list_concat([embedding[1] + CAST(0.05 AS FLOAT)], embedding[2:])
-              FROM embeddings WHERE vec_id % 20 = 0),
+            ${perturbedCorpusCte()},
             ${PlaneSql.bucketCte("bk", "corp", "vid")},
             capped AS (
               SELECT vid, bucket FROM (
@@ -607,11 +673,7 @@ object QueriesText {
       .select(col("doc_id"),
         round(TF.dupNgramFraction(col("text"), 2), 6).as("dup_bigram_frac"))
       .withColumn("repetitive", col("dup_bigram_frac") > 0.2),
-    Some("""WITH tk AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
+    Some("WITH " + tokensCte("documents") + """,
             f AS (
               SELECT doc_id,
                      CASE WHEN len(tk) < 2 THEN 0.0
@@ -780,35 +842,12 @@ object QueriesText {
   // The oracle computes the same components with a recursive CTE.
   private val q62 = Q("q62_dup_components",
     (s, dir) => {
-      val pairs = TextDedup.ngramJaccardPairs(
-        docsWithDups(s, dir).filter(col("doc_id") % 10000000L < 60),
-        "text", "doc_id", shingleSize = 5, threshold = 0.2)
-      Components.labelPropagate(pairs, "id_a", "id_b")
+      Components.labelPropagate(slicePairs(dupSlice(s, dir)), "id_a", "id_b")
         .select(col("id").as("doc_id"), col("comp").as("component"))
     },
-    Some("""WITH RECURSIVE
-            d AS (
-              SELECT doc_id, text FROM documents WHERE doc_id < 60
-              UNION ALL
-              SELECT doc_id + 10000000, text FROM documents
-              WHERE doc_id % 5 = 0 AND doc_id < 60),
-            sh AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                       range(1, greatest(len(s) - 4, 1) + 1),
-                       i -> substr(s, i, 5))) AS shingles
-              FROM (SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS s FROM d)),
-            pairs AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b
-              FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-              WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
-                      len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.2),
-            e AS (SELECT id_a AS a, id_b AS b FROM pairs
-                  UNION SELECT id_b, id_a FROM pairs),
-            reach(a, b) AS (
-              SELECT a, b FROM e
-              UNION
-              SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a)
+    Some(s"""WITH RECURSIVE
+            ${sliceShingleCtes()},
+            $slicePairReachCtes
             SELECT a AS doc_id, least(a, min(b)) AS component
             FROM reach GROUP BY a"""))
 
@@ -819,35 +858,13 @@ object QueriesText {
   // survivor anti-join.
   private val q63 = Q("q63_dedup_keep_one",
     (s, dir) => {
-      val docs = docsWithDups(s, dir).filter(col("doc_id") % 10000000L < 60)
-      val pairs = TextDedup.ngramJaccardPairs(docs, "text", "doc_id",
-        shingleSize = 5, threshold = 0.2)
-      Components.dedupByComponents(docs, "doc_id", pairs, "id_a", "id_b")
+      val docs = dupSlice(s, dir)
+      Components.dedupByComponents(docs, "doc_id", slicePairs(docs), "id_a", "id_b")
         .select(col("doc_id"), col("n_chars"))
     },
-    Some("""WITH RECURSIVE
-            d AS (
-              SELECT doc_id, text, n_chars FROM documents WHERE doc_id < 60
-              UNION ALL
-              SELECT doc_id + 10000000, text, n_chars FROM documents
-              WHERE doc_id % 5 = 0 AND doc_id < 60),
-            sh AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                       range(1, greatest(len(s) - 4, 1) + 1),
-                       i -> substr(s, i, 5))) AS shingles
-              FROM (SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS s FROM d)),
-            pairs AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b
-              FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-              WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
-                      len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.2),
-            e AS (SELECT id_a AS a, id_b AS b FROM pairs
-                  UNION SELECT id_b, id_a FROM pairs),
-            reach(a, b) AS (
-              SELECT a, b FROM e
-              UNION
-              SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
+    Some(s"""WITH RECURSIVE
+            ${sliceShingleCtes(", n_chars")},
+            $slicePairReachCtes,
             losers AS (
               SELECT a AS doc_id FROM reach GROUP BY a
               HAVING least(a, min(b)) <> a)
@@ -876,11 +893,7 @@ object QueriesText {
           col("mean_word_len").between(4.0, 5.0) &&
           col("stop_hits") >= 1L &&
           col("dup_bigram_frac") < 0.05),
-    Some("""WITH tk AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
+    Some("WITH " + tokensCte("documents") + """,
             f AS (
               SELECT doc_id,
                      CAST(len(tk) AS BIGINT) AS n_words,
@@ -907,15 +920,7 @@ object QueriesText {
   private val q65 = Q("q65_crossdoc_dup_grams",
     (s, dir) => TextDedup.crossDocDupGrams(docsWithDups(s, dir),
       "text", "doc_id", n = 5),
-    Some("""WITH d AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 10000000, text FROM documents WHERE doc_id % 5 = 0),
-            tk AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM d),
+    Some("WITH " + dupDocsCte + ",\n            " + tokensCte("d") + """,
             g AS (
               SELECT doc_id, unnest(list_distinct(list_transform(
                        range(1, greatest(len(tk) - 4, 1) + 1),
@@ -938,19 +943,11 @@ object QueriesText {
   private val q72 = Q("q72_dedup_at_scale",
     (s, dir) => {
       val docs = docsWithDups(s, dir)
-      val pairs = TextDedup.minHashNearDups31(docs, "text", "doc_id",
-        threshold = 0.8, shingleSize = 9, bands = 8, rowsPerBand = 4)
+      val pairs = minHashPairs(docs)
       Components.dedupByComponents(docs, "doc_id", pairs, "id_a", "id_b")
         .select(col("doc_id"), col("n_chars"))
     },
-    Some(s"""WITH RECURSIVE ${SketchSql.minhashCtes},
-            pairs AS (SELECT id_a, id_b FROM ver WHERE jaccard >= 0.8),
-            e AS (SELECT id_a AS a, id_b AS b FROM pairs
-                  UNION SELECT id_b, id_a FROM pairs),
-            reach(a, b) AS (
-              SELECT a, b FROM e
-              UNION
-              SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
+    Some(s"""${SketchSql.nearDupReachCtes("pairs")},
             losers AS (
               SELECT a AS doc_id FROM reach GROUP BY a
               HAVING least(a, min(b)) <> a)
@@ -963,11 +960,7 @@ object QueriesText {
   private val q69 = Q("q69_chunks",
     (s, dir) => Chunk.tokenChunks(t(s, dir, "documents"),
       "text", "doc_id", chunkSize = 64, overlap = 16),
-    Some("""WITH tk AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
+    Some("WITH " + tokensCte("documents") + """,
             st AS (
               SELECT doc_id, tk,
                      unnest(range(1, greatest(len(tk) - 16, 1) + 1, 48)) AS s
@@ -994,10 +987,7 @@ object QueriesText {
           i => array_join(slice(words, i * lit(6) + 1, lit(6)), " "))).as("text"))
       TextDedup.stripDupLines(multi, "text", "doc_id", minCount = 2L)
     },
-    Some("""WITH d AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 10000000, text FROM documents WHERE doc_id % 5 = 0),
+    Some("WITH " + dupDocsCte + """,
             w AS (SELECT doc_id, string_split(text, ' ') AS words FROM d),
             c AS (SELECT doc_id,
                          list_transform(range((len(words) + 5) // 6),
@@ -1042,11 +1032,7 @@ object QueriesText {
   private val q78 = Q("q78_bigram_lm",
     (s, dir) => NgramLM.selfPerplexityFilter(t(s, dir, "documents"),
       "text", "doc_id", tailFraction = 0.1),
-    Some("""WITH tk AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
+    Some("WITH " + tokensCte("documents") + """,
             bg AS (
               SELECT doc_id, unnest(CASE WHEN len(tk) >= 2 THEN
                        list_transform(range(1, len(tk)),
@@ -1082,6 +1068,109 @@ object QueriesText {
             LEFT JOIN sc USING (doc_id)
             CROSS JOIN cut"""))
 
+  // ------------------------------------------------ IVF oracle fragments
+  // The pinned-codebook IVF replay: q44/q98 in Queries, the SemDeDup
+  // (q80/q99), kNN-graph (q106, q172-q174), cell-balance (q111), recall
+  // (q128) and IVF-PQ (q131 family, q136) oracles here. They live in
+  // QueriesText because StreamHarness can initialize this object before
+  // Queries, and a Queries reference from here would then start Queries
+  // while QueriesText.all is still unset.
+
+  /** The first `n` embeddings, unit-normalized, as a pinned codebook: a
+    * bounded driver hop in vec_id order (the Scala side of
+    * [[unitCodebookCte]]). */
+  private[graft] def unitCodebook(e: DataFrame, n: Int): Array[Array[Double]] =
+    e.filter(col("vec_id") < n).orderBy("vec_id")
+      .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
+      .collect().map(_.getSeq[Double](0).toArray)
+
+  /** `cb`: the unit-normalized codebook (cell = vec_id + 1) over the
+    * embeddings rows `src` keeps. */
+  private def unitCodebookCte(src: String): String =
+    s"""cb AS (
+              SELECT vec_id + 1 AS ci,
+                     CASE WHEN n = 0 THEN vd ELSE list_transform(vd, x -> x / n) END AS cv
+              FROM (SELECT vec_id,
+                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
+                           sqrt(list_sum(list_transform(embedding,
+                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n
+                    FROM $src))"""
+
+  /** `ev`: the vectors of `src` (plus `cols`) with their squared norms. */
+  private[graft] def evCte(src: String = "embeddings", cols: String = ""): String =
+    s"""ev AS (
+              SELECT vec_id, embedding$cols,
+                     list_sum(list_transform(embedding,
+                       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
+              FROM $src)"""
+
+  /** `cb`, `ev` and `dots`: every vector's cosine to every cell. */
+  private[graft] def ivfDotsCtes(cbSrc: String, evSrc: String = "embeddings",
+                                 evCols: String = ""): String =
+    unitCodebookCte(cbSrc) + ",\n            " + evCte(evSrc, evCols) + """,
+            dots AS (
+              SELECT ev.vec_id, cb.ci,
+                     list_sum(list_transform(range(1, 65),
+                       i -> CAST(ev.embedding[i] AS DOUBLE) * cb.cv[i])) *
+                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
+              FROM ev CROSS JOIN cb)"""
+
+  /** `cells`: each vector's home cell (argmax over `dots`, ties to the
+    * lower cell). */
+  private lazy val homeCellCte: String = """cells AS (
+              SELECT vec_id, ci AS cell FROM (
+                SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
+                         ORDER BY dp DESC, ci) AS rn
+                FROM dots)
+              WHERE rn = 1)"""
+
+  /** `ranked`: each vector's cells by cosine. */
+  private lazy val rankedCte: String = """ranked AS (
+              SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
+                       ORDER BY dp DESC, ci) AS rn
+              FROM dots)"""
+
+  /** `ranked` and `ccell` (each corpus vector's home cell). */
+  private lazy val ivfRankCtes: String = rankedCte + """,
+            ccell AS (SELECT vec_id AS neighbor_id, ci AS cell FROM ranked WHERE rn = 1)"""
+
+  /** `name`: the exact cosine of every probed (query, neighbor) pair of
+    * `qcell` x `ccell`, carrying `keys` (a `q.`-prefixed column list
+    * ending in a comma) from `qcell`. */
+  private[graft] def probeCosCte(name: String, keys: String = ""): String =
+    s"""$name AS (
+              SELECT ${keys}q.query_id, c.neighbor_id,
+                     list_sum(list_transform(range(1, 65),
+                       i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))) /
+                     (sqrt(qe.nv) * sqrt(ce.nv)) AS cos
+              FROM qcell q
+              JOIN ccell c USING (cell)
+              JOIN ev qe ON qe.vec_id = q.query_id
+              JOIN ev ce ON ce.vec_id = c.neighbor_id
+              WHERE q.query_id <> c.neighbor_id)"""
+
+  /** `r`: the (query, neighbor, cos) rows of `src` ranked per query by
+    * cosine, ties to the lower neighbor id. */
+  private[graft] def cosRankCte(src: String): String =
+    s"""r AS (
+              SELECT query_id, neighbor_id, cos,
+                     row_number() OVER (PARTITION BY query_id
+                       ORDER BY cos DESC, neighbor_id) AS rn
+              FROM $src)"""
+
+  /** The top-3 (query, neighbor, cosine, rank) rows of `r`. */
+  private[graft] lazy val cosTop3Select: String = """
+            SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
+                   CAST(rn AS INT) AS rank
+            FROM r WHERE rn <= 3"""
+
+  /** `ranked`, `ccell`, `qcell` (the queries `qcellWhere` keeps, with
+    * their probed cells), the probe cosines `sc` and their rank `r`. */
+  private[graft] def ivfProbeCtes(qcellWhere: String, sc: String = "sc"): String =
+    ivfRankCtes + s""",
+            qcell AS (SELECT vec_id AS query_id, ci AS cell FROM ranked WHERE $qcellWhere),
+            """ + probeCosCte(sc) + ",\n            " + cosRankCte(sc)
+
   // ---------------------------------------------------------------- q80
   // SemDeDup with the codebook size DERIVED from the corpus
   // (Similarity.autoNlist at targetCellSize = 8 — a second operating
@@ -1091,63 +1180,35 @@ object QueriesText {
   // path; the historical pinned-16-cell form (cell population grows
   // with the corpus — measured 13.4x wall on a 10x corpus vs 1.6x
   // scaled) survives only as the ScaleStress `semdedup_nlist16`
-  // harness exhibit and the SimilaritySpec determinism fixture.
+  // harness exhibit and the TextDedupSpec semDedup fixtures.
   // Near-identical vectors (perturbed copies, cosine ~0.998) land in the
   // same cell, pair up under the within-cell cosine, and the min-id
   // representative survives. The oracle replays the nlist derivation,
   // cell argmax, in-cell pairs, and the component resolution
   // (recursive CTE) exactly.
   private val q80 = Q("q80_semdedup",
-    (s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val perturbed = e.filter(col("vec_id") % 20 === 0)
-        .withColumn("vec_id", col("vec_id") + 10000000L)
-        .withColumn("embedding",
-          transform(col("embedding"), (x, i) =>
-            when(i === 0, x + lit(0.05f)).otherwise(x)))
-      val corp = e.unionByName(perturbed)
-      val nlist = Similarity.autoNlist(corp.count(), targetCellSize = 8)
-      val cb = e.filter(col("vec_id") < nlist).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
-      Similarity.semDedup(corp, "vec_id", "embedding", cb, threshold = 0.9)
-        .select(col("vec_id"), col("label"), col("cell"))
-    },
-    Some(s"""WITH RECURSIVE corp AS (
-              SELECT vec_id, embedding, label FROM embeddings
-              UNION ALL
-              SELECT vec_id + 10000000,
-                     list_concat([embedding[1] + CAST(0.05 AS FLOAT)], embedding[2:]),
-                     label
-              FROM embeddings WHERE vec_id % 20 = 0),
-            params AS (
-              SELECT greatest(16, CAST(ceil(count(*) / 8.0) AS BIGINT)) AS nlist
-              FROM corp),
-            cb AS (
-              SELECT vec_id + 1 AS ci,
-                     CASE WHEN n = 0 THEN vd ELSE list_transform(vd, x -> x / n) END AS cv
-              FROM (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
-                           sqrt(list_sum(list_transform(embedding,
-                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n
-                    FROM embeddings, params WHERE vec_id < nlist)),
-            ev AS (
-              SELECT vec_id, embedding, label,
-                     list_sum(list_transform(embedding,
-                       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-              FROM corp),
-            dots AS (
-              SELECT ev.vec_id, cb.ci,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(ev.embedding[i] AS DOUBLE) * cb.cv[i])) *
-                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
-              FROM ev CROSS JOIN cb),
-            cells AS (
-              SELECT vec_id, ci AS cell FROM (
-                SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-                         ORDER BY dp DESC, ci) AS rn
-                FROM dots)
-              WHERE rn = 1),
+    (s, dir) => semDedupAuto(s, dir, targetCellSize = 8),
+    Some(semDedupOracle(targetCellSize = 8)))
+
+  /** SemDeDup over the corpus plus perturbed copies of every 20th
+    * vector, with the codebook size derived at `targetCellSize` (q80,
+    * q99). */
+  private def semDedupAuto(s: SparkSession, dir: String,
+                           targetCellSize: Int): DataFrame = {
+    val e = t(s, dir, "embeddings")
+    val corp = perturbedCorpus(e)
+    val nlist = Similarity.autoNlist(corp.count(), targetCellSize)
+    Similarity.semDedup(corp, "vec_id", "embedding", unitCodebook(e, nlist),
+        threshold = 0.9)
+      .select(col("vec_id"), col("label"), col("cell"))
+  }
+
+  /** [[semDedupAuto]]'s oracle: the nlist derivation, cell argmax,
+    * in-cell pairs and the component resolution (recursive CTE). */
+  private def semDedupOracle(targetCellSize: Int): String =
+    s"""WITH RECURSIVE ${perturbedCorpusCte(", label")},
+            ${autoIvfDotsCtes(targetCellSize, "corp", ", label")},
+            $homeCellCte,
             pairs AS (
               SELECT a.vec_id AS id_a, b2.vec_id AS id_b
               FROM cells a
@@ -1166,7 +1227,21 @@ object QueriesText {
               HAVING least(a, min(b)) <> a)
             SELECT c.vec_id, c.label, CAST(cells.cell AS INTEGER) AS cell
             FROM corp c JOIN cells USING (vec_id)
-            WHERE c.vec_id NOT IN (SELECT vec_id FROM losers)"""))
+            WHERE c.vec_id NOT IN (SELECT vec_id FROM losers)"""
+
+  /** `params` (the autoNlist codebook size of `src` at
+    * `targetCellSize`) and [[ivfDotsCtes]] over the first `nlist`
+    * embeddings and the vectors of `src`. */
+  private def autoIvfDotsCtes(targetCellSize: Int, src: String = "embeddings",
+                              evCols: String = ""): String =
+    s"""params AS (
+              SELECT greatest(16, CAST(ceil(count(*) / $targetCellSize.0) AS BIGINT)) AS nlist
+              FROM $src),
+            """ + ivfDotsCtes("embeddings, params WHERE vec_id < nlist", src, evCols)
+
+  /** [[unitCodebook]] at the autoNlist size of `e` (q106, q111, q172-q174). */
+  private def autoCodebook(e: DataFrame, targetCellSize: Int): Array[Array[Double]] =
+    unitCodebook(e, Similarity.autoNlist(e.count(), targetCellSize))
 
   // ---------------------------------------------------------------- q100
   // Modern-web media formats through the same header-decode gate as
@@ -1261,6 +1336,21 @@ object QueriesText {
             FROM probe p LEFT JOIN regs r ON p.d = r.d AND p.bucket = r.bucket
             GROUP BY p.term, p.exact_n"""))
 
+  /** Lloyd centroid update `l<r>`, `n<r>`, `c<r>`: the per-cell integer
+    * sums `s<r>` (cell, i, sq) as a list, normalized; a cell with no
+    * members keeps its `c<r-1>` centroid (q98, q104). */
+  private[graft] def centroidUpdateCtes(r: Int): String =
+    s"""l$r AS (SELECT cell, list(CAST(sq AS DOUBLE) ORDER BY i) AS sl
+                   FROM s$r GROUP BY cell),
+            n$r AS (SELECT cell, sl,
+                          sqrt(list_sum(list_transform(sl, x -> x * x))) AS nn
+                   FROM l$r),
+            c$r AS (SELECT p.cell,
+                          COALESCE(CASE WHEN n.nn = 0 THEN n.sl
+                                        ELSE list_transform(n.sl, x -> x / n.nn) END,
+                                   p.cv) AS cv
+                   FROM c${r - 1} p LEFT JOIN n$r n ON p.cell = n.cell)"""
+
   // ---------------------------------------------------------------- q104
   // Distributed k-means: TWO full-corpus spherical Lloyd's steps from a
   // deterministic 8-vector codebook. Assignment is the NearestCentroids
@@ -1274,10 +1364,8 @@ object QueriesText {
     (s, dir) => {
       import s.implicits._
       val e = t(s, dir, "embeddings")
-      val init = e.filter(col("vec_id") < 8).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
-      val (c1, _) = Similarity.kmeansStepDistributed(e, "embedding", init)
+      val (c1, _) = Similarity.kmeansStepDistributed(e, "embedding",
+        unitCodebook(e, 8))
       val (c2, n2) = Similarity.kmeansStepDistributed(e, "embedding", c1)
       val rows = for {
         c <- c2.indices
@@ -1287,7 +1375,7 @@ object QueriesText {
         .select(col("cell").cast(IntegerType), col("n_members"),
           col("dim").cast(IntegerType), bround(col("raw"), 6).as("value"))
     },
-    Some("""WITH ev AS (
+    Some(s"""WITH ev AS (
               SELECT vec_id,
                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
                      list_sum(list_transform(embedding,
@@ -1318,16 +1406,7 @@ object QueriesText {
             s1 AS (SELECT a.cell, t.i, sum(e.vq[t.i]) AS sq
                    FROM a1 a JOIN evn e USING (vec_id), range(1, 65) t(i)
                    GROUP BY a.cell, t.i),
-            l1 AS (SELECT cell, list(CAST(sq AS DOUBLE) ORDER BY i) AS sl
-                   FROM s1 GROUP BY cell),
-            n1 AS (SELECT cell, sl,
-                          sqrt(list_sum(list_transform(sl, x -> x * x))) AS nn
-                   FROM l1),
-            c1 AS (SELECT p.cell,
-                          COALESCE(CASE WHEN n.nn = 0 THEN n.sl
-                                        ELSE list_transform(n.sl, x -> x / n.nn) END,
-                                   p.cv) AS cv
-                   FROM c0 p LEFT JOIN n1 n ON p.cell = n.cell),
+            ${centroidUpdateCtes(1)},
             d2 AS (SELECT e.vec_id, c.cell,
                           list_sum(list_transform(range(1, 65),
                             i -> e.vd[i] * c.cv[i])) *
@@ -1343,16 +1422,7 @@ object QueriesText {
             s2 AS (SELECT a.cell, t.i, sum(e.vq[t.i]) AS sq
                    FROM a2 a JOIN evn e USING (vec_id), range(1, 65) t(i)
                    GROUP BY a.cell, t.i),
-            l2 AS (SELECT cell, list(CAST(sq AS DOUBLE) ORDER BY i) AS sl
-                   FROM s2 GROUP BY cell),
-            n2 AS (SELECT cell, sl,
-                          sqrt(list_sum(list_transform(sl, x -> x * x))) AS nn
-                   FROM l2),
-            c2 AS (SELECT p.cell,
-                          COALESCE(CASE WHEN n.nn = 0 THEN n.sl
-                                        ELSE list_transform(n.sl, x -> x / n.nn) END,
-                                   p.cv) AS cv
-                   FROM c1 p LEFT JOIN n2 n ON p.cell = n.cell)
+            ${centroidUpdateCtes(2)}
             SELECT c2.cell,
                    COALESCE(cnt2.n_members, 0) AS n_members,
                    CAST(t.i AS INT) AS dim,
@@ -1422,99 +1492,12 @@ object QueriesText {
   // codebook. This is the registered answer to q80's documented
   // fixed-nlist anti-pattern (13.4x vs 1.6x on the 10x ScaleStress).
   private val q99 = Q("q99_semdedup_auto",
-    (s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val perturbed = e.filter(col("vec_id") % 20 === 0)
-        .withColumn("vec_id", col("vec_id") + 10000000L)
-        .withColumn("embedding",
-          transform(col("embedding"), (x, i) =>
-            when(i === 0, x + lit(0.05f)).otherwise(x)))
-      val corp = e.unionByName(perturbed)
-      val nlist = Similarity.autoNlist(corp.count(), targetCellSize = 16)
-      val cb = e.filter(col("vec_id") < nlist).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
-      Similarity.semDedup(corp, "vec_id", "embedding", cb, threshold = 0.9)
-        .select(col("vec_id"), col("label"), col("cell"))
-    },
-    Some(s"""WITH RECURSIVE corp AS (
-              SELECT vec_id, embedding, label FROM embeddings
-              UNION ALL
-              SELECT vec_id + 10000000,
-                     list_concat([embedding[1] + CAST(0.05 AS FLOAT)], embedding[2:]),
-                     label
-              FROM embeddings WHERE vec_id % 20 = 0),
-            params AS (
-              SELECT greatest(16, CAST(ceil(count(*) / 16.0) AS BIGINT)) AS nlist
-              FROM corp),
-            cb AS (
-              SELECT vec_id + 1 AS ci,
-                     CASE WHEN n = 0 THEN vd ELSE list_transform(vd, x -> x / n) END AS cv
-              FROM (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
-                           sqrt(list_sum(list_transform(embedding,
-                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n
-                    FROM embeddings, params WHERE vec_id < nlist)),
-            ev AS (
-              SELECT vec_id, embedding, label,
-                     list_sum(list_transform(embedding,
-                       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-              FROM corp),
-            dots AS (
-              SELECT ev.vec_id, cb.ci,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(ev.embedding[i] AS DOUBLE) * cb.cv[i])) *
-                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
-              FROM ev CROSS JOIN cb),
-            cells AS (
-              SELECT vec_id, ci AS cell FROM (
-                SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-                         ORDER BY dp DESC, ci) AS rn
-                FROM dots)
-              WHERE rn = 1),
-            pairs AS (
-              SELECT a.vec_id AS id_a, b2.vec_id AS id_b
-              FROM cells a
-              JOIN cells b2 ON a.cell = b2.cell AND a.vec_id < b2.vec_id
-              JOIN corp ea ON ea.vec_id = a.vec_id
-              JOIN corp eb ON eb.vec_id = b2.vec_id
-              WHERE ${PlaneSql.cosSql("ea.embedding", "eb.embedding")} >= 0.9),
-            e2 AS (SELECT id_a AS a, id_b AS b FROM pairs
-                   UNION SELECT id_b, id_a FROM pairs),
-            reach(a, b) AS (
-              SELECT a, b FROM e2
-              UNION
-              SELECT r.a, e2.b FROM reach r JOIN e2 ON r.b = e2.a),
-            losers AS (
-              SELECT a AS vec_id FROM reach GROUP BY a
-              HAVING least(a, min(b)) <> a)
-            SELECT c.vec_id, c.label, CAST(cells.cell AS INTEGER) AS cell
-            FROM corp c JOIN cells USING (vec_id)
-            WHERE c.vec_id NOT IN (SELECT vec_id FROM losers)"""))
+    (s, dir) => semDedupAuto(s, dir, targetCellSize = 16),
+    Some(semDedupOracle(targetCellSize = 16)))
 
-  // ---------------------------------------------------------------- q81
-  // Token-budget mixture: each source srcN targets share (N+1)/210 of a
-  // 60k-token budget — small-N sources upsample (epochs > 1), large-N
-  // downsample (keep_fraction < 1). The plan is one hash aggregation;
-  // applying it is one broadcast join + the md5-bucket filter. The
-  // oracle derives the same shares arithmetically from the source name
-  // and replays the bucket rule digit-for-digit.
-  private val q81 = Q("q81_token_budget",
-    (s, dir) => {
-      val docs = t(s, dir, "documents")
-      val shares = (0 until 20).map(i => s"src$i" -> (i + 1) / 210.0).toMap
-      val plan = Split.mixturePlan(docs, "source",
-        TF.tokenCount(col("text")), shares, budget = 60000L)
-      val sampled = Split.applyMixture(docs, "source", col("doc_id"), plan)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_docs_sampled"))
-      plan.join(sampled, Seq("source"), "left")
-        .select(col("source"), col("n_docs"), col("n_tokens"),
-          bround(col("target_share"), 6).as("target_share"),
-          col("alloc_tokens"),
-          bround(col("rate"), 6).as("rate"), col("epochs"),
-          coalesce(col("n_docs_sampled"), lit(0L)).as("n_docs_sampled"))
-    },
-    Some("""WITH tk AS (
+  /** `tk` (each doc's token count) and `agg` (per-source doc and token
+    * totals): the inventory the q81 and q121 mixture plans start from. */
+  private lazy val mixtureInventoryCtes: String = """WITH tk AS (
               SELECT doc_id, source,
                      CAST(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
                                           t -> len(t) > 0)) AS BIGINT) AS ntok
@@ -1522,17 +1505,11 @@ object QueriesText {
             agg AS (
               SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
                      CAST(sum(ntok) AS BIGINT) AS n_tokens
-              FROM tk GROUP BY source),
-            pl AS (
-              SELECT *,
-                     CAST(round(share * 60000, 0) AS BIGINT) AS alloc_tokens
-              FROM (SELECT agg.*,
-                      (CAST(substr(source, 4) AS INT) + 1) / 210.0 AS share
-                    FROM agg)),
-            pl2 AS (
-              SELECT *, CAST(alloc_tokens AS DOUBLE) / n_tokens AS rate
-              FROM pl),
-            samp AS (
+              FROM tk GROUP BY source)"""
+
+  /** `samp` (the docs the md5-bucket rule keeps at each source's `rate`)
+    * and the plan report over `pl2` — q81 and q121. */
+  private lazy val mixtureSampleSql: String = """samp AS (
               SELECT t.source, CAST(count(*) AS BIGINT) AS n_docs_sampled
               FROM tk t JOIN pl2 USING (source)
               WHERE (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
@@ -1547,7 +1524,47 @@ object QueriesText {
                    round_even(rate, 6) AS rate,
                    CAST(ceil(rate) AS BIGINT) AS epochs,
                    coalesce(n_docs_sampled, 0) AS n_docs_sampled
-            FROM pl2 LEFT JOIN samp USING (source)"""))
+            FROM pl2 LEFT JOIN samp USING (source)"""
+
+  /** A mixture `plan` applied to `docs` and reported with its sampled
+    * doc counts (q81, q121). */
+  private def mixtureReport(docs: DataFrame, plan: DataFrame): DataFrame = {
+    val sampled = Split.applyMixture(docs, "source", col("doc_id"), plan)
+      .groupBy(col("source")).agg(count(lit(1)).as("n_docs_sampled"))
+    plan.join(sampled, Seq("source"), "left")
+      .select(col("source"), col("n_docs"), col("n_tokens"),
+        bround(col("target_share"), 6).as("target_share"),
+        col("alloc_tokens"),
+        bround(col("rate"), 6).as("rate"), col("epochs"),
+        coalesce(col("n_docs_sampled"), lit(0L)).as("n_docs_sampled"))
+  }
+
+  // ---------------------------------------------------------------- q81
+  // Token-budget mixture: each source srcN targets share (N+1)/210 of a
+  // 60k-token budget — small-N sources upsample (epochs > 1), large-N
+  // downsample (keep_fraction < 1). The plan is one hash aggregation;
+  // applying it is one broadcast join + the md5-bucket filter. The
+  // oracle derives the same shares arithmetically from the source name
+  // and replays the bucket rule digit-for-digit.
+  private val q81 = Q("q81_token_budget",
+    (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val shares = (0 until 20).map(i => s"src$i" -> (i + 1) / 210.0).toMap
+      val plan = Split.mixturePlan(docs, "source",
+        TF.tokenCount(col("text")), shares, budget = 60000L)
+      mixtureReport(docs, plan)
+    },
+    Some(s"""$mixtureInventoryCtes,
+            pl AS (
+              SELECT *,
+                     CAST(round(share * 60000, 0) AS BIGINT) AS alloc_tokens
+              FROM (SELECT agg.*,
+                      (CAST(substr(source, 4) AS INT) + 1) / 210.0 AS share
+                    FROM agg)),
+            pl2 AS (
+              SELECT *, CAST(alloc_tokens AS DOUBLE) / n_tokens AS rate
+              FROM pl),
+            $mixtureSampleSql"""))
 
   // ---------------------------------------------------------------- q82
   // Unicode text repair (ftfy-lite): every doc gets web-corpus dirt
@@ -1635,13 +1652,7 @@ object QueriesText {
         .select(col("doc_id"), col("quality"), col("n_tokens"),
           col("tok_offset"), col("seq_first"), col("seq_last"))
     },
-    Some("""WITH x AS (
-              SELECT doc_id, text,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk,
-                     CAST(length(text) AS DOUBLE) AS chars,
-                     CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE) AS punct
-              FROM documents),
+    Some("WITH " + qualityTokensCte + """,
             y AS (
               SELECT doc_id,
                      CAST(len(tk) AS BIGINT) AS n_tokens,
@@ -1682,11 +1693,7 @@ object QueriesText {
     (s, dir) => Pack.assembleSequences(
       t(s, dir, "documents").select(col("doc_id"), col("text")),
       "text", "doc_id", budget = 512),
-    Some("""WITH tk AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
+    Some("WITH " + tokensCte("documents") + """,
             o AS (
               SELECT doc_id, tk,
                      CAST(coalesce(sum(len(tk)) OVER (ORDER BY doc_id
@@ -1709,11 +1716,7 @@ object QueriesText {
   private val q88 = Q("q88_inverted_index",
     (s, dir) => Tfidf.invertedIndex(
       t(s, dir, "documents"), "text", "doc_id", maxPostings = 10),
-    Some("""WITH tk AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
+    Some("WITH " + tokensCte("documents") + """,
             tf AS (
               SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
               FROM (SELECT doc_id, UNNEST(tk) AS term FROM tk)
@@ -1773,20 +1776,12 @@ object QueriesText {
     (s, dir) => {
       val docs = docsWithDups(s, dir)
         .withColumn("quality", TF.qualityScore(col("text")))
-      val pairs = TextDedup.minHashNearDups31(docs, "text", "doc_id",
-        threshold = 0.8, shingleSize = 9, bands = 8, rowsPerBand = 4)
+      val pairs = minHashPairs(docs)
       Components.dedupKeepBest(docs, "doc_id", "quality",
           pairs, "id_a", "id_b")
         .select(col("doc_id"), col("n_chars"))
     },
-    Some(s"""WITH RECURSIVE ${SketchSql.minhashCtes},
-            pairs AS (SELECT id_a, id_b FROM ver WHERE jaccard >= 0.8),
-            e AS (SELECT id_a AS a, id_b AS b FROM pairs
-                  UNION SELECT id_b, id_a FROM pairs),
-            reach(a, b) AS (
-              SELECT a, b FROM e
-              UNION
-              SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
+    Some(s"""${SketchSql.nearDupReachCtes("pairs")},
             comp AS (
               SELECT a AS doc_id, least(a, min(b)) AS comp
               FROM reach GROUP BY a),
@@ -1956,58 +1951,33 @@ object QueriesText {
   private val q106 = Q("q106_knn_graph",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val nlist = Similarity.autoNlist(e.count(), targetCellSize = 64)
-      val cb = e.filter(col("vec_id") < nlist).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
+      val cb = autoCodebook(e, 64)
       Similarity.knnGraph(e, "vec_id", "embedding", cb, k = 3, nprobe = 2)
     },
-    Some("""WITH params AS (
-              SELECT greatest(16, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS nlist
-              FROM embeddings),
-            cb AS (
-              SELECT vec_id + 1 AS ci,
-                     CASE WHEN n = 0 THEN vd ELSE list_transform(vd, x -> x / n) END AS cv
-              FROM (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
-                           sqrt(list_sum(list_transform(embedding,
-                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n
-                    FROM embeddings, params WHERE vec_id < nlist)),
-            ev AS (
-              SELECT vec_id, embedding,
-                     list_sum(list_transform(embedding,
-                       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-              FROM embeddings),
-            dots AS (
-              SELECT ev.vec_id, cb.ci,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(ev.embedding[i] AS DOUBLE) * cb.cv[i])) *
-                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
-              FROM ev CROSS JOIN cb),
-            ranked AS (
-              SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-                       ORDER BY dp DESC, ci) AS rn
-              FROM dots),
-            ccell AS (SELECT vec_id AS neighbor_id, ci AS cell FROM ranked WHERE rn = 1),
-            qcell AS (SELECT vec_id AS query_id, ci AS cell FROM ranked WHERE rn <= 2),
-            sc AS (
-              SELECT q.query_id, c.neighbor_id,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))) /
-                     (sqrt(qe.nv) * sqrt(ce.nv)) AS cos
-              FROM qcell q
-              JOIN ccell c USING (cell)
-              JOIN ev qe ON qe.vec_id = q.query_id
-              JOIN ev ce ON ce.vec_id = c.neighbor_id
-              WHERE q.query_id <> c.neighbor_id),
-            r AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos DESC, neighbor_id) AS rn
-              FROM sc)
-            SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-                   CAST(rn AS INT) AS rank
-            FROM r WHERE rn <= 3"""))
+    Some(s"""WITH ${autoIvfDotsCtes(64)},
+            ${ivfProbeCtes("rn <= 2")}""" + cosTop3Select))
+
+  /** PQ codebooks (m = 8) pinned to the first 16 raw vectors' subvectors
+    * (q107, q125). */
+  private def pinnedPqCodebooks(e: DataFrame): Array[Array[Array[Double]]] =
+    Pq.codebooks(e.filter(col("vec_id") < 16).orderBy("vec_id")
+      .select(graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
+      .collect().map(_.getSeq[Double](0).toArray), m = 8)
+
+  /** `cbs` ([[pinnedPqCodebooks]] in SQL) and `dists` (every vector's
+    * squared distance to every codeword of every subspace). */
+  private lazy val pqDistsCtes: String = """WITH cbs AS (
+              SELECT s, vec_id + 1 AS c,
+                     list_transform(range(1, 9),
+                       i -> CAST(embedding[s * 8 + i] AS DOUBLE)) AS cw
+              FROM embeddings, (SELECT unnest(range(8)) AS s)
+              WHERE vec_id < 16),
+            dists AS (
+              SELECT e.vec_id, cb.s, cb.c,
+                     list_sum(list_transform(range(1, 9),
+                       i -> (CAST(e.embedding[cb.s * 8 + i] AS DOUBLE) - cb.cw[i]) *
+                            (CAST(e.embedding[cb.s * 8 + i] AS DOUBLE) - cb.cw[i]))) AS d
+              FROM embeddings e CROSS JOIN cbs cb)"""
 
   // ---------------------------------------------------------------- q107
   // Product quantization (Jégou et al. 2011): 64-dim float vectors
@@ -2024,26 +1994,12 @@ object QueriesText {
   private val q107 = Q("q107_pq_topk",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val samples = e.filter(col("vec_id") < 16).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
-      val cbs = Pq.codebooks(samples, m = 8)
+      val cbs = pinnedPqCodebooks(e)
       val codes = Pq.encode(e, "vec_id", "embedding", cbs)
       Pq.adcTopK(e.filter(col("vec_id") % 50 === 0), codes, "vec_id",
         "embedding", cbs, k = 3)
     },
-    Some("""WITH cbs AS (
-              SELECT s, vec_id + 1 AS c,
-                     list_transform(range(1, 9),
-                       i -> CAST(embedding[s * 8 + i] AS DOUBLE)) AS cw
-              FROM embeddings, (SELECT unnest(range(8)) AS s)
-              WHERE vec_id < 16),
-            dists AS (
-              SELECT e.vec_id, cb.s, cb.c,
-                     list_sum(list_transform(range(1, 9),
-                       i -> (CAST(e.embedding[cb.s * 8 + i] AS DOUBLE) - cb.cw[i]) *
-                            (CAST(e.embedding[cb.s * 8 + i] AS DOUBLE) - cb.cw[i]))) AS d
-              FROM embeddings e CROSS JOIN cbs cb),
+    Some(pqDistsCtes + """,
             enc AS (
               SELECT vec_id, s, c AS code FROM (
                 SELECT vec_id, s, c, row_number() OVER (PARTITION BY vec_id, s
@@ -2133,6 +2089,60 @@ object QueriesText {
                    d.lang = 'en' AS actual
             FROM scored s JOIN documents d USING (doc_id)"""))
 
+  /** The DSIR hashed model and per-doc score every DSIR oracle replays
+    * (q109, q119, q124, q135, q140, q141, q145): `tk` (tokens; tgt =
+    * lang 'en'), the gram rows (`bg`: bigrams; with `unigrams`, `ft`:
+    * tokens and bigrams), `hb` (md5 hashes into 4096 buckets), `c`
+    * (per-bucket target and raw counts), `n` (their totals) and `sc`
+    * (the per-doc `scCols` over the doc's hashed grams). */
+  private def dsirScoreCtes(scCols: String, unigrams: Boolean = false): String = {
+    val bigrams = """CASE WHEN len(tk) >= 2 THEN
+                       list_transform(range(1, len(tk)),
+                                      i -> tk[i] || ' ' || tk[i + 1])
+                     ELSE [] END"""
+    val (grams, gramList) =
+      if (unigrams) ("ft", s"list_concat(tk, $bigrams)") else ("bg", bigrams)
+    s"""WITH tk AS (
+              SELECT doc_id, lang = 'en' AS tgt,
+                     list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+                                 t -> len(t) > 0) AS tk
+              FROM documents),
+            $grams AS (
+              SELECT doc_id, tgt, unnest($gramList) AS gram
+              FROM tk),
+            hb AS (
+              SELECT doc_id, tgt,
+                     ('0x' || substr(md5(gram), 1, 4))::BIGINT % 4096 AS b
+              FROM $grams),
+            c AS (
+              SELECT b,
+                     CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
+                     CAST(sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS BIGINT) AS cr
+              FROM hb GROUP BY b),
+            n AS (SELECT CAST(sum(ct) AS BIGINT) AS nt,
+                         CAST(sum(cr) AS BIGINT) AS nr FROM c),
+            sc AS (
+              SELECT hb.doc_id, $scCols
+              FROM hb JOIN c USING (b) CROSS JOIN n
+              GROUP BY hb.doc_id)"""
+  }
+
+  /** The exact DECIMAL sum of a doc's 12-dp per-gram log-ratios. */
+  private lazy val dsirLrSum: String = """sum(CAST(round(
+                         ln(CAST(c.ct + 1 AS DOUBLE) / (n.nt + 4096))
+                       - ln(CAST(c.cr + 1 AS DOUBLE) / (n.nr + 4096)), 12)
+                       AS DECIMAL(38,12)))"""
+
+  /** A doc's mean log-ratio at 6 dp, rounded by `round` (`round` or
+    * `round_even`). */
+  private def dsirAvg(round: String): String =
+    s"$round(CAST($dsirLrSum AS DOUBLE) / count(*), 6)"
+
+  /** [[dsirScoreCtes]] with the labeled score (y, s) that q135, q140 and
+    * q141 rank. */
+  private lazy val dsirLabeledScoreCtes: String =
+    dsirScoreCtes(s"bool_or(hb.tgt) AS y, ${dsirAvg("round")} AS s")
+
   // ---------------------------------------------------------------- q109
   // DSIR importance weights (Xie et al. 2023): score every document by
   // the log-likelihood ratio of its hashed bigram features under the
@@ -2144,38 +2154,8 @@ object QueriesText {
   private val q109 = Q("q109_dsir_weights",
     (s, dir) => Dsir.importanceWeights(t(s, dir, "documents"),
       "text", "doc_id", isTarget = col("lang") === "en", nBuckets = 4096),
-    Some("""WITH tk AS (
-              SELECT doc_id, lang = 'en' AS tgt,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
-            bg AS (
-              SELECT doc_id, tgt, unnest(CASE WHEN len(tk) >= 2 THEN
-                       list_transform(range(1, len(tk)),
-                                      i -> tk[i] || ' ' || tk[i + 1])
-                     ELSE [] END) AS gram
-              FROM tk),
-            hb AS (
-              SELECT doc_id, tgt,
-                     ('0x' || substr(md5(gram), 1, 4))::BIGINT % 4096 AS b
-              FROM bg),
-            c AS (
-              SELECT b,
-                     CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-                     CAST(sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS BIGINT) AS cr
-              FROM hb GROUP BY b),
-            n AS (SELECT CAST(sum(ct) AS BIGINT) AS nt,
-                         CAST(sum(cr) AS BIGINT) AS nr FROM c),
-            sc AS (
-              SELECT hb.doc_id,
-                     CAST(count(*) AS BIGINT) AS n_bigrams,
-                     round_even(CAST(sum(CAST(round(
-                         ln(CAST(c.ct + 1 AS DOUBLE) / (n.nt + 4096))
-                       - ln(CAST(c.cr + 1 AS DOUBLE) / (n.nr + 4096)), 12)
-                       AS DECIMAL(38,12))) AS DOUBLE) / count(*), 6)
-                       AS avg_logratio
-              FROM hb JOIN c USING (b) CROSS JOIN n
-              GROUP BY hb.doc_id)
+    Some(dsirScoreCtes("CAST(count(*) AS BIGINT) AS n_bigrams, " +
+      dsirAvg("round_even") + " AS avg_logratio") + """
             SELECT d.doc_id, d.lang = 'en' AS is_target,
                    coalesce(sc.n_bigrams, 0) AS n_bigrams,
                    sc.avg_logratio,
@@ -2199,14 +2179,7 @@ object QueriesText {
         "id_a", "id_b", Seq("train" -> 12, "val" -> 2, "test" -> 2))
         .select(col("doc_id"), col("group_id"), col("bucket"), col("split"))
     },
-    Some(s"""WITH RECURSIVE ${SketchSql.minhashCtes},
-            p AS (SELECT id_a, id_b FROM ver WHERE jaccard >= 0.8),
-            e AS (SELECT id_a AS a, id_b AS b FROM p
-                  UNION SELECT id_b, id_a FROM p),
-            reach(a, b) AS (
-              SELECT a, b FROM e
-              UNION
-              SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
+    Some(s"""${SketchSql.nearDupReachCtes("p")},
             comp AS (SELECT a AS doc_id, least(a, min(b)) AS comp
                      FROM reach GROUP BY a),
             lab AS (
@@ -2235,40 +2208,11 @@ object QueriesText {
   private val q111 = Q("q111_cluster_balance",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val nlist = Similarity.autoNlist(e.count(), targetCellSize = 32)
-      val cb = e.filter(col("vec_id") < nlist).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
+      val cb = autoCodebook(e, 32)
       Similarity.clusterBalancedSample(e, "vec_id", "embedding", cb)
     },
-    Some("""WITH params AS (
-              SELECT greatest(16, CAST(ceil(count(*) / 32.0) AS BIGINT)) AS nlist
-              FROM embeddings),
-            cb AS (
-              SELECT vec_id + 1 AS ci,
-                     CASE WHEN n = 0 THEN vd ELSE list_transform(vd, x -> x / n) END AS cv
-              FROM (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
-                           sqrt(list_sum(list_transform(embedding,
-                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n
-                    FROM embeddings, params WHERE vec_id < nlist)),
-            ev AS (
-              SELECT vec_id, embedding,
-                     list_sum(list_transform(embedding,
-                       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-              FROM embeddings),
-            dots AS (
-              SELECT ev.vec_id, cb.ci,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(ev.embedding[i] AS DOUBLE) * cb.cv[i])) *
-                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
-              FROM ev CROSS JOIN cb),
-            cells AS (
-              SELECT vec_id, ci AS cell FROM (
-                SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-                         ORDER BY dp DESC, ci) AS rn
-                FROM dots)
-              WHERE rn = 1),
+    Some(s"""WITH ${autoIvfDotsCtes(32)},
+            $homeCellCte,
             cnt AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_cell
                     FROM cells GROUP BY cell),
             mn AS (SELECT min(n_cell) AS min_cell FROM cnt),
@@ -2354,10 +2298,7 @@ object QueriesText {
   private val q113 = Q("q113_strip_dup_spans",
     (s, dir) => TextDedup.stripDupSpans(docsWithDups(s, dir),
       "text", "doc_id", window = 8),
-    Some("""WITH d AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 10000000, text FROM documents WHERE doc_id % 5 = 0),
+    Some("WITH " + dupDocsCte + """,
             tk AS (
               SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'),
                                          t -> len(t) > 0) AS t
@@ -2565,38 +2506,8 @@ object QueriesText {
     (s, dir) => Dsir.resampleKeep(t(s, dir, "documents"), "text", "doc_id",
       isTarget = col("lang") === "en", nBuckets = 4096,
       fraction = 0.25, seed = "dsir", unigrams = true),
-    Some("""WITH tk AS (
-              SELECT doc_id, lang = 'en' AS tgt,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
-            ft AS (
-              SELECT doc_id, tgt, unnest(list_concat(tk,
-                       CASE WHEN len(tk) >= 2 THEN
-                         list_transform(range(1, len(tk)),
-                                        i -> tk[i] || ' ' || tk[i + 1])
-                       ELSE [] END)) AS gram
-              FROM tk),
-            hb AS (
-              SELECT doc_id, tgt,
-                     ('0x' || substr(md5(gram), 1, 4))::BIGINT % 4096 AS b
-              FROM ft),
-            c AS (
-              SELECT b,
-                     CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-                     CAST(sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS BIGINT) AS cr
-              FROM hb GROUP BY b),
-            n AS (SELECT CAST(sum(ct) AS BIGINT) AS nt,
-                         CAST(sum(cr) AS BIGINT) AS nr FROM c),
-            sc AS (
-              SELECT hb.doc_id,
-                     CAST(count(*) AS BIGINT) AS n_features,
-                     sum(CAST(round(
-                         ln(CAST(c.ct + 1 AS DOUBLE) / (n.nt + 4096))
-                       - ln(CAST(c.cr + 1 AS DOUBLE) / (n.nr + 4096)), 12)
-                       AS DECIMAL(38,12))) AS lrsum
-              FROM hb JOIN c USING (b) CROSS JOIN n
-              GROUP BY hb.doc_id),
+    Some(dsirScoreCtes(
+      s"CAST(count(*) AS BIGINT) AS n_features, $dsirLrSum AS lrsum", unigrams = true) + """,
             g AS (
               SELECT d.doc_id, d.lang = 'en' AS is_target,
                      coalesce(sc.n_features, 0) AS n_features,
@@ -2651,24 +2562,9 @@ object QueriesText {
       val docs = t(s, dir, "documents")
       val plan = Split.temperaturePlan(docs, "source",
         TF.tokenCount(col("text")), alpha = 0.7, budget = 15000L)
-      val sampled = Split.applyMixture(docs, "source", col("doc_id"), plan)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_docs_sampled"))
-      plan.join(sampled, Seq("source"), "left")
-        .select(col("source"), col("n_docs"), col("n_tokens"),
-          bround(col("target_share"), 6).as("target_share"),
-          col("alloc_tokens"),
-          bround(col("rate"), 6).as("rate"), col("epochs"),
-          coalesce(col("n_docs_sampled"), lit(0L)).as("n_docs_sampled"))
+      mixtureReport(docs, plan)
     },
-    Some("""WITH tk AS (
-              SELECT doc_id, source,
-                     CAST(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                          t -> len(t) > 0)) AS BIGINT) AS ntok
-              FROM documents),
-            agg AS (
-              SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-                     CAST(sum(ntok) AS BIGINT) AS n_tokens
-              FROM tk GROUP BY source),
+    Some(s"""$mixtureInventoryCtes,
             w AS (
               SELECT *, CAST(round_even(pow(CAST(n_tokens AS DOUBLE), 0.7), 6)
                              AS DECIMAL(38,6)) AS wt
@@ -2681,22 +2577,7 @@ object QueriesText {
               SELECT *, CAST(alloc_tokens AS DOUBLE) / n_tokens AS rate
               FROM (SELECT *, CAST(round(share * 15000, 0) AS BIGINT) AS alloc_tokens
                     FROM pl)),
-            samp AS (
-              SELECT t.source, CAST(count(*) AS BIGINT) AS n_docs_sampled
-              FROM tk t JOIN pl2 USING (source)
-              WHERE (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-                  + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-                  + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-                  + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1)
-                  < round(least(rate, 1.0) * 65536.0, 0)
-              GROUP BY t.source)
-            SELECT pl2.source, n_docs, n_tokens,
-                   round_even(share, 6) AS target_share,
-                   alloc_tokens,
-                   round_even(rate, 6) AS rate,
-                   CAST(ceil(rate) AS BIGINT) AS epochs,
-                   coalesce(n_docs_sampled, 0) AS n_docs_sampled
-            FROM pl2 LEFT JOIN samp USING (source)"""))
+            $mixtureSampleSql"""))
 
   // ---------------------------------------------------------------- q122
   // Duplicate-cluster size distribution — the dedup report Lee et al.
@@ -2714,14 +2595,7 @@ object QueriesText {
         .agg(count(lit(1)).as("n_clusters"),
           (col("cluster_size") * count(lit(1))).as("n_docs"))
     },
-    Some(s"""WITH RECURSIVE ${SketchSql.minhashCtes},
-            p AS (SELECT id_a, id_b FROM ver WHERE jaccard >= 0.8),
-            e AS (SELECT id_a AS a, id_b AS b FROM p
-                  UNION SELECT id_b, id_a FROM p),
-            reach(a, b) AS (
-              SELECT a, b FROM e
-              UNION
-              SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
+    Some(s"""${SketchSql.nearDupReachCtes("p")},
             comp AS (SELECT a AS id, least(a, min(b)) AS comp
                      FROM reach GROUP BY a),
             sz AS (SELECT comp, CAST(count(*) AS BIGINT) AS cluster_size
@@ -2742,11 +2616,7 @@ object QueriesText {
   private val q123 = Q("q123_bm25_topk",
     (s, dir) => Tfidf.bm25TopK(t(s, dir, "documents"), "text", "doc_id",
       queryTerms = Seq("spark", "join", "vector"), k = 15),
-    Some("""WITH tk AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
+    Some("WITH " + tokensCte("documents") + """,
             occ AS (
               SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl, unnest(tk) AS term
               FROM tk),
@@ -2782,38 +2652,8 @@ object QueriesText {
   // closes the last spec-only streaming scoring path.
   private val q124 = Q("q124_stream_dsir_score",
     (s, dir) => graft.streaming.StreamHarness.dsirScoreSinkRun(s, dir),
-    Some("""WITH tk AS (
-              SELECT doc_id, lang = 'en' AS tgt,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
-            bg AS (
-              SELECT doc_id, tgt, unnest(CASE WHEN len(tk) >= 2 THEN
-                       list_transform(range(1, len(tk)),
-                                      i -> tk[i] || ' ' || tk[i + 1])
-                     ELSE [] END) AS gram
-              FROM tk),
-            hb AS (
-              SELECT doc_id, tgt,
-                     ('0x' || substr(md5(gram), 1, 4))::BIGINT % 4096 AS b
-              FROM bg),
-            c AS (
-              SELECT b,
-                     CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-                     CAST(sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS BIGINT) AS cr
-              FROM hb GROUP BY b),
-            n AS (SELECT CAST(sum(ct) AS BIGINT) AS nt,
-                         CAST(sum(cr) AS BIGINT) AS nr FROM c),
-            sc AS (
-              SELECT hb.doc_id,
-                     CAST(count(*) AS BIGINT) AS n_bigrams,
-                     round(CAST(sum(CAST(round(
-                         ln(CAST(c.ct + 1 AS DOUBLE) / (n.nt + 4096))
-                       - ln(CAST(c.cr + 1 AS DOUBLE) / (n.nr + 4096)), 12)
-                       AS DECIMAL(38,12))) AS DOUBLE) / count(*), 6)
-                       AS avg_logratio
-              FROM hb JOIN c USING (b) CROSS JOIN n
-              GROUP BY hb.doc_id)
+    Some(dsirScoreCtes("CAST(count(*) AS BIGINT) AS n_bigrams, " +
+      dsirAvg("round") + " AS avg_logratio") + """
             SELECT d.doc_id,
                    coalesce(sc.n_bigrams, 0) AS n_bigrams,
                    sc.avg_logratio
@@ -2829,23 +2669,9 @@ object QueriesText {
   private val q125 = Q("q125_pq_recon_error",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val samples = e.filter(col("vec_id") < 16).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
-      Pq.reconstructionError(e, "embedding", Pq.codebooks(samples, m = 8))
+      Pq.reconstructionError(e, "embedding", pinnedPqCodebooks(e))
     },
-    Some("""WITH cbs AS (
-              SELECT s, vec_id + 1 AS c,
-                     list_transform(range(1, 9),
-                       i -> CAST(embedding[s * 8 + i] AS DOUBLE)) AS cw
-              FROM embeddings, (SELECT unnest(range(8)) AS s)
-              WHERE vec_id < 16),
-            dists AS (
-              SELECT e.vec_id, cb.s, cb.c,
-                     list_sum(list_transform(range(1, 9),
-                       i -> (CAST(e.embedding[cb.s * 8 + i] AS DOUBLE) - cb.cw[i]) *
-                            (CAST(e.embedding[cb.s * 8 + i] AS DOUBLE) - cb.cw[i]))) AS d
-              FROM embeddings e CROSS JOIN cbs cb),
+    Some(pqDistsCtes + """,
             mins AS (
               SELECT vec_id, s, round(min(d), 12) AS err
               FROM dists GROUP BY vec_id, s)
@@ -2855,6 +2681,52 @@ object QueriesText {
                          / count(*), 6) AS mean_sq_error,
                    round_even(max(err), 6) AS max_sq_error
             FROM mins GROUP BY s"""))
+
+  /** The brute-force top-3 (query_id, neighbor_id) truth of `q` over
+    * the corpus `e` (q126, q128, q129, q153). */
+  private def bruteTop3(q: DataFrame, e: DataFrame): DataFrame =
+    Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
+      .select(col("query_id"), col("neighbor_id"))
+
+  /** Per-query recall@3 of `found` against the truth `bf` for every
+    * `panel` query, with the `dial` columns after the query id. */
+  private def recallAt3(panel: DataFrame, bf: DataFrame, found: DataFrame,
+                        dial: Column*): DataFrame = {
+    val matched = bf.join(found, Seq("query_id", "neighbor_id"), "left_semi")
+      .groupBy(col("query_id")).agg(count(lit(1)).as("n_matched"))
+    panel.select(col("vec_id").as("query_id"))
+      .join(matched, Seq("query_id"), "left")
+      .select(col("query_id") +: dial :+
+        coalesce(col("n_matched"), lit(0L)).as("n_matched") :+
+        bround(coalesce(col("n_matched"), lit(0L)).cast(DoubleType) / 3.0, 6)
+          .as("recall_at_3"): _*)
+  }
+
+  /** `bfs`, `bfr`, `bf`: the exact top-3 of every `qs` query over the
+    * corpus — the recall truth of q126 and q153. */
+  private lazy val qsBruteTop3Ctes: String = s"""bfs AS (
+              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                     ${PlaneSql.cosSql("q.embedding", "c.embedding")} AS cos
+              FROM qs q CROSS JOIN embeddings c WHERE c.vec_id <> q.vec_id),
+            bfr AS (
+              SELECT query_id, neighbor_id,
+                     row_number() OVER (PARTITION BY query_id
+                       ORDER BY cos DESC, neighbor_id) AS rn
+              FROM bfs),
+            bf AS (SELECT query_id, neighbor_id FROM bfr WHERE rn <= 3)"""
+
+  /** `m` and the per-query recall@3 of `found` against `bf` for every
+    * `qs` query — the SQL of [[recallAt3]] (q126, q153). */
+  private def recallSql(found: String): String =
+    s"""m AS (
+              SELECT bf.query_id, CAST(count(*) AS BIGINT) AS n_matched
+              FROM bf JOIN $found USING (query_id, neighbor_id)
+              GROUP BY bf.query_id)
+            SELECT q.vec_id AS query_id,
+                   coalesce(m.n_matched, 0) AS n_matched,
+                   round_even(CAST(coalesce(m.n_matched, 0) AS DOUBLE) / 3.0, 6)
+                     AS recall_at_3
+            FROM qs q LEFT JOIN m ON m.query_id = q.vec_id"""
 
   // ---------------------------------------------------------------- q126
   // ANN recall@k report — the retrieval-quality audit q125 is the
@@ -2876,40 +2748,15 @@ object QueriesText {
     (s, dir) => {
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") % 50 === 0)
-      val bf = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-        .select(col("query_id"), col("neighbor_id"))
+      val bf = bruteTop3(q, e)
       val lsh = Similarity.lshTopK(q, e, "vec_id", "embedding", k = 3)
         .select(col("query_id"), col("neighbor_id"))
-      val matched = bf.join(lsh, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_matched"))
-      q.select(col("vec_id").as("query_id"))
-        .join(matched, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_matched"), lit(0L)).as("n_matched"),
-          bround(coalesce(col("n_matched"), lit(0L)).cast(DoubleType) / 3.0, 6)
-            .as("recall_at_3"))
+      recallAt3(q, bf, lsh)
     },
     Some(s"""WITH pl(t, pli, p) AS (VALUES ${PlaneSql.planeValues(8, 8, 64, 42L)}),
             qs AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
-            bfs AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     ${PlaneSql.cosSql("q.embedding", "c.embedding")} AS cos
-              FROM qs q CROSS JOIN embeddings c WHERE c.vec_id <> q.vec_id),
-            bfr AS (
-              SELECT query_id, neighbor_id,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos DESC, neighbor_id) AS rn
-              FROM bfs),
-            bf AS (SELECT query_id, neighbor_id FROM bfr WHERE rn <= 3),
-            ${PlaneSql.bucketCte("bq", "qs", "query_id")},
-            ${PlaneSql.bucketCte("bc", "embeddings", "neighbor_id")},
-            cnt AS (SELECT bucket, count(*) AS n FROM bc GROUP BY bucket),
-            cok AS (SELECT bc.neighbor_id, bc.bucket
-                    FROM bc JOIN cnt USING (bucket) WHERE cnt.n <= 10000),
-            cand AS (
-              SELECT DISTINCT q.query_id, c.neighbor_id
-              FROM bq q JOIN cok c USING (bucket)
-              WHERE q.query_id <> c.neighbor_id),
+            $qsBruteTop3Ctes,
+            ${PlaneSql.lshCandCtes},
             lsc AS (
               SELECT cand.query_id, cand.neighbor_id,
                      ${PlaneSql.cosSql("qe.embedding", "ce.embedding")} AS cos
@@ -2922,15 +2769,7 @@ object QueriesText {
                        ORDER BY cos DESC, neighbor_id) AS rn
               FROM lsc),
             lsh AS (SELECT query_id, neighbor_id FROM lr WHERE rn <= 3),
-            m AS (
-              SELECT bf.query_id, CAST(count(*) AS BIGINT) AS n_matched
-              FROM bf JOIN lsh USING (query_id, neighbor_id)
-              GROUP BY bf.query_id)
-            SELECT q.vec_id AS query_id,
-                   coalesce(m.n_matched, 0) AS n_matched,
-                   round_even(CAST(coalesce(m.n_matched, 0) AS DOUBLE) / 3.0, 6)
-                     AS recall_at_3
-            FROM qs q LEFT JOIN m ON m.query_id = q.vec_id"""))
+            ${recallSql("lsh")}"""))
 
   // ---------------------------------------------------------------- q127
   // HTML boilerplate strip (the q82 pattern for web dirt): every doc is
@@ -2955,7 +2794,21 @@ object QueriesText {
       docs.select(col("doc_id"), TF.stripHtml(dirty).as("clean_text"))
         .withColumn("clean_len", length(col("clean_text")).cast(LongType))
     },
-    Some("""WITH dirty AS (
+    Some {
+      // the stripHtml chain: script/style blocks, then tags, then
+      // entities (`&amp;` last), then whitespace runs
+      val clean = """trim(regexp_replace(
+                     replace(replace(replace(replace(replace(replace(
+                       regexp_replace(
+                         regexp_replace(
+                           regexp_replace(d,
+                             '(?is)<script[^>]*>.*?</script\s*>', ' ', 'g'),
+                           '(?is)<style[^>]*>.*?</style\s*>', ' ', 'g'),
+                         '(?s)<[^>]*>', ' ', 'g'),
+                       '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
+                       '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
+                     '\s+', ' ', 'g'))"""
+      """WITH dirty AS (
               SELECT doc_id,
                      '<html><head><title>t</title><script type="text/javascript">var x = 1 < 2;</script>'
                      || '<style>.c{color:red}</style></head><body><p class="main">'
@@ -2964,29 +2817,45 @@ object QueriesText {
                      AS d
               FROM documents)
             SELECT doc_id,
-                   trim(regexp_replace(
-                     replace(replace(replace(replace(replace(replace(
-                       regexp_replace(
-                         regexp_replace(
-                           regexp_replace(d,
-                             '(?is)<script[^>]*>.*?</script\s*>', ' ', 'g'),
-                           '(?is)<style[^>]*>.*?</style\s*>', ' ', 'g'),
-                         '(?s)<[^>]*>', ' ', 'g'),
-                       '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                       '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-                     '\s+', ' ', 'g')) AS clean_text,
-                   CAST(length(trim(regexp_replace(
-                     replace(replace(replace(replace(replace(replace(
-                       regexp_replace(
-                         regexp_replace(
-                           regexp_replace(d,
-                             '(?is)<script[^>]*>.*?</script\s*>', ' ', 'g'),
-                           '(?is)<style[^>]*>.*?</style\s*>', ' ', 'g'),
-                         '(?s)<[^>]*>', ' ', 'g'),
-                       '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                       '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-                     '\s+', ' ', 'g'))) AS BIGINT) AS clean_len
-            FROM dirty"""))
+                   """ + clean + """ AS clean_text,
+                   CAST(length(""" + clean + """) AS BIGINT) AS clean_len
+            FROM dirty"""
+    })
+
+  /** The per-(dial setting, query) recall@3 of the `sc` candidates
+    * against `bf`, for every setting `np` of `pr` — the SQL of
+    * [[recallAt3]] with a `dial` column (q128, q129). */
+  private def dialRecallSql(found: String, dial: String): String =
+    s"""$found AS (
+              SELECT np, query_id, neighbor_id FROM (
+                SELECT np, query_id, neighbor_id,
+                       row_number() OVER (PARTITION BY np, query_id
+                         ORDER BY cos DESC, neighbor_id) AS rn
+                FROM sc)
+              WHERE rn <= 3),
+            m AS (
+              SELECT $found.np, bf.query_id, CAST(count(*) AS BIGINT) AS n_matched
+              FROM bf JOIN $found USING (query_id, neighbor_id)
+              GROUP BY $found.np, bf.query_id)
+            SELECT q.vec_id AS query_id, CAST(pr.np AS INTEGER) AS $dial,
+                   coalesce(m.n_matched, 0) AS n_matched,
+                   round_even(CAST(coalesce(m.n_matched, 0) AS DOUBLE) / 3.0, 6)
+                     AS recall_at_3
+            FROM qs q CROSS JOIN pr
+            LEFT JOIN m ON m.query_id = q.vec_id AND m.np = pr.np"""
+
+  /** `bf`: the exact top-3 of every 50th vector over `ev` — the recall
+    * truth of q128 and q129. */
+  private lazy val evBruteTop3Cte: String = """bf AS (
+              SELECT query_id, neighbor_id FROM (
+                SELECT qe.vec_id AS query_id, ce.vec_id AS neighbor_id,
+                       row_number() OVER (PARTITION BY qe.vec_id ORDER BY
+                         list_sum(list_transform(range(1, 65),
+                           i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))) /
+                         (sqrt(qe.nv) * sqrt(ce.nv)) DESC, ce.vec_id) AS rn
+                FROM ev qe CROSS JOIN ev ce
+                WHERE qe.vec_id % 50 = 0 AND ce.vec_id <> qe.vec_id)
+              WHERE rn <= 3)"""
 
   // ---------------------------------------------------------------- q128
   // ANN recall REMEDY — the actionable other half of the q126 audit.
@@ -3008,94 +2877,27 @@ object QueriesText {
     (s, dir) => {
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") % 50 === 0)
-      val cb = e.filter(col("vec_id") < 16).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
-      val bf = Pin.data(
-        Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-          .select(col("query_id"), col("neighbor_id")))
+      val cb = unitCodebook(e, 16)
+      val bf = Pin.data(bruteTop3(q, e))
       def recallAt(nprobe: Int): DataFrame = {
         val ivf = Similarity.ivfTopKWithCentroids(q, e, "vec_id", "embedding",
             cb, k = 3, nprobe = nprobe)
           .select(col("query_id"), col("neighbor_id"))
-        val matched = bf.join(ivf, Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy(col("query_id")).agg(count(lit(1)).as("n_matched"))
-        q.select(col("vec_id").as("query_id"))
-          .join(matched, Seq("query_id"), "left")
-          .select(col("query_id"), lit(nprobe).as("nprobe"),
-            coalesce(col("n_matched"), lit(0L)).as("n_matched"),
-            bround(coalesce(col("n_matched"), lit(0L)).cast(DoubleType) / 3.0, 6)
-              .as("recall_at_3"))
+        recallAt3(q, bf, ivf, lit(nprobe).as("nprobe"))
       }
       recallAt(4).unionByName(recallAt(16))
     },
-    Some("""WITH cb AS (
-              SELECT vec_id + 1 AS ci,
-                     CASE WHEN n = 0 THEN vd ELSE list_transform(vd, x -> x / n) END AS cv
-              FROM (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
-                           sqrt(list_sum(list_transform(embedding,
-                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n
-                    FROM embeddings WHERE vec_id < 16)),
-            ev AS (
-              SELECT vec_id, embedding,
-                     list_sum(list_transform(embedding,
-                       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-              FROM embeddings),
-            dots AS (
-              SELECT ev.vec_id, cb.ci,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(ev.embedding[i] AS DOUBLE) * cb.cv[i])) *
-                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
-              FROM ev CROSS JOIN cb),
-            ranked AS (
-              SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-                       ORDER BY dp DESC, ci) AS rn
-              FROM dots),
-            ccell AS (SELECT vec_id AS neighbor_id, ci AS cell FROM ranked WHERE rn = 1),
+    Some(s"""WITH ${ivfDotsCtes("embeddings WHERE vec_id < 16")},
+            $ivfRankCtes,
             qs AS (SELECT vec_id FROM embeddings WHERE vec_id % 50 = 0),
-            bf AS (
-              SELECT query_id, neighbor_id FROM (
-                SELECT qe.vec_id AS query_id, ce.vec_id AS neighbor_id,
-                       row_number() OVER (PARTITION BY qe.vec_id ORDER BY
-                         list_sum(list_transform(range(1, 65),
-                           i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))) /
-                         (sqrt(qe.nv) * sqrt(ce.nv)) DESC, ce.vec_id) AS rn
-                FROM ev qe CROSS JOIN ev ce
-                WHERE qe.vec_id % 50 = 0 AND ce.vec_id <> qe.vec_id)
-              WHERE rn <= 3),
+            $evBruteTop3Cte,
             pr AS (SELECT unnest([4, 16]) AS np),
             qcell AS (
               SELECT r.vec_id AS query_id, pr.np, r.ci AS cell
               FROM ranked r CROSS JOIN pr
               WHERE r.vec_id % 50 = 0 AND r.rn <= pr.np),
-            sc AS (
-              SELECT q.np, q.query_id, c.neighbor_id,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))) /
-                     (sqrt(qe.nv) * sqrt(ce.nv)) AS cos
-              FROM qcell q
-              JOIN ccell c USING (cell)
-              JOIN ev qe ON qe.vec_id = q.query_id
-              JOIN ev ce ON ce.vec_id = c.neighbor_id
-              WHERE q.query_id <> c.neighbor_id),
-            ivf AS (
-              SELECT np, query_id, neighbor_id FROM (
-                SELECT np, query_id, neighbor_id,
-                       row_number() OVER (PARTITION BY np, query_id
-                         ORDER BY cos DESC, neighbor_id) AS rn
-                FROM sc)
-              WHERE rn <= 3),
-            m AS (
-              SELECT ivf.np, bf.query_id, CAST(count(*) AS BIGINT) AS n_matched
-              FROM bf JOIN ivf USING (query_id, neighbor_id)
-              GROUP BY ivf.np, bf.query_id)
-            SELECT q.vec_id AS query_id, CAST(pr.np AS INTEGER) AS nprobe,
-                   coalesce(m.n_matched, 0) AS n_matched,
-                   round_even(CAST(coalesce(m.n_matched, 0) AS DOUBLE) / 3.0, 6)
-                     AS recall_at_3
-            FROM qs q CROSS JOIN pr
-            LEFT JOIN m ON m.query_id = q.vec_id AND m.np = pr.np"""))
+            ${probeCosCte("sc", "q.np, ")},
+            ${dialRecallSql("ivf", "nprobe")}"""))
 
   // --------------------------------------------------------------- q129
   // The LSH-SIDE recall dial (the q126 audit's remedy WITHOUT switching
@@ -3113,9 +2915,7 @@ object QueriesText {
     (s, dir) => {
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") % 50 === 0)
-      val bf = Pin.data(
-        Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 3)
-          .select(col("query_id"), col("neighbor_id")))
+      val bf = Pin.data(bruteTop3(q, e))
       // corpus bucketing shared across the two dial settings: the probe
       // dial is query-side only, so both settings probe the IDENTICAL
       // capped corpus index — built once, its per-bucket counts pinned
@@ -3125,38 +2925,15 @@ object QueriesText {
         val lsh = Similarity.lshTopKOnIndex(q, idx, "vec_id", "embedding",
             k = 3, probes = p)
           .select(col("query_id"), col("neighbor_id"))
-        val matched = bf.join(lsh, Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy(col("query_id")).agg(count(lit(1)).as("n_matched"))
-        q.select(col("vec_id").as("query_id"))
-          .join(matched, Seq("query_id"), "left")
-          .select(col("query_id"), lit(p).as("probes"),
-            coalesce(col("n_matched"), lit(0L)).as("n_matched"),
-            bround(coalesce(col("n_matched"), lit(0L)).cast(DoubleType) / 3.0, 6)
-              .as("recall_at_3"))
+        recallAt3(q, bf, lsh, lit(p).as("probes"))
       }
       recallAt(1).unionByName(recallAt(4))
     },
     Some(s"""WITH pl(t, pli, p) AS (VALUES ${PlaneSql.planeValues(8, 8, 64, 42L)}),
             qs AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
-            ev AS (
-              SELECT vec_id, embedding,
-                     list_sum(list_transform(embedding,
-                       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-              FROM embeddings),
-            bf AS (
-              SELECT query_id, neighbor_id FROM (
-                SELECT qe.vec_id AS query_id, ce.vec_id AS neighbor_id,
-                       row_number() OVER (PARTITION BY qe.vec_id ORDER BY
-                         list_sum(list_transform(range(1, 65),
-                           i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))) /
-                         (sqrt(qe.nv) * sqrt(ce.nv)) DESC, ce.vec_id) AS rn
-                FROM ev qe CROSS JOIN ev ce
-                WHERE qe.vec_id % 50 = 0 AND ce.vec_id <> qe.vec_id)
-              WHERE rn <= 3),
-            ${PlaneSql.bucketCte("bc", "embeddings", "neighbor_id")},
-            cnt AS (SELECT bucket, count(*) AS n FROM bc GROUP BY bucket),
-            cok AS (SELECT bc.neighbor_id, bc.bucket
-                    FROM bc JOIN cnt USING (bucket) WHERE cnt.n <= 10000),
+            ${evCte()},
+            $evBruteTop3Cte,
+            ${PlaneSql.cappedCorpusCtes},
             qd AS (
               SELECT s.vec_id AS query_id, pl.t, pl.pli,
                      list_sum(list_transform(range(1, 65),
@@ -3186,23 +2963,7 @@ object QueriesText {
               FROM cand
               JOIN embeddings qe ON qe.vec_id = cand.query_id
               JOIN embeddings ce ON ce.vec_id = cand.neighbor_id),
-            lsh AS (
-              SELECT np, query_id, neighbor_id FROM (
-                SELECT np, query_id, neighbor_id,
-                       row_number() OVER (PARTITION BY np, query_id
-                         ORDER BY cos DESC, neighbor_id) AS rn
-                FROM sc)
-              WHERE rn <= 3),
-            m AS (
-              SELECT lsh.np, bf.query_id, CAST(count(*) AS BIGINT) AS n_matched
-              FROM bf JOIN lsh USING (query_id, neighbor_id)
-              GROUP BY lsh.np, bf.query_id)
-            SELECT q.vec_id AS query_id, CAST(pr.np AS INTEGER) AS probes,
-                   coalesce(m.n_matched, 0) AS n_matched,
-                   round_even(CAST(coalesce(m.n_matched, 0) AS DOUBLE) / 3.0, 6)
-                     AS recall_at_3
-            FROM qs q CROSS JOIN pr
-            LEFT JOIN m ON m.query_id = q.vec_id AND m.np = pr.np"""))
+            ${dialRecallSql("lsh", "probes")}"""))
 
   // --------------------------------------------------------------- q130
   // Scalar quantization (SQ8) top-k — the codebook-free compressed-index
@@ -3305,9 +3066,7 @@ object QueriesText {
     * replayed verbatim by [[ivfPqOracle]]. */
   private[graft] def ivfPqModel(e: DataFrame):
       (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val cb = e.filter(col("vec_id") < 16).orderBy("vec_id")
-      .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
-      .collect().map(_.getSeq[Double](0).toArray)
+    val cb = unitCodebook(e, 16)
     import graft.plans.SketchExpressions.nearestCentroids
     val samples = e.filter(col("vec_id") < 64).orderBy("vec_id")
       .select(Pq.residualExpr(col("embedding"),
@@ -3325,8 +3084,21 @@ object QueriesText {
     },
     Some(ivfPqOracle))
 
-  private lazy val ivfPqOracle: String = ivfPqOracleCtes +
-    """
+  private lazy val ivfPqOracle: String = ivfPqOracleCtes + adcTop3Select
+
+  /** The read [[ivfPqOracle]] gates — every 50th vector, k = 3,
+    * nprobe = 4 — on an opened IVF-PQ index. */
+  private def panelTopK(idx: graft.sources.AnnIndex.Loaded, e: DataFrame): DataFrame =
+    graft.sources.AnnIndex.topK(idx, e.filter(col("vec_id") % 50 === 0),
+      "vec_id", "embedding", k = 3, nprobe = 4)
+
+  /** The read [[sqOracle]] gates (q148, q155) on an opened SQ index. */
+  private def panelTopKSq(idx: graft.sources.AnnIndex.LoadedSq, e: DataFrame): DataFrame =
+    graft.sources.AnnIndex.topKSq(idx, e.filter(col("vec_id") % 50 === 0),
+      "vec_id", "embedding", k = 3)
+
+  /** The top-3 (query, neighbor, adist, rank) rows of an ADC `r`. */
+  private lazy val adcTop3Select: String = """
             SELECT query_id, neighbor_id, round_even(adist, 6) AS adist,
                    CAST(rn AS INT) AS rank
             FROM r WHERE rn <= 3"""
@@ -3335,28 +3107,25 @@ object QueriesText {
     * shared by q131/q142 (final select) and q143 (rerank tail);
     * [[ivfPqAssignCtes]] is its coarse-assignment prefix (through the
     * `ranked` CTE), reused alone by q149's balance report. */
-  private lazy val ivfPqAssignCtes: String = """WITH cb AS (
-              SELECT vec_id + 1 AS ci,
-                     CASE WHEN n = 0 THEN vd ELSE list_transform(vd, x -> x / n) END AS cv
-              FROM (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
-                           sqrt(list_sum(list_transform(embedding,
-                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n
-                    FROM embeddings WHERE vec_id < 16)),
-            ev AS (SELECT vec_id, embedding,
-                          list_sum(list_transform(embedding,
-                            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-                   FROM embeddings),
-            dots AS (
-              SELECT ev.vec_id, cb.ci,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(ev.embedding[i] AS DOUBLE) * cb.cv[i])) *
-                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
-              FROM ev CROSS JOIN cb),
-            ranked AS (
-              SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-                       ORDER BY dp DESC, ci) AS rn
-              FROM dots)"""
+  private lazy val ivfPqAssignCtes: String =
+    "WITH " + ivfDotsCtes("embeddings WHERE vec_id < 16") + ",\n            " + rankedCte
+
+  /** `resid` (each vector's residual to its home cell centroid) and
+    * `pcb` (the 8x64 residual codebooks: the first 64 residuals sliced
+    * into 8-dim subspaces). */
+  private lazy val pqResidCtes: String = """resid AS (
+              SELECT r.vec_id, r.ci AS cell,
+                     list_transform(range(1, 65),
+                       i -> CAST(e.embedding[i] AS DOUBLE) - cb.cv[i]) AS rv
+              FROM ranked r
+              JOIN embeddings e ON e.vec_id = r.vec_id
+              JOIN cb ON cb.ci = r.ci
+              WHERE r.rn = 1),
+            pcb AS (
+              SELECT s, t.vec_id + 1 AS c2,
+                     list_transform(range(1, 9), i -> t.rv[s * 8 + i]) AS cw
+              FROM resid t, (SELECT unnest(range(8)) AS s)
+              WHERE t.vec_id < 64)"""
 
   private lazy val ivfPqOracleCtes: String =
     ivfPqOracleCtesFor("vec_id % 50 = 0")
@@ -3369,19 +3138,7 @@ object QueriesText {
   private def ivfPqOracleCtesFor(panelPred: String,
                                  candPred: String = "TRUE"): String =
     ivfPqAssignCtes + s""",
-            resid AS (
-              SELECT r.vec_id, r.ci AS cell,
-                     list_transform(range(1, 65),
-                       i -> CAST(e.embedding[i] AS DOUBLE) - cb.cv[i]) AS rv
-              FROM ranked r
-              JOIN embeddings e ON e.vec_id = r.vec_id
-              JOIN cb ON cb.ci = r.ci
-              WHERE r.rn = 1),
-            pcb AS (
-              SELECT s, t.vec_id + 1 AS c2,
-                     list_transform(range(1, 9), i -> t.rv[s * 8 + i]) AS cw
-              FROM resid t, (SELECT unnest(range(8)) AS s)
-              WHERE t.vec_id < 64),
+            $pqResidCtes,
             ndist AS (
               SELECT t.vec_id, p.s, p.c2,
                      list_sum(list_transform(range(1, 9),
@@ -3545,36 +3302,7 @@ object QueriesText {
   private val q135 = Q("q135_classifier_auc",
     (s, dir) => graft.operators.Eval.auc(dsirScoredDocs(s, dir),
       col("score"), col("lang") === "en"),
-    Some("""WITH tk AS (
-              SELECT doc_id, lang = 'en' AS tgt,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
-            bg AS (
-              SELECT doc_id, tgt, unnest(CASE WHEN len(tk) >= 2 THEN
-                       list_transform(range(1, len(tk)),
-                                      i -> tk[i] || ' ' || tk[i + 1])
-                     ELSE [] END) AS gram
-              FROM tk),
-            hb AS (
-              SELECT doc_id, tgt,
-                     ('0x' || substr(md5(gram), 1, 4))::BIGINT % 4096 AS b
-              FROM bg),
-            c AS (
-              SELECT b,
-                     CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-                     CAST(sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS BIGINT) AS cr
-              FROM hb GROUP BY b),
-            n AS (SELECT CAST(sum(ct) AS BIGINT) AS nt,
-                         CAST(sum(cr) AS BIGINT) AS nr FROM c),
-            sc AS (
-              SELECT hb.doc_id, bool_or(hb.tgt) AS y,
-                     round(CAST(sum(CAST(round(
-                         ln(CAST(c.ct + 1 AS DOUBLE) / (n.nt + 4096))
-                       - ln(CAST(c.cr + 1 AS DOUBLE) / (n.nr + 4096)), 12)
-                       AS DECIMAL(38,12))) AS DOUBLE) / count(*), 6) AS s
-              FROM hb JOIN c USING (b) CROSS JOIN n
-              GROUP BY hb.doc_id),
+    Some(dsirLabeledScoreCtes + """,
             g AS (
               SELECT s, CAST(count(*) AS BIGINT) AS nn,
                      CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS np
@@ -3604,36 +3332,13 @@ object QueriesText {
   private val q136 = Q("q136_semantic_screen",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val cb = e.filter(col("vec_id") < 16).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
+      val cb = unitCodebook(e, 16)
       val bench = e.filter(col("vec_id") % 37 === 0)
         .select((col("vec_id") + 30000000L).as("vec_id"), col("embedding"))
       graft.operators.Similarity.semanticScreen(bench, e, "vec_id",
         "embedding", cb, threshold = 0.98, nprobe = 2)
     },
-    Some("""WITH cb AS (
-              SELECT vec_id + 1 AS ci,
-                     CASE WHEN n = 0 THEN vd ELSE list_transform(vd, x -> x / n) END AS cv
-              FROM (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
-                           sqrt(list_sum(list_transform(embedding,
-                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n
-                    FROM embeddings WHERE vec_id < 16)),
-            ev AS (SELECT vec_id, embedding,
-                          list_sum(list_transform(embedding,
-                            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-                   FROM embeddings),
-            dots AS (
-              SELECT ev.vec_id, cb.ci,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(ev.embedding[i] AS DOUBLE) * cb.cv[i])) *
-                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
-              FROM ev CROSS JOIN cb),
-            ranked AS (
-              SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-                       ORDER BY dp DESC, ci) AS rn
-              FROM dots),
+    Some(ivfPqAssignCtes + """,
             ccell AS (SELECT vec_id AS corpus_id, ci AS cell FROM ranked WHERE rn = 1),
             qcell AS (SELECT vec_id + 30000000 AS bench_id, vec_id AS qv_id, ci AS cell
                       FROM ranked WHERE vec_id % 37 = 0 AND rn <= 2),
@@ -3664,36 +3369,7 @@ object QueriesText {
   private val q140 = Q("q140_score_calibration",
     (s, dir) => graft.operators.Eval.calibration(dsirScoredDocs(s, dir),
       col("score"), col("lang") === "en", bins = 10),
-    Some("""WITH tk AS (
-              SELECT doc_id, lang = 'en' AS tgt,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
-            bg AS (
-              SELECT doc_id, tgt, unnest(CASE WHEN len(tk) >= 2 THEN
-                       list_transform(range(1, len(tk)),
-                                      i -> tk[i] || ' ' || tk[i + 1])
-                     ELSE [] END) AS gram
-              FROM tk),
-            hb AS (
-              SELECT doc_id, tgt,
-                     ('0x' || substr(md5(gram), 1, 4))::BIGINT % 4096 AS b
-              FROM bg),
-            c AS (
-              SELECT b,
-                     CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-                     CAST(sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS BIGINT) AS cr
-              FROM hb GROUP BY b),
-            n AS (SELECT CAST(sum(ct) AS BIGINT) AS nt,
-                         CAST(sum(cr) AS BIGINT) AS nr FROM c),
-            sc AS (
-              SELECT hb.doc_id, bool_or(hb.tgt) AS y,
-                     round(CAST(sum(CAST(round(
-                         ln(CAST(c.ct + 1 AS DOUBLE) / (n.nt + 4096))
-                       - ln(CAST(c.cr + 1 AS DOUBLE) / (n.nr + 4096)), 12)
-                       AS DECIMAL(38,12))) AS DOUBLE) / count(*), 6) AS s
-              FROM hb JOIN c USING (b) CROSS JOIN n
-              GROUP BY hb.doc_id),
+    Some(dsirLabeledScoreCtes + """,
             ext AS (SELECT min(s) AS mn, max(s) AS mx FROM sc)
             SELECT CASE WHEN mx = mn THEN 0
                         ELSE least(CAST(floor((s - mn) / (mx - mn) * 10) AS BIGINT), 9) END AS bin,
@@ -3714,36 +3390,7 @@ object QueriesText {
   private val q141 = Q("q141_pr_curve",
     (s, dir) => graft.operators.Eval.prCurve(dsirScoredDocs(s, dir),
       col("score"), col("lang") === "en"),
-    Some("""WITH tk AS (
-              SELECT doc_id, lang = 'en' AS tgt,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
-            bg AS (
-              SELECT doc_id, tgt, unnest(CASE WHEN len(tk) >= 2 THEN
-                       list_transform(range(1, len(tk)),
-                                      i -> tk[i] || ' ' || tk[i + 1])
-                     ELSE [] END) AS gram
-              FROM tk),
-            hb AS (
-              SELECT doc_id, tgt,
-                     ('0x' || substr(md5(gram), 1, 4))::BIGINT % 4096 AS b
-              FROM bg),
-            c AS (
-              SELECT b,
-                     CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-                     CAST(sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS BIGINT) AS cr
-              FROM hb GROUP BY b),
-            n AS (SELECT CAST(sum(ct) AS BIGINT) AS nt,
-                         CAST(sum(cr) AS BIGINT) AS nr FROM c),
-            sc AS (
-              SELECT hb.doc_id, bool_or(hb.tgt) AS y,
-                     round(CAST(sum(CAST(round(
-                         ln(CAST(c.ct + 1 AS DOUBLE) / (n.nt + 4096))
-                       - ln(CAST(c.cr + 1 AS DOUBLE) / (n.nr + 4096)), 12)
-                       AS DECIMAL(38,12))) AS DOUBLE) / count(*), 6) AS s
-              FROM hb JOIN c USING (b) CROSS JOIN n
-              GROUP BY hb.doc_id),
+    Some(dsirLabeledScoreCtes + """,
             g AS (SELECT s, CAST(count(*) AS BIGINT) AS nn,
                          CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS np
                   FROM sc GROUP BY s),
@@ -3781,9 +3428,7 @@ object QueriesText {
       val idxDir = graft.streaming.StreamHarness.scratch("ann_index_q142")
       graft.sources.AnnIndex.buildIvfPq(e, "vec_id", "embedding",
         s"$idxDir/ivfpq", cb, cbs)
-      val idx = graft.sources.AnnIndex.load(s, s"$idxDir/ivfpq")
-      graft.sources.AnnIndex.topK(idx, e.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 3, nprobe = 4)
+      panelTopK(graft.sources.AnnIndex.load(s, s"$idxDir/ivfpq"), e)
     },
     Some(ivfPqOracle))
 
@@ -3841,9 +3486,7 @@ object QueriesText {
         "vec_id", "embedding", s"$idxDir/ivfpq", cb, cbs)
       graft.sources.AnnIndex.appendIvfPq(e.filter(col("vec_id") >= 250),
         "vec_id", "embedding", s"$idxDir/ivfpq")
-      val idx = graft.sources.AnnIndex.load(s, s"$idxDir/ivfpq")
-      graft.sources.AnnIndex.topK(idx, e.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 3, nprobe = 4)
+      panelTopK(graft.sources.AnnIndex.load(s, s"$idxDir/ivfpq"), e)
     },
     Some(ivfPqOracle))
 
@@ -3873,36 +3516,7 @@ object QueriesText {
       graft.operators.Split.tokenBudgetSelect(scored, col("score"),
         col("n_tokens"), "doc_id", budget = 12000L)
     },
-    Some("""WITH tk AS (
-              SELECT doc_id, lang = 'en' AS tgt,
-                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                                 t -> len(t) > 0) AS tk
-              FROM documents),
-            bg AS (
-              SELECT doc_id, tgt, unnest(CASE WHEN len(tk) >= 2 THEN
-                       list_transform(range(1, len(tk)),
-                                      i -> tk[i] || ' ' || tk[i + 1])
-                     ELSE [] END) AS gram
-              FROM tk),
-            hb AS (
-              SELECT doc_id, tgt,
-                     ('0x' || substr(md5(gram), 1, 4))::BIGINT % 4096 AS b
-              FROM bg),
-            c AS (
-              SELECT b,
-                     CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-                     CAST(sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS BIGINT) AS cr
-              FROM hb GROUP BY b),
-            n AS (SELECT CAST(sum(ct) AS BIGINT) AS nt,
-                         CAST(sum(cr) AS BIGINT) AS nr FROM c),
-            sc AS (
-              SELECT hb.doc_id,
-                     round(CAST(sum(CAST(round(
-                         ln(CAST(c.ct + 1 AS DOUBLE) / (n.nt + 4096))
-                       - ln(CAST(c.cr + 1 AS DOUBLE) / (n.nr + 4096)), 12)
-                       AS DECIMAL(38,12))) AS DOUBLE) / count(*), 6) AS score
-              FROM hb JOIN c USING (b) CROSS JOIN n
-              GROUP BY hb.doc_id),
+    Some(dsirScoreCtes(dsirAvg("round") + " AS score") + """,
             tc AS (
               SELECT doc_id,
                      CAST(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
@@ -3938,9 +3552,7 @@ object QueriesText {
         "vec_id", "embedding", d)
       graft.sources.AnnIndex.compact(s, d)
       graft.sources.AnnIndex.expire(s, d)
-      val idx = graft.sources.AnnIndex.load(s, d)
-      graft.sources.AnnIndex.topK(idx, e.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 3, nprobe = 4)
+      panelTopK(graft.sources.AnnIndex.load(s, d), e)
     },
     Some(ivfPqOracle))
 
@@ -4016,9 +3628,7 @@ object QueriesText {
         "vec_id", "embedding", d, m)
       graft.sources.AnnIndex.appendSq(e.filter(col("vec_id") >= 250),
         "vec_id", "embedding", d)
-      val idx = graft.sources.AnnIndex.loadSq(s, d)
-      graft.sources.AnnIndex.topKSq(idx, e.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 3)
+      panelTopKSq(graft.sources.AnnIndex.loadSq(s, d), e)
     },
     Some(sqOracle))
 
@@ -4164,9 +3774,7 @@ object QueriesText {
       graft.sources.AnnIndex.buildIvfPq(e.unionByName(decoys), "vec_id",
         "embedding", d, cb, cbs)
       graft.sources.AnnIndex.delete(decoys.select(col("vec_id")), "vec_id", d)
-      val idx = graft.sources.AnnIndex.load(s, d)
-      graft.sources.AnnIndex.topK(idx, e.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 3, nprobe = 4)
+      panelTopK(graft.sources.AnnIndex.load(s, d), e)
     },
     Some(ivfPqOracle))
 
@@ -4195,42 +3803,15 @@ object QueriesText {
       val ann = graft.sources.AnnIndex.topK(idx, panel, "vec_id",
           "embedding", k = 3, nprobe = 4)
         .select(col("query_id"), col("neighbor_id"))
-      val bf = Similarity.bruteForceTopK(panel, e, "vec_id", "embedding",
-          k = 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val matched = bf.join(ann, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_matched"))
-      panel.select(col("vec_id").as("query_id"))
-        .join(matched, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_matched"), lit(0L)).as("n_matched"),
-          bround(coalesce(col("n_matched"), lit(0L)).cast(DoubleType) / 3.0, 6)
-            .as("recall_at_3"))
+      recallAt3(panel, bruteTop3(panel, e), ann)
     },
     Some(s"""${ivfPqOracleCtesFor(
         s"vec_id IN (${annPanelIds.mkString(", ")})")},
             ann AS (SELECT query_id, neighbor_id FROM r WHERE rn <= 3),
             qs AS (SELECT vec_id, embedding FROM embeddings
                    WHERE vec_id IN (${annPanelIds.mkString(", ")})),
-            bfs AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     ${PlaneSql.cosSql("q.embedding", "c.embedding")} AS cos
-              FROM qs q CROSS JOIN embeddings c WHERE c.vec_id <> q.vec_id),
-            bfr AS (
-              SELECT query_id, neighbor_id,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos DESC, neighbor_id) AS rn
-              FROM bfs),
-            bf AS (SELECT query_id, neighbor_id FROM bfr WHERE rn <= 3),
-            m AS (
-              SELECT bf.query_id, CAST(count(*) AS BIGINT) AS n_matched
-              FROM bf JOIN ann USING (query_id, neighbor_id)
-              GROUP BY bf.query_id)
-            SELECT q.vec_id AS query_id,
-                   coalesce(m.n_matched, 0) AS n_matched,
-                   round_even(CAST(coalesce(m.n_matched, 0) AS DOUBLE) / 3.0, 6)
-                     AS recall_at_3
-            FROM qs q LEFT JOIN m ON m.query_id = q.vec_id"""))
+            $qsBruteTop3Ctes,
+            ${recallSql("ann")}"""))
 
   // --------------------------------------------------------------- q154
   // Image content near-dup — the media twin of the q32 SimHash family:
@@ -4328,9 +3909,7 @@ object QueriesText {
         "vec_id", "embedding", d, m, Some(cb))
       graft.sources.AnnIndex.appendSq(e.filter(col("vec_id") >= 250),
         "vec_id", "embedding", d)
-      val idx = graft.sources.AnnIndex.loadSq(s, d)
-      graft.sources.AnnIndex.topKSq(idx, e.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 3)
+      panelTopKSq(graft.sources.AnnIndex.loadSq(s, d), e)
     },
     Some(sqOracle))
 
@@ -4416,9 +3995,7 @@ object QueriesText {
       graft.sources.AnnIndex.delete(decoys.select(col("vec_id")), "vec_id", d)
       graft.sources.AnnIndex.compact(s, d)
       graft.sources.AnnIndex.expire(s, d)
-      val idx = graft.sources.AnnIndex.load(s, d)
-      graft.sources.AnnIndex.topK(idx, e.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 3, nprobe = 4)
+      panelTopK(graft.sources.AnnIndex.load(s, d), e)
     },
     Some(ivfPqOracle))
 
@@ -4447,10 +4024,7 @@ object QueriesText {
     },
     Some(ivfPqOracleCtesFor("vec_id % 50 = 0",
       "t.vec_id IN (SELECT vec_id FROM embeddings WHERE label < 5)") +
-      """
-            SELECT query_id, neighbor_id, round_even(adist, 6) AS adist,
-                   CAST(rn AS INT) AS rank
-            FROM r WHERE rn <= 3"""))
+      adcTop3Select))
 
   // --------------------------------------------------------------- q160
   // Snapshot RETENTION under maintenance (Iceberg expire_snapshots
@@ -4508,9 +4082,7 @@ object QueriesText {
       graft.sources.AnnIndex.buildIvfPq(e, "vec_id", "embedding", d,
         badCb, badCbs)
       graft.sources.AnnIndex.retrain(e, "vec_id", "embedding", d, cb, cbs)
-      val idx = graft.sources.AnnIndex.load(s, d)
-      graft.sources.AnnIndex.topK(idx, e.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 3, nprobe = 4)
+      panelTopK(graft.sources.AnnIndex.load(s, d), e)
     },
     Some(ivfPqOracle))
 
@@ -4538,10 +4110,7 @@ object QueriesText {
         allowedIdCol = "vec_id", k = 3, nprobe = 4)
     },
     Some(ivfPqOracleCtesFor("vec_id % 50 = 0", "t.vec_id % 100 = 0") +
-      """
-            SELECT query_id, neighbor_id, round_even(adist, 6) AS adist,
-                   CAST(rn AS INT) AS rank
-            FROM r WHERE rn <= 3"""))
+      adcTop3Select))
 
   // --------------------------------------------------------------- q163
   // Filtered search on the CHEAP tier (q159's SQ8 twin): the persisted
@@ -4620,9 +4189,7 @@ object QueriesText {
       graft.sources.AnnIndex.buildIvfPq(e.filter(col("vec_id") >= 250),
         "vec_id", "embedding", d2, cb, cbs)
       graft.sources.AnnIndex.merge(s, d1, d2)
-      val idx = graft.sources.AnnIndex.load(s, d1)
-      graft.sources.AnnIndex.topK(idx, e.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 3, nprobe = 4)
+      panelTopK(graft.sources.AnnIndex.load(s, d1), e)
     },
     Some(ivfPqOracle))
 
@@ -4695,65 +4262,9 @@ object QueriesText {
               s"vec_id IN (${annPanelIds.mkString(", ")})",
               "JOIN cand ON cand.vec_id = e.vec_id")}"""))
 
-  // --------------------------------------------------------------- q168
-  // Cell-skew remediation: the corpus's HOTTEST coarse cell (cellStats'
-  // max-population row — real embeddings cluster, so one posting list
-  // grows until every probe routed to it scans a data-sized partition)
-  // is split in place: its rows re-assign against two deterministic
-  // sub-centroids (the cell's first two member vectors, normalized —
-  // the same derivation convention as the build model), the centroid
-  // table is rewritten with sub-0 in the old slot and sub-1 appended
-  // as a NEW cell (no other cell id shifts, no other segment's codes
-  // re-encode), and one manifest swap publishes tombstone + re-keyed
-  // segment + bumped model version. The post-split search must match
-  // the oracle's full replay: assignment under the ORIGINAL model,
-  // hot-membership, the sub-centroid re-rank over the post-split
-  // centroid list, codebooks still derived from the ORIGINAL residuals
-  // (the split never refits codebooks), per-cell re-encode, probe
-  // routing over 17 cells, and the ADC sum — a row left under the
-  // retired centroid, a shifted cell id, or a refit codebook flips
-  // the hash.
-  private val q168 = Q("q168_ann_split_cell",
-    (s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val (cb, cbs) = ivfPqModel(e)
-      val idxDir = graft.streaming.StreamHarness.scratch("ann_split_q168")
-      val d = s"$idxDir/ivfpq"
-      graft.sources.AnnIndex.buildIvfPq(e, "vec_id", "embedding", d, cb, cbs)
-      val idx0 = graft.sources.AnnIndex.load(s, d)
-      // hottest cell, tie-broken by id — parameter-sized collect
-      val hot = graft.sources.AnnIndex.cellStats(idx0)
-        .orderBy(col("n_vectors").desc, col("cell")).select(col("cell"))
-        .first().getInt(0)
-      // deterministic sub-centroids: the cell's first two member
-      // vectors (by id), normalized — replayable by the oracle; a
-      // production caller would k-means the cell's members instead
-      val subIds = idx0.codes.filter(col("_cell") === hot)
-        .select(col("neighbor_id")).orderBy("neighbor_id").limit(2)
-        .collect().map(_.getLong(0))
-      val subs = e.filter(col("vec_id").isin(subIds.map(Long.box): _*))
-        .orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.normalize(col("embedding"))
-          .as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
-      graft.sources.AnnIndex.splitCell(e, "vec_id", "embedding", d, hot, subs)
-      val idx = graft.sources.AnnIndex.load(s, d)
-      graft.sources.AnnIndex.topK(idx, e.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 3, nprobe = 4)
-    },
-    Some(ivfPqAssignCtes + """,
-            hot AS (SELECT ci AS hc FROM (
-                      SELECT ci, count(*) AS c FROM ranked WHERE rn = 1
-                      GROUP BY ci)
-                    ORDER BY c DESC, ci LIMIT 1),
-            subsrc AS (SELECT r.vec_id,
-                              row_number() OVER (ORDER BY r.vec_id) AS rs
-                       FROM ranked r, hot
-                       WHERE r.rn = 1 AND r.ci = hot.hc
-                       ORDER BY r.vec_id LIMIT 2),
-            subcv AS (
-              SELECT s.rs,
-                     CASE WHEN sqrt(list_sum(list_transform(e.embedding,
+  /** `e.embedding` unit-normalized (a zero vector kept as it is): the
+    * sub-centroid seeds of q168 and [[splitPolicyCtes]]. */
+  private lazy val unitEmbeddingSql: String = """CASE WHEN sqrt(list_sum(list_transform(e.embedding,
                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) = 0
                           THEN list_transform(e.embedding,
                             x -> CAST(x AS DOUBLE))
@@ -4761,14 +4272,30 @@ object QueriesText {
                             x -> CAST(x AS DOUBLE) /
                               sqrt(list_sum(list_transform(e.embedding,
                                 y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))))
-                     END AS cv
-              FROM subsrc s JOIN embeddings e ON e.vec_id = s.vec_id),
-            cb2 AS (SELECT ci, cv FROM cb, hot WHERE ci <> hot.hc
-                    UNION ALL
-                    SELECT hot.hc AS ci, s.cv FROM subcv s, hot WHERE s.rs = 1
-                    UNION ALL
-                    SELECT 17 AS ci, s.cv FROM subcv s WHERE s.rs = 2),
-            dots2 AS (
+                     END"""
+
+  /** `hot`: the cell with the most home vectors (lowest id on ties) —
+    * the cell a split retires (q168, and [[splitPolicyCtes]]). */
+  private lazy val hotCellCte: String = """hot AS (SELECT ci AS hc FROM (
+                      SELECT ci, count(*) AS c FROM ranked WHERE rn = 1
+                      GROUP BY ci)
+                    ORDER BY c DESC, ci LIMIT 1)"""
+
+  /** `assign`: each vector's cell after the split — a `hot` member
+    * moves to its nearer `cb2` entry, every other vector stays put. */
+  private lazy val splitAssignCte: String = """assign AS (
+              SELECT o.vec_id,
+                     CASE WHEN o.ci = hot.hc THEN n.ci ELSE o.ci END AS cell
+              FROM (SELECT vec_id, ci FROM ranked WHERE rn = 1) o
+              JOIN (SELECT vec_id, ci FROM ranked2 WHERE rn = 1) n
+                USING (vec_id)
+              CROSS JOIN hot)"""
+
+  /** The post-split re-encode and ADC replay of q168 and q169: `dots2`
+    * and `ranked2` route every vector over the grown table `cb2`, rows
+    * re-encode against codebooks derived from the ORIGINAL residuals,
+    * and the panel probes 4 of the 17 cells. */
+  private lazy val splitAdcCtes: String = s"""dots2 AS (
               SELECT ev.vec_id, nc.ci,
                      list_sum(list_transform(range(1, 65),
                        i -> CAST(ev.embedding[i] AS DOUBLE) * nc.cv[i])) *
@@ -4778,26 +4305,8 @@ object QueriesText {
               SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
                        ORDER BY dp DESC, ci) AS rn
               FROM dots2),
-            assign AS (
-              SELECT o.vec_id,
-                     CASE WHEN o.ci = hot.hc THEN n.ci ELSE o.ci END AS cell
-              FROM (SELECT vec_id, ci FROM ranked WHERE rn = 1) o
-              JOIN (SELECT vec_id, ci FROM ranked2 WHERE rn = 1) n
-                USING (vec_id)
-              CROSS JOIN hot),
-            resid AS (
-              SELECT r.vec_id, r.ci AS cell,
-                     list_transform(range(1, 65),
-                       i -> CAST(e.embedding[i] AS DOUBLE) - cb.cv[i]) AS rv
-              FROM ranked r
-              JOIN embeddings e ON e.vec_id = r.vec_id
-              JOIN cb ON cb.ci = r.ci
-              WHERE r.rn = 1),
-            pcb AS (
-              SELECT s, t.vec_id + 1 AS c2,
-                     list_transform(range(1, 9), i -> t.rv[s * 8 + i]) AS cw
-              FROM resid t, (SELECT unnest(range(8)) AS s)
-              WHERE t.vec_id < 64),
+            $splitAssignCte,
+            $pqResidCtes,
             resid2 AS (
               SELECT a.vec_id, a.cell,
                      list_transform(range(1, 65),
@@ -4845,10 +4354,69 @@ object QueriesText {
             r AS (SELECT query_id, neighbor_id, adist,
                          row_number() OVER (PARTITION BY query_id
                            ORDER BY adist ASC, neighbor_id) AS rn
-                  FROM adc2)
-            SELECT query_id, neighbor_id, round_even(adist, 6) AS adist,
-                   CAST(rn AS INT) AS rank
-            FROM r WHERE rn <= 3"""))
+                  FROM adc2)""" + adcTop3Select
+
+  // --------------------------------------------------------------- q168
+  // Cell-skew remediation: the corpus's HOTTEST coarse cell (cellStats'
+  // max-population row — real embeddings cluster, so one posting list
+  // grows until every probe routed to it scans a data-sized partition)
+  // is split in place: its rows re-assign against two deterministic
+  // sub-centroids (the cell's first two member vectors, normalized —
+  // the same derivation convention as the build model), the centroid
+  // table is rewritten with sub-0 in the old slot and sub-1 appended
+  // as a NEW cell (no other cell id shifts, no other segment's codes
+  // re-encode), and one manifest swap publishes tombstone + re-keyed
+  // segment + bumped model version. The post-split search must match
+  // the oracle's full replay: assignment under the ORIGINAL model,
+  // hot-membership, the sub-centroid re-rank over the post-split
+  // centroid list, codebooks still derived from the ORIGINAL residuals
+  // (the split never refits codebooks), per-cell re-encode, probe
+  // routing over 17 cells, and the ADC sum — a row left under the
+  // retired centroid, a shifted cell id, or a refit codebook flips
+  // the hash.
+  private val q168 = Q("q168_ann_split_cell",
+    (s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val (cb, cbs) = ivfPqModel(e)
+      val idxDir = graft.streaming.StreamHarness.scratch("ann_split_q168")
+      val d = s"$idxDir/ivfpq"
+      graft.sources.AnnIndex.buildIvfPq(e, "vec_id", "embedding", d, cb, cbs)
+      val idx0 = graft.sources.AnnIndex.load(s, d)
+      // hottest cell, tie-broken by id — parameter-sized collect
+      val hot = graft.sources.AnnIndex.cellStats(idx0)
+        .orderBy(col("n_vectors").desc, col("cell")).select(col("cell"))
+        .first().getInt(0)
+      // deterministic sub-centroids: the cell's first two member
+      // vectors (by id), normalized — replayable by the oracle; a
+      // production caller would k-means the cell's members instead
+      val subIds = idx0.codes.filter(col("_cell") === hot)
+        .select(col("neighbor_id")).orderBy("neighbor_id").limit(2)
+        .collect().map(_.getLong(0))
+      val subs = e.filter(col("vec_id").isin(subIds.map(Long.box): _*))
+        .orderBy("vec_id")
+        .select(graft.functions.VectorFunctions.normalize(col("embedding"))
+          .as("v"))
+        .collect().map(_.getSeq[Double](0).toArray)
+      graft.sources.AnnIndex.splitCell(e, "vec_id", "embedding", d, hot, subs)
+      panelTopK(graft.sources.AnnIndex.load(s, d), e)
+    },
+    Some(ivfPqAssignCtes + s""",
+            $hotCellCte,
+            subsrc AS (SELECT r.vec_id,
+                              row_number() OVER (ORDER BY r.vec_id) AS rs
+                       FROM ranked r, hot
+                       WHERE r.rn = 1 AND r.ci = hot.hc
+                       ORDER BY r.vec_id LIMIT 2),
+            subcv AS (
+              SELECT s.rs,
+                     $unitEmbeddingSql AS cv
+              FROM subsrc s JOIN embeddings e ON e.vec_id = s.vec_id),
+            cb2 AS (SELECT ci, cv FROM cb, hot WHERE ci <> hot.hc
+                    UNION ALL
+                    SELECT hot.hc AS ci, s.cv FROM subcv s, hot WHERE s.rs = 1
+                    UNION ALL
+                    SELECT 17 AS ci, s.cv FROM subcv s WHERE s.rs = 2),
+            $splitAdcCtes"""))
 
   /** The split-POLICY derivation replayed in SQL — shared by q169
     * (IVF-PQ tier) and q170 (SQ tier): hottest-cell pick off the
@@ -4857,21 +4425,10 @@ object QueriesText {
     * the grown 17-entry centroid table `cb2` (sub-0 in the hot slot,
     * sub-1 appended). Matches [[graft.sources.AnnIndex.rebalance]]'s
     * derivation bit for bit (see its rounding note). */
-  private lazy val splitPolicyCtes: String = """hot AS (SELECT ci AS hc FROM (
-                      SELECT ci, count(*) AS c FROM ranked WHERE rn = 1
-                      GROUP BY ci)
-                    ORDER BY c DESC, ci LIMIT 1),
+  private lazy val splitPolicyCtes: String = hotCellCte + """,
             memv AS (
               SELECT r.vec_id,
-                     CASE WHEN sqrt(list_sum(list_transform(e.embedding,
-                            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) = 0
-                          THEN list_transform(e.embedding,
-                            x -> CAST(x AS DOUBLE))
-                          ELSE list_transform(e.embedding,
-                            x -> CAST(x AS DOUBLE) /
-                              sqrt(list_sum(list_transform(e.embedding,
-                                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))))
-                     END AS v
+                     """ + unitEmbeddingSql + """ AS v
               FROM ranked r
               JOIN embeddings e ON e.vec_id = r.vec_id
               CROSS JOIN hot
@@ -4938,92 +4495,10 @@ object QueriesText {
       require(splits == 1,
         s"rebalance found nothing to split (splits=$splits) — the corpus " +
           "is perfectly uniform and this query's oracle cannot apply")
-      val idx = graft.sources.AnnIndex.load(s, d)
-      graft.sources.AnnIndex.topK(idx, e.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 3, nprobe = 4)
+      panelTopK(graft.sources.AnnIndex.load(s, d), e)
     },
-    Some(ivfPqAssignCtes + ",\n" + splitPolicyCtes + """
-            dots2 AS (
-              SELECT ev.vec_id, nc.ci,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(ev.embedding[i] AS DOUBLE) * nc.cv[i])) *
-                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
-              FROM ev CROSS JOIN cb2 nc),
-            ranked2 AS (
-              SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-                       ORDER BY dp DESC, ci) AS rn
-              FROM dots2),
-            assign AS (
-              SELECT o.vec_id,
-                     CASE WHEN o.ci = hot.hc THEN n.ci ELSE o.ci END AS cell
-              FROM (SELECT vec_id, ci FROM ranked WHERE rn = 1) o
-              JOIN (SELECT vec_id, ci FROM ranked2 WHERE rn = 1) n
-                USING (vec_id)
-              CROSS JOIN hot),
-            resid AS (
-              SELECT r.vec_id, r.ci AS cell,
-                     list_transform(range(1, 65),
-                       i -> CAST(e.embedding[i] AS DOUBLE) - cb.cv[i]) AS rv
-              FROM ranked r
-              JOIN embeddings e ON e.vec_id = r.vec_id
-              JOIN cb ON cb.ci = r.ci
-              WHERE r.rn = 1),
-            pcb AS (
-              SELECT s, t.vec_id + 1 AS c2,
-                     list_transform(range(1, 9), i -> t.rv[s * 8 + i]) AS cw
-              FROM resid t, (SELECT unnest(range(8)) AS s)
-              WHERE t.vec_id < 64),
-            resid2 AS (
-              SELECT a.vec_id, a.cell,
-                     list_transform(range(1, 65),
-                       i -> CAST(e.embedding[i] AS DOUBLE) - nc.cv[i]) AS rv
-              FROM assign a
-              JOIN embeddings e ON e.vec_id = a.vec_id
-              JOIN cb2 nc ON nc.ci = a.cell),
-            ndist2 AS (
-              SELECT t.vec_id, p.s, p.c2,
-                     list_sum(list_transform(range(1, 9),
-                       i -> (t.rv[p.s * 8 + i] - p.cw[i]) *
-                            (t.rv[p.s * 8 + i] - p.cw[i]))) AS d
-              FROM resid2 t CROSS JOIN pcb p),
-            enc2 AS (SELECT vec_id, s, c2 AS code FROM (
-                       SELECT vec_id, s, c2, row_number() OVER (
-                                PARTITION BY vec_id, s ORDER BY d ASC, c2) AS rn
-                       FROM ndist2) WHERE rn = 1),
-            qcell2 AS (SELECT vec_id AS query_id, ci AS cell FROM ranked2
-                       WHERE (vec_id % 50 = 0) AND rn <= 4),
-            qresid2 AS (
-              SELECT qc.query_id, qc.cell,
-                     list_transform(range(1, 65),
-                       i -> CAST(e.embedding[i] AS DOUBLE) - nc.cv[i]) AS rv
-              FROM qcell2 qc
-              JOIN embeddings e ON e.vec_id = qc.query_id
-              JOIN cb2 nc ON nc.ci = qc.cell),
-            qdist2 AS (
-              SELECT qr.query_id, qr.cell, p.s, p.c2,
-                     list_sum(list_transform(range(1, 9),
-                       i -> (qr.rv[p.s * 8 + i] - p.cw[i]) *
-                            (qr.rv[p.s * 8 + i] - p.cw[i]))) AS d
-              FROM qresid2 qr CROSS JOIN pcb p),
-            cand2 AS (
-              SELECT q.query_id, t.vec_id AS neighbor_id, q.cell
-              FROM qcell2 q JOIN assign t USING (cell)
-              WHERE q.query_id <> t.vec_id),
-            adc2 AS (
-              SELECT c.query_id, c.neighbor_id,
-                     list_sum(list(qd.d ORDER BY qd.s)) AS adist
-              FROM cand2 c
-              JOIN enc2 n ON n.vec_id = c.neighbor_id
-              JOIN qdist2 qd ON qd.query_id = c.query_id AND qd.cell = c.cell
-                            AND qd.s = n.s AND qd.c2 = n.code
-              GROUP BY c.query_id, c.neighbor_id),
-            r AS (SELECT query_id, neighbor_id, adist,
-                         row_number() OVER (PARTITION BY query_id
-                           ORDER BY adist ASC, neighbor_id) AS rn
-                  FROM adc2)
-            SELECT query_id, neighbor_id, round_even(adist, 6) AS adist,
-                   CAST(rn AS INT) AS rank
-            FROM r WHERE rn <= 3"""))
+    Some(ivfPqAssignCtes + ",\n" + splitPolicyCtes + "\n            " +
+      splitAdcCtes))
 
   // --------------------------------------------------------------- q170
   // The SQ tier's policy twin (AnnIndex.rebalanceSq over splitCellSq):
@@ -5064,13 +4539,7 @@ object QueriesText {
                        (CASE WHEN ev.nv = 0 THEN 0.0
                              ELSE 1.0 / sqrt(ev.nv) END) DESC, nc.ci) AS rn
               FROM ev CROSS JOIN cb2 nc),
-            assign AS (
-              SELECT o.vec_id,
-                     CASE WHEN o.ci = hot.hc THEN n.ci ELSE o.ci END AS cell
-              FROM (SELECT vec_id, ci FROM ranked WHERE rn = 1) o
-              JOIN (SELECT vec_id, ci FROM ranked2 WHERE rn = 1) n
-                USING (vec_id)
-              CROSS JOIN hot),
+            $splitAssignCte,
             probe AS (SELECT DISTINCT ci FROM ranked2
                       WHERE (vec_id % 50 = 0) AND rn <= 1),
             cand AS (SELECT vec_id FROM assign
@@ -5229,56 +4698,12 @@ object QueriesText {
   private val q172 = Q("q172_hard_negatives",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val nlist = Similarity.autoNlist(e.count(), targetCellSize = 64)
-      val cb = e.filter(col("vec_id") < nlist).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
+      val cb = autoCodebook(e, 64)
       Similarity.hardNegatives(e, "vec_id", "embedding", "label", cb,
         k = 8, nprobe = 2, perQuery = 2)
     },
-    Some("""WITH params AS (
-              SELECT greatest(16, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS nlist
-              FROM embeddings),
-            cb AS (
-              SELECT vec_id + 1 AS ci,
-                     CASE WHEN n = 0 THEN vd ELSE list_transform(vd, x -> x / n) END AS cv
-              FROM (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
-                           sqrt(list_sum(list_transform(embedding,
-                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n
-                    FROM embeddings, params WHERE vec_id < nlist)),
-            ev AS (
-              SELECT vec_id, embedding, label,
-                     list_sum(list_transform(embedding,
-                       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-              FROM embeddings),
-            dots AS (
-              SELECT ev.vec_id, cb.ci,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(ev.embedding[i] AS DOUBLE) * cb.cv[i])) *
-                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
-              FROM ev CROSS JOIN cb),
-            ranked AS (
-              SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-                       ORDER BY dp DESC, ci) AS rn
-              FROM dots),
-            ccell AS (SELECT vec_id AS neighbor_id, ci AS cell FROM ranked WHERE rn = 1),
-            qcell AS (SELECT vec_id AS query_id, ci AS cell FROM ranked WHERE rn <= 2),
-            sc AS (
-              SELECT q.query_id, c.neighbor_id,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))) /
-                     (sqrt(qe.nv) * sqrt(ce.nv)) AS cos
-              FROM qcell q
-              JOIN ccell c USING (cell)
-              JOIN ev qe ON qe.vec_id = q.query_id
-              JOIN ev ce ON ce.vec_id = c.neighbor_id
-              WHERE q.query_id <> c.neighbor_id),
-            r AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos DESC, neighbor_id) AS rn
-              FROM sc),
+    Some(s"""WITH ${autoIvfDotsCtes(64, evCols = ", label")},
+            ${ivfProbeCtes("rn <= 2")},
             knn AS (
               SELECT query_id, neighbor_id, round(cos, 6) AS cosine
               FROM r WHERE rn <= 8),
@@ -5307,56 +4732,12 @@ object QueriesText {
   private val q173 = Q("q173_mmr_rerank",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val nlist = Similarity.autoNlist(e.count(), targetCellSize = 64)
-      val cb = e.filter(col("vec_id") < nlist).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
+      val cb = autoCodebook(e, 64)
       Similarity.mmrRerank(e, "vec_id", "embedding", cb,
         fetch = 8, select = 3, nprobe = 2, lamNumer = 7, lamDenom = 10)
     },
-    Some("""WITH params AS (
-              SELECT greatest(16, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS nlist
-              FROM embeddings),
-            cb AS (
-              SELECT vec_id + 1 AS ci,
-                     CASE WHEN n = 0 THEN vd ELSE list_transform(vd, x -> x / n) END AS cv
-              FROM (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
-                           sqrt(list_sum(list_transform(embedding,
-                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n
-                    FROM embeddings, params WHERE vec_id < nlist)),
-            ev AS (
-              SELECT vec_id, embedding,
-                     list_sum(list_transform(embedding,
-                       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-              FROM embeddings),
-            dots AS (
-              SELECT ev.vec_id, cb.ci,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(ev.embedding[i] AS DOUBLE) * cb.cv[i])) *
-                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
-              FROM ev CROSS JOIN cb),
-            ranked AS (
-              SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-                       ORDER BY dp DESC, ci) AS rn
-              FROM dots),
-            ccell AS (SELECT vec_id AS neighbor_id, ci AS cell FROM ranked WHERE rn = 1),
-            qcell AS (SELECT vec_id AS query_id, ci AS cell FROM ranked WHERE rn <= 2),
-            scd AS (
-              SELECT q.query_id, c.neighbor_id,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))) /
-                     (sqrt(qe.nv) * sqrt(ce.nv)) AS cos
-              FROM qcell q
-              JOIN ccell c USING (cell)
-              JOIN ev qe ON qe.vec_id = q.query_id
-              JOIN ev ce ON ce.vec_id = c.neighbor_id
-              WHERE q.query_id <> c.neighbor_id),
-            r AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos DESC, neighbor_id) AS rn
-              FROM scd),
+    Some(s"""WITH ${autoIvfDotsCtes(64)},
+            ${ivfProbeCtes("rn <= 2", "scd")},
             knn AS MATERIALIZED (
               SELECT query_id, neighbor_id,
                      CAST(CAST(round(cos, 6) AS DECIMAL(9,6)) * 1000000 AS BIGINT) AS rel6
@@ -5424,10 +4805,7 @@ object QueriesText {
   private val q174 = Q("q174_retrieval_ndcg", {
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val nlist = Similarity.autoNlist(e.count(), targetCellSize = 64)
-      val cb = e.filter(col("vec_id") < nlist).orderBy("vec_id")
-        .select(graft.functions.VectorFunctions.normalize(col("embedding")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
+      val cb = autoCodebook(e, 64)
       val knn = Similarity.knnGraph(e, "vec_id", "embedding", cb,
         k = 8, nprobe = 2)
       val lab = e.select(col("vec_id"), col("label"))
@@ -5451,49 +4829,8 @@ object QueriesText {
       .mkString(" ")
     val pCase = (1 to 8).map(j => s"WHEN ${j} THEN ${prefix(j - 1)}")
       .mkString(" ")
-    Some(s"""WITH params AS (
-              SELECT greatest(16, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS nlist
-              FROM embeddings),
-            cb AS (
-              SELECT vec_id + 1 AS ci,
-                     CASE WHEN n = 0 THEN vd ELSE list_transform(vd, x -> x / n) END AS cv
-              FROM (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd,
-                           sqrt(list_sum(list_transform(embedding,
-                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n
-                    FROM embeddings, params WHERE vec_id < nlist)),
-            ev AS (
-              SELECT vec_id, embedding, label,
-                     list_sum(list_transform(embedding,
-                       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nv
-              FROM embeddings),
-            dots AS (
-              SELECT ev.vec_id, cb.ci,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(ev.embedding[i] AS DOUBLE) * cb.cv[i])) *
-                     (CASE WHEN ev.nv = 0 THEN 0.0 ELSE 1.0 / sqrt(ev.nv) END) AS dp
-              FROM ev CROSS JOIN cb),
-            ranked AS (
-              SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-                       ORDER BY dp DESC, ci) AS rn
-              FROM dots),
-            ccell AS (SELECT vec_id AS neighbor_id, ci AS cell FROM ranked WHERE rn = 1),
-            qcell AS (SELECT vec_id AS query_id, ci AS cell FROM ranked WHERE rn <= 2),
-            scd AS (
-              SELECT q.query_id, c.neighbor_id,
-                     list_sum(list_transform(range(1, 65),
-                       i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))) /
-                     (sqrt(qe.nv) * sqrt(ce.nv)) AS cos
-              FROM qcell q
-              JOIN ccell c USING (cell)
-              JOIN ev qe ON qe.vec_id = q.query_id
-              JOIN ev ce ON ce.vec_id = c.neighbor_id
-              WHERE q.query_id <> c.neighbor_id),
-            r AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos DESC, neighbor_id) AS rn
-              FROM scd),
+    Some(s"""WITH ${autoIvfDotsCtes(64, evCols = ", label")},
+            ${ivfProbeCtes("rn <= 2", "scd")},
             rel AS (
               SELECT rk.query_id, rk.rn AS rank, eq.label = en.label AS is_rel
               FROM (SELECT query_id, neighbor_id, rn FROM r WHERE rn <= 8) rk
@@ -5535,20 +4872,10 @@ object QueriesText {
   // directions.
   private val q175 = Q("q175_containment",
     (s, dir) => TextDedup.containmentPairs(
-      Spread.toCores(docsWithDups(s, dir).filter(col("doc_id") % 10000000L < 60)),
+      Spread.toCores(dupSlice(s, dir)),
       "text", "doc_id", shingleSize = 5, threshold = 0.5,
       dfCap = 64, minShared = 2),
-    Some("""WITH d AS (
-              SELECT doc_id, text FROM documents WHERE doc_id < 60
-              UNION ALL
-              SELECT doc_id + 10000000, text FROM documents
-              WHERE doc_id % 5 = 0 AND doc_id < 60),
-            sh AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                       range(1, greatest(len(s) - 4, 1) + 1),
-                       i -> substr(s, i, 5))) AS shingles
-              FROM (SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS s FROM d)),
+    Some(s"""WITH ${sliceShingleCtes()},
             sz AS (SELECT doc_id, shingles, len(shingles) AS n FROM sh),
             occ AS (SELECT doc_id, unnest(shingles) AS g FROM sh),
             dfx AS (SELECT g, count(*) AS df FROM occ GROUP BY g),

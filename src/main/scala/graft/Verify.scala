@@ -18,11 +18,7 @@ object Verify {
     // a typo'd subset must FAIL LOUDLY, not run nothing and write an
     // empty verify_failures.json that reads as green (the ScaleStress
     // SPARK_GRAFT_SCALE_ONLY guard, mirrored)
-    val knownNames = SparkEntry.queries.keySet ++
-      Set("stream_parity", "stream_neardup_parity",
-        "stream_neardup_ttl_parity", "stream_register_parity",
-        "stream_upsert_parity", "stream_ann_index_parity",
-        "stream_ann_lifecycle_parity", "stream_index_upsert_parity")
+    val knownNames = SparkEntry.queries.keySet ++ parityChecks.map(_._1)
     only.foreach { names =>
       val unknown = names -- knownNames
       require(unknown.isEmpty,
@@ -59,30 +55,14 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // ---- streaming parity artifacts. Each runs a REAL file-source
-    // stream end-to-end (landing dir -> readStream -> transform ->
-    // parquet sink, byproducts in JVM-temp scratch, never in outDir —
-    // the checker oracles every outDir entry) and hash-compares the sink
-    // against the batch twin of the same transform on the same data.
-    // A mismatch THROWS and lands in verify_failures.json like any red
-    // query.
-    //  - stream_parity: T1-T4 eligibility (also gated as q118 above —
-    //    its sink is oracle-checked against the q50-family DuckDB SQL;
-    //    this artifact additionally pins sink == batch bit-parity).
-    //    Deliberately a SECOND independent stream run rather than a
-    //    reuse of q118's sink: sharing a memoized run would let one
-    //    execution satisfy both checks (masking nondeterminism between
-    //    runs) and would hollow out q118's benchmark timing; the extra
-    //    ~2 s on a multi-minute gate buys run-to-run independence.
-    //  - stream_neardup_parity: StreamingNearDup.hits vs the batch
-    //    estimated-Jaccard pair set (TextDedup.minHashEstimatedDups).
-    //  - stream_register_parity: the per-window CMS register stream
-    //    (watermark eviction + append-exactly-once + a CHECKPOINT
-    //    RESTART mid-run) vs the same transform on a batch read.
-    def parityCheck(name: String)(run: => String): Unit =
-      if (only.forall(_.contains(name))) {
+    // ---- streaming parity artifacts ([[parityChecks]]). A mismatch
+    // THROWS and lands in verify_failures.json like any red query.
+    parityChecks
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .foreach { case (name, run) =>
         try {
-          val artifact = run
+          val (streamOut, batchOut) = run(spark, sfDir)
+          val artifact = parityJson(name, streamOut, batchOut)
           Files.writeString(Paths.get(s"$outDir/$name.json"), artifact)
           println(artifact)
         } catch { case e: Throwable =>
@@ -90,14 +70,6 @@ object Verify {
           failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
         }
       }
-    parityCheck("stream_parity")(streamParity(spark, sfDir))
-    parityCheck("stream_neardup_parity")(streamNearDupParity(spark, sfDir))
-    parityCheck("stream_neardup_ttl_parity")(streamNearDupTtlParity(spark, sfDir))
-    parityCheck("stream_register_parity")(streamRegisterParity(spark, sfDir))
-    parityCheck("stream_upsert_parity")(streamUpsertParity(spark, sfDir))
-    parityCheck("stream_ann_index_parity")(streamAnnIndexParity(spark, sfDir))
-    parityCheck("stream_ann_lifecycle_parity")(streamAnnLifecycleParity(spark, sfDir))
-    parityCheck("stream_index_upsert_parity")(streamIndexUpsertParity(spark, sfDir))
     val failJson = failed
       .map { case (k, v) => s"${q(k)}: ${q(v.take(500))}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_failures.json"), failJson)
@@ -133,100 +105,51 @@ object Verify {
     json
   }
 
-  /** Streaming-vs-batch eligibility parity over the q50-shaped input
-    * (T1-T4 end-to-end through a real file source and parquet sink; the
-    * batch twin of this path is q50's oracle-gated checkRaw, so a
-    * matching hash proves stream output == batch oracle transitively).
-    * Returns the JSON artifact; THROWS on hash mismatch so the caller
-    * records it as a verify failure. */
-  def streamParity(spark: SparkSession, sfDir: String): String = {
-    import graft.streaming.StreamHarness
-    val (sink, landing) = StreamHarness.eligibilitySinkRun(spark, sfDir)
-    parityJson("stream_parity", sink,
-      StreamHarness.eligibilityBatch(spark, sfDir, landing))
-  }
-
-  /** Streaming-vs-batch near-dup parity:
-    * [[graft.streaming.StreamingNearDup.hits]] through a real file
-    * source and parquet sink vs the batch estimated-Jaccard pair set
-    * (TextDedup.minHashEstimatedDups — the SAME decision statistic) on
-    * the same dup-injected corpus. THROWS on hash mismatch. */
-  def streamNearDupParity(spark: SparkSession, sfDir: String): String = {
-    import graft.streaming.StreamHarness
-    parityJson("stream_neardup_parity",
-      StreamHarness.nearDupSinkRun(spark, sfDir),
-      StreamHarness.nearDupBatch(spark, sfDir))
-  }
-
-  /** The PRODUCTION PROFILE of the same check: state TTL ARMED
-    * (10 min) on the executed stream. Every duplicate on this corpus
-    * arrives within the TTL, so the sink must still match the batch
-    * twin bit-for-bit — the artifact that shows the one
-    * unbounded-by-default stateful op costs nothing to bound in its
-    * deployment profile. THROWS on hash mismatch. */
-  def streamNearDupTtlParity(spark: SparkSession, sfDir: String): String = {
-    import graft.streaming.StreamHarness
-    parityJson("stream_neardup_ttl_parity",
-      StreamHarness.nearDupSinkRunTtl(spark, sfDir),
-      StreamHarness.nearDupBatch(spark, sfDir))
-  }
-
-  /** Streaming-vs-batch parity for the per-window CMS register table —
-    * includes a CHECKPOINT RESTART mid-run (see
-    * [[graft.streaming.StreamHarness.registerSinkRun]]). THROWS on hash
-    * mismatch. */
-  def streamRegisterParity(spark: SparkSession, sfDir: String): String = {
-    import graft.streaming.StreamHarness
-    val (streamOut, batchOut) = StreamHarness.registerSinkRun(spark, sfDir)
-    parityJson("stream_register_parity", streamOut, batchOut)
-  }
-
-  /** Streaming-vs-batch parity for the S6/S7 upsert profile: an ordered
-    * update feed merged micro-batch-by-micro-batch into the versioned
-    * table (foreachBatch + UpsertSink.applyBatch, six real merge
-    * rounds) vs the batch per-key-latest over the same feed. THROWS on
-    * hash mismatch. */
-  def streamUpsertParity(spark: SparkSession, sfDir: String): String = {
-    import graft.streaming.StreamHarness
-    val (streamOut, batchOut) = StreamHarness.upsertSinkRun(spark, sfDir)
-    parityJson("stream_upsert_parity", streamOut, batchOut)
-  }
-
-  /** Streaming-vs-batch parity for continuous vector-index ingestion:
-    * five idempotent micro-batch segment appends into the snapshot-
-    * isolated [[graft.sources.AnnIndex]] (seeded by a batch build),
-    * searched and compared against a one-shot build of the full corpus
-    * ([[graft.streaming.StreamHarness.annIngestRun]]). THROWS on hash
-    * mismatch. */
-  def streamAnnIndexParity(spark: SparkSession, sfDir: String): String = {
-    import graft.streaming.StreamHarness
-    val (streamOut, batchOut) = StreamHarness.annIngestRun(spark, sfDir)
-    parityJson("stream_ann_index_parity", streamOut, batchOut)
-  }
-
-  /** Streaming-vs-batch parity for the FULL index lifecycle — streamed
-    * appends, a mid-stream COMPACTION, then the stream RESUMED from its
-    * checkpoint ([[graft.streaming.StreamHarness.annLifecycleRun]]).
-    * Gates that compaction never collides with a later micro-batch's
-    * segment allocation (the silent-data-loss regression). THROWS on
-    * hash mismatch. */
-  def streamAnnLifecycleParity(spark: SparkSession, sfDir: String): String = {
-    import graft.streaming.StreamHarness
-    val (streamOut, batchOut) = StreamHarness.annLifecycleRun(spark, sfDir)
-    parityJson("stream_ann_lifecycle_parity", streamOut, batchOut)
-  }
-
-  /** Streamed-correction parity: one foreachBatch merges each
-    * micro-batch into the versioned table AND tombstone-upserts the
-    * vector index ([[graft.streaming.StreamHarness.annUpsertRun]] —
-    * the index is seeded STALE, corrections stream in); the corrected
-    * index's search must hash-equal a one-shot build of the true
-    * corpus, so no stale vector can ever surface. THROWS on hash
-    * mismatch (or on the versioned table drifting from the batch
-    * per-key-latest). */
-  def streamIndexUpsertParity(spark: SparkSession, sfDir: String): String = {
-    import graft.streaming.StreamHarness
-    val (streamOut, batchOut) = StreamHarness.annUpsertRun(spark, sfDir)
-    parityJson("stream_index_upsert_parity", streamOut, batchOut)
+  /** The streaming parity checks, by artifact name. Each runs a REAL
+    * file-source stream end-to-end (landing dir -> readStream ->
+    * transform -> parquet sink, byproducts in JVM-temp scratch, never in
+    * outDir — the checker oracles every outDir entry) and returns
+    * (stream output, batch twin of the same transform on the same
+    * data); [[parityJson]] hash-compares the two. */
+  private val parityChecks
+      : Seq[(String, (SparkSession, String) => (DataFrame, DataFrame))] = {
+    import graft.streaming.StreamHarness._
+    Seq(
+      // T1-T4 eligibility through a real file source and parquet sink;
+      // the batch twin is q50's oracle-gated checkRaw, so a match proves
+      // stream == batch oracle transitively. Deliberately a SECOND
+      // independent stream run rather than a reuse of q118's sink:
+      // sharing a memoized run would let one execution satisfy both
+      // checks (masking nondeterminism between runs) and would hollow
+      // out q118's benchmark timing.
+      "stream_parity" -> { (s: SparkSession, dir: String) =>
+        val (sink, landing) = eligibilitySinkRun(s, dir)
+        (sink, eligibilityBatch(s, dir, landing))
+      },
+      // StreamingNearDup.hits vs the batch estimated-Jaccard pair set
+      // (TextDedup.minHashEstimatedDups — the SAME decision statistic)
+      "stream_neardup_parity" -> ((s: SparkSession, dir: String) =>
+        (nearDupSinkRun(s, dir), nearDupBatch(s, dir))),
+      // the same check in its production profile: state TTL ARMED
+      // (10 min); every duplicate arrives within the TTL, so bounding
+      // the one unbounded-by-default stateful op must cost nothing
+      "stream_neardup_ttl_parity" -> ((s: SparkSession, dir: String) =>
+        (nearDupSinkRunTtl(s, dir), nearDupBatch(s, dir))),
+      // the per-window CMS register table, with a CHECKPOINT RESTART
+      // mid-run
+      "stream_register_parity" -> registerSinkRun,
+      // S6/S7 upsert: foreachBatch + UpsertSink.applyBatch merge rounds
+      // vs the batch per-key-latest over the same feed
+      "stream_upsert_parity" -> upsertSinkRun,
+      // five idempotent micro-batch segment appends into a seeded
+      // AnnIndex vs a one-shot build of the full corpus
+      "stream_ann_index_parity" -> annIngestRun,
+      // streamed appends, a mid-stream COMPACTION, then the stream
+      // resumed from its checkpoint: compaction must never collide with
+      // a later micro-batch's segment allocation
+      "stream_ann_lifecycle_parity" -> annLifecycleRun,
+      // streamed corrections into a STALE-seeded index and a versioned
+      // table in one foreachBatch: no stale vector may surface
+      "stream_index_upsert_parity" -> annUpsertRun)
   }
 }

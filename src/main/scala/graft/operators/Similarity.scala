@@ -242,9 +242,9 @@ object Similarity {
     * exact). */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
               vecCol: String, k: Int = 10, nlist: Int = 16, nprobe: Int = 4,
-              sampleSize: Int = 4096, iters: Int = 5, seed: Long = 42L): DataFrame =
+              sampleSize: Int = 4096, iters: Int = 5): DataFrame =
     ivfTopKWithCentroids(queries, corpus, idCol, vecCol,
-      trainCentroids(corpus, idCol, vecCol, nlist, sampleSize, iters, seed),
+      trainCentroidsOracleMode(corpus, idCol, vecCol, nlist, sampleSize, iters),
       k, nprobe)
 
   /** IVF probe with a caller-supplied (pretrained) codebook — the common
@@ -474,49 +474,11 @@ object Similarity {
         bround(col("cosine"), 6).as("cosine"))
   }
 
-  /** Lloyd's k-means on a deterministic sample, spherical (unit-norm)
-    * variant: centroids re-normalized each round so dot == cosine. */
-  private def trainCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                             nlist: Int, sampleSize: Int, iters: Int,
-                             seed: Long): Array[Array[Double]] = {
-    val sample = corpus
-      .select(normalize(col(vecCol)).as("_v"), xxhash64(col(idCol).cast("string"), lit(seed)).as("_h"))
-      .orderBy(col("_h"))
-      .limit(sampleSize)
-      .collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty, "ivfTopK: empty corpus")
-
-    def unit(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0.0) v else v.map(_ / n)
-    }
-    var cents = sample.take(math.min(nlist, sample.length))
-    for (_ <- 0 until iters) {
-      val sums = Array.fill(cents.length)(new Array[Double](cents(0).length))
-      val counts = new Array[Int](cents.length)
-      sample.foreach { v =>
-        var best = 0; var bestDot = Double.MinValue
-        var i = 0
-        while (i < cents.length) {
-          var d = 0.0; var j = 0
-          while (j < v.length) { d += v(j) * cents(i)(j); j += 1 }
-          if (d > bestDot) { bestDot = d; best = i }
-          i += 1
-        }
-        var j = 0
-        while (j < v.length) { sums(best)(j) += v(j); j += 1 }
-        counts(best) += 1
-      }
-      cents = cents.indices.map(i =>
-        if (counts(i) == 0) cents(i) else unit(sums(i))).toArray
-    }
-    cents
-  }
-
-  /** ORACLE-MODE spherical k-means: the same Lloyd algebra as
-    * [[trainCentroids]], restated so every step is exactly replayable in
-    * ANSI SQL (the q98 oracle unrolls the fixed rounds as chained CTEs):
+  /** Spherical k-means — Lloyd's iterations on a deterministic sample,
+    * centroids re-normalized each round so dot == cosine — in ORACLE
+    * MODE: every step is exactly replayable in ANSI SQL (the q98 oracle
+    * unrolls the fixed rounds as chained CTEs). It is the one trainer:
+    * [[ivfTopK]] trains its quantizer here too.
     *
     *  - the sample is ordered by a 60-bit md5 hash of the id (DuckDB has
     *    no xxhash64 — the q30 oracle-mode trick);
@@ -532,8 +494,8 @@ object Similarity {
     *
     * Ties in the argmax assignment go to the lowest cell in both
     * engines (strict `>` here, `row_number() ORDER BY dp DESC, cell`
-    * there). The production twin keeps float accumulation; the two are
-    * compared on RECALL in SimilaritySpec, not on bits. */
+    * there). TextDedupSpec holds the trained quantizer, through
+    * [[ivfTopK]], to a recall bar against brute force. */
   def trainCentroidsOracleMode(corpus: DataFrame, idCol: String, vecCol: String,
                                nlist: Int, sampleSize: Int,
                                iters: Int): Array[Array[Double]] = {

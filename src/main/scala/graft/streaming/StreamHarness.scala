@@ -378,17 +378,6 @@ object StreamHarness {
     (spark.read.parquet(cleanSink), spark.read.parquet(auditSink))
   }
 
-  /** The S6/S7 STREAMING profile executed end-to-end: an ordered update
-    * feed derived from `orders` (500 keys × ~30 versions each, version
-    * seq = o_orderkey) lands as six sequential files, streams through
-    * `foreachBatch` + [[graft.sources.UpsertSink.applyBatch]] one file
-    * per micro-batch (maxFilesPerTrigger = 1 — six real merge rounds
-    * against the versioned table), and the FINAL table must equal the
-    * batch per-key-latest over the same feed. The landing files are
-    * written sequentially in ascending seq ranges, so arrival order
-    * respects version order per key and last-writer-wins composes to
-    * the global max-seq row — the parity claim. Returns
-    * (final streamed table, batch twin). */
   /** Continuous vector-index ingestion executed end-to-end: the index
     * is seeded by a batch build on the first 100 vectors (segment 0),
     * the REST of the corpus lands as five sequential files and streams
@@ -399,38 +388,8 @@ object StreamHarness {
     * batch build of the full corpus (per-row encode is deterministic
     * and search is order-free, so segmentation must not matter).
     * Returns (streamed-index search, batch-build search). */
-  def annIngestRun(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    import graft.sources.AnnIndex
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val (cb, cbs) = graft.QueriesText.ivfPqModel(e)
-    val dir = scratch("graft_stream_ann")
-    val landing = s"$dir/landing"
-    val streamed = s"$dir/index_stream"
-    val full = s"$dir/index_full"
-    val ckpt = s"$dir/ckpt"
-    AnnIndex.buildIvfPq(e.filter(col("vec_id") < 100), "vec_id",
-      "embedding", streamed, cb, cbs)
-    val rest = e.filter(col("vec_id") >= 100)
-    val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
-    val span = (maxId - 100) / 5 + 1
-    (0 until 5).foreach { i =>
-      rest.filter(col("vec_id") >= 100 + i * span &&
-          col("vec_id") < 100 + (i + 1) * span)
-        .coalesce(1).write.mode("append").parquet(landing)
-    }
-    val stream = spark.readStream
-      .schema(e.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing)
-    AnnIndex.streamAppend(stream, "vec_id", "embedding", streamed, ckpt,
-      Trigger.AvailableNow()).awaitTermination()
-    AnnIndex.buildIvfPq(e, "vec_id", "embedding", full, cb, cbs)
-    val q = e.filter(col("vec_id") % 50 === 0)
-    (AnnIndex.topK(AnnIndex.load(spark, streamed), q, "vec_id",
-        "embedding", k = 3, nprobe = 4),
-      AnnIndex.topK(AnnIndex.load(spark, full), q, "vec_id",
-        "embedding", k = 3, nprobe = 4))
-  }
+  def annIngestRun(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
+    streamedAnnRun(spark, sfDir, "graft_stream_ann", compactAfter = None)
 
   /** The FULL index lifecycle executed end-to-end under streaming
     * ingest: seed build (first 100 vectors) → three streamed
@@ -442,11 +401,23 @@ object StreamHarness {
     * that a post-compact micro-batch is never mistaken for the
     * compacted segment and silently dropped (the segment-id-collision
     * data-loss regression). Returns (lifecycle search, batch search). */
-  def annLifecycleRun(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+  def annLifecycleRun(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
+    streamedAnnRun(spark, sfDir, "graft_stream_ann_lifecycle",
+      compactAfter = Some(3))
+
+  /** The body of [[annIngestRun]] and [[annLifecycleRun]]: seed build on
+    * the first 100 vectors, the rest landed as five sequential files and
+    * drained through `streamAppend` one file per micro-batch. With
+    * `compactAfter = Some(n)` the stream drains after `n` files, the
+    * index compacts, and the stream resumes from its checkpoint for the
+    * rest. Returns (streamed-index search, one-shot build search). */
+  private def streamedAnnRun(spark: SparkSession, sfDir: String,
+                             name: String,
+                             compactAfter: Option[Int]): (DataFrame, DataFrame) = {
     import graft.sources.AnnIndex
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val (cb, cbs) = graft.QueriesText.ivfPqModel(e)
-    val dir = scratch("graft_stream_ann_lifecycle")
+    val dir = scratch(name)
     val landing = s"$dir/landing"
     val streamed = s"$dir/index_stream"
     val full = s"$dir/index_full"
@@ -455,11 +426,12 @@ object StreamHarness {
       "embedding", streamed, cb, cbs)
     val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
     val span = (maxId - 100) / 5 + 1
-    def landPart(i: Int): Unit =
+    def landParts(parts: Range): Unit = parts.foreach { i =>
       e.filter(col("vec_id") >= 100 + i * span &&
           col("vec_id") < 100 + (i + 1) * span)
         .coalesce(1).write.mode("append").parquet(landing)
-    def ingest(): Unit = {
+    }
+    def drain(): Unit = {
       val stream = spark.readStream
         .schema(e.schema)
         .option("maxFilesPerTrigger", 1)
@@ -467,15 +439,24 @@ object StreamHarness {
       AnnIndex.streamAppend(stream, "vec_id", "embedding", streamed, ckpt,
         Trigger.AvailableNow()).awaitTermination()
     }
-    (0 until 3).foreach(landPart); ingest()
-    AnnIndex.compact(spark, streamed)
-    (3 until 5).foreach(landPart); ingest()
+    val first = compactAfter.getOrElse(5)
+    landParts(0 until first); drain()
+    compactAfter.foreach { _ =>
+      AnnIndex.compact(spark, streamed)
+      landParts(first until 5); drain()
+    }
     AnnIndex.buildIvfPq(e, "vec_id", "embedding", full, cb, cbs)
     val q = e.filter(col("vec_id") % 50 === 0)
-    (AnnIndex.topK(AnnIndex.load(spark, streamed), q, "vec_id",
-        "embedding", k = 3, nprobe = 4),
-      AnnIndex.topK(AnnIndex.load(spark, full), q, "vec_id",
-        "embedding", k = 3, nprobe = 4))
+    (panelSearch(spark, streamed, q), panelSearch(spark, full, q))
+  }
+
+  /** The pruned IVF-PQ search (k = 3, nprobe = 4) of `q` on the index at
+    * `dir` — the read every ANN parity check compares. */
+  private def panelSearch(spark: SparkSession, dir: String,
+                          q: DataFrame): DataFrame = {
+    import graft.sources.AnnIndex
+    AnnIndex.topK(AnnIndex.load(spark, dir), q, "vec_id", "embedding",
+      k = 3, nprobe = 4)
   }
 
   /** Streamed CORRECTIONS against both stores at once: the index is
@@ -537,12 +518,20 @@ object StreamHarness {
       "versioned table drifted from the batch per-key-latest")
     AnnIndex.buildIvfPq(e, "vec_id", "embedding", full, cb, cbs)
     val panel = e.filter(col("vec_id") % 50 === 0)
-    (AnnIndex.topK(AnnIndex.load(spark, idxDir), panel, "vec_id",
-        "embedding", k = 3, nprobe = 4),
-      AnnIndex.topK(AnnIndex.load(spark, full), panel, "vec_id",
-        "embedding", k = 3, nprobe = 4))
+    (panelSearch(spark, idxDir, panel), panelSearch(spark, full, panel))
   }
 
+  /** The S6/S7 STREAMING profile executed end-to-end: an ordered update
+    * feed derived from `orders` (500 keys × ~30 versions each, version
+    * seq = o_orderkey) lands as six sequential files, streams through
+    * `foreachBatch` + [[graft.sources.UpsertSink.applyBatch]] one file
+    * per micro-batch (maxFilesPerTrigger = 1 — six real merge rounds
+    * against the versioned table), and the FINAL table must equal the
+    * batch per-key-latest over the same feed. The landing files are
+    * written sequentially in ascending seq ranges, so arrival order
+    * respects version order per key and last-writer-wins composes to
+    * the global max-seq row — the parity claim. Returns
+    * (final streamed table, batch twin). */
   def upsertSinkRun(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     import graft.sources.UpsertSink
     val o = spark.read.parquet(s"$sfDir/orders.parquet")

@@ -205,6 +205,16 @@ class PlanAuditSpec extends AnyFunSuite {
       s"queries without an oracle: ${(qs -- os).toSeq.sorted.mkString(", ")}; " +
         s"orphan oracles: ${(os -- qs).toSeq.sorted.mkString(", ")}")
     assert(qs.size >= 168, s"registered query count regressed: ${qs.size}")
+    // SparkEntry.queries' toMap would silently drop a duplicate name
+    val names = Queries.all.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"duplicate query names: ${names.diff(names.distinct).mkString(", ")}")
+    // an oracle fragment referenced from a non-interpolated string
+    // reaches DuckDB as a literal `${...}`
+    val unexpanded = SparkEntry.oracleSql.collect {
+      case (name, sql) if sql.contains("${") => name }
+    assert(unexpanded.isEmpty,
+      s"oracles with an unexpanded $${...}: ${unexpanded.toSeq.sorted.mkString(", ")}")
   }
 
   test("every registered query satisfies the standing plan rules") {
