@@ -2,9 +2,11 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -90,8 +92,12 @@ import graft.sources.IndexLog.{Art, ManifestData, Staged, commit, freshName,
   * job's UUID, so any rewrite of a model table (a rebuild in place, even
   * within the same second) changes the key and misses. Tombstone sets
   * are immutable too, and the memo holds their ids under the set's path
-  * plus its part-file names and lengths. The manifest is still listed
-  * and parsed on every open.
+  * plus its part-file names and lengths. The WRITER SEEDS that entry: a
+  * set of at most [[tombInlineMax]] ids ([[delete]], an upsert's) is
+  * written on the driver, and its ids go into the memo under the key the
+  * next open computes, so the first open after the write reads no
+  * tombstone file. The manifest is still listed and parsed on every
+  * open.
   *
   * CODECS: an index holds IVF-PQ codes (coarse centroids + residual PQ
   * codebooks) or SQ8 codes (a per-dimension affine model, with optional
@@ -164,22 +170,43 @@ object AnnIndex {
     * to counting the landed files for any successful write —
     * segment/tombstone names are fresh per verb, so nothing else ever
     * writes the path; on a failed write the caller never reaches the
-    * count. A frame with a `cell` column is shuffled by cell and written
-    * PARTITIONED BY it, so each segment holds ≤ nlist files (one per
-    * populated cell) instead of tasks × cells small files — the
-    * file-count term that otherwise dominates manifest-union listings as
-    * segments accumulate. The shuffle moves (id, cell, codes) —
-    * post-compression bytes, not vectors — and at production nlist
-    * (thousands, [[graft.operators.Similarity.autoNlist]]) it is as
-    * parallel as the cluster. */
-  private def writeCounted(df: DataFrame, dest: String): Long = {
+    * count. A frame with a `cell` column is written PARTITIONED BY it,
+    * so each segment holds ≤ nlist files (one per populated cell)
+    * instead of tasks × cells small files — the file-count term that
+    * otherwise dominates manifest-union listings as segments accumulate.
+    * A `oneTask` frame ([[fitsOneTask]]) is coalesced to one partition
+    * and written by one task, with no shuffle: its cell files are ≤ nlist
+    * already. Any other frame with a `cell` column is shuffled by cell
+    * first; the shuffle moves (id, cell, codes) — post-compression bytes,
+    * not vectors — and at production nlist (thousands,
+    * [[graft.operators.Similarity.autoNlist]]) it is as parallel as the
+    * cluster. */
+  private def writeCounted(df: DataFrame, dest: String,
+                           oneTask: Boolean = false): Long =
+    writeObserved(df, dest, oneTask)("n").asInstanceOf[Long]
+
+  /** [[writeCounted]], observing `metrics` over the written rows in the
+    * same pass; the result maps `n` and each metric's name to its value. */
+  private def writeObserved(df: DataFrame, dest: String, oneTask: Boolean,
+                            metrics: Column*): Map[String, Any] = {
     val cells = df.columns.contains("cell")
     val obs = new org.apache.spark.sql.Observation()
-    val w = (if (cells) df.repartition(col("cell")) else df)
-      .observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
+    val w = (if (oneTask) df.coalesce(1)
+        else if (cells) df.repartition(col("cell")) else df)
+      .observe(obs, count(lit(1)).as("n"), metrics: _*).write.mode("overwrite")
     (if (cells) w.partitionBy("cell") else w).parquet(dest)
-    obs.get("n").asInstanceOf[Long]
+    obs.get
   }
+
+  /** Whether `df` is small enough for ONE task to write: its optimizer
+    * size estimate (no job) is at most Spark's
+    * `spark.sql.files.openCostInBytes`, the bytes Spark itself charges
+    * for opening one more file. A frame with no usable estimate (Spark's
+    * default is Long.MaxValue) is not. */
+  private def fitsOneTask(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      df.sparkSession.sessionState.conf.filesOpenCostInBytes
+
   /** The snapshot's visible code union: each live segment masked by the
     * tombstone sets with a HIGHER id (sequence-number rule — a
     * tombstone never masks a segment appended after it, so
@@ -214,9 +241,12 @@ object AnnIndex {
       if (masks.isEmpty) base
       else inlineIds match {
         case Some(byTomb) =>
-          val ids = masks.flatMap(t => byTomb(t.id)).distinct
-          base.filter(col("neighbor_id").isNull ||
-            !col("neighbor_id").cast("long").isin(ids: _*))
+          // one InSet node, the form the optimizer gives `isin` past a
+          // few values anyway: analysing one literal per id costs tens
+          // of ms per open at a few hundred ids
+          val ids = masks.flatMap(t => byTomb(t.id)).toSet[Any]
+          base.filter(col("neighbor_id").isNull || !ColumnBridge.column(
+            InSet(ColumnBridge.expression(col("neighbor_id").cast("long")), ids)))
         case None =>
           base.join(masks.map(t => spark.read.schema(tombSchema)
               .parquet(s"$dir/tomb/${t.dirName}")).reduce(_ unionByName _),
@@ -228,7 +258,8 @@ object AnnIndex {
   /** Tombstone rows a snapshot open reads onto the driver as id masks
     * (see [[visibleUnion]]); a snapshot with more pending tombstone rows
     * anti-joins them instead. A few thousand ids are a few tens of KiB
-    * on the driver and in each task's filter. */
+    * on the driver and in each task's filter. The same cap bounds the
+    * sets a writer collects and lands on the driver ([[writeTomb]]). */
   private val tombInlineMax = 4096
 
   /** One scan over the segment directories `paths` (all of one model,
@@ -274,21 +305,17 @@ object AnnIndex {
 
   /** The non-NULL ids of the tombstone set at `tdir`, read on the driver
     * with parquet-hadoop (no Spark job) and memoized: a tombstone set is
-    * immutable, and its key (qualified path plus part-file names and
-    * lengths) changes with any rewrite. A set's column is BIGINT
-    * ([[delete]], upserts) or the segments' integral id type
-    * ([[splitCell]]). */
+    * immutable, and its key ([[tombKey]]) changes with any rewrite. A
+    * set's column is BIGINT ([[delete]], upserts) or the segments'
+    * integral id type ([[splitCell]]). A set [[writeTomb]] wrote is a
+    * memo hit: its writer put the ids there. */
   private def tombIds(f: org.apache.hadoop.fs.FileSystem,
                       tdir: String): Array[Long] = {
     import org.apache.parquet.hadoop.ParquetReader
     import org.apache.parquet.hadoop.example.GroupReadSupport
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val parts = f.listStatus(path(tdir)).toSeq.filterNot { st =>
-      val n = st.getPath.getName
-      n.startsWith("_") || n.startsWith(".")
-    }.sortBy(_.getPath.getName)
-    memoized(Seq("tomb", f.makeQualified(path(tdir)).toString) ++
-        parts.map(st => s"${st.getPath.getName}:${st.getLen}")) {
+    val (key, parts) = tombKey(f, tdir)
+    memoized(key) {
       val ids = Array.newBuilder[Long]
       parts.foreach { st =>
         val r = ParquetReader.builder(new GroupReadSupport(), st.getPath)
@@ -310,6 +337,49 @@ object AnnIndex {
       }
       ids.result()
     }
+  }
+
+  /** Memo key of the tombstone set at `tdir` (its qualified path plus
+    * its part files' names and lengths, one listing) and those parts. */
+  private def tombKey(f: org.apache.hadoop.fs.FileSystem, tdir: String)
+      : (Seq[String], Seq[org.apache.hadoop.fs.FileStatus]) = {
+    val parts = f.listStatus(path(tdir)).toSeq.filterNot { st =>
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+    (Seq("tomb", f.makeQualified(path(tdir)).toString) ++
+      parts.map(st => s"${st.getPath.getName}:${st.getLen}"), parts)
+  }
+
+  /** Land the distinct BIGINT `ids` (a `null` element is the NULL id,
+    * one row as `distinct()` keeps it) as the tombstone set `tdir`: one
+    * parquet file of `neighbor_id INT64`, NULL first and then ascending,
+    * written on the driver with parquet-hadoop (no Spark job). Its
+    * non-NULL ids go into the memo under the key the next open's
+    * [[tombIds]] computes, so that open reads no tombstone file. Returns
+    * the set's row count; an empty set writes nothing. */
+  private def writeTomb(f: org.apache.hadoop.fs.FileSystem, tdir: String,
+                        all: Seq[Any]): Long = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val ids = all.distinct.sortBy(Option(_).map(_.asInstanceOf[Long]))
+    if (ids.nonEmpty) {
+      val schema = MessageTypeParser.parseMessageType(
+        "message spark_schema { optional int64 neighbor_id; }")
+      val rows = new SimpleGroupFactory(schema)
+      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+          path(s"$tdir/part-00000-${java.util.UUID.randomUUID}.parquet"), f.getConf))
+        .withConf(f.getConf).withType(schema).build()
+      try ids.foreach {
+        case null => w.write(rows.newGroup())
+        case id => w.write(rows.newGroup().append("neighbor_id", id.asInstanceOf[Long]))
+      } finally w.close()
+      val keyed: Array[Long] = ids.collect { case id: Long => id }.toArray
+      memo.synchronized(memo.put(tombKey(f, tdir)._1, keyed))
+    }
+    ids.length.toLong
   }
 
   // ---- model-table schemas (fixed: written by this object) ---------
@@ -625,16 +695,23 @@ object AnnIndex {
   }
 
   /** Encode `delta` with model `m` and land it as segment `segName`
-    * (complete before the caller publishes a manifest). The encode
-    * input is spread across cores first: a compact delta arrives as ONE
-    * file → one scan split → the whole encode serializes on one task —
-    * the landing-dir trap. */
+    * (complete before the caller publishes a manifest), observing
+    * `metrics` over the encoded rows ([[writeObserved]]). Whether one
+    * task writes it is decided once, on `delta` itself ([[fitsOneTask]]):
+    * a small delta is encoded and written by one task with no shuffle. A
+    * larger delta, or one with no usable estimate, is spread across
+    * cores first — a compact input arrives as ONE file → one scan split →
+    * the whole encode serializes on one task (the landing-dir trap) — and
+    * is shuffled by cell before the write. */
   private def writeSegment[M <: AnyRef](codec: Codec[M], delta: DataFrame,
                                         idCol: String, vecCol: String,
-                                        dir: String, segName: String,
-                                        m: M): Long =
-    writeCounted(codec.encode(graft.operators.Spread.toCores(delta), idCol,
-      vecCol, m), s"$dir/data/$segName")
+                                        dir: String, segName: String, m: M,
+                                        metrics: Column*): Map[String, Any] = {
+    val oneTask = fitsOneTask(delta)
+    val in = if (oneTask) delta else graft.operators.Spread.toCores(delta)
+    writeObserved(codec.encode(in, idCol, vecCol, m), s"$dir/data/$segName",
+      oneTask, metrics: _*)
+  }
 
   /** The coarse quantizer a cell verb needs — only an SQ8 index built
     * without centroids lacks one. */
@@ -670,7 +747,8 @@ object AnnIndex {
 
     codec.writeModel(spark, tmp.toString, m)
     val segName = freshName("batch-")
-    val n = writeSegment(codec, corpus, idCol, vecCol, tmp.toString, segName, m)
+    val n = writeSegment(codec, corpus, idCol, vecCol, tmp.toString, segName,
+      m)("n").asInstanceOf[Long]
     writeManifest(f, tmp.toString, 0L,
       ManifestData(Seq(Art(0L, n, segName)), Seq.empty, hw = 0L, shw = -1L))
 
@@ -744,7 +822,14 @@ object AnnIndex {
     * publish re-lands both (the orphaned staging is expire-reclaimed
     * past its grace window). Rows within one batch must
     * be unique per id (tombstones separate BATCHES, not rows — reduce
-    * to latest-per-key first, [[UpsertSink.upsert]]'s convention).
+    * to latest-per-key first, [[UpsertSink.upsert]]'s convention): a
+    * batch whose rows with a non-NULL id outnumber its distinct ids is
+    * rejected with an IllegalArgumentException before publish, and its
+    * staged artifacts are deleted. The tombstone ids ride the segment
+    * write (one pass over the batch); a set of at most
+    * [[tombInlineMax]] ids is written on the driver and seeds the memo
+    * (MODEL MEMO on the object), a larger one is a distributed
+    * `distinct()` write of the batch's ids.
     * Pair with [[UpsertSink.applyBatch]] in the same foreachBatch to
     * keep the versioned raw table and the index in lockstep (the
     * `stream_index_upsert_parity` harness runs exactly that). */
@@ -764,19 +849,45 @@ object AnnIndex {
         verb = if (upsert) "upsert" else "append") { md =>
       val model = readModel(codec, spark, dir, md, modelKey(f, dir, md))
       val segName = freshName("batch-")
-      val n = writeSegment(codec, delta, idCol, vecCol, dir, segName, model)
-      if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); None }
+      val seg = s"$dir/data/$segName"
+      // an upsert's tombstone ids and its keyed-row count ride the
+      // segment write's observation: one pass over the delta
+      val id = col("neighbor_id").cast("long")
+      val obs = writeSegment(codec, delta, idCol, vecCol, dir, segName, model,
+        (if (!upsert) Nil else Seq(count(id).as("keyed"),
+          graft.plans.CappedIds.column(id, tombInlineMax).as("ids"))): _*)
+      val n = obs("n").asInstanceOf[Long]
+      if (n == 0) { f.delete(path(seg), true); None }
       else {
         // an upsert's tombstone takes id t and its segment t+1
         val tomb = if (!upsert) None else {
           val tombName = freshName("t-")
-          Some(tombName -> writeCounted(
-            delta.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
-            s"$dir/tomb/$tombName"))
+          val tdir = s"$dir/tomb/$tombName"
+          // (rows, distinct non-NULL ids): the observed set under the cap,
+          // else a distributed distinct() of the delta's ids
+          val (tn, distinctKeyed) = obs("ids") match {
+            case ids: collection.Seq[_] =>
+              (writeTomb(f, tdir, ids.toSeq), ids.count(_ != null).toLong)
+            case null =>
+              val t = writeObserved(
+                delta.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
+                tdir, oneTask = false, count(col("neighbor_id")).as("keyed"))
+              (t("n").asInstanceOf[Long], t("keyed").asInstanceOf[Long])
+          }
+          val keyed = obs("keyed").asInstanceOf[Long]
+          if (keyed != distinctKeyed) {
+            Seq(seg, tdir).foreach(p => f.delete(path(p), true))
+            throw new IllegalArgumentException(
+              s"upsert into $dir: the batch holds $keyed rows with an id but " +
+                s"$distinctKeyed distinct ids — an upsert batch must hold one " +
+                "row per id (reduce to the latest row per id first); " +
+                "nothing was committed")
+          }
+          Some(tombName -> tn)
         }
         val segOffset = tomb.size
         Some(Staged(
-          s"$dir/data/$segName" +: tomb.map(t => s"$dir/tomb/${t._1}").toSeq,
+          seg +: tomb.map(t => s"$dir/tomb/${t._1}").toSeq,
           m => m.copy(segs = m.segs :+ Art(m.nextId + segOffset, n, segName),
             tombs = m.tombs ++ tomb.map { case (t, tn) => Art(m.nextId, tn, t) },
             hw = m.nextId + segOffset,
@@ -818,7 +929,11 @@ object AnnIndex {
     * [[compact]]. Pinned pre-delete readers are untouched (their
     * manifest lists no such tombstone). Works on either index family
     * (IVF-PQ or SQ8) — only ids and the manifest are involved.
-    * An empty id set is a no-op. */
+    * An empty id set is a no-op. An input of at most [[tombInlineMax]]
+    * rows is collected (one `limit` collect) and its distinct ids
+    * written on the driver, seeding the memo (MODEL MEMO on the object);
+    * a larger input takes a distributed `distinct()` write. Either way a
+    * NULL id is one row of the set and masks nothing. */
   def delete(ids: DataFrame, idCol: String, dir: String): Unit = {
     val f = fs(ids.sparkSession, dir)
     // a re-based delete applies AS OF ITS COMMIT: a fresh tombstone id
@@ -829,11 +944,14 @@ object AnnIndex {
     commit(f, dir, dedupKey = None, abortOnModelChange = false,
         verb = "delete") { _ =>
       val tombName = freshName("t-")
-      val n = writeCounted(
-        ids.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
-        s"$dir/tomb/$tombName")
-      if (n == 0) { f.delete(path(s"$dir/tomb/$tombName"), true); None }
-      else Some(Staged(Seq(s"$dir/tomb/$tombName"),
+      val tdir = s"$dir/tomb/$tombName"
+      val rows = ids.select(col(idCol).cast("long").as("neighbor_id"))
+      val head = rows.limit(tombInlineMax + 1).collect()
+      val n =
+        if (head.length > tombInlineMax) writeCounted(rows.distinct(), tdir)
+        else writeTomb(f, tdir, head.toSeq.map(_.get(0)))
+      if (n == 0) { f.delete(path(tdir), true); None }
+      else Some(Staged(Seq(tdir),
         m => m.copy(tombs = m.tombs :+ Art(m.nextId, n, tombName),
           hw = m.nextId)))
     }
@@ -851,13 +969,15 @@ object AnnIndex {
     * are untouched until [[expire]]. No-op on a single-segment index
     * with no tombstones; refuses to compact an index whose visible
     * union is empty (a fully-tombstoned index should be rebuilt, not
-    * compacted into an unreadable zero-row segment). */
+    * compacted into an unreadable zero-row segment). A union that
+    * [[fitsOneTask]] is rewritten by one task with no shuffle: one file
+    * for a flat SQ8 segment, ≤ nlist cell files otherwise. */
   def compact(spark: SparkSession, dir: String): Unit = {
     val f = fs(spark, dir)
     IndexLog.compact(f, dir) { md =>
       val segName = freshName("batch-")
-      val n = writeCounted(visibleUnion(spark, f, dir, md, modelKey(f, dir, md)),
-        s"$dir/data/$segName")
+      val union = visibleUnion(spark, f, dir, md, modelKey(f, dir, md))
+      val n = writeCounted(union, s"$dir/data/$segName", fitsOneTask(union))
       if (n == 0) {
         f.delete(path(s"$dir/data/$segName"), true)
         throw new IllegalStateException(
@@ -876,7 +996,8 @@ object AnnIndex {
     * were built from the same trained quantizer — codes are only
     * comparable under one model); a mismatch fails loudly rather than
     * corrupt distances. The copy is a cell-partitioned shuffle of
-    * already-compressed codes (8 B/row payloads, not vectors), the
+    * already-compressed codes (8 B/row payloads, not vectors), or one
+    * task with no shuffle when they [[fitsOneTask]]; the
     * commit is one optimistic-concurrency publish like [[appendIvfPq]]
     * (re-base on lost races, loud abort if a concurrent [[retrain]]
     * changes the model underneath). Rows are appended as-is — ids
@@ -900,8 +1021,8 @@ object AnnIndex {
       val segName = freshName("batch-")
       // the copied rows keep their cell column, so the segment keeps the
       // destination's layout
-      val n = writeCounted(src.codes.withColumnRenamed(codec.cellCol, "cell"),
-        s"$dstDir/data/$segName")
+      val rows = src.codes.withColumnRenamed(codec.cellCol, "cell")
+      val n = writeCounted(rows, s"$dstDir/data/$segName", fitsOneTask(rows))
       if (n == 0) { f.delete(path(s"$dstDir/data/$segName"), true); None }
       else Some(Staged(Seq(s"$dstDir/data/$segName"),
         m => m.copy(segs = m.segs :+ Art(m.nextId, n, segName),
@@ -952,7 +1073,8 @@ object AnnIndex {
     val modelDir = freshName("model-")
     codec.writeModel(spark, s"$dir/$modelDir", m)
     val segName = freshName("batch-")
-    val n = writeSegment(codec, corpus, idCol, vecCol, dir, segName, m)
+    val n = writeSegment(codec, corpus, idCol, vecCol, dir, segName, m)("n")
+      .asInstanceOf[Long]
     def cleanup(): Unit = {
       f.delete(path(s"$dir/data/$segName"), true)
       f.delete(path(s"$dir/$modelDir"), true)
@@ -1090,7 +1212,8 @@ object AnnIndex {
     codec.writeModel(spark, s"$dir/$modelDir", model)
     val segName = freshName("batch-")
     val tombName = freshName("t-")
-    val n = writeSegment(codec, hot, idCol, vecCol, dir, segName, model)
+    val n = writeSegment(codec, hot, idCol, vecCol, dir, segName, model)("n")
+      .asInstanceOf[Long]
     val tn = writeCounted(memberIds, s"$dir/tomb/$tombName")
     def cleanup(): Unit = {
       f.delete(path(s"$dir/data/$segName"), true)

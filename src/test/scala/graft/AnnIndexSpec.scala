@@ -1313,4 +1313,178 @@ class AnnIndexSpec extends AnyFunSuite {
     val (_, sqLoad) = jobsOf(AnnIndex.loadSq(spark, sqCells))
     assert(sqLoad.isEmpty, s"a loadSq after compact launched ${sqLoad.size} jobs")
   }
+
+  /** `df` landed as one parquet file and read back, as a write arrives
+    * from a landing directory (a file scan, sized by the optimizer from
+    * the file). */
+  private def landed(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val p = s"${tmpDir()}/landing"
+    df.coalesce(1).write.parquet(p)
+    spark.read.parquet(p)
+  }
+
+  /** The newest tombstone set of `dir`'s current manifest: its directory
+    * and its row count. */
+  private def lastTomb(dir: String): (String, Long) = {
+    val f = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
+      spark.sparkContext.hadoopConfiguration)
+    val t = IndexLog.refresh(f, dir)._2.tombs.last
+    (s"$dir/tomb/${t.dirName}", t.n)
+  }
+
+  private def sparkWritten(tdir: String): Boolean =
+    new java.io.File(new java.net.URI(tdir).getPath, "_SUCCESS").exists
+
+  test("a small append, upsert or delete is one Spark job on both codecs; " +
+      "the next open launches none and reads no tombstone file") {
+    import graft.operators.Sq
+    TombReadCountingFs.register(spark)
+    val e = corpus(60).cache()
+    val (cents, cbs) = model(e)
+    val m = Sq.fit(e, "embedding")
+    val root = s"${TombReadCountingFs.Scheme}://${tmpDir()}"
+    val base = e.filter(col("vec_id") < 40)
+    val delta = landed(e.filter(col("vec_id") >= 40))
+    val fix = landed(e.filter(col("vec_id") < 10))
+    val gone = landed(e.filter(col("vec_id").between(20, 24)).select("vec_id"))
+    val (pq, sqFlat, sqCells) = (s"$root/pq", s"$root/sqf", s"$root/sqc")
+    AnnIndex.buildIvfPq(base, "vec_id", "embedding", pq, cents, cbs)
+    AnnIndex.buildSq(base, "vec_id", "embedding", sqFlat, m)
+    AnnIndex.buildSq(base, "vec_id", "embedding", sqCells, m, Some(cents))
+    type Verb = org.apache.spark.sql.DataFrame => Unit
+    val tiers: Seq[(String, String, Verb, Verb, () => org.apache.spark.sql.DataFrame)] = Seq(
+      ("IVF-PQ", pq, AnnIndex.appendIvfPq(_, "vec_id", "embedding", pq),
+        AnnIndex.upsertBatchIvfPq(_, "vec_id", "embedding", pq),
+        () => AnnIndex.load(spark, pq).codes),
+      ("SQ8 flat", sqFlat, AnnIndex.appendSq(_, "vec_id", "embedding", sqFlat),
+        AnnIndex.upsertBatchSq(_, "vec_id", "embedding", sqFlat),
+        () => AnnIndex.loadSq(spark, sqFlat).codes),
+      ("SQ8 cells", sqCells, AnnIndex.appendSq(_, "vec_id", "embedding", sqCells),
+        AnnIndex.upsertBatchSq(_, "vec_id", "embedding", sqCells),
+        () => AnnIndex.loadSq(spark, sqCells).codes))
+    for ((what, dir, append, upsert, open) <- tiers) {
+      open() // the model memo, as a serving process has it
+      def oneJob(verb: String)(body: => Unit): Unit = {
+        val n = jobsOf(body)._2.size
+        assert(n == 1, s"$what: a small $verb launched $n jobs")
+      }
+      def quietOpen(after: String): Unit = {
+        val before = TombReadCountingFs.tombOpens.get
+        val (_, jobs) = jobsOf(open())
+        assert(jobs.isEmpty, s"$what: the open after the $after launched ${jobs.size} jobs")
+        assert(TombReadCountingFs.tombOpens.get == before,
+          s"$what: the open after the $after read a tombstone file")
+      }
+      oneJob("append")(append(delta))
+      oneJob("upsert")(upsert(fix))
+      quietOpen("upsert")
+      oneJob("delete")(AnnIndex.delete(gone, "vec_id", dir))
+      quietOpen("delete")
+      assert(!sparkWritten(lastTomb(dir)._1), s"$what: the small set was a Spark write")
+      // positive control: the same files under a path no open has seen are
+      // read from disk, and give the codes the memo gave
+      val copy = s"$dir-copy"
+      TestSpark.copyTree(new java.net.URI(dir).getPath, new java.net.URI(copy).getPath)
+      val before = TombReadCountingFs.tombOpens.get
+      val fromDisk = TestSpark.multiset(
+        if (what == "IVF-PQ") AnnIndex.load(spark, copy).codes
+        else AnnIndex.loadSq(spark, copy).codes)
+      assert(TombReadCountingFs.tombOpens.get > before,
+        s"$what: an open of the copy read no tombstone file")
+      assert(TestSpark.multiset(open()) == fromDisk, s"$what: memo and disk differ")
+      assert(fromDisk.keys.count(_.head == 22L) == 0, s"$what: a deleted id is visible")
+    }
+  }
+
+  test("a delta above the size threshold, or without a size estimate, keeps both shuffles") {
+    val e = corpus(60).cache()
+    val (cents, cbs) = model(e)
+    val dir = s"${tmpDir()}/pq"
+    AnnIndex.buildIvfPq(e.filter(col("vec_id") < 40), "vec_id", "embedding", dir,
+      cents, cbs)
+    AnnIndex.load(spark, dir)
+    val delta = landed(e.filter(col("vec_id") >= 40))
+    /** (jobs, whether a plan spread the rows round-robin) of one append. */
+    def append(df: org.apache.spark.sql.DataFrame): (Int, Boolean) = {
+      val ((_, jobs), plans) = TestSpark.plansOf(jobsOf(
+        AnnIndex.appendIvfPq(df, "vec_id", "embedding", dir)))
+      (jobs.size, plans.exists(_.treeString.contains("RoundRobinPartitioning")))
+    }
+    assert(append(delta) == ((1, false)), "a small delta")
+    val key = "spark.sql.files.openCostInBytes"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try assert(append(delta) == ((3, true)), "a delta above the threshold")
+    finally spark.conf.set(key, was)
+    // an RDD-backed frame carries no size estimate (the default is Long.MaxValue)
+    assert(append(spark.createDataFrame(delta.rdd, delta.schema)) == ((3, true)),
+      "a delta with no size estimate")
+    assert(AnnIndex.load(spark, dir).codes.count() == 100)
+  }
+
+  test("tombstone sets above the driver-held cap take the distributed write, " +
+      "counted as distinct() counted them") {
+    val e = corpus(40).cache()
+    val (cents, cbs) = model(e)
+    val dir = s"${tmpDir()}/pq"
+    AnnIndex.buildIvfPq(e, "vec_id", "embedding", dir, cents, cbs)
+    // 5,000 ids, a repeat and two NULLs: 5,001 distinct values
+    val many = spark.range(0, 5000).select(col("id").as("vec_id"))
+      .unionByName(spark.range(0, 1).select(col("id").as("vec_id")))
+      .unionByName(Seq(Option.empty[Long], None).toDF("vec_id"))
+    AnnIndex.delete(many, "vec_id", dir)
+    val (t1, n1) = lastTomb(dir)
+    assert(n1 == 5001 && n1 == many.distinct().count(), s"above-cap delete counted $n1")
+    assert(sparkWritten(t1), "an above-cap delete's set was not a Spark write")
+    // below the cap the driver writes the set, counted the same way
+    AnnIndex.delete(Seq(Some(1L), Some(1L), Some(2L), None, None).toDF("vec_id"),
+      "vec_id", dir)
+    val (t2, n2) = lastTomb(dir)
+    assert(n2 == 3 && !sparkWritten(t2), s"small delete counted $n2")
+    // an above-cap upsert: 5,000 vectors with distinct ids and one NULL id
+    val big = spark.range(1000, 6000).select(col("id").as("vec_id"),
+        array((0 until dim).map(j => (col("id") % (j + 2)).cast("float")): _*)
+          .as("embedding"))
+      .unionByName(Seq((Option.empty[Long], Seq.fill(dim)(1.0f)))
+        .toDF("vec_id", "embedding"))
+    AnnIndex.upsertBatchIvfPq(big, "vec_id", "embedding", dir)
+    val (t3, n3) = lastTomb(dir)
+    assert(n3 == 5001 && sparkWritten(t3), s"above-cap upsert counted $n3")
+    assert(AnnIndex.load(spark, dir).batches.size == 2)
+    assert(AnnIndex.load(spark, dir).nrows == 40 + 5001)
+  }
+
+  test("an upsert batch that repeats an id is rejected before publish, with nothing staged") {
+    import graft.operators.Sq
+    val e = corpus(40).cache()
+    val (cents, cbs) = model(e)
+    val root = tmpDir()
+    val (pq, sq) = (s"$root/pq", s"$root/sq")
+    AnnIndex.buildIvfPq(e, "vec_id", "embedding", pq, cents, cbs)
+    AnnIndex.buildSq(e, "vec_id", "embedding", sq, Sq.fit(e, "embedding"))
+    val dup = e.filter(col("vec_id") < 5).unionByName(e.filter(col("vec_id") === 3))
+    val nullIds = Seq((Option.empty[Long], Seq.fill(dim)(1.0f)),
+      (Option.empty[Long], Seq.fill(dim)(2.0f))).toDF("vec_id", "embedding")
+    val big = spark.range(1000, 6000).select(col("id").as("vec_id"),
+      array((0 until dim).map(j => (col("id") % (j + 2)).cast("float")): _*)
+        .as("embedding"))
+    val bigDup = big.unionByName(big.filter(col("vec_id") === 1234L))
+    def listing(dir: String) = Seq("data", "tomb").flatMap(sub =>
+      Option(new java.io.File(s"$dir/$sub").list()).toSeq.flatten).sorted
+    for ((what, dir, upsert) <- Seq[(String, String, org.apache.spark.sql.DataFrame => Unit)](
+        ("IVF-PQ", pq, AnnIndex.upsertBatchIvfPq(_, "vec_id", "embedding", pq)),
+        ("SQ8", sq, AnnIndex.upsertBatchSq(_, "vec_id", "embedding", sq)))) {
+      for ((batch, size) <- Seq(dup -> "small", bigDup -> "above-cap")) {
+        val before = (AnnIndex.versionsOf(spark, dir), listing(dir))
+        val ex = intercept[IllegalArgumentException](upsert(batch))
+        assert(ex.getMessage.contains("distinct ids"), ex.getMessage)
+        assert((AnnIndex.versionsOf(spark, dir), listing(dir)) == before,
+          s"$what: a rejected $size batch committed or left artifacts")
+      }
+      // NULL ids key nothing, so they may repeat
+      upsert(e.filter(col("vec_id") < 3).unionByName(nullIds))
+      assert(AnnIndex.versionsOf(spark, dir).size == 2)
+    }
+  }
 }

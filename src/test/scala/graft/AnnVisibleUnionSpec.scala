@@ -143,4 +143,64 @@ class AnnVisibleUnionSpec extends AnyFunSuite {
       assertVisible("compacted", c, dir)
     }
   }
+
+  /** The one tombstone set of `dir`'s current manifest: its directory and
+    * its row count. */
+  private def onlyTomb(dir: String): (String, Long) = {
+    val f = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+    val Seq(t) = IndexLog.refresh(f, dir)._2.tombs
+    (s"$dir/tomb/${t.dirName}", t.n)
+  }
+
+  for (c <- codecs) {
+    test(s"${c.name}: a driver-written tombstone set opens like the " +
+        "distributed write of the same ids, inline and anti-joined") {
+      val root = tmpDir()
+      val (a, a2, b) = (s"$root/a", s"$root/a2", s"$root/b")
+      c.build(corpus, a)
+      // repeated, absent and NULL ids
+      val gone = (Seq(3L, 3L, 7L, 900L) ++ (10L to 20L)).map(Option(_)) :+ None
+      AnnIndex.delete(gone.toDF("vec_id"), "vec_id", a)
+      val (ta, na) = onlyTomb(a)
+      assert(na == gone.distinct.size, s"the driver-written set counted $na rows")
+      assert(!new java.io.File(ta, "_SUCCESS").exists, "the small set was a Spark write")
+      // `b`: the same index with the set rewritten as the distributed
+      // write of the same ids; `a2`: a copy of `a` whose open reads the
+      // driver-written file from disk (no open has seen its path)
+      TestSpark.copyTree(a, b)
+      TestSpark.copyTree(a, a2)
+      val tb = onlyTomb(b)._1
+      gone.toDF("vec_id").select(col("vec_id").cast("long").as("neighbor_id"))
+        .distinct().write.mode("overwrite").parquet(tb)
+      assert(new java.io.File(tb, "_SUCCESS").exists)
+      def same(what: String): Unit = {
+        val want = multiset(c.codes(b))
+        assert(multiset(c.codes(a)) == want, s"$what: seeded memo != distributed write")
+        assert(multiset(c.codes(a2)) == want, s"$what: driver-written file != distributed write")
+        assertVisible(what, c, a2)
+      }
+      same("inline mask")
+      // above the cap, every open anti-joins the sets it reads with Spark
+      Seq(a, a2, b).foreach(d =>
+        AnnIndex.delete(spark.range(100000L, 105000L).toDF("vec_id"), "vec_id", d))
+      same("anti-join")
+    }
+  }
+
+  test("expire reaps an orphaned driver-written tombstone set") {
+    val dir = s"${tmpDir()}/idx"
+    codecs.head.build(corpus, dir)
+    IndexLog.testKillPoint.put(dir, "staged")
+    intercept[IndexLog.InjectedCrash](
+      AnnIndex.delete(Seq(1L, 2L).toDF("vec_id"), "vec_id", dir))
+    val Array(orphan) = new java.io.File(s"$dir/tomb").listFiles()
+      .filter(_.getName.startsWith("t-"))
+    assert(!new java.io.File(orphan, "_SUCCESS").exists, "the small set was a Spark write")
+    assert(AnnIndex.load(spark, dir).codes.count() == corpus.count(),
+      "the crashed delete's set is visible")
+    Thread.sleep(20)
+    AnnIndex.expire(spark, dir, keepLast = 1, orphanGraceMs = 0)
+    assert(!orphan.exists, s"expire left the orphaned set $orphan")
+  }
 }

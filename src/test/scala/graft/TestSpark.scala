@@ -16,6 +16,18 @@ object TestSpark {
     df.collect().toSeq.map(_.toSeq).groupBy(identity)
       .map { case (k, v) => k -> v.size }
 
+  /** Copies the local directory tree `from` to `to` (hidden `.crc`
+    * sidecars included): the same files under a path no open has seen. */
+  def copyTree(from: String, to: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val (src, dst) = (Paths.get(from), Paths.get(to))
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val q = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+    } finally walk.close()
+  }
+
   /** Runs `body` under a job group of its own and returns, per Spark job
     * it launched, the long call sites of the job's stages. A marker job
     * in the same group is awaited before the count is read, so every
