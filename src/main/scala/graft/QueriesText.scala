@@ -3891,10 +3891,10 @@ object QueriesText {
   // --------------------------------------------------------------- q155
   // SQ8 CELL-PARTITIONED layout — one layout, both read paths: the
   // cheap tier built WITH the IVF coarse quantizer (q128's 16-cell
-  // codebook), so segments carry a `cell` partition column and topKSq
-  // gains the probe-pruned PartitionFilter read (the q142 scan shape —
-  // AnnIndexSpec asserts the filter reaches the segment scan and reads
-  // only probed cell dirs), while the DEFAULT full scan registered here
+  // codebook), so segments carry a `cell` column, clustered by it, and
+  // topKSq gains the probe-pruned read (the q142 scan shape — AnnIndexSpec
+  // asserts the filter reaches the segment scan as a pushed `cell` filter
+  // that skips unprobed cells' row groups), while the DEFAULT full scan registered here
   // must stay hash-identical to the flat layout: q130's verbatim oracle
   // gates build(half, cells)+append(rest)+reopen+full-search — the cell
   // column is pure layout, zero semantic drift.
@@ -3916,8 +3916,8 @@ object QueriesText {
   // --------------------------------------------------------------- q156
   // The PRUNED SQ read path oracle-gated (q155's other read mode, until
   // now only plan-asserted): the fixed 8-id panel probes its nprobe=1
-  // nearest coarse cells, the scan is restricted to the probed cell
-  // DIRECTORIES (a parquet PartitionFilter — 6 of 16 cells at sf0.01),
+  // nearest coarse cells, the scan is restricted to the probed CELLS
+  // (a pushed parquet `cell` filter — 6 of 16 cells at sf0.01),
   // and the factored SQ dot ranks only what was scanned. The semantic
   // is "global probed-cell union, exact-over-the-remainder": a vector
   // in an unprobed cell can never surface, which is exactly what the
@@ -4226,8 +4226,8 @@ object QueriesText {
   // review set / one tenant — trips topKWhereSq's broadcast-literal
   // hatch at every factor, so the allowed-side subplan never re-executes
   // inside the search join), and prune=true over the CELL layout, which
-  // composes the mask semi-join UNDER the probe PartitionFilter (6-ish
-  // of 16 cell dirs scanned). Candidates = (probed-cell union) ∩
+  // composes the mask semi-join UNDER the probe's pushed `cell` filter
+  // (6-ish of 16 cells kept). Candidates = (probed-cell union) ∩
   // allowed, scored by the exact q130 factored dot; the oracle is
   // q156's probe chain with the allowed predicate added to the
   // candidate CTE — one unprobed cell leaking in, one disallowed

@@ -313,8 +313,8 @@ object ScaleStress {
       // read-term growth plus a write-dominated merge
       "q166_sq_shard_merge",
       // q167 = q156's build + the doubly-bounded filtered serve (8-id
-      // literal panel, 10-id literal allowlist under the probe
-      // PartitionFilter) — the SQ tier's production filtered-serving
+      // literal panel, 10-id literal allowlist under the probe's
+      // pushed cell filter) — the SQ tier's production filtered-serving
       // price: expect build-dominated growth with a ~flat serve term
       "q167_sq_filtered_serve",
       // q168 = q142's corpus-linear build + the SPLIT of the hottest

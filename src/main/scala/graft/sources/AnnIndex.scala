@@ -29,15 +29,21 @@ import graft.sources.IndexLog.{Art, ManifestData, Staged, commit, freshName,
   *     coarse quantizer; nlist rows.
   *   - `codebooks/`  `(s INT 0-based, code INT 1-based,
   *     vec ARRAY<DOUBLE>)` — the m residual sub-codebooks; m×ncode rows.
-  *   - `data/batch-<uniq>/cell=X/…parquet` — immutable code segments
-  *     (`neighbor_id, codes`), staged under unique directory names and
-  *     mapped to their logical ids by the manifest, each PARTITIONED
-  *     BY `cell`. Partitioning
-  *     by cell is the scale lever: a query batch probes a bounded set
-  *     of cells (≤ nlist, usually ≪), and the probe filter becomes a
-  *     parquet PartitionFilter in EVERY segment scan — at 100 TB the
-  *     difference between reading nprobe/nlist of the index and all
-  *     of it.
+  *   - `data/batch-<uniq>/part-…parquet` — immutable code segments
+  *     (`neighbor_id, codes, …, cell`), staged under unique directory
+  *     names and mapped to their logical ids by the manifest. A segment
+  *     with a `cell` column is CLUSTERED by it: one file per write task,
+  *     its rows sorted by cell, `cell` an ordinary data column. A query
+  *     batch probes a bounded set of cells (≤ nlist, usually ≪), and the
+  *     probe's `cell IN (…)` is pushed into EVERY segment scan as a
+  *     parquet data filter, so a large segment's row groups of unprobed
+  *     cells are skipped by their min/max statistics. The trade against
+  *     one `cell=X` directory per cell: a write creates one file per
+  *     task instead of one per populated cell (the per-file create and
+  *     commit cost dominates a small write), and an open lists no cell
+  *     directories; but a large segment's search opens every file
+  *     footer, not only the probed cells' directories. Per-file cell
+  *     ranges in the manifest would let a search skip whole files.
   *   - `tomb/t-<n>` — immutable tombstone sets (`neighbor_id`), written
   *     by [[delete]]. Segment and tombstone ids share ONE monotonic
   *     namespace, and a tombstone masks exactly the segments with a
@@ -170,17 +176,18 @@ object AnnIndex {
     * to counting the landed files for any successful write —
     * segment/tombstone names are fresh per verb, so nothing else ever
     * writes the path; on a failed write the caller never reaches the
-    * count. A frame with a `cell` column is written PARTITIONED BY it,
-    * so each segment holds ≤ nlist files (one per populated cell)
-    * instead of tasks × cells small files — the file-count term that
-    * otherwise dominates manifest-union listings as segments accumulate.
-    * A `oneTask` frame ([[fitsOneTask]]) is coalesced to one partition
-    * and written by one task, with no shuffle: its cell files are ≤ nlist
-    * already. Any other frame with a `cell` column is shuffled by cell
-    * first; the shuffle moves (id, cell, codes) — post-compression bytes,
-    * not vectors — and at production nlist (thousands,
-    * [[graft.operators.Similarity.autoNlist]]) it is as parallel as the
-    * cluster. */
+    * count. Every write task lands ONE file. A frame with a `cell`
+    * column is CLUSTERED by it (Layout on the object): each task sorts
+    * its rows by cell and writes `cell` as the last data column, so a
+    * segment holds one file per write task, never one per populated
+    * cell, and its row groups carry narrow cell ranges for the probe's
+    * pushed filter. A `oneTask` frame ([[fitsOneTask]]) is coalesced to
+    * one partition and written by one task, with no shuffle: one file.
+    * Any other frame with a `cell` column is shuffled by cell first, so
+    * each cell's rows sit in one file; the shuffle moves (id, cell,
+    * codes) — post-compression bytes, not vectors — and at production
+    * nlist (thousands, [[graft.operators.Similarity.autoNlist]]) it is as
+    * parallel as the cluster. */
   private def writeCounted(df: DataFrame, dest: String,
                            oneTask: Boolean = false): Long =
     writeObserved(df, dest, oneTask)("n").asInstanceOf[Long]
@@ -191,10 +198,14 @@ object AnnIndex {
                             metrics: Column*): Map[String, Any] = {
     val cells = df.columns.contains("cell")
     val obs = new org.apache.spark.sql.Observation()
-    val w = (if (oneTask) df.coalesce(1)
-        else if (cells) df.repartition(col("cell")) else df)
-      .observe(obs, count(lit(1)).as("n"), metrics: _*).write.mode("overwrite")
-    (if (cells) w.partitionBy("cell") else w).parquet(dest)
+    val placed = if (oneTask) df.coalesce(1)
+      else if (cells) df.repartition(col("cell")) else df
+    // `cell` last: the column order the opened codes have always had
+    val clustered = if (!cells) placed
+      else placed.select((df.columns.filterNot(_ == "cell") :+ "cell").map(col): _*)
+        .sortWithinPartitions(col("cell"))
+    clustered.observe(obs, count(lit(1)).as("n"), metrics: _*)
+      .write.mode("overwrite").parquet(dest)
     obs.get
   }
 
@@ -263,44 +274,45 @@ object AnnIndex {
   private val tombInlineMax = 4096
 
   /** One scan over the segment directories `paths` (all of one model,
-    * so one schema and one layout). Spark's partition discovery refuses
-    * several partitioned roots unless told to accept them, and it lists
-    * one partition directory per root and cell; [[RunIndex]] merges
-    * them, so a pruned scan lists one partition per probed cell. */
+    * so one schema). Segments hold plain files, `cell` a data column, so
+    * Spark's listing finds no partition columns. A segment in the retired
+    * one-directory-per-cell layout would be silently dropped beside a
+    * plain one by Spark's partition discovery, so a listing that found
+    * partition directories fails loudly, naming the segments that hold
+    * them ([[retiredLayout]]); the check reads only what the listing
+    * already holds. */
   private def segmentScan(spark: SparkSession, schema: StructType,
                           paths: Seq[String]): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
       LogicalRelation}
-    val scan = spark.read.schema(schema)
-      .option("ignoreInvalidPartitionPaths", "true").parquet(paths: _*)
+    val scan =
+      try spark.read.schema(schema).parquet(paths: _*)
+      catch {
+        // partition directories beside plain files, or under several roots
+        case e: org.apache.spark.SparkThrowable
+            if e.getCondition == "CONFLICTING_DIRECTORY_STRUCTURES" =>
+          throw retiredLayout(spark, paths, e.asInstanceOf[Throwable])
+      }
     val LogicalRelation(r: HadoopFsRelation, _, _, _, _) =
       scan.queryExecution.analyzed: @unchecked
-    spark.baseRelationToDataFrame(
-      r.copy(location = new RunIndex(r.location))(r.sparkSession))
+    if (r.partitionSchema.nonEmpty) throw retiredLayout(spark, paths, null)
+    scan
   }
 
-  /** A mask run's file index: the one Spark listed, with each cell's
-    * directories across the run's segments reported as one partition. */
-  private final class RunIndex(
-      inner: org.apache.spark.sql.execution.datasources.FileIndex)
-      extends org.apache.spark.sql.execution.datasources.FileIndex {
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    import org.apache.spark.sql.execution.datasources.PartitionDirectory
-    def rootPaths: Seq[org.apache.hadoop.fs.Path] = inner.rootPaths
-    def listFiles(partitionFilters: Seq[Expression],
-                  dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-      val dirs = inner.listFiles(partitionFilters, dataFilters)
-      def key(d: PartitionDirectory) = d.values.toSeq(partitionSchema)
-      val byCell = dirs.groupBy(key)
-      dirs.map(key).distinct.map { v =>
-        PartitionDirectory(byCell(v).head.values, byCell(v).flatMap(_.files))
-      }
-    }
-    def inputFiles: Array[String] = inner.inputFiles
-    def refresh(): Unit = inner.refresh()
-    def sizeInBytes: Long = inner.sizeInBytes
-    def partitionSchema: StructType = inner.partitionSchema
-    override def metadataOpsTimeNs: Option[Long] = inner.metadataOpsTimeNs
+  /** The error for a scan over `paths` whose listing met partition
+    * directories (`cell=X`), naming the segments that hold them; `cause`
+    * itself when none does. Lists the segments again: it runs only on
+    * the way to failing. */
+  private def retiredLayout(spark: SparkSession, paths: Seq[String],
+                            cause: Throwable): Throwable = {
+    val f = fs(spark, paths.head)
+    val old = paths.filter(p => f.listStatus(path(p))
+      .exists(st => st.isDirectory && st.getPath.getName.contains("=")))
+    if (old.isEmpty && cause != null) cause
+    else new IllegalStateException(
+      s"segment(s) ${old.mkString(", ")} hold partition directories (the " +
+        "retired one-directory-per-cell layout), which a segment scan does " +
+        "not read; rebuild the index", cause)
   }
 
   /** The non-NULL ids of the tombstone set at `tdir`, read on the driver
@@ -723,7 +735,7 @@ object AnnIndex {
   /** Build and atomically publish a FRESH index at `dir` (replacing any
     * index already there). The corpus pass is [[Pq.ivfPqEncode]] —
     * assignment + residual + PQ encode fused into one map-only
-    * projection — plus the partitioned segment write. The replace is a
+    * projection — plus the cell-clustered segment write. The replace is a
     * whole-directory swap: unlike every in-chain verb (append, delete,
     * compact, [[retrain]] — all safe under concurrent writers), a
     * rebuild-over-live-index requires writers and readers of the OLD
@@ -960,8 +972,8 @@ object AnnIndex {
   /** Compact the current snapshot into one segment (Iceberg
     * `rewriteDataFiles`, Lucene's merge): read the visible union —
     * tombstoned rows PHYSICALLY DROPPED here — rewrite it as a single
-    * new segment (cell-partitioned when the family has cells — IVF-PQ;
-    * flat for SQ8), publish a manifest listing ONLY that segment, no
+    * new segment (clustered by cell when the family has cells — IVF-PQ,
+    * cell SQ8; flat otherwise), publish a manifest listing ONLY that segment, no
     * tombstones, and the advanced high-water mark (the id consumed here
     * is never handed to a later append — the collision that would
     * otherwise silently drop the first post-compact micro-batch).
@@ -970,8 +982,8 @@ object AnnIndex {
     * with no tombstones; refuses to compact an index whose visible
     * union is empty (a fully-tombstoned index should be rebuilt, not
     * compacted into an unreadable zero-row segment). A union that
-    * [[fitsOneTask]] is rewritten by one task with no shuffle: one file
-    * for a flat SQ8 segment, ≤ nlist cell files otherwise. */
+    * [[fitsOneTask]] is rewritten by one task with no shuffle, as one
+    * file; a larger one lands one file per write task. */
   def compact(spark: SparkSession, dir: String): Unit = {
     val f = fs(spark, dir)
     IndexLog.compact(f, dir) { md =>
@@ -995,9 +1007,10 @@ object AnnIndex {
     * the merge. Both indexes must carry bit-equal models (the shards
     * were built from the same trained quantizer — codes are only
     * comparable under one model); a mismatch fails loudly rather than
-    * corrupt distances. The copy is a cell-partitioned shuffle of
-    * already-compressed codes (8 B/row payloads, not vectors), or one
-    * task with no shuffle when they [[fitsOneTask]]; the
+    * corrupt distances. The copy is a by-cell shuffle of
+    * already-compressed codes (8 B/row payloads, not vectors), one file
+    * per write task, or one task and one file with no shuffle when they
+    * [[fitsOneTask]]; the
     * commit is one optimistic-concurrency publish like [[appendIvfPq]]
     * (re-base on lost races, loud abort if a concurrent [[retrain]]
     * changes the model underneath). Rows are appended as-is — ids
@@ -1019,8 +1032,8 @@ object AnnIndex {
         s"model mismatch: $srcDir was not built with $dstDir's " +
           s"${codec.modelNames} — codes are not comparable across models")
       val segName = freshName("batch-")
-      // the copied rows keep their cell column, so the segment keeps the
-      // destination's layout
+      // the copied rows keep their cell column, so the segment is
+      // clustered by cell like the destination's own
       val rows = src.codes.withColumnRenamed(codec.cellCol, "cell")
       val n = writeCounted(rows, s"$dstDir/data/$segName", fitsOneTask(rows))
       if (n == 0) { f.delete(path(s"$dstDir/data/$segName"), true); None }
@@ -1106,7 +1119,7 @@ object AnnIndex {
     * re-encoded, the centroid table is REWRITTEN with the first
     * sub-centroid in the hot cell's slot and the rest appended as new
     * cells (existing cell ids never shift, so every other segment's
-    * partition keys — and codes, whose residuals reference unchanged
+    * cell keys — and codes, whose residuals reference unchanged
     * centroids — stay bit-valid), and ONE manifest swap publishes:
     * a tombstone over the cell's old rows, the re-keyed segment, and
     * the bumped model version. Readers see the split entire or not at
@@ -1468,7 +1481,7 @@ object AnnIndex {
     * parameter-sized model persisted as (i, mn, step, inv) rows.
     * Passing `centroids` (typically the IVF tier's coarse quantizer)
     * produces the CELL-PARTITIONED layout: segments carry a `cell`
-    * partition column, the centroids persist beside the model, and
+    * column and are clustered by it, the centroids persist beside the model, and
     * [[topKSq]] gains the probe-pruned read path — while the default
     * full scan stays hash-identical to the flat layout (q155's gate). */
   def buildSq(corpus: DataFrame, idCol: String, vecCol: String,
@@ -1533,7 +1546,7 @@ object AnnIndex {
     * simplification the cheap tier earns: SQ codes are a per-dimension
     * affine of the RAW vector, independent of the cell, so the
     * "re-encode" reproduces bit-identical codes — the split only moves
-    * rows to new partition keys under the grown centroid table. The
+    * rows to new cell keys under the grown centroid table. The
     * corpus is still required: the index stores codes, and the NEW
     * assignment needs the raw vectors. */
   def splitCellSq(corpus: DataFrame, idCol: String, vecCol: String,
@@ -1570,9 +1583,9 @@ object AnnIndex {
     * hash-identical whether the layout is flat or cell-partitioned).
     * `prune = true` on a cell-built index restricts candidates to the
     * rows in the batch's probed cells (each query's nprobe nearest
-    * coarse cells), pushed into every segment scan as a parquet
-    * PartitionFilter (the IVF trade: nprobe/nlist of the scan I/O for
-    * approximate recall). Pruning a flat index fails loudly rather than
+    * coarse cells), pushed into every segment scan as a parquet data
+    * filter on `cell` (the IVF trade: row groups of unprobed cells are
+    * skipped, for approximate recall). Pruning a flat index fails loudly rather than
     * silently full-scanning. A serving batch runs as ONE Spark job
     * either way (SERVING on the object); a batch above
     * [[snapshotCollectMax]] rows runs [[Sq.topK]], over the batch pinned
@@ -1716,7 +1729,7 @@ object AnnIndex {
     * return fewer), then the standard [[topK]] runs. The mask is
     * id-only and distinct, so AQE broadcasts selective filters; probe
     * pruning still pushes through the semi-join's streamed side as a
-    * PartitionFilter. Because per-row encode is deterministic,
+    * parquet `cell` filter. Because per-row encode is deterministic,
     * index-over-everything + mask ≡ an index built on only the allowed
     * rows — AnnIndexSpec pins that equivalence, q159 hash-gates it.
     *
@@ -1730,8 +1743,8 @@ object AnnIndex {
     * semantics are IDENTICAL on both paths (`nprobe` governs the
     * candidate cells either way — the hatch changes plan shape only),
     * which is what keeps one oracle valid for both; q161 gates the
-    * literal-mask plan, AnnIndexSpec asserts the probe PartitionFilter
-    * survives it. */
+    * literal-mask plan, AnnIndexSpec asserts the probe's pushed `cell`
+    * filter survives it. */
   def topKWhere(idx: Loaded, queries: DataFrame, idCol: String,
                 vecCol: String, allowed: DataFrame, allowedIdCol: String,
                 k: Int = 10, nprobe: Int = 4,
@@ -1770,8 +1783,8 @@ object AnnIndex {
   }
 
   /** Query an opened snapshot, probing each query's `nprobe` nearest
-    * cells; the probed cells reach EVERY segment scan as a partition
-    * filter. A serving batch runs as ONE Spark job (SERVING on the
+    * cells; the probed cells reach EVERY segment scan as a pushed
+    * parquet filter on `cell`. A serving batch runs as ONE Spark job (SERVING on the
     * object) and comes back as a local relation; a batch above
     * [[snapshotCollectMax]] rows is pinned once ([[Pin.data]]) and
     * searched by [[Pq.ivfPqSearch]]. `prune = false` keeps [[Pq.ivfPqSearch]]'s
@@ -1941,7 +1954,7 @@ object AnnIndex {
   /** IVF-PQ: a row scores against the queries that probe its cell, each
     * through its (query, cell) distance table — derived in the task from
     * the shipped residual, once per cell the task meets. Rows arrive
-    * grouped by cell from the cell-partitioned segments, but interleaved
+    * grouped by cell from the cell-clustered segment files, but interleaved
     * behind a shuffled (sort-merge) tombstone or mask join, so a task
     * keeps the tables of every cell it met, up to [[tableBudget]]
     * doubles; past that it drops them all and derives afresh. */

@@ -38,7 +38,9 @@ object UpsertSink {
     * a NULL key matches nothing in either. `incoming` is therefore read
     * twice (keys, and the windowed latest), so its key columns must be
     * deterministic — a key drawn from `rand()` or an unordered id would
-    * differ between the two reads.
+    * differ between the two reads. That contract is checked on entry: an
+    * optimized key projection holding a nondeterministic expression is
+    * rejected with an IllegalArgumentException (planning only, no job).
     *
     * @param orderCol column ordering versions WITHIN the incoming batch;
     *                 the highest wins (a batch can carry several versions
@@ -46,6 +48,14 @@ object UpsertSink {
     */
   def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
              orderCol: String): DataFrame = {
+    val random = incoming.select(keys.map(col): _*).queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect {
+        case e if !e.deterministic && e.children.forall(_.deterministic) => e.sql
+      }))
+    require(random.isEmpty,
+      s"upsert keys ${keys.mkString(", ")} are read twice but come from " +
+        s"nondeterministic ${random.distinct.mkString(", ")}; materialize the " +
+        "incoming batch (or derive its keys deterministically) first")
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol).desc)
     val latest = incoming
       .withColumn("_rn", row_number().over(w))

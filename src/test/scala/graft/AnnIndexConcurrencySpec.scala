@@ -478,7 +478,8 @@ class AnnIndexConcurrencySpec extends AnyFunSuite {
     val want = AnnIndex.topKSq(AnnIndex.loadSq(spark, seq), q, "vec_id",
       "embedding", k = 3).collect().map(_.toSeq).toSet
     assert(got == want, "merged SQ shards diverged from the single build")
-    // the pruned read still partition-prunes over the merged segment
+    // the pruned read still serves over the merged segment, whose rows
+    // kept their cell column
     assert(AnnIndex.topKSq(merged, q, "vec_id", "embedding", k = 3,
       nprobe = 1, prune = true).count() > 0)
     // a flat shard cannot merge into a cell index (layout = model here)

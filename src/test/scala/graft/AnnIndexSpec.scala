@@ -8,9 +8,9 @@ import graft.sources.{AnnIndex, IndexLog}
 /** Persisted IVF-PQ index ([[graft.sources.AnnIndex]]): the
   * build→publish→load→search round trip must be lossless vs the
   * in-memory [[Pq.ivfPqTopK]] path, the probe set must reach the codes
-  * scan as a parquet PARTITION filter (the build-once/query-many scale
-  * contract), and publish must be atomic under builder death and
-  * rebuild. */
+  * scan as a pushed parquet filter on `cell` that skips the row groups of
+  * unprobed cells (the build-once/query-many scale contract), and publish
+  * must be atomic when a build dies midway and under rebuild. */
 class AnnIndexSpec extends AnyFunSuite {
   import TestSpark.jobsOf
   lazy val spark = TestSpark.spark
@@ -60,6 +60,41 @@ class AnnIndexSpec extends AnyFunSuite {
     (out, overSegments.head)
   }
 
+  /** The cells the query rows `q` probe: each row's `nprobe` nearest
+    * centroids. */
+  private def probedCells(q: org.apache.spark.sql.DataFrame,
+                          cents: Array[Array[Double]], nprobe: Int): Set[Int] = {
+    import graft.plans.SketchExpressions.nearestCentroids
+    q.select(explode(nearestCentroids(col("embedding"), cents, nprobe)))
+      .distinct().collect().map(_.getInt(0)).toSet
+  }
+
+  /** The codes-segment scans of `plan`. */
+  private def segmentScans(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    plan.collect {
+      case sc: org.apache.spark.sql.execution.FileSourceScanExec
+          if sc.relation.location.rootPaths.exists(_.toString.contains("/data/batch-"))
+        => sc
+    }
+
+  /** Every codes-segment scan of `plan` carries the probe as a pushed
+    * parquet filter on `cell` naming exactly the `probed` cells: the
+    * filter whose row-group statistics skip every other cell. */
+  private def assertProbePushed(plan: org.apache.spark.sql.execution.SparkPlan,
+                                probed: Set[Int], clue: String): Unit = {
+    val scans = segmentScans(plan)
+    assert(scans.nonEmpty, "no parquet scan over the codes segments found")
+    val want = probed.toSeq.sorted match {
+      case Seq(c) => s"EqualTo(cell,$c)"
+      case cs => s"In(cell, [${cs.mkString(",")}])"
+    }
+    scans.foreach { scan =>
+      val pushed = scan.metadata.getOrElse("PushedFilters", "")
+      assert(pushed.contains(want), s"$clue: pushed $pushed, expected $want\n$scan")
+    }
+  }
+
   test("round trip: persisted search equals the in-memory ivfPqTopK path") {
     val e = corpus(80).cache()
     val (cents, cbs) = model(e)
@@ -94,19 +129,9 @@ class AnnIndexSpec extends AnyFunSuite {
     val (res, plan) =
       try searchPlan(AnnIndex.topK(idx, q, "vec_id", "embedding", k = 3, nprobe = 1))
       finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    val scans = plan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec
-          if s.relation.location.rootPaths.exists(_.toString.contains("/data/batch-"))
-        => s
-    }
-    assert(scans.nonEmpty, "no parquet scan over the codes segments found")
-    scans.foreach { scan =>
-      assert(scan.partitionFilters.nonEmpty,
-        s"probe filter did not reach the scan as a partition filter:\n$scan")
-      // only the probed cell directory is read — 1 of 4 partitions
-      assert(scan.relation.location.listFiles(
-        scan.partitionFilters, scan.dataFilters).length == 1)
-    }
+    // only the probed cell passes the pushed filter — 1 of 4 cells
+    assertProbePushed(plan, probedCells(q, cents, 1),
+      "probe filter did not reach the scan as a pushed cell filter")
     assert(res.count() == 3)
   }
 
@@ -475,8 +500,8 @@ class AnnIndexSpec extends AnyFunSuite {
     // the manifest publish: a complete batch dir, no manifest entry
     graft.operators.Pq.ivfPqEncode(e.filter(col("vec_id") < 5), "vec_id",
         "embedding", cents, cbs)
-      .withColumnRenamed("_cell", "cell")
-      .write.partitionBy("cell").parquet(s"$dir/data/batch-99")
+      .select(col("neighbor_id"), col("codes"), col("_cell").as("cell"))
+      .coalesce(1).sortWithinPartitions("cell").write.parquet(s"$dir/data/batch-99")
     val idx = AnnIndex.load(spark, dir)
     assert(idx.nrows == 30 && idx.codes.count() == 30 &&
       idx.batches == Seq(0L))
@@ -699,7 +724,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(AnnIndex.topKSq(ci, q, "vec_id", "embedding", k = 3)
       .collect().map(_.toSeq).toSet == flatRes)
     // pruned mode: one query, nprobe=1 -> the probe reaches the segment
-    // scans as a parquet PartitionFilter reading only the probed cell
+    // scans as a pushed parquet filter naming only the probed cell
     val q1 = e.filter(col("vec_id") === 0)
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -709,18 +734,8 @@ class AnnIndexSpec extends AnyFunSuite {
           "embedding", k = 3, nprobe = 1, prune = true))
         (r.collect().map(_.toSeq).toSet, plan)
       } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    val scans = plan.collect {
-      case sc: org.apache.spark.sql.execution.FileSourceScanExec
-          if sc.relation.location.rootPaths.exists(_.toString.contains("/data/batch-"))
-        => sc
-    }
-    assert(scans.nonEmpty, "no parquet scan over the SQ segments found")
-    scans.foreach { scan =>
-      assert(scan.partitionFilters.nonEmpty,
-        s"SQ probe did not reach the scan as a partition filter:\n$scan")
-      assert(scan.relation.location.listFiles(
-        scan.partitionFilters, scan.dataFilters).length == 1)
-    }
+    assertProbePushed(plan, probedCells(q1, cents, 1),
+      "SQ probe did not reach the scan as a pushed cell filter")
     // pruned correctness: equals the in-memory SQ search restricted to
     // the probed cells (the IVF-SQ semantic)
     val probed = q1.select(explode(nearestCentroids(col("embedding"),
@@ -734,7 +749,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val ex = intercept[IllegalArgumentException](
       AnnIndex.topKSq(fi, q1, "vec_id", "embedding", k = 3, prune = true))
     assert(ex.getMessage.contains("cell-partitioned"))
-    // compact keeps the cell partitioning; full scan unchanged
+    // compact keeps the cell column; full scan unchanged
     AnnIndex.compact(spark, celled)
     assert(AnnIndex.topKSq(AnnIndex.loadSq(spark, celled), q, "vec_id",
       "embedding", k = 3).collect().map(_.toSeq).toSet == flatRes)
@@ -811,19 +826,8 @@ class AnnIndexSpec extends AnyFunSuite {
       try searchPlan(AnnIndex.topK(idx, q, "vec_id", "embedding", k = 3,
         nprobe = 1))._2
       finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    val segScans = plan.collect {
-      case sc: org.apache.spark.sql.execution.FileSourceScanExec
-          if sc.relation.location.rootPaths.exists(_.toString.contains("/data/batch-"))
-        => sc
-    }
-    assert(segScans.nonEmpty)
-    segScans.foreach { scan =>
-      assert(scan.partitionFilters.nonEmpty,
-        "tombstone anti-join blocked the probe filter from reaching the scan")
-      assert(scan.relation.location.listFiles(
-        scan.partitionFilters, scan.dataFilters).length == 1,
-        "pruned read stopped pruning once tombstones were present")
-    }
+    assertProbePushed(plan, probedCells(q, cents, 1),
+      "the tombstone mask blocked the probe filter from reaching the scan")
   }
 
   test("SQ filtered search: pre-filter semantics, literal hatch semantics-neutral, asOf pins") {
@@ -883,19 +887,8 @@ class AnnIndexSpec extends AnyFunSuite {
         val (r, plan) = searchPlan(AnnIndex.topKWhereSq(idx, q, "vec_id",
           "embedding", allowed = allowed, allowedIdCol = "vec_id", k = 3,
           nprobe = 1, prune = true))
-        val scans = plan.collect {
-          case sc: org.apache.spark.sql.execution.FileSourceScanExec
-              if sc.relation.location.rootPaths.exists(_.toString.contains("/data/batch-"))
-            => sc
-        }
-        assert(scans.nonEmpty)
-        scans.foreach { scan =>
-          assert(scan.partitionFilters.nonEmpty,
-            "mask semi-join blocked the SQ probe filter from the scan")
-          assert(scan.relation.location.listFiles(
-            scan.partitionFilters, scan.dataFilters).length == 1,
-            "filtered pruned read stopped pruning")
-        }
+        assertProbePushed(plan, probedCells(q, cents, 1),
+          "mask semi-join blocked the SQ probe filter from the scan")
         r.collect().map(_.toSeq).toSet
       } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     assert(res.nonEmpty &&
@@ -918,19 +911,8 @@ class AnnIndexSpec extends AnyFunSuite {
       try searchPlan(AnnIndex.topKSq(idx, q, "vec_id", "embedding", k = 3,
         nprobe = 1, prune = true))._2
       finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    val segScans = plan.collect {
-      case sc: org.apache.spark.sql.execution.FileSourceScanExec
-          if sc.relation.location.rootPaths.exists(_.toString.contains("/data/batch-"))
-        => sc
-    }
-    assert(segScans.nonEmpty)
-    segScans.foreach { scan =>
-      assert(scan.partitionFilters.nonEmpty,
-        "tombstone anti-join blocked the SQ probe filter from reaching the scan")
-      assert(scan.relation.location.listFiles(
-        scan.partitionFilters, scan.dataFilters).length == 1,
-        "SQ pruned read stopped pruning once tombstones were present")
-    }
+    assertProbePushed(plan, probedCells(q, cents, 1),
+      "the tombstone mask blocked the SQ probe filter from reaching the scan")
   }
 
   test("topKWhere tiny allowlist: mask re-plants as a broadcast literal, probe filter still prunes") {
@@ -960,12 +942,9 @@ class AnnIndexSpec extends AnyFunSuite {
         assert(scans.nonEmpty && scans.forall(
           _.relation.location.rootPaths.exists(_.toString.contains("/data/batch-"))),
           "the literal-mask path still scanned the allowed-side source")
-        // and the probe PartitionFilter survives the semi-join
-        scans.foreach { scan =>
-          assert(scan.partitionFilters.nonEmpty)
-          assert(scan.relation.location.listFiles(
-            scan.partitionFilters, scan.dataFilters).length == 1)
-        }
+        // and the probe's pushed cell filter survives the semi-join
+        assertProbePushed(plan, probedCells(q, cents, 1),
+          "the literal mask blocked the probe filter from the scan")
         // semantics identical to the big-mask plan (smallMask = 0
         // disables the hatch): same oracle covers both paths
         (s.collect().map(_.toSeq).toSet,
@@ -1485,6 +1464,160 @@ class AnnIndexSpec extends AnyFunSuite {
       // NULL ids key nothing, so they may repeat
       upsert(e.filter(col("vec_id") < 3).unionByName(nullIds))
       assert(AnnIndex.versionsOf(spark, dir).size == 2)
+    }
+  }
+
+  /** The data files of `dir`'s newest segment in its current manifest. */
+  private def lastSegmentFiles(dir: String): Seq[org.apache.hadoop.fs.Path] = {
+    val f = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
+      spark.sparkContext.hadoopConfiguration)
+    val seg = IndexLog.refresh(f, dir)._2.segs.last
+    val files = f.listFiles(new org.apache.hadoop.fs.Path(s"$dir/data/${seg.dirName}"), true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith(".")).toSeq
+  }
+
+  test("a one-task segment write lands one data file on both cell codecs; " +
+      "a spread write at most one per write task") {
+    import graft.operators.Sq
+    val e = corpus(80).cache()
+    val (cents, cbs) = model(e)
+    val m = Sq.fit(e, "embedding")
+    val root = tmpDir()
+    for ((what, dir, shard) <- Seq(("IVF-PQ", s"$root/pq", s"$root/pq-shard"),
+                                   ("SQ8 cells", s"$root/sq", s"$root/sq-shard"))) {
+      val pq = what == "IVF-PQ"
+      def build(df: org.apache.spark.sql.DataFrame, at: String): Unit =
+        if (pq) AnnIndex.buildIvfPq(df, "vec_id", "embedding", at, cents, cbs)
+        else AnnIndex.buildSq(df, "vec_id", "embedding", at, m, Some(cents))
+      def cells(at: String): Long =
+        (if (pq) AnnIndex.load(spark, at).codes.select("_cell")
+         else AnnIndex.loadSq(spark, at).codes.select("cell")).distinct().count()
+      def oneFile(verb: String): Unit = {
+        val files = lastSegmentFiles(dir)
+        assert(files.size == 1, s"$what: a one-task $verb landed ${files.size} files")
+      }
+      build(e.filter(col("vec_id") < 40), dir)
+      oneFile("build")
+      if (pq) AnnIndex.appendIvfPq(e.filter(col("vec_id").between(40, 59)),
+        "vec_id", "embedding", dir)
+      else AnnIndex.appendSq(e.filter(col("vec_id").between(40, 59)),
+        "vec_id", "embedding", dir)
+      oneFile("append")
+      if (pq) AnnIndex.upsertBatchIvfPq(e.filter(col("vec_id") < 8),
+        "vec_id", "embedding", dir)
+      else AnnIndex.upsertBatchSq(e.filter(col("vec_id") < 8),
+        "vec_id", "embedding", dir)
+      oneFile("upsert")
+      AnnIndex.compact(spark, dir)
+      oneFile("compact")
+      assert(cells(dir) == 4, s"$what: the compacted segment holds ${cells(dir)} cells")
+      build(e.filter(col("vec_id") >= 60), shard)
+      if (pq) AnnIndex.merge(spark, dir, shard) else AnnIndex.mergeSq(spark, dir, shard)
+      oneFile("merge")
+      // a spread write (a delta above the size threshold) shuffles by cell:
+      // each write task lands one file, whatever cells it holds
+      val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          tasks.add(j.stageInfos.maxBy(_.stageId).numTasks)
+      }
+      val key = "spark.sql.files.openCostInBytes"
+      val was = spark.conf.get(key)
+      spark.conf.set(key, "1")
+      spark.sparkContext.addSparkListener(listener)
+      try jobsOf(if (pq) AnnIndex.appendIvfPq(e, "vec_id", "embedding", dir)
+        else AnnIndex.appendSq(e, "vec_id", "embedding", dir))
+      finally {
+        spark.conf.set(key, was)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      // jobsOf awaited its marker job: the write job's start was seen
+      val writeTasks = tasks.toArray(Array.empty[Integer]).toSeq.map(_.intValue)
+        .dropRight(1).last
+      val files = lastSegmentFiles(dir).size
+      assert(files >= 1 && files <= writeTasks,
+        s"$what: a spread write of $writeTasks tasks landed $files files")
+    }
+  }
+
+  test("the pushed probe skips the row groups of unprobed cells by their statistics") {
+    import graft.operators.Sq
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val e = corpus(2000).cache()
+    val (cents, cbs) = model(e)
+    // row groups of about a hundred rows, written through a session of this
+    // spec's own: each one-file segment holds several row groups per cell
+    val small = spark.newSession()
+    small.conf.set("parquet.block.size", "1024")
+    val local = small.createDataFrame(java.util.Arrays.asList(e.collect(): _*), e.schema)
+    val root = tmpDir()
+    AnnIndex.buildIvfPq(local, "vec_id", "embedding", s"$root/pq", cents, cbs)
+    AnnIndex.buildSq(local, "vec_id", "embedding", s"$root/sq",
+      Sq.fit(e, "embedding"), Some(cents))
+    val q = e.filter(col("vec_id") === 0)
+    val probed = probedCells(q, cents, 1)
+    val conf = spark.sparkContext.hadoopConfiguration
+    for ((what, dir, search) <- Seq[(String, String, () => Unit)](
+        ("IVF-PQ", s"$root/pq", () => AnnIndex.topK(AnnIndex.load(spark, s"$root/pq"), q,
+          "vec_id", "embedding", k = 3, nprobe = 1).collect()),
+        ("SQ8 cells", s"$root/sq", () => AnnIndex.topKSq(AnnIndex.loadSq(spark, s"$root/sq"),
+          q, "vec_id", "embedding", k = 3, nprobe = 1, prune = true).collect()))) {
+      val Seq(file) = lastSegmentFiles(dir)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      // (rows, min cell, max cell) per row group
+      val groups = try {
+        import scala.jdk.CollectionConverters._
+        reader.getFooter.getBlocks.asScala.toSeq.map { b =>
+          val st = b.getColumns.asScala.find(_.getPath.toDotString == "cell").get
+            .getStatistics
+          (b.getRowCount, st.genericGetMin.asInstanceOf[Integer].intValue,
+            st.genericGetMax.asInstanceOf[Integer].intValue)
+        }
+      } finally reader.close()
+      assert(groups.size > 4, s"$what: ${groups.size} row groups")
+      val holding = groups.filter { case (_, lo, hi) => probed.exists(c => c >= lo && c <= hi) }
+      val want = holding.map(_._1).sum
+      assert(want > 0 && want < groups.map(_._1).sum,
+        s"$what: row groups of the probed cells hold $want rows")
+      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val plan =
+        try searchPlan(search())._2
+        finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      val Seq(scan) = segmentScans(plan)
+      assert(scan.metrics("numOutputRows").value == want,
+        s"$what: the scan read ${scan.metrics("numOutputRows").value} rows, " +
+          s"the row groups holding cells $probed hold $want")
+    }
+  }
+
+  test("a segment in the retired cell-directory layout fails the open loudly, " +
+      "never drops rows") {
+    val e = corpus(40).cache()
+    val (cents, cbs) = model(e)
+    val dir = s"${tmpDir()}/idx"
+    AnnIndex.buildIvfPq(e.filter(col("vec_id") < 20), "vec_id", "embedding", dir,
+      cents, cbs)
+    // a hand-written `partitionBy("cell")` segment, published beside the
+    // clustered one, and then alone
+    Pq.ivfPqEncode(e.filter(col("vec_id") >= 20), "vec_id", "embedding", cents, cbs)
+      .withColumnRenamed("_cell", "cell")
+      .write.partitionBy("cell").parquet(s"$dir/data/batch-old")
+    val f = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
+      spark.sparkContext.hadoopConfiguration)
+    val (mid, md) = IndexLog.refresh(f, dir)
+    val old = IndexLog.Art(md.nextId, 20L, "batch-old")
+    assert(IndexLog.publishStaged(f, dir, mid + 1,
+      md.copy(segs = md.segs :+ old, hw = md.nextId)))
+    assert(IndexLog.publishStaged(f, dir, mid + 2,
+      md.copy(segs = Seq(old), hw = md.nextId)))
+    for (gen <- Seq(mid + 1, mid + 2)) {
+      val ex = intercept[IllegalStateException](
+        AnnIndex.load(spark, dir, asOf = Some(gen)).codes.count())
+      assert(ex.getMessage.contains("batch-old") &&
+        !ex.getMessage.contains(md.segs.head.dirName), s"generation $gen: ${ex.getMessage}")
     }
   }
 }

@@ -93,12 +93,12 @@ class PlanAuditSpec extends AnyFunSuite {
     "q155_sq_cell_search" ->
       ("q148's cell-partitioned twin: the SAME SQ8 ADC scan shape " +
         "(1/50-sampled query batch broadcast over the codes scan — " +
-        "q130's exemption) over cell-partitioned segments; the pruned " +
-        "PartitionFilter path is plan-asserted in AnnIndexSpec " +
+        "q130's exemption) over cell-clustered segments; the pruned " +
+        "pushed-cell-filter path is plan-asserted in AnnIndexSpec " +
         "(PLANS.md q155 row)"),
     "q156_sq_pruned_search" ->
       ("the pruned SQ read: q130's broadcast-query scan shape over the " +
-        "PartitionFilter-restricted cell directories — the query side " +
+        "probe's pushed cell filter — the query side " +
         "is the 8-id literal panel (bounded at every corpus size), the " +
         "scanned side is nprobe/nlist of the codes (PLANS.md q156 row)"),
     "q163_sq_filtered_search" ->
@@ -109,7 +109,7 @@ class PlanAuditSpec extends AnyFunSuite {
         "for review-set-sized filters (PLANS.md q163 row)"),
     "q170_sq_rebalance" ->
       ("q156's post-split pruned read: the SAME SQ8 ADC scan shape " +
-        "(1/50-sampled query batch broadcast over the PartitionFilter-" +
+        "(1/50-sampled query batch broadcast over the cell-filter-" +
         "restricted codes scan — q130's exemption); the policy pass " +
         "itself is cellStats + parameter-sized seed collects + one " +
         "cell-sized re-key (PLANS.md q170 row)"),
@@ -126,7 +126,7 @@ class PlanAuditSpec extends AnyFunSuite {
         "(PLANS.md q164 row)"),
     "q167_sq_filtered_serve" ->
       ("the production filtered SQ serve: q156's broadcast-query " +
-        "PartitionFilter scan shape (8-id literal panel, nprobe/nlist " +
+        "pushed-cell-filter scan shape (8-id literal panel, nprobe/nlist " +
         "of the codes scanned) with a 10-id broadcast-LITERAL allowlist " +
         "composed under the probe filter — every side is bounded at " +
         "every corpus size (PLANS.md q167 row)"),

@@ -113,4 +113,25 @@ class UpsertSinkSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).filter(col("k") === "k200").as[(String, String, Int)]
       .collect().toSeq == Seq(("k200", "j200", 2)))
   }
+
+  test("keys from a nondeterministic expression are rejected on entry, with no job") {
+    val existing = single((Some("a"), "e1", 0))
+    // not a local relation: the optimizer would evaluate a projection over
+    // one once, at planning
+    val base = spark.range(2).select(
+      when(col("id") === 0, "a").otherwise("b").as("k"), lit("x").as("x"), lit(1).as("v"))
+    for ((what, key) <- Seq(
+        "rand()" -> (rand(7) * 10).cast("int").cast("string"),
+        "monotonically_increasing_id()" -> monotonically_increasing_id().cast("string"))) {
+      val incoming = base.withColumn("k", key)
+      val (ex, jobs) = jobsOf(intercept[IllegalArgumentException](
+        UpsertSink.upsert(existing, incoming, Seq("k"), "v")))
+      assert(ex.getMessage.contains(what.takeWhile(_ != '(')), s"$what: ${ex.getMessage}")
+      assert(jobs.isEmpty, s"$what: the check launched ${jobs.size} jobs")
+    }
+    // a nondeterministic column outside the keys is pruned from the key
+    // projection: allowed
+    val tagged = base.withColumn("noise", rand(7))
+    assert(UpsertSink.upsert(existing, tagged, Seq("k"), "v").count() == 2)
+  }
 }
